@@ -36,12 +36,17 @@ sep=""
 for name in $NAMES; do
   line=$(SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_ONLY="$name" \
     java $OPENS -Xmx16g -cp "$CP" graft.Bench 2>/dev/null | grep '"metric"' | tail -1)
-  # extract this query's seconds from {"queries":{"<name>":N}}
+  # extract this query's seconds from {"queries":{"<name>":N}}; a
+  # query that threw is listed under "failed" instead and gets no time
   secs=$(python3 - "$line" "$name" <<'EOF'
 import json, sys
-print(json.loads(sys.argv[1])["queries"][sys.argv[2]])
+print(json.loads(sys.argv[1])["queries"].get(sys.argv[2], ""))
 EOF
   )
+  if [ -z "$secs" ]; then
+    echo "  $name: FAILED (left out of the total)" >&2
+    continue
+  fi
   echo "  $name: ${secs}s" >&2
   merged="$merged$sep\"$name\":$secs"
   sep=","

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.Locale
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs the headline query set on
@@ -125,6 +127,33 @@ object Bench {
     System.gc()
   }
 
+  /** The one JSON line: per-query seconds, their total, and the names
+    * of the queries that threw (left out of both). Numbers are
+    * formatted under `Locale.ROOT`: a comma-decimal default locale
+    * would otherwise break the JSON.
+    *
+    * 3-decimal seconds keep the line short enough for a reader that
+    * keeps only the last 2000 chars of stdout: 9-decimal seconds × 57
+    * queries (~2,600 chars) lost the JSON head, while at 3 decimals the
+    * line is ~1,400 chars with headroom to ~90 queries; 1 ms resolution
+    * is far below the run-to-run noise floor. */
+  def jsonLine(results: Seq[(String, Double)], failed: Seq[String],
+               sfDir: String): String = {
+    def secs(v: Double) = String.format(Locale.ROOT, "%.3f", Double.box(v))
+    def str(v: String) = "\"" + v.flatMap {
+      case '"'          => "\\\""
+      case '\\'         => "\\\\"
+      case c if c < ' ' => String.format(Locale.ROOT, "\\u%04x", Int.box(c))
+      case c            => c.toString
+    } + "\""
+    val qs = results.map { case (k, v) => s"${str(k)}:${secs(v)}" }
+      .mkString("{", ",", "}")
+    val total = secs(results.map(_._2).sum)
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s""""failed":${failed.map(str).mkString("[", ",", "]")},""" +
+      s""""sf":${str(sfDir)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -167,7 +196,7 @@ object Bench {
     // min of two runs discards one-off scheduler/IO stalls while still
     // measuring a cold-cache-realistic plan (parquet footers and JIT
     // are already warm from the warmup pass, identically for both).
-    val results = headline
+    val runs = headline
       .filter(n => only.forall(n.startsWith))
       .flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
@@ -180,21 +209,21 @@ object Bench {
           // gc, between passes too, all outside the timed region.
           quiesceCleaner(spark)
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+          fn(spark, sfDir).count()
           (System.nanoTime() - t0) / 1e9
         }
-        name -> math.min(once(), once())
+        // a query that throws has no time: it is reported as failed,
+        // never as however long it took to throw
+        name -> (try Right(math.min(once(), once()))
+          catch { case e: Throwable =>
+            System.err.println(s"[Bench] FAILED $name: $e")
+            Left(e)
+          })
       }
     }
-    // 3-decimal seconds: the driver keeps only a 2000-char tail of
-    // stdout, and 9-decimal seconds × 57 queries (~2,600 chars) clipped
-    // the JSON head since r18, leaving PERF blind (parsed=null). At
-    // f"%.3f" the line is ~1,400 chars with headroom to ~90 queries;
-    // 1 ms resolution is far below the run-to-run noise floor.
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = f"${results.map(_._2).sum}%.3f"
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
+    val results = runs.collect { case (n, Right(secs)) => n -> secs }
+    val failed = runs.collect { case (n, Left(_)) => n }
+    println(jsonLine(results, failed, sfDir))
     spark.stop()
   }
 }

@@ -33,7 +33,7 @@ object PlanSnap {
     // POST-AQE final plan — runtime effects (exchange-stage reuse,
     // AQE join conversions, coalesced reads) are invisible in the
     // pre-execution formatted plan under AdaptiveSparkPlan.
-    val exec = sys.env.contains("GRAFT_PLANSNAP_EXEC")
+    val exec = sys.env.get("GRAFT_PLANSNAP_EXEC").contains("1")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case Some(fn) =>

@@ -22,9 +22,13 @@ import org.apache.spark.sql.types._
   * used: labels stay full 64-bit, so ids >= 2^31 are safe.
   *
   * Null handling (defensive only — q258 feeds count(*) and join keys,
-  * both non-null): a null cnt never updates the buffer; an empty
-  * partial (null buffer) never wins a merge; empty groups evaluate to
-  * null, as max_by does.
+  * both non-null): a row with a null cnt OR a null lab never updates
+  * the buffer, so bestLab is never null beside a set bestCnt (a null
+  * label there would lose every later equal-count tie-break, since
+  * `lab < null` is null); an empty partial (null buffer) never wins a
+  * merge; a group with no such row evaluates to null, as max_by does
+  * on an empty group. Unlike max_by, a null-labelled row at the top
+  * count is skipped rather than returned.
   */
 case class ArgMaxCountMinLabel(lab: Expression, cnt: Expression)
     extends DeclarativeAggregate {
@@ -50,7 +54,7 @@ case class ArgMaxCountMinLabel(lab: Expression, cnt: Expression)
     val better = Or(IsNull(bestCnt),
       Or(GreaterThan(cnt, bestCnt),
         And(EqualTo(cnt, bestCnt), LessThan(lab, bestLab))))
-    val take = And(IsNotNull(cnt), better)
+    val take = And(And(IsNotNull(cnt), IsNotNull(lab)), better)
     Seq(If(take, cnt, bestCnt), If(take, lab, bestLab))
   }
   override lazy val mergeExpressions: Seq[Expression] = {
@@ -58,7 +62,8 @@ case class ArgMaxCountMinLabel(lab: Expression, cnt: Expression)
       Or(GreaterThan(bestCnt.right, bestCnt.left),
         And(EqualTo(bestCnt.right, bestCnt.left),
           LessThan(bestLab.right, bestLab.left))))
-    val take = And(IsNotNull(bestCnt.right), better)
+    val take = And(
+      And(IsNotNull(bestCnt.right), IsNotNull(bestLab.right)), better)
     Seq(If(take, bestCnt.right, bestCnt.left),
       If(take, bestLab.right, bestLab.left))
   }

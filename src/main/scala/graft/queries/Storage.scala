@@ -333,7 +333,9 @@ object Storage extends QueryModule {
     // list carries batch A only as a DELETED-status tombstone manifest
     // (the spec's one-snapshot retention shape), so live = B∪C and the
     // oracle recomputes that subset from the source. Manifest replay
-    // is bounded plan-time Avro; data reads stay native parquet scans.
+    // is bounded plan-time Avro read on the driver (MetaAvro, no Spark
+    // job, like q389's log replay); data reads stay native parquet
+    // scans.
     "q391_iceberg_read" -> { (s, dir) =>
       deltaCensus(
         graft.sources.IcebergLite.read(s, authorIcebergTable(s, dir)))
@@ -701,7 +703,10 @@ object Storage extends QueryModule {
     // null-safe LEFT ANTI join against the distinct delete keys, with
     // per-file sequences attached via a bounded broadcast lookup —
     // delete sides auto-broadcast when small, shuffle when not, so
-    // the plan holds at 100 TB.
+    // the plan holds at 100 TB. The manifest list and its data and
+    // delete manifests (sequence numbers, equality_ids) are read on
+    // the driver by MetaAvro, so resolving the snapshot runs no Spark
+    // job.
     "q406_iceberg_eq_delete" -> { (s, dir) =>
       deltaCensus(graft.sources.IcebergLite
         .read(s, authorIcebergEqDeleteTable(s, dir)))
@@ -1083,7 +1088,8 @@ object Storage extends QueryModule {
     // manifest/, data under bucket-0/. Snapshot 1's delta adds batches
     // A∪B; snapshot 2's base re-lists A∪B while its delta DELETEs A
     // and ADDs C — replay must net the two lists to B∪C. Replay is
-    // bounded plan-time Avro; data reads stay native parquet scans.
+    // bounded plan-time Avro read on the driver (MetaAvro, no Spark
+    // job); data reads stay native parquet scans.
     "q397_paimon_read" -> { (s, dir) =>
       deltaCensus(
         graft.sources.PaimonLite.read(s, authorPaimonTable(s, dir)))

@@ -1,14 +1,19 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 
-/** ONE distributed pass over a bounded file list collecting per-file
-  * footer facts (top-level column names; parquet field ids) — the
-  * scale-safe replacement for per-file sequential driver loops. Each
+/** Per-file footer facts (top-level column names; parquet field ids)
+  * over a bounded file list. A long list is ONE distributed pass — the
+  * scale-safe replacement for per-file sequential driver loops: each
   * file's footer is opened EXECUTOR-SIDE (one task per file, fan-out
-  * capped at the cluster's parallelism); the collect returns one
+  * capped at the cluster's parallelism) and the collect returns one
   * small tuple per file — O(files) names on the driver, never
-  * O(files) serial round-trips. Used by [[IcebergLite]] for the ORC
+  * O(files) serial round-trips. A short list is read on the driver
+  * (see `sweep`). Used by [[IcebergLite]] for the ORC
   * rename guard and the name-mapping classification of id-less
   * parquet files (reference surface: thirdparty/auron-iceberg reads
   * through the Iceberg library, which consults the same footers via
@@ -19,48 +24,53 @@ object FooterSweep {
   private def slices(spark: SparkSession, n: Int): Int =
     math.min(n, spark.sparkContext.defaultParallelism).max(1)
 
-  /** Per ORC file: its top-level column names, read executor-side via
-    * orc-core (`OrcFile.createReader`). */
-  def orcColumns(spark: SparkSession,
-                 files: Seq[String]): Map[String, Seq[String]] = {
-    if (files.isEmpty) return Map.empty
-    spark.sparkContext
-      .parallelize(files, slices(spark, files.size))
-      .map { f =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val reader = org.apache.orc.OrcFile.createReader(
-          new org.apache.hadoop.fs.Path(f),
-          org.apache.orc.OrcFile.readerOptions(conf))
-        try f -> {
-          import scala.jdk.CollectionConverters._
-          reader.getSchema.getFieldNames.asScala.toVector
-        } finally reader.close()
-      }
-      .collect().toMap
+  /** `facts` of every file. A list no longer than Spark's own
+    * parallel-listing threshold
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`, 32 by
+    * default: below it Spark lists files without a job) is read on the
+    * driver — a few footer opens cost less than scheduling a job, and
+    * snapshot resolution of a table with a handful of delete files
+    * stays job-free. Longer lists take the one distributed pass. */
+  private def sweep[T: ClassTag](spark: SparkSession, files: Seq[String])
+      (facts: (String, Configuration) => T): Map[String, T] = {
+    val threshold = spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
+      .toInt
+    if (files.isEmpty) Map.empty
+    else if (files.size <= threshold) {
+      val conf = spark.sparkContext.hadoopConfiguration
+      files.map(f => f -> facts(f, conf)).toMap
+    } else
+      spark.sparkContext
+        .parallelize(files, slices(spark, files.size))
+        .map(f => f -> facts(f, new Configuration()))
+        .collect().toMap
   }
 
+  /** Per ORC file: its top-level column names, read via orc-core
+    * (`OrcFile.createReader`). */
+  def orcColumns(spark: SparkSession,
+                 files: Seq[String]): Map[String, Seq[String]] =
+    sweep(spark, files) { (f, conf) =>
+      val reader = org.apache.orc.OrcFile.createReader(
+        new org.apache.hadoop.fs.Path(f),
+        org.apache.orc.OrcFile.readerOptions(conf))
+      try reader.getSchema.getFieldNames.asScala.toVector
+      finally reader.close()
+    }
+
   /** Per parquet file: its top-level (column name, stored field id)
-    * pairs, read executor-side via parquet-hadoop
-    * (`ParquetFileReader.open`). A field without a stored id maps to
-    * None — the caller decides whether that means field-id
-    * resolution, name mapping, or a refusal. */
+    * pairs, read via parquet-hadoop (`ParquetFileReader.open`). A field
+    * without a stored id maps to None — the caller decides whether
+    * that means field-id resolution, name mapping, or a refusal. */
   def parquetFields(spark: SparkSession, files: Seq[String])
-  : Map[String, Seq[(String, Option[Int])]] = {
-    if (files.isEmpty) return Map.empty
-    spark.sparkContext
-      .parallelize(files, slices(spark, files.size))
-      .map { f =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try f -> {
-          import scala.jdk.CollectionConverters._
-          reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-            .map(t => t.getName ->
-              Option(t.getId).map(_.intValue())).toVector
-        } finally reader.close()
-      }
-      .collect().toMap
-  }
+  : Map[String, Seq[(String, Option[Int])]] =
+    sweep(spark, files) { (f, conf) =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(new org.apache.hadoop.fs.Path(f), conf)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
+        .map(t => t.getName -> Option(t.getId).map(_.intValue())).toVector
+      finally reader.close()
+    }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.MetaAvro
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -21,7 +22,10 @@ import org.json4s.jackson.JsonMethods
   * into its native engine; here the same split of labor is Spark-first):
   *  - SNAPSHOT RESOLUTION (metadata JSON + manifest Avro replay) is
   *    bounded plan-time work — manifests count in the thousands, never
-  *    fact-sized, and are read through Spark's bundled Avro source;
+  *    fact-sized — done on the driver: manifest lists and manifests
+  *    are read by [[MetaAvro]] (avro's `DataFileReader` + Spark's own
+  *    Avro deserializer), so resolving a snapshot launches no Spark
+  *    job;
   *  - DATA READING is Spark's native vectorized parquet/ORC scan over the
   *    resolved file set (Iceberg data files store identity-partition
   *    columns IN the file, unlike Delta, so one schema'd read serves),
@@ -37,10 +41,10 @@ import org.json4s.jackson.JsonMethods
   * A parquet file with NO stored ids fails loudly — UNLESS the table
   * carries `schema.name-mapping.default` (the spec's migration
   * surface for Hive/raw-parquet imports), in which case one
-  * distributed footer sweep classifies files and id-less ones read
-  * by their MAPPED name and project back to current names. ORC files
+  * footer sweep ([[FooterSweep]]) classifies files and id-less ones
+  * read by their MAPPED name and project back to current names. ORC files
   * keep name resolution (Spark's ORC reader has no field-id surface)
-  * guarded by the same distributed footer sweep.
+  * guarded by the same footer sweep.
   *
   * v2 POSITIONAL deletes (content=1) are READ: delete parquets carry
   * (file_path, pos) rows naming dead ordinals in specific data files;
@@ -419,11 +423,11 @@ object IcebergLite {
 
     // manifest list: bounded plan-time read (one row per manifest)
     val mlPath = resolve(tableDir, manifestList)
-    val ml = spark.read.format(AvroFmt).load(mlPath)
+    val ml = MetaAvro.read(spark, mlPath)
     if (!ml.columns.contains("manifest_path"))
       throw new IllegalStateException(
         s"$mlPath: manifest list lacks manifest_path")
-    val mlRows = ml.collect()
+    val mlRows = ml.rows
     // manifest-list content: 0 = data manifest, 1 = delete manifest
     val (dataManifests, deleteManifests) = mlRows.partition { r =>
       !ml.columns.contains("content") || r.getAs[Any]("content") == null ||
@@ -450,11 +454,11 @@ object IcebergLite {
                allowed: Set[Int], what: String): Seq[Entry] =
       manifests.flatMap { case (mp, inherited) =>
         val p = resolve(tableDir, mp)
-        val m = spark.read.format(AvroFmt).load(p)
+        val m = MetaAvro.read(spark, p)
         if (!m.columns.contains("data_file") || !m.columns.contains("status"))
           throw new IllegalStateException(
             s"$p: manifest lacks status/data_file fields")
-        m.collect().flatMap { r =>
+        m.rows.flatMap { r =>
           val status = r.getAs[Number]("status").intValue()
           val df = r.getAs[org.apache.spark.sql.Row]("data_file")
           def fld[T](row: org.apache.spark.sql.Row, n: String)
@@ -591,11 +595,11 @@ object IcebergLite {
       case _ => None
     }).getOrElse(throw new IllegalStateException(
       s"$metaFile: current snapshot $curId not in snapshots"))
-    val ml = spark.read.format(AvroFmt).load(resolve(tableDir, manifestList))
+    val ml = MetaAvro.read(spark, resolve(tableDir, manifestList))
     if (!ml.columns.contains("manifest_path"))
       throw new IllegalStateException(
         s"$manifestList: manifest list lacks manifest_path")
-    val dataManifests = ml.collect().filter { r =>
+    val dataManifests = ml.rows.filter { r =>
       !ml.columns.contains("content") || r.getAs[Any]("content") == null ||
         r.getAs[Number]("content").intValue() == 0
     }.map(_.getAs[String]("manifest_path")).toSeq
@@ -607,11 +611,11 @@ object IcebergLite {
     } + "\""
     dataManifests.flatMap { mp =>
       val p = resolve(tableDir, mp)
-      val m = spark.read.format(AvroFmt).load(p)
+      val m = MetaAvro.read(spark, p)
       if (!m.columns.contains("data_file") || !m.columns.contains("status"))
         throw new IllegalStateException(
           s"$p: manifest lacks status/data_file fields")
-      m.collect().flatMap { r =>
+      m.rows.flatMap { r =>
         val df = r.getAs[org.apache.spark.sql.Row]("data_file")
         def fld[T](n: String)(get: => T): Option[T] =
           if (df.schema.fieldNames.contains(n) &&
@@ -732,13 +736,12 @@ object IcebergLite {
           case _ => None
         }).getOrElse(throw new IllegalStateException(
           s"$tableDir: current snapshot $curId not in snapshots"))
-        val ml = spark.read.format(AvroFmt)
-          .load(resolve(tableDir, manifestList))
+        val ml = MetaAvro.read(spark, resolve(tableDir, manifestList))
         if (!ml.columns.contains("manifest_path"))
           throw new IllegalStateException(
             s"$manifestList: manifest list lacks manifest_path")
         val manifests: Seq[(String, Int, Option[Long])] =
-          ml.collect().map { r =>
+          ml.rows.map { r =>
             val content =
               if (ml.columns.contains("content") &&
                 r.getAs[Any]("content") != null)
@@ -760,12 +763,12 @@ object IcebergLite {
                             Option[Long], Option[Long])] =
           manifests.flatMap { case (mp, content, _) =>
             val p = resolve(tableDir, mp)
-            val m = spark.read.format(AvroFmt).load(p)
+            val m = MetaAvro.read(spark, p)
             if (!m.columns.contains("data_file") ||
               !m.columns.contains("status"))
               throw new IllegalStateException(
                 s"$p: manifest lacks status/data_file fields")
-            m.collect().map { r =>
+            m.rows.map { r =>
               val df = r.getAs[org.apache.spark.sql.Row]("data_file")
               def fld[T](n: String)(get: => T): Option[T] =
                 if (df.schema.fieldNames.contains(n) &&
@@ -1078,9 +1081,9 @@ object IcebergLite {
       // session flag routes the scan through id matching, so renamed
       // columns read correctly with NO per-file footer sweep. ORC has
       // no field-id surface in Spark, so ORC files keep name
-      // resolution — guarded by ONE distributed footer sweep
-      // (executor-side reads, O(files) names collected; a rename
-      // mid-history leaves a mix of old- and new-named files).
+      // resolution — guarded by ONE footer sweep (O(files) names
+      // collected; a rename mid-history leaves a mix of old- and
+      // new-named files).
       enableFieldIdRead(spark)
       val orcFiles = snap.files.filter(_.endsWith(".orc"))
       if (orcFiles.nonEmpty) {
@@ -1394,8 +1397,9 @@ object IcebergLite {
     // ids under the CURRENT names. A requested id absent from a file
     // would read silently null — and null-safe-match null keys — so
     // every delete file's stored ids are checked first through ONE
-    // distributed footer sweep (never a sequential per-file driver
-    // loop; a CDC-heavy table can carry 10⁴ delete files).
+    // footer sweep (on the driver for a short list, else distributed —
+    // never a sequential per-file driver loop over a CDC-heavy
+    // table's 10⁴ delete files).
     val storedIds: Map[String, Set[Int]] = FooterSweep
       .parquetFields(spark, snap.eqDeletes.map(_.path).distinct)
       .map { case (f, fields) => f -> fields.flatMap(_._2).toSet }
@@ -1624,12 +1628,12 @@ object IcebergLite {
       case _ => None
     }).getOrElse(throw new IllegalStateException(
       s"$tableDir: current snapshot $curId not in snapshots"))
-    val ml = spark.read.format(AvroFmt).load(resolve(tableDir, mlRel))
+    val ml = MetaAvro.read(spark, resolve(tableDir, mlRel))
     if (!ml.columns.contains("manifest_path"))
       throw new IllegalStateException(
         s"$tableDir: manifest list lacks manifest_path")
     val oldRows: Seq[(String, Option[Int], Option[Long])] =
-      ml.collect().toSeq.map { r =>
+      ml.rows.toSeq.map { r =>
         val content =
           if (ml.columns.contains("content") &&
             r.getAs[Any]("content") != null)
@@ -1645,8 +1649,8 @@ object IcebergLite {
     var maxSeq = 0L
     oldRows.foreach { case (mp, _, listSeq) =>
       val p = resolve(tableDir, mp)
-      val m = spark.read.format(AvroFmt).load(p)
-      m.collect().foreach { r =>
+      val m = MetaAvro.read(spark, p)
+      m.rows.foreach { r =>
         val status = r.getAs[Number]("status").intValue()
         if (status != 2) {
           val entrySeq =
@@ -2339,8 +2343,8 @@ object IcebergLite {
           s"$tableDir: metadata has no snapshots array")
       }
       val mlResolved = resolve(tableDir, ml)
-      val manifests = spark.read.format(AvroFmt).load(mlResolved)
-        .collect().map(r => r.getAs[String]("manifest_path")).toSeq
+      val manifests = MetaAvro.read(spark, mlResolved)
+        .rows.map(r => r.getAs[String]("manifest_path")).toSeq
       val snap = snapshot(spark, tableDir, Some(sid))
       (Seq(mlResolved) ++ manifests.map(resolve(tableDir, _)) ++
         snap.files ++ snap.deleteFiles ++ snap.eqDeletes.map(_.path) ++

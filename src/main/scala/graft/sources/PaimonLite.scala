@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graft.MetaAvro
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -25,9 +26,10 @@ import org.json4s.jackson.JsonMethods
   * its native engine via the same provider contract as
   * auron-iceberg/.../IcebergConvertProvider.scala). Same Spark-first
   * split: snapshot/manifest replay is bounded plan-time metadata
-  * (manifests count in the thousands, never fact-sized); data reads
-  * are Spark's native vectorized parquet scans, keeping pushdown,
-  * pruning and whole-stage codegen at 100 TB.
+  * (manifests count in the thousands, never fact-sized) read on the
+  * driver by [[MetaAvro]], with no Spark job; data reads are Spark's
+  * native vectorized parquet scans, keeping pushdown, pruning and
+  * whole-stage codegen at 100 TB.
   *
   * PRIMARY-KEY tables (the LSM side of Paimon) are READ for ALL FOUR
   * published merge engines: PK data files store KeyValue rows —
@@ -409,11 +411,11 @@ object PaimonLite {
       (snap \ key) match {
         case JString(ml) =>
           val p = resolveManifest(ml)
-          val df = spark.read.format(AvroFmt).load(p)
-          if (!df.columns.contains("_FILE_NAME"))
+          val list = MetaAvro.read(spark, p)
+          if (!list.columns.contains("_FILE_NAME"))
             throw new IllegalStateException(
               s"$p: manifest list lacks _FILE_NAME")
-          df.collect().map(_.getAs[String]("_FILE_NAME")).toSeq
+          list.rows.map(_.getAs[String]("_FILE_NAME")).toSeq
         case JNull | JNothing => Nil
         case other => throw new IllegalStateException(
           s"$tableDir snapshot $wantedId: $key is not a string: $other")
@@ -433,7 +435,7 @@ object PaimonLite {
       scala.collection.mutable.LinkedHashSet.empty[(Seq[Any], Int, String)]
     for (mf <- manifests) {
       val p = resolveManifest(mf)
-      val m = spark.read.format(AvroFmt).load(p)
+      val m = MetaAvro.read(spark, p)
       for (need <- Seq("_KIND", "_BUCKET", "_FILE"))
         if (!m.columns.contains(need)) throw new IllegalStateException(
           s"$p: manifest lacks $need")
@@ -441,7 +443,7 @@ object PaimonLite {
         throw new IllegalStateException(
           s"$p: partitioned table but the manifest lacks _PARTITION — " +
             "cannot place its files")
-      m.collect().foreach { r =>
+      m.rows.foreach { r =>
         val kind = r.getAs[Number]("_KIND").intValue()
         val bucket = r.getAs[Number]("_BUCKET").intValue()
         val file = r.getAs[org.apache.spark.sql.Row]("_FILE")
@@ -485,7 +487,7 @@ object PaimonLite {
           s"$tableDir: snapshot $wantedId declares indexManifest $im " +
             "but the file is missing — its deletion vectors (if any) " +
             "cannot be applied")
-        val idx = spark.read.format(AvroFmt).load(p.toString)
+        val idx = MetaAvro.read(spark, p.toString)
         val nested = idx.columns.contains("_INDEX_FILE")
         if (!nested && !idx.columns.contains("_INDEX_TYPE"))
           throw new IllegalStateException(
@@ -495,7 +497,7 @@ object PaimonLite {
         type Key = (Seq[Any], Int, String)
         val liveIdx = scala.collection.mutable.LinkedHashMap
           .empty[Key, (String, org.apache.spark.sql.Row)]
-        idx.collect().foreach { r =>
+        idx.rows.foreach { r =>
           val kind =
             if (idx.columns.contains("_KIND"))
               r.getAs[Number]("_KIND").intValue()
@@ -779,11 +781,11 @@ object PaimonLite {
     val manifests = (snapJson \ "changelogManifestList") match {
       case JString(ml) =>
         val p = resolveManifest(ml)
-        val df = spark.read.format(AvroFmt).load(p)
-        if (!df.columns.contains("_FILE_NAME"))
+        val list = MetaAvro.read(spark, p)
+        if (!list.columns.contains("_FILE_NAME"))
           throw new IllegalStateException(
             s"$p: manifest list lacks _FILE_NAME")
-        df.collect().map(_.getAs[String]("_FILE_NAME")).toSeq
+        list.rows.map(_.getAs[String]("_FILE_NAME")).toSeq
       case _
         if (snapJson \ "commitKind").extractOpt[String]
           .contains("COMPACT") =>
@@ -811,7 +813,7 @@ object PaimonLite {
     }
     val files: Seq[DataFile] = manifests.flatMap { mf =>
       val p = resolveManifest(mf)
-      val m = spark.read.format(AvroFmt).load(p)
+      val m = MetaAvro.read(spark, p)
       for (need <- Seq("_KIND", "_BUCKET", "_FILE"))
         if (!m.columns.contains(need)) throw new IllegalStateException(
           s"$p: manifest lacks $need")
@@ -819,7 +821,7 @@ object PaimonLite {
         throw new IllegalStateException(
           s"$p: partitioned table but the changelog manifest lacks " +
             "_PARTITION — cannot place its files")
-      m.collect().map { r =>
+      m.rows.map { r =>
         if (r.getAs[Number]("_KIND").intValue() != 0)
           throw new IllegalStateException(
             s"$p: DELETE entry in a changelog manifest — malformed")
@@ -962,11 +964,11 @@ object PaimonLite {
     def namesOf(key: String): Seq[String] = (snap \ key) match {
       case JString(ml) =>
         val p = s"$tableDir/manifest/$ml"
-        val df = spark.read.format(AvroFmt).load(p)
-        if (!df.columns.contains("_FILE_NAME"))
+        val list = MetaAvro.read(spark, p)
+        if (!list.columns.contains("_FILE_NAME"))
           throw new IllegalStateException(
             s"$p: manifest list lacks _FILE_NAME")
-        df.collect().map(_.getAs[String]("_FILE_NAME")).toSeq
+        list.rows.map(_.getAs[String]("_FILE_NAME")).toSeq
       case JNull | JNothing => Nil
       case other => throw new IllegalStateException(
         s"$snapFile: $key is not a string: $other")
@@ -1041,18 +1043,18 @@ object PaimonLite {
     val manifests = (snap \ "deltaManifestList") match {
       case JString(ml) =>
         val p = resolveManifest(ml)
-        val df = spark.read.format(AvroFmt).load(p)
-        if (!df.columns.contains("_FILE_NAME"))
+        val list = MetaAvro.read(spark, p)
+        if (!list.columns.contains("_FILE_NAME"))
           throw new IllegalStateException(
             s"$p: manifest list lacks _FILE_NAME")
-        df.collect().map(_.getAs[String]("_FILE_NAME")).toSeq
+        list.rows.map(_.getAs[String]("_FILE_NAME")).toSeq
       case JNull | JNothing => Nil
       case other => throw new IllegalStateException(
         s"$snapFile: deltaManifestList is not a string: $other")
     }
     manifests.flatMap { mf =>
       val p = resolveManifest(mf)
-      val m = spark.read.format(AvroFmt).load(p)
+      val m = MetaAvro.read(spark, p)
       for (need <- Seq("_KIND", "_BUCKET", "_FILE"))
         if (!m.columns.contains(need)) throw new IllegalStateException(
           s"$p: manifest lacks $need")
@@ -1060,7 +1062,7 @@ object PaimonLite {
         throw new IllegalStateException(
           s"$p: partitioned table but the delta manifest lacks " +
             "_PARTITION — cannot place its files")
-      m.collect().map { r =>
+      m.rows.map { r =>
         val kind = r.getAs[Number]("_KIND").intValue()
         val bucket = r.getAs[Number]("_BUCKET").intValue()
         val name = r.getAs[org.apache.spark.sql.Row]("_FILE")
@@ -2164,13 +2166,13 @@ object PaimonLite {
           }
           val lp = new Path(tableDir, s"manifest/$l")
           if (!fs.exists(lp)) Set.empty
-          else spark.read.format(AvroFmt).load(lp.toString).collect()
+          else MetaAvro.read(spark, lp.toString).rows
             .map(_.getAs[String]("_FILE_NAME")).toSet
             .flatMap { (mf: String) =>
               val mp = new Path(tableDir, s"manifest/$mf")
               if (!fs.exists(mp)) Set.empty[String]
-              else spark.read.format(AvroFmt).load(mp.toString)
-                .collect().map { r =>
+              else MetaAvro.read(spark, mp.toString)
+                .rows.map { r =>
                   val bucket = r.getAs[Number]("_BUCKET").intValue()
                   val name = r.getAs[org.apache.spark.sql.Row]("_FILE")
                     .getAs[String]("_FILE_NAME")
@@ -2206,7 +2208,7 @@ object PaimonLite {
       val manifests = lists.flatMap { l =>
         val p = new Path(tableDir, s"manifest/$l")
         if (!fs.exists(p)) Nil
-        else spark.read.format(AvroFmt).load(p.toString).collect()
+        else MetaAvro.read(spark, p.toString).rows
           .map(_.getAs[String]("_FILE_NAME")).toSeq
       }
       val dataFiles = snapshot(spark, tableDir,

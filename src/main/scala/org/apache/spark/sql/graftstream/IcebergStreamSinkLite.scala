@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SQLContext}
 import org.apache.spark.sql.execution.streaming.Sink
+import org.apache.spark.sql.graft.MetaAvro
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
@@ -189,7 +190,7 @@ class IcebergStreamSink(sqlContext: SQLContext, tableDir: String)
           case _ => None
         }
         prevList.toSeq.flatMap { ml =>
-          spark.read.format(avroFmt).load(s"$tableDir/$ml").collect()
+          MetaAvro.read(spark, s"$tableDir/$ml").rows
             .map(r => (r.getAs[String]("manifest_path"),
               r.getAs[Number]("content").intValue())).toSeq
         }

@@ -55,6 +55,60 @@ class ArgMaxLongSpec extends AnyFunSuite {
     assert(nul.isNullAt(1))
   }
 
+  /** Runs `body` under the given session confs, restoring them after. */
+  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach { case (k, o) =>
+      o.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  test("argmaxCountMinLabel skips null labels and null counts: equals a " +
+    "plain reference on both the codegen and the interpreted path") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    // nulls in both columns, dense count ties, labels past 2^31
+    val rows = (1 to 4000).map { _ =>
+      (rnd.nextInt(60).toLong,
+        if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(4).toLong),
+        if (rnd.nextInt(5) == 0) None
+        else Some((if (rnd.nextBoolean()) 0L else 1L << 33) +
+          rnd.nextInt(500)))
+    } ++ Seq(
+      // a null label at the top count must not hide the smaller label
+      // that ties it (the buffer once kept the null and lost the tie)
+      (100L, Some(5L), None), (100L, Some(5L), Some(3L)),
+      (100L, Some(5L), Some(9L)),
+      // only null labels / only null counts: no candidate, null result
+      (101L, Some(2L), None), (102L, None, Some(1L)))
+    val want: Map[Long, Option[Long]] = rows.groupBy(_._1).map {
+      case (g, rs) =>
+        val live = rs.collect { case (_, Some(c), Some(l)) => (c, l) }
+        g -> live.maxByOption { case (c, l) => (c, -l) }.map(_._2)
+    }
+    assert(want(100L).contains(3L))
+    val modes = Seq(
+      "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((mode, confs) <- modes; nPart <- Seq(1, 3, 16)) withConfs(confs: _*) {
+      val df = rows.toDF("g", "c", "lab")
+      // one partition keeps the rows in order: the null label comes
+      // first within group 100, as in the case above
+      val laid = if (nPart == 1) df.coalesce(1) else df.repartition(nPart)
+      val agg = laid.groupBy($"g")
+        .agg(argmaxCountMinLabel($"lab", $"c").as("m"))
+      val got = agg.as[(Long, Option[Long])].collect().toMap
+      assert(got == want, s"$mode, nPart=$nPart")
+      agg.queryExecution.executedPlan.foreach { p =>
+        assert(!p.getClass.getSimpleName.contains("SortAggregate"))
+      }
+    }
+  }
+
   test("BloomMightContainBroadcast matches the filter exactly (no " +
     "false negatives) under both codegen and interpreted eval") {
     import spark.implicits._
