@@ -1,50 +1,29 @@
 package graft.sources
 
 import scala.jdk.CollectionConverters._
-import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 
 /** Per-file footer facts (top-level column names; parquet field ids)
-  * over a bounded file list. A long list is ONE distributed pass — the
-  * scale-safe replacement for per-file sequential driver loops: each
-  * file's footer is opened EXECUTOR-SIDE (one task per file, fan-out
-  * capped at the cluster's parallelism) and the collect returns one
-  * small tuple per file — O(files) names on the driver, never
-  * O(files) serial round-trips. A short list is read on the driver
-  * (see `sweep`). Used by [[IcebergLite]] for the ORC
-  * rename guard and the name-mapping classification of id-less
-  * parquet files (reference surface: thirdparty/auron-iceberg reads
-  * through the Iceberg library, which consults the same footers via
-  * its own distributed planning).
+  * over a bounded file list, read on the driver like the manifests that
+  * named the files ([[org.apache.spark.sql.graft.MetaAvro]]): one
+  * footer open per file, one after another, and one small tuple per
+  * file kept. Files open through the Hadoop conf of the session, so
+  * session-level `fs.*` settings apply here as they do to the scan.
+  * Used by [[IcebergLite]] for the ORC rename guard, the name-mapping
+  * and initial-default classification of parquet files, and the stored
+  * field-id check of equality-delete files (reference surface:
+  * thirdparty/auron-iceberg reads through the Iceberg library on the
+  * driver).
   */
 object FooterSweep {
 
-  private def slices(spark: SparkSession, n: Int): Int =
-    math.min(n, spark.sparkContext.defaultParallelism).max(1)
-
-  /** `facts` of every file. A list no longer than Spark's own
-    * parallel-listing threshold
-    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`, 32 by
-    * default: below it Spark lists files without a job) is read on the
-    * driver — a few footer opens cost less than scheduling a job, and
-    * snapshot resolution of a table with a handful of delete files
-    * stays job-free. Longer lists take the one distributed pass. */
-  private def sweep[T: ClassTag](spark: SparkSession, files: Seq[String])
+  private def sweep[T](spark: SparkSession, files: Seq[String])
       (facts: (String, Configuration) => T): Map[String, T] = {
-    val threshold = spark.conf
-      .get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
-      .toInt
-    if (files.isEmpty) Map.empty
-    else if (files.size <= threshold) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      files.map(f => f -> facts(f, conf)).toMap
-    } else
-      spark.sparkContext
-        .parallelize(files, slices(spark, files.size))
-        .map(f => f -> facts(f, new Configuration()))
-        .collect().toMap
+    if (files.isEmpty) return Map.empty
+    val conf = spark.sessionState.newHadoopConf()
+    files.map(f => f -> facts(f, conf)).toMap
   }
 
   /** Per ORC file: its top-level column names, read via orc-core

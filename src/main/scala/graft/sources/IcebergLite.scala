@@ -1182,8 +1182,8 @@ object IcebergLite {
     * id-less file under the id-carrying read schema fails LOUDLY in
     * Spark). With the table property `schema.name-mapping.default`
     * present — the spec's surface for tables MIGRATED from Hive/raw
-    * parquet, whose old files legally carry no ids — one distributed
-    * footer sweep classifies the parquet files: id-stamped files keep
+    * parquet, whose old files legally carry no ids — one footer sweep
+    * ([[FooterSweep]]) classifies the parquet files: id-stamped files keep
     * the field-id scan; id-less files read BY THE MAPPED NAME (each
     * schema field's id looks up its candidate names; exactly one must
     * match the file's columns — zero means null for optional / refuse
@@ -1397,9 +1397,7 @@ object IcebergLite {
     // ids under the CURRENT names. A requested id absent from a file
     // would read silently null — and null-safe-match null keys — so
     // every delete file's stored ids are checked first through ONE
-    // footer sweep (on the driver for a short list, else distributed —
-    // never a sequential per-file driver loop over a CDC-heavy
-    // table's 10⁴ delete files).
+    // footer sweep on the driver (one footer open per delete file).
     val storedIds: Map[String, Set[Int]] = FooterSweep
       .parquetFields(spark, snap.eqDeletes.map(_.path).distinct)
       .map { case (f, fields) => f -> fields.flatMap(_._2).toSet }

@@ -16,8 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * manifest and index manifest the lakehouse fixtures (and any spec
   * tables on disk) wrote, the schema and the collected rows must be
   * identical. Snapshot resolution through it (and through the
-  * driver-side FooterSweep for short file lists) must launch no Spark
-  * job. */
+  * driver-side FooterSweep) must launch no Spark job. */
 class MetaAvroSpec extends AnyFunSuite {
   import TestSession._
 
@@ -200,34 +199,60 @@ class MetaAvroSpec extends AnyFunSuite {
       s"jobs during the builder: ${launched.filter(_._2.nonEmpty)}")
   }
 
-  test("FooterSweep reads a short file list on the driver and a long one " +
-    "in one job, with the same facts") {
+  test("FooterSweep reads footers on the driver, without a job, through " +
+    "the session's Hadoop conf as MetaAvro does") {
     val dir = "/tmp/graft_metaavro/footers"
     rm(new java.io.File(dir))
     val df = spark.range(0, 6).select(col("id"), (col("id") * 2).as("v"))
     graft.sources.IcebergLite.stampFieldIds(df, Map("id" -> 1, "v" -> 2))
       .repartition(3).write.parquet(s"$dir/pq")
     df.repartition(2).write.orc(s"$dir/orc")
+    import spark.implicits._
+    val avro = writeAvro(Seq((0, "m-0.avro")).toDF("content",
+      "manifest_path"), dir, "snap-0.avro")
     def files(sub: String, ext: String) =
       new java.io.File(s"$dir/$sub").listFiles().map(_.getPath)
         .filter(_.endsWith(ext)).toSeq.sorted
     val (pq, orc) = (files("pq", ".parquet"), files("orc", ".orc"))
     assert(pq.size == 3 && orc.size == 2)
-    def both() = (graft.sources.FooterSweep.parquetFields(spark, pq),
-      graft.sources.FooterSweep.orcColumns(spark, orc))
-    var onDriver: (Map[String, Seq[(String, Option[Int])]],
-      Map[String, Seq[String]]) = null
-    assert(jobsDuring { onDriver = both() }.isEmpty)
-    assert(onDriver._1.values.forall(
-      _ == Seq("id" -> Some(1), "v" -> Some(2))), onDriver._1)
-    assert(onDriver._2.values.forall(_ == Seq("id", "v")), onDriver._2)
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    spark.conf.set(key, "1")
-    try {
-      var distributed: AnyRef = null
-      assert(jobsDuring { distributed = both() }.size == 2)
-      assert(distributed == onDriver)
-    } finally spark.conf.unset(key)
+    var pqFields: Map[String, Seq[(String, Option[Int])]] = null
+    var orcCols: Map[String, Seq[String]] = null
+    assert(jobsDuring {
+      pqFields = graft.sources.FooterSweep.parquetFields(spark, pq)
+      orcCols = graft.sources.FooterSweep.orcColumns(spark, orc)
+    }.isEmpty)
+    assert(pqFields.keySet == pq.toSet && pqFields.values.forall(
+      _ == Seq("id" -> Some(1), "v" -> Some(2))), pqFields)
+    assert(orcCols.keySet == orc.toSet &&
+      orcCols.values.forall(_ == Seq("id", "v")), orcCols)
+    // a session-level fs.* setting (here: the file:// FileSystem class)
+    // reaches both readers
+    val settings = Seq("fs.file.impl" -> classOf[CountingLocalFs].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    val opened = try {
+      CountingLocalFs.inits.set(0)
+      graft.sources.FooterSweep.parquetFields(spark, pq)
+      graft.sources.FooterSweep.orcColumns(spark, orc)
+      val afterFooters = CountingLocalFs.inits.get
+      MetaAvro.read(spark, avro)
+      (afterFooters, CountingLocalFs.inits.get - afterFooters)
+    } finally settings.foreach { case (k, _) => spark.conf.unset(k) }
+    assert(opened._1 >= pq.size + orc.size && opened._2 >= 1, opened)
     rm(new java.io.File(dir))
   }
+}
+
+/** The local FileSystem, counting its instances: set as `fs.file.impl`
+  * (with the cache off) it shows which reads see a session setting. */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def initialize(name: java.net.URI,
+                          conf: org.apache.hadoop.conf.Configuration): Unit = {
+    super.initialize(name, conf)
+    CountingLocalFs.inits.incrementAndGet(): Unit
+  }
+}
+
+object CountingLocalFs {
+  val inits = new java.util.concurrent.atomic.AtomicInteger
 }
