@@ -85,7 +85,12 @@ object Analytics4 extends QueryModule {
     // m comes from one bounded count over the already-checkpointed edge
     // blocks. Scale gate: past bloomMaxEdges (default 2e8 ≈ 240 MB of
     // filter) the broadcast cost outweighs the shuffle saving — skip
-    // the prefilter and keep the plain semi-join, same results.
+    // the prefilter and keep the plain semi-join, same results
+    // (GraphSpec runs its known answers on both paths).
+    // Driver heap: the driver assembles the whole filter, ~9.6 bits per
+    // edge at 1 % fpp, so a graph at the default gate needs ~240 MB of
+    // free driver heap for it. Set spark.graft.triangle.bloomMaxEdges
+    // lower on a smaller driver (0 turns the prefilter off).
     val m = e.count()
     val bloomMax = e.sparkSession.conf
       .getOption("spark.graft.triangle.bloomMaxEdges").map(_.toLong)

@@ -138,46 +138,27 @@ object Similarity extends QueryModule {
     // cell assignment is row-identical): the index build has no
     // exchange at all — the shape the 100 TB design note always
     // claimed ("one corpus-wide argmax").
+    // k is the private constant ivfK, so the k-vector array row stays
+    // small; there is no explode + window fallback.
     //
-    // r21: the collapse is GATED like the triangle Bloom — the single
-    // array row holds all k centroid vectors and the per-row transform
-    // comparator is interpreted (the q143 negative result showed that
-    // cost is real), so past spark.graft.ivf.argmaxMaxK (default 512)
-    // the build falls back to the explode + window argmax. Same
-    // (csim desc, cent_id) ordering on both paths → identical cells.
-    //
-    // NaN guard (r21, ADVICE): a zero-norm centroid makes cosine NaN;
-    // Spark orders NaN GREATEST, so the old csim-DESC window ranked a
-    // NaN centroid FIRST while array_min over struct(-csim, ...) ranks
-    // it LAST — a silent divergence between the shapes. nanvl pins the
-    // semantics on BOTH paths: a degenerate centroid scores -Inf and
+    // NaN guard: a zero-norm centroid makes cosine NaN. Spark orders
+    // NaN GREATEST, so a csim-DESC ranking would put a NaN centroid
+    // FIRST while array_min over struct(-csim, ...) ranks it LAST.
+    // nanvl pins the semantics: a degenerate centroid scores -Inf and
     // always loses. (No fixture centroid has zero norm — values are
     // unchanged; this removes the latent cliff.)
     def score(cv: Column): Column =
       nanvl(round(cosine(cv, col("v")), 6), lit(Double.NegativeInfinity))
-    val maxK = s.conf.getOption("spark.graft.ivf.argmaxMaxK")
-      .map(_.toInt).getOrElse(512)
-    if (ivfK <= maxK) {
-      val centsArr = ivfCentroids(s, dir)
-        .agg(array_sort(collect_list(struct(col("cent_id"), col("cv"))))
-          .as("cents"))
-      corpus(s, dir).crossJoin(broadcast(centsArr))
-        .select(col("vec_id"), col("v"),
-          array_min(transform(col("cents"),
-            c0 => struct(
-              (-score(c0.getField("cv"))).as("nsim"),
-              c0.getField("cent_id").as("cent_id"))))
-            .getField("cent_id").as("cell"))
-    } else {
-      val wAssign = Window.partitionBy(col("vec_id"))
-        .orderBy(col("csim").desc, col("cent_id"))
-      corpus(s, dir).crossJoin(broadcast(ivfCentroids(s, dir)))
-        .select(col("vec_id"), col("v"), col("cent_id"),
-          score(col("cv")).as("csim"))
-        .withColumn("rk", row_number().over(wAssign))
-        .filter(col("rk") === 1)
-        .select(col("vec_id"), col("v"), col("cent_id").as("cell"))
-    }
+    val centsArr = ivfCentroids(s, dir)
+      .agg(array_sort(collect_list(struct(col("cent_id"), col("cv"))))
+        .as("cents"))
+    corpus(s, dir).crossJoin(broadcast(centsArr))
+      .select(col("vec_id"), col("v"),
+        array_min(transform(col("cents"),
+          c0 => struct(
+            (-score(c0.getField("cv"))).as("nsim"),
+            c0.getField("cent_id").as("cent_id"))))
+          .getField("cent_id").as("cell"))
   }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

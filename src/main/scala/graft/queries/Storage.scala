@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.{QueryModule, Tables}
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.{jstr, rm}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1642,10 +1644,6 @@ object Storage extends QueryModule {
     "q403_delta_stream_sink" -> { (s, dir) =>
       val src = authorDeltaStreamTable(s, dir, upTo = 0)
       val dest = src + "_sinkdest"
-      def rm(p: java.io.File): Unit = {
-        if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-        p.delete(): Unit
-      }
       rm(new java.io.File(dest))
       val q = s.readStream
         .format("org.apache.spark.sql.graftstream.DeltaStreamLite")
@@ -1675,10 +1673,6 @@ object Storage extends QueryModule {
     "q404_paimon_stream_sink" -> { (s, dir) =>
       val src = authorPaimonStreamTable(s, dir, upTo = 1)
       val dest = src + "_sinkdest"
-      def rm(p: java.io.File): Unit = {
-        if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-        p.delete(): Unit
-      }
       rm(new java.io.File(dest))
       val q = s.readStream
         .format("org.apache.spark.sql.graftstream.PaimonStreamLite")
@@ -1709,10 +1703,6 @@ object Storage extends QueryModule {
     "q405_iceberg_stream_sink" -> { (s, dir) =>
       val src = authorIcebergStreamTable(s, dir, upTo = 1)
       val dest = src + "_sinkdest"
-      def rm(p: java.io.File): Unit = {
-        if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-        p.delete(): Unit
-      }
       rm(new java.io.File(dest))
       val q = s.readStream
         .format("org.apache.spark.sql.graftstream.IcebergStreamLite")
@@ -1777,10 +1767,6 @@ object Storage extends QueryModule {
     "q413_hudi_stream_sink" -> { (s, dir) =>
       val src = authorHudiStreamTable(s, dir, upTo = 0)
       val dest = src + "_sinkdest"
-      def rm(p: java.io.File): Unit = {
-        if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-        p.delete(): Unit
-      }
       rm(new java.io.File(dest))
       val q = s.readStream
         .format("org.apache.spark.sql.graftstream.HudiStreamLite")
@@ -2645,15 +2631,6 @@ object Storage extends QueryModule {
           .cast(DoubleType).as("sum_price"))
       .orderBy(col("o_orderstatus"))
 
-  /** JSON string literal with full control-char escaping (the
-    * schemaString payload embeds Spark's schema JSON, quotes and all). */
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c            => c.toString
-  } + "\""
-
   private val deltaMemo = scala.collection.mutable.Map.empty[String, String]
 
   /** Authors the two-commit Delta-layout lineitem table used by
@@ -2669,10 +2646,6 @@ object Storage extends QueryModule {
       deltaMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
         val root = s"/tmp/graft_delta/li_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         val src = Tables.df(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"),
@@ -2703,8 +2676,8 @@ object Storage extends QueryModule {
         val b1 = files(1)
         val (relOld, rfSp) = b1.head
         val relNew = relOld.replaceFirst("part-", "part sp ")
-        assert(new java.io.File(s"$root/$relOld")
-          .renameTo(new java.io.File(s"$root/$relNew")))
+        LakeFiles.move(new java.io.File(s"$root/$relOld"),
+          new java.io.File(s"$root/$relNew"))
         val batch1 = (relNew, rfSp) +: b1.tail
         def addLine(rel: String, rf: String): String = {
           val enc = rel.replace("%", "%25").replace(" ", "%20")
@@ -2744,10 +2717,6 @@ object Storage extends QueryModule {
       hudiMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
         val root = s"/tmp/graft_hudi/li_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, ".hoodie"))
         Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -2762,16 +2731,10 @@ object Storage extends QueryModule {
           flags.map { rf =>
             val part = s"l_returnflag=$rf"
             val rel = s"$part/$group-${rf}_0-0_$instant.parquet"
-            val tmp = s"$root/_tmp"
-            src.filter(col("l_returnflag") === rf &&
-                (col("l_orderkey") % 10).isin(mods.map(Int.box): _*))
-              .coalesce(1).write.mode("overwrite").parquet(tmp)
-            val partFile = new java.io.File(tmp).listFiles()
-              .find(f => f.getName.endsWith(".parquet") &&
-                !f.getName.startsWith(".")).get
-            Files.createDirectories(Paths.get(root, part))
-            assert(partFile.renameTo(new java.io.File(s"$root/$rel")))
-            rm(new java.io.File(tmp))
+            LakeFiles.Local(root).parquet(
+              src.filter(col("l_returnflag") === rf &&
+                  (col("l_orderkey") % 10).isin(mods.map(Int.box): _*)),
+              rel)
             s"""${jstr(part)}:[{"fileId":${jstr(s"$group-$rf")},"path":${jstr(rel)},"numWrites":1}]"""
           }.mkString(",")
         for ((instant, mods) <- Seq("001" -> Seq(0, 1), "002" -> Seq(1, 2))) {
@@ -2808,10 +2771,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_hudi/mor_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, ".hoodie"))
         Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -2826,16 +2785,10 @@ object Storage extends QueryModule {
                       mods: Seq[Int]): String = {
           val part = s"l_returnflag=$rf"
           val rel = s"$part/g-${rf}_0-0_$instant.parquet"
-          val tmp = s"$root/_tmp"
-          src.filter(col("l_returnflag") === rf &&
-              (col("l_orderkey") % 10).isin(mods.map(Int.box): _*))
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val pf = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          Files.createDirectories(Paths.get(root, part))
-          assert(pf.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
+          LakeFiles.Local(root).parquet(
+            src.filter(col("l_returnflag") === rf &&
+                (col("l_orderkey") % 10).isin(mods.map(Int.box): _*)),
+            rel)
           rel
         }
         def stat(rf: String, rel: String): String =
@@ -2889,10 +2842,6 @@ object Storage extends QueryModule {
   private def authorHudiMorSnapTableAt(s: SparkSession, dir: String,
                                        root: String): String = {
         import java.nio.file.{Files, Paths}
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, ".hoodie"))
         Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -2903,13 +2852,7 @@ object Storage extends QueryModule {
             .as("_hoodie_record_key"),
             col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
           .filter(col("o_orderkey") % 10 < 5)
-        val tmp = s"$root/_tmp"
-        base.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val pf = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(pf.renameTo(new java.io.File(s"$root/g1_0-0_001.parquet")))
-        rm(new java.io.File(tmp))
+        LakeFiles.Local(root).parquet(base, "g1_0-0_001.parquet")
         def stat(path: String): String =
           s""""":[{"fileId":"g1","path":${jstr(path)},"numWrites":1}]"""
         Files.writeString(Paths.get(root, ".hoodie", "001.deltacommit"),
@@ -2957,10 +2900,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_hudi/morwrite_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, ".hoodie"))
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -2972,13 +2911,7 @@ object Storage extends QueryModule {
         lit("001").as("_hoodie_commit_time"),
         col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
       .filter(col("o_orderkey") % 10 < 5)
-    val tmp = s"$root/_tmp"
-    base.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val pf = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(pf.renameTo(new java.io.File(s"$root/g1_0-0_001.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(base, "g1_0-0_001.parquet")
     Files.writeString(Paths.get(root, ".hoodie", "001.deltacommit"),
       s"""{"partitionToWriteStats":{"":[{"fileId":"g1","path":"g1_0-0_001.parquet","numWrites":1}]}}""")
     root
@@ -3002,10 +2935,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_hudi/mordel_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, ".hoodie"))
         Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -3016,13 +2945,7 @@ object Storage extends QueryModule {
             .as("_hoodie_record_key"),
             col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
           .filter(col("o_orderkey") % 10 < 5)
-        val tmp = s"$root/_tmp"
-        base.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val pf = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(pf.renameTo(new java.io.File(s"$root/g1_0-0_001.parquet")))
-        rm(new java.io.File(tmp))
+        LakeFiles.Local(root).parquet(base, "g1_0-0_001.parquet")
         def stat(path: String): String =
           s""""":[{"fileId":"g1","path":${jstr(path)},"numWrites":1}]"""
         Files.writeString(Paths.get(root, ".hoodie", "001.deltacommit"),
@@ -3083,10 +3006,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_hudi/morinc_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, ".hoodie"))
         Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -3102,16 +3021,8 @@ object Storage extends QueryModule {
               lit(ct).as("_hoodie_commit_time"),
               col("o_orderkey"), col("o_totalprice"),
               col("o_orderstatus"))
-        def one(df: DataFrame, out: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$out")))
-          rm(new java.io.File(tmp))
-        }
-        one(baseDf(col("o_orderkey") % 10 < 5, "001"),
+        val lake = LakeFiles.Local(root)
+        lake.parquet(baseDf(col("o_orderkey") % 10 < 5, "001"),
           "g1_0-0_001.parquet")
         def stat(fid: String, p: String): String =
           s"""{"fileId":${jstr(fid)},"path":${jstr(p)},"numWrites":1}"""
@@ -3152,7 +3063,7 @@ object Storage extends QueryModule {
             recs(col("o_orderkey") % 10 === 3, 5.0, "003")
               ++ recs(col("o_orderkey") % 10 === 0, 1.0, "003",
                 deleted = true))))
-        one(baseDf((col("o_orderkey") % 10).isin(5, 6), "003"),
+        lake.parquet(baseDf((col("o_orderkey") % 10).isin(5, 6), "003"),
           "g2_0-0_003.parquet")
         Files.writeString(Paths.get(root, ".hoodie", "003.deltacommit"),
           s"""{"partitionToWriteStats":{"":[${
@@ -3181,10 +3092,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_hudi/morpcinc_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, ".hoodie"))
         Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -3201,16 +3108,8 @@ object Storage extends QueryModule {
               lit(ct).as("_hoodie_commit_time"),
               col("o_orderkey"), col("o_totalprice"),
               col("o_orderstatus"), lit(10L).as("o_seq"))
-        def one(df: DataFrame, out: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$out")))
-          rm(new java.io.File(tmp))
-        }
-        one(baseDf(col("o_orderkey") % 10 < 5, "001"),
+        val lake = LakeFiles.Local(root)
+        lake.parquet(baseDf(col("o_orderkey") % 10 < 5, "001"),
           "g1_0-0_001.parquet")
         def stat(fid: String, p: String): String =
           s"""{"fileId":${jstr(fid)},"path":${jstr(p)},"numWrites":1}"""
@@ -3254,7 +3153,7 @@ object Storage extends QueryModule {
               ++ recs(Seq(1), 4.0, "003", seq = 25L)
               ++ recs(Seq(2), 9.0, "003", seq = 5L)
               ++ recs(Seq(0), 1.0, "003", seq = 50L, deleted = true))))
-        one(baseDf((col("o_orderkey") % 10).isin(5, 6), "003"),
+        lake.parquet(baseDf((col("o_orderkey") % 10).isin(5, 6), "003"),
           "g2_0-0_003.parquet")
         Files.writeString(Paths.get(root, ".hoodie", "003.deltacommit"),
           s"""{"partitionToWriteStats":{"":[${
@@ -3282,10 +3181,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_hudi/inc_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, ".hoodie"))
         Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -3294,27 +3189,19 @@ object Storage extends QueryModule {
         val src = Tables.df(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
-        def one(df: DataFrame, out: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$out")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         val a = src.filter(col("l_orderkey") % 10 === 0)
-        one(a.select(lit("001").as("_hoodie_commit_time"),
+        lake.parquet(a.select(lit("001").as("_hoodie_commit_time"),
           col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
           col("l_returnflag")), "gA_0-0_001.parquet")
-        one(a.select(
+        lake.parquet(a.select(
           when(col("l_quantity") > 30, "002").otherwise("001")
             .as("_hoodie_commit_time"),
           col("l_orderkey"), col("l_quantity"),
           when(col("l_quantity") > 30, col("l_extendedprice") * 2)
             .otherwise(col("l_extendedprice")).as("l_extendedprice"),
           col("l_returnflag")), "gA_0-0_002.parquet")
-        one(src.filter(col("l_orderkey") % 10 === 1)
+        lake.parquet(src.filter(col("l_orderkey") % 10 === 1)
           .select(lit("002").as("_hoodie_commit_time"),
             col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
             col("l_returnflag")), "gB_0-0_002.parquet")
@@ -3341,10 +3228,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_hudi/cluster_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, ".hoodie"))
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -3353,27 +3236,19 @@ object Storage extends QueryModule {
     val src = Tables.df(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"),
         col("l_extendedprice"), col("l_returnflag"))
-    def one(df: DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val a = src.filter(col("l_orderkey") % 10 === 0)
-    one(a.select(lit("001").as("_hoodie_commit_time"),
+    lake.parquet(a.select(lit("001").as("_hoodie_commit_time"),
       col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
       col("l_returnflag")), "gA_0-0_001.parquet")
-    one(a.select(
+    lake.parquet(a.select(
       when(col("l_quantity") > 30, "002").otherwise("001")
         .as("_hoodie_commit_time"),
       col("l_orderkey"), col("l_quantity"),
       when(col("l_quantity") > 30, col("l_extendedprice") * 2)
         .otherwise(col("l_extendedprice")).as("l_extendedprice"),
       col("l_returnflag")), "gA_0-0_002.parquet")
-    one(src.filter(col("l_orderkey") % 10 === 1)
+    lake.parquet(src.filter(col("l_orderkey") % 10 === 1)
       .select(lit("002").as("_hoodie_commit_time"),
         col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
         col("l_returnflag")), "gB_0-0_002.parquet")
@@ -3395,47 +3270,28 @@ object Storage extends QueryModule {
   private def authorPaimonCompactTable(s: SparkSession,
                                        dir: String): String = {
     import java.nio.file.{Files, Paths}
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
     val root =
       s"/tmp/graft_paimon/compact_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     for (d <- Seq("snapshot", "schema", "manifest", "bucket-0"))
       Files.createDirectories(Paths.get(root, d))
     val src = Tables.df(s, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"),
         col("o_orderstatus"))
-    def writeData(df: DataFrame, name: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/bucket-0/$name")))
-      rm(new java.io.File(tmp))
-    }
+    def writeData(df: DataFrame, name: String): Unit =
+      LakeFiles.Local(root).parquet(df, s"bucket-0/$name")
     writeData(src.filter(col("o_orderkey") % 10 === 0), "f1.parquet")
     writeData(src.filter(col("o_orderkey") % 10 === 1), "f2.parquet")
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     import s.implicits._
     def manifest(rel: String, fn: String): Unit =
-      writeAvro(Seq((0, fn)).toDF("_KIND", "_fn")
+      lake.avro(Seq((0, fn)).toDF("_KIND", "_fn")
         .select(col("_KIND"), lit(0).as("_BUCKET"),
           struct(col("_fn").as("_FILE_NAME")).as("_FILE")), rel)
     manifest("manifest/m1.avro", "f1.parquet")
     manifest("manifest/m2.avro", "f2.parquet")
     def mlist(rel: String, names: String*): Unit =
-      writeAvro(
+      lake.avro(
         if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
         else names.toSeq.toDF("_FILE_NAME"), rel)
     mlist("manifest/ml-empty.avro")
@@ -3482,10 +3338,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_hudi/cdc_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, ".hoodie"))
         Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -3498,25 +3350,17 @@ object Storage extends QueryModule {
           df.select(ct.as("_hoodie_commit_time"),
             col("o_orderkey").cast(StringType).as("_hoodie_record_key"),
             col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-        def one(df: DataFrame, out: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$out")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         val base = src.filter(col("o_orderkey") % 10 < 5)
-        one(withMeta(base, lit("001")), "gA_0-0_001.parquet")
-        one(withMeta(
+        lake.parquet(withMeta(base, lit("001")), "gA_0-0_001.parquet")
+        lake.parquet(withMeta(
           base.filter(col("o_orderkey") % 10 =!= 0)
             .withColumn("o_totalprice",
               when((col("o_orderkey") % 10).isin(3, 4),
                 col("o_totalprice") * 2).otherwise(col("o_totalprice"))),
           when((col("o_orderkey") % 10).isin(3, 4), "002")
             .otherwise("001")), "gA_0-0_002.parquet")
-        one(withMeta(src.filter(col("o_orderkey") % 10 === 5),
+        lake.parquet(withMeta(src.filter(col("o_orderkey") % 10 === 5),
           lit("002")), "gB_0-0_002.parquet")
         def stat(fid: String, p: String): String =
           s"""{"fileId":${jstr(fid)},"path":${jstr(p)},"numWrites":1}"""
@@ -3547,10 +3391,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_hudi/morpq_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, ".hoodie"))
         Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -3561,19 +3401,7 @@ object Storage extends QueryModule {
             .as("_hoodie_record_key"),
             col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
           .filter(col("o_orderkey") % 10 < 5)
-        def onePq(df: DataFrame, out: Option[String]): Array[Byte] = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          val bytes = Files.readAllBytes(part.toPath)
-          out.foreach(o => assert(
-            part.renameTo(new java.io.File(s"$root/$o"))))
-          rm(new java.io.File(tmp))
-          bytes
-        }
-        onePq(base, Some("g1_0-0_001.parquet")): Unit
+        LakeFiles.Local(root).parquet(base, "g1_0-0_001.parquet")
         def stat(path: String): String =
           s""""":[{"fileId":"g1","path":${jstr(path)},"numWrites":1}]"""
         Files.writeString(Paths.get(root, ".hoodie", "001.deltacommit"),
@@ -3583,9 +3411,14 @@ object Storage extends QueryModule {
           .withColumn("_hoodie_is_deleted", lit(false))
           .unionByName(base.filter(col("o_orderkey") % 10 === 0)
             .withColumn("_hoodie_is_deleted", lit(true)))
+        // the log block's payload: the bytes of one parquet file
+        val block = new java.io.File(s"$root/_tmpblock.parquet")
+        LakeFiles.stage(logRows, "parquet", new java.io.File(s"$root/_tmp"),
+          block)
+        val blockBytes = Files.readAllBytes(block.toPath)
+        rm(block)
         graft.sources.HudiMorLite.writeLogBlocks(s"$root/.g1_001.log.1",
-          Seq(graft.sources.HudiMorLite.ParquetBlockSpec(
-            onePq(logRows, None))))
+          Seq(graft.sources.HudiMorLite.ParquetBlockSpec(blockBytes)))
         Files.writeString(Paths.get(root, ".hoodie", "002.deltacommit"),
           s"""{"partitionToWriteStats":{${stat(".g1_001.log.1")}}}""")
         root
@@ -3612,10 +3445,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_hudi/morrb_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, ".hoodie"))
         Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -3626,13 +3455,7 @@ object Storage extends QueryModule {
             .as("_hoodie_record_key"),
             col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
           .filter(col("o_orderkey") % 10 < 5)
-        val tmp = s"$root/_tmp"
-        base.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val pf = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(pf.renameTo(new java.io.File(s"$root/g1_0-0_001.parquet")))
-        rm(new java.io.File(tmp))
+        LakeFiles.Local(root).parquet(base, "g1_0-0_001.parquet")
         def stat(path: String): String =
           s""""":[{"fileId":"g1","path":${jstr(path)},"numWrites":1}]"""
         Files.writeString(Paths.get(root, ".hoodie", "001.deltacommit"),
@@ -3702,10 +3525,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_hudi/morpc_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, ".hoodie"))
         Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -3718,13 +3537,7 @@ object Storage extends QueryModule {
             col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
             lit(10L).as("o_seq"))
           .filter(col("o_orderkey") % 10 < 5)
-        val tmp = s"$root/_tmp"
-        base.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val pf = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(pf.renameTo(new java.io.File(s"$root/g1_0-0_001.parquet")))
-        rm(new java.io.File(tmp))
+        LakeFiles.Local(root).parquet(base, "g1_0-0_001.parquet")
         def stat(path: String): String =
           s""""":[{"fileId":"g1","path":${jstr(path)},"numWrites":1}]"""
         Files.writeString(Paths.get(root, ".hoodie", "001.deltacommit"),
@@ -3788,10 +3601,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_hudi/morpart_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, ".hoodie"))
         Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -3801,19 +3610,12 @@ object Storage extends QueryModule {
           .filter(col("o_orderkey") % 10 < 3)
           .select(col("o_orderkey"), col("o_totalprice"))
         val stats = Seq(("A", 1.0), ("B", 10.0)).map { case (p, mult) =>
-          val tmp = s"$root/_tmp"
-          src.select(col("o_orderkey").cast("string")
-            .as("_hoodie_record_key"),
-            lit(p).as("_hoodie_partition_path"), col("o_orderkey"),
-            (col("o_totalprice") * mult).as("o_totalprice"))
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val pf = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          Files.createDirectories(Paths.get(root, p))
-          assert(pf.renameTo(
-            new java.io.File(s"$root/$p/g$p-0-0_001.parquet")))
-          rm(new java.io.File(tmp))
+          LakeFiles.Local(root).parquet(
+            src.select(col("o_orderkey").cast("string")
+              .as("_hoodie_record_key"),
+              lit(p).as("_hoodie_partition_path"), col("o_orderkey"),
+              (col("o_totalprice") * mult).as("o_totalprice")),
+            s"$p/g$p-0-0_001.parquet")
           s"${jstr(p)}:[{\"fileId\":${jstr(s"g$p")},\"path\":${
             jstr(s"$p/g$p-0-0_001.parquet")},\"numWrites\":1}]"
         }
@@ -3870,13 +3672,8 @@ object Storage extends QueryModule {
     icebergMemo.synchronized {
       icebergMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_iceberg/li_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "metadata"))
         val src = Tables.df(s, dir, "lineitem")
@@ -3885,32 +3682,18 @@ object Storage extends QueryModule {
         // one parquet data file per batch, all columns in-file,
         // footers stamped with the metadata's field ids
         def dataFile(b: Int): String = {
-          val tmp = s"$root/_tmp"
-          graft.sources.IcebergLite.stampFieldIds(
-            src.filter(col("l_orderkey") % 10 === b), liFieldIds)
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          Files.createDirectories(Paths.get(root, "data"))
           val out = s"data/b$b.parquet"
-          assert(part.renameTo(new java.io.File(s"$root/$out")))
-          rm(new java.io.File(tmp))
+          LakeFiles.Local(root).parquet(graft.sources.IcebergLite
+            .stampFieldIds(src.filter(col("l_orderkey") % 10 === b),
+              liFieldIds), out)
           out
         }
         val (fa, fb, fc) = (dataFile(0), dataFile(1), dataFile(2))
         // single-file Avro writer (coalesce + move, temp dir removed)
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         import s.implicits._
         def manifest(rel: String, entries: (Int, String)*): Unit =
-          writeAvro(entries.toSeq.toDF("status", "file_path")
+          lake.avro(entries.toSeq.toDF("status", "file_path")
             .select(col("status"),
               struct(col("file_path"), lit(0).as("content"))
                 .as("data_file")), rel)
@@ -3921,7 +3704,7 @@ object Storage extends QueryModule {
         manifest("metadata/m-b.avro", (0, fb))
         manifest("metadata/m-c.avro", (1, fc))
         def manifestList(rel: String, paths: String*): Unit =
-          writeAvro(paths.toSeq.toDF("manifest_path")
+          lake.avro(paths.toSeq.toDF("manifest_path")
             .select(col("manifest_path"), lit(0).as("content")), rel)
         manifestList("metadata/snap-1.avro", "metadata/m-ab.avro")
         manifestList("metadata/snap-2.avro", "metadata/m-a-del.avro",
@@ -3967,13 +3750,8 @@ object Storage extends QueryModule {
     icebergStatsMemo.synchronized {
       icebergStatsMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_iceberg/stats_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "metadata"))
         Files.createDirectories(Paths.get(root, "data"))
@@ -3985,16 +3763,10 @@ object Storage extends QueryModule {
                      filter: Column): (String, Int, Long, Long) = {
           val df = src.filter(filter)
           val n = df.count()
-          val tmp = s"$root/_tmp"
-          graft.sources.IcebergLite.stampFieldIds(df, liFieldIds)
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          val out = new java.io.File(s"$root/data/$name")
-          assert(part.renameTo(out))
-          rm(new java.io.File(tmp))
-          (s"data/$name", m, n, out.length())
+          LakeFiles.Local(root).parquet(
+            graft.sources.IcebergLite.stampFieldIds(df, liFieldIds),
+            s"data/$name")
+          (s"data/$name", m, n, new java.io.File(s"$root/data/$name").length())
         }
         val files = Seq(
           dataFile("f0a.parquet", 0,
@@ -4002,16 +3774,9 @@ object Storage extends QueryModule {
           dataFile("f0b.parquet", 0,
             col("l_orderkey") % 10 === 0 && col("l_quantity") > 25),
           dataFile("f1.parquet", 1, col("l_orderkey") % 10 === 1))
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         import s.implicits._
-        writeAvro(files.toDF("file_path", "m", "rc", "bytes")
+        lake.avro(files.toDF("file_path", "m", "rc", "bytes")
           .select(lit(1).as("status"),
             struct(col("file_path"), lit(0).as("content"),
               lit("PARQUET").as("file_format"),
@@ -4019,7 +3784,7 @@ object Storage extends QueryModule {
               col("bytes").as("file_size_in_bytes"),
               struct(col("m")).as("partition")).as("data_file")),
           "metadata/m-stats.avro")
-        writeAvro(Seq("metadata/m-stats.avro").toDF("manifest_path")
+        lake.avro(Seq("metadata/m-stats.avro").toDF("manifest_path")
           .select(col("manifest_path"), lit(0).as("content")),
           "metadata/snap-1.avro")
         val fields = Seq(
@@ -4060,13 +3825,8 @@ object Storage extends QueryModule {
     icebergDelMemo.synchronized {
       icebergDelMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_iceberg/posdel_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "metadata"))
         Files.createDirectories(Paths.get(root, "data"))
@@ -4074,47 +3834,29 @@ object Storage extends QueryModule {
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
         def dataFile(b: Int): String = {
-          val tmp = s"$root/_tmp"
-          graft.sources.IcebergLite.stampFieldIds(
-            src.filter(col("l_orderkey") % 10 === b), liFieldIds)
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
           val out = s"data/b$b.parquet"
-          assert(part.renameTo(new java.io.File(s"$root/$out")))
-          rm(new java.io.File(tmp))
+          LakeFiles.Local(root).parquet(graft.sources.IcebergLite
+            .stampFieldIds(src.filter(col("l_orderkey") % 10 === b),
+              liFieldIds), out)
           out
         }
         val (fa, fb) = (dataFile(0), dataFile(1))
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         import s.implicits._
         // positional delete parquet: dead ordinals of batch A, derived
         // from the REAL file so authoring can't drift from the data
-        val delTmp = s"$root/_tmpdel"
-        s.read.parquet(s"$root/$fa")
+        val fdel = "data/del-a.parquet"
+        LakeFiles.stage(s.read.parquet(s"$root/$fa")
           .select(lit(s"file://$root/$fa").as("file_path"),
             col("_metadata.row_index").as("pos"),
             col("l_quantity"))
-          .filter(col("l_quantity") > 25).drop("l_quantity")
-          .coalesce(1).write.mode("overwrite").parquet(delTmp)
-        val delPart = new java.io.File(delTmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        val fdel = "data/del-a.parquet"
-        assert(delPart.renameTo(new java.io.File(s"$root/$fdel")))
-        rm(new java.io.File(delTmp))
+          .filter(col("l_quantity") > 25).drop("l_quantity"), "parquet",
+          new java.io.File(s"$root/_tmpdel"),
+          new java.io.File(s"$root/$fdel"))
 
         def manifest(rel: String, content: Int,
                      entries: (Int, String)*): Unit =
-          writeAvro(entries.toSeq.toDF("status", "file_path")
+          lake.avro(entries.toSeq.toDF("status", "file_path")
             .select(col("status"),
               struct(col("file_path"), lit(content).as("content"))
                 .as("data_file")), rel)
@@ -4123,7 +3865,7 @@ object Storage extends QueryModule {
         manifest("metadata/m-del.avro", 1, (1, fdel))
         def manifestList(rel: String,
                          paths: (String, Int)*): Unit =
-          writeAvro(paths.toSeq.toDF("manifest_path", "content"), rel)
+          lake.avro(paths.toSeq.toDF("manifest_path", "content"), rel)
         manifestList("metadata/snap-1.avro", "metadata/m-ab.avro" -> 0)
         manifestList("metadata/snap-2.avro", "metadata/m-ab2.avro" -> 0,
           "metadata/m-del.avro" -> 1)
@@ -4167,55 +3909,34 @@ object Storage extends QueryModule {
     icebergRenameMemo.synchronized {
       icebergRenameMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_iceberg/ren_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "metadata"))
         Files.createDirectories(Paths.get(root, "data"))
         val src = Tables.df(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
-        def writeOne(df: DataFrame, out: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$out")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         val stamp = graft.sources.IcebergLite.stampFieldIds _
         // batch A under the ORIGINAL name, batch B under the NEW one —
         // both carrying the SAME field ids in their footers
-        writeOne(stamp(src.filter(col("l_orderkey") % 10 === 0),
+        lake.parquet(stamp(src.filter(col("l_orderkey") % 10 === 0),
           liFieldIds), "data/a.parquet")
-        writeOne(stamp(src.filter(col("l_orderkey") % 10 === 1)
+        lake.parquet(stamp(src.filter(col("l_orderkey") % 10 === 1)
           .withColumnRenamed("l_returnflag", "l_flag"),
           liFieldIds - "l_returnflag" + ("l_flag" -> 4)),
           "data/b.parquet")
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
         import s.implicits._
         def manifest(rel: String, entries: (Int, String)*): Unit =
-          writeAvro(entries.toSeq.toDF("status", "file_path")
+          lake.avro(entries.toSeq.toDF("status", "file_path")
             .select(col("status"),
               struct(col("file_path"), lit(0).as("content"))
                 .as("data_file")), rel)
         manifest("metadata/m-a.avro", (1, "data/a.parquet"))
         manifest("metadata/m-b.avro", (1, "data/b.parquet"))
         def manifestList(rel: String, paths: String*): Unit =
-          writeAvro(paths.toSeq.toDF("manifest_path")
+          lake.avro(paths.toSeq.toDF("manifest_path")
             .select(col("manifest_path"), lit(0).as("content")), rel)
         manifestList("metadata/snap-1.avro", "metadata/m-a.avro")
         manifestList("metadata/snap-2.avro", "metadata/m-a.avro",
@@ -4260,10 +3981,6 @@ object Storage extends QueryModule {
         val srcRoot = authorDeltaTable(s, dir)
         val root =
           s"/tmp/graft_delta/clone_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "_delta_log"))
         val snap = graft.sources.DeltaLogLite.snapshot(s, srcRoot)
@@ -4305,56 +4022,35 @@ object Storage extends QueryModule {
     icebergNameMapMemo.synchronized {
       icebergNameMapMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_iceberg/nmap_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "metadata"))
         Files.createDirectories(Paths.get(root, "data"))
         val src = Tables.df(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
-        def writeOne(df: DataFrame, out: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$out")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         val oldNames = Map("l_orderkey" -> "orderkey",
           "l_quantity" -> "quantity",
           "l_extendedprice" -> "extendedprice",
           "l_returnflag" -> "returnflag")
         // batch A: OLD names, metadata force-EMPTIED so the parquet
         // writer stamps no field ids (the migrated-file shape)
-        writeOne(src.filter(col("l_orderkey") % 10 === 0)
+        lake.parquet(src.filter(col("l_orderkey") % 10 === 0)
           .select(src.columns.toSeq.map(c => col(c).as(oldNames(c),
             org.apache.spark.sql.types.Metadata.empty)): _*),
           "data/a.parquet")
-        writeOne(graft.sources.IcebergLite.stampFieldIds(
+        lake.parquet(graft.sources.IcebergLite.stampFieldIds(
           src.filter(col("l_orderkey") % 10 === 1), liFieldIds),
           "data/b.parquet")
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
         import s.implicits._
-        writeAvro(Seq((1, "data/a.parquet"), (1, "data/b.parquet"))
+        lake.avro(Seq((1, "data/a.parquet"), (1, "data/b.parquet"))
           .toDF("status", "file_path")
           .select(col("status"),
             struct(col("file_path"), lit(0).as("content"))
               .as("data_file")), "metadata/m-1.avro")
-        writeAvro(Seq("metadata/m-1.avro").toDF("manifest_path")
+        lake.avro(Seq("metadata/m-1.avro").toDF("manifest_path")
           .select(col("manifest_path"), lit(0).as("content")),
           "metadata/snap-1.avro")
         val fields = Seq(
@@ -4401,38 +4097,25 @@ object Storage extends QueryModule {
     icebergNmapDelMemo.synchronized {
       icebergNmapDelMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_iceberg/nmapdel_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "metadata"))
         Files.createDirectories(Paths.get(root, "data"))
         val src = Tables.df(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
-        def writeOne(df: DataFrame, out: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$out")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         val oldNames = Map("l_orderkey" -> "orderkey",
           "l_quantity" -> "quantity",
           "l_extendedprice" -> "extendedprice",
           "l_returnflag" -> "returnflag")
         // batch A: OLD names, no field ids (the migrated-file shape)
-        writeOne(src.filter(col("l_orderkey") % 10 === 0)
+        lake.parquet(src.filter(col("l_orderkey") % 10 === 0)
           .select(src.columns.toSeq.map(c => col(c).as(oldNames(c),
             org.apache.spark.sql.types.Metadata.empty)): _*),
           "data/a.parquet")
-        writeOne(graft.sources.IcebergLite.stampFieldIds(
+        lake.parquet(graft.sources.IcebergLite.stampFieldIds(
           src.filter(col("l_orderkey") % 10 === 1), liFieldIds),
           "data/b.parquet")
         // positional delete: batch A's l_quantity<=5 row ordinals,
@@ -4443,26 +4126,18 @@ object Storage extends QueryModule {
           .select(col("_metadata.row_index"))
           .where(col("quantity") <= 5)
           .as[Long].collect().toSeq.sorted
-        writeOne(deadPos.map(p => (aPath, p)).toDF("file_path", "pos"),
+        lake.parquet(deadPos.map(p => (aPath, p)).toDF("file_path", "pos"),
           "data/pos.parquet")
         // equality delete on l_orderkey (field id 1): keys with any
         // l_quantity>40 in either batch
-        writeOne(graft.sources.IcebergLite.stampFieldIds(
+        lake.parquet(graft.sources.IcebergLite.stampFieldIds(
           src.filter(col("l_orderkey") % 10 < 2)
             .filter(col("l_quantity") > 40)
             .select(col("l_orderkey")).distinct(),
           Map("l_orderkey" -> 1)), "data/eq.parquet")
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
         def manifest(rel: String, path: String, content: Int,
                      eqIds: Seq[Int]): Unit =
-          writeAvro(Seq((1, path)).toDF("status", "file_path")
+          lake.avro(Seq((1, path)).toDF("status", "file_path")
             .select(col("status"),
               lit(null).cast("long").as("sequence_number"),
               struct(col("file_path"), lit(content).as("content"),
@@ -4473,7 +4148,7 @@ object Storage extends QueryModule {
         manifest("metadata/m-b.avro", "data/b.parquet", 0, Nil)
         manifest("metadata/m-pos.avro", "data/pos.parquet", 1, Nil)
         manifest("metadata/m-eq.avro", "data/eq.parquet", 2, Seq(1))
-        writeAvro(Seq(("metadata/m-a.avro", 0, 1L),
+        lake.avro(Seq(("metadata/m-a.avro", 0, 1L),
           ("metadata/m-b.avro", 0, 1L),
           ("metadata/m-pos.avro", 1, 2L),
           ("metadata/m-eq.avro", 1, 2L))
@@ -4516,49 +4191,28 @@ object Storage extends QueryModule {
     icebergDefMemo.synchronized {
       icebergDefMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_iceberg/def_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "metadata"))
         Files.createDirectories(Paths.get(root, "data"))
         val src = Tables.df(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
-        def writeOne(df: DataFrame, out: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$out")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         val stamp = graft.sources.IcebergLite.stampFieldIds _
-        writeOne(stamp(src.filter(col("l_orderkey") % 10 === 0),
+        lake.parquet(stamp(src.filter(col("l_orderkey") % 10 === 0),
           liFieldIds), "data/a.parquet")
-        writeOne(stamp(src.filter(col("l_orderkey") % 10 === 1)
+        lake.parquet(stamp(src.filter(col("l_orderkey") % 10 === 1)
           .withColumn("l_bonus", col("l_orderkey") % 5),
           liFieldIds + ("l_bonus" -> 5)), "data/b.parquet")
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
         import s.implicits._
-        writeAvro(Seq((1, "data/a.parquet"), (1, "data/b.parquet"))
+        lake.avro(Seq((1, "data/a.parquet"), (1, "data/b.parquet"))
           .toDF("status", "file_path")
           .select(col("status"),
             struct(col("file_path"), lit(0).as("content"))
               .as("data_file")), "metadata/m-1.avro")
-        writeAvro(Seq("metadata/m-1.avro").toDF("manifest_path")
+        lake.avro(Seq("metadata/m-1.avro").toDF("manifest_path")
           .select(col("manifest_path"), lit(0).as("content")),
           "metadata/snap-1.avro")
         val fields = (Seq(
@@ -4599,13 +4253,8 @@ object Storage extends QueryModule {
     icebergDvMemo.synchronized {
       icebergDvMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_iceberg/dv3_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "metadata"))
         Files.createDirectories(Paths.get(root, "data"))
@@ -4613,14 +4262,9 @@ object Storage extends QueryModule {
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
           .filter(col("l_orderkey") % 10 === 0)
-        val tmp = s"$root/_tmp"
-        graft.sources.IcebergLite.stampFieldIds(src, liFieldIds)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(part.renameTo(new java.io.File(s"$root/data/a.parquet")))
-        rm(new java.io.File(tmp))
+        LakeFiles.Local(root).parquet(
+          graft.sources.IcebergLite.stampFieldIds(src, liFieldIds),
+          "data/a.parquet")
         // dead ordinals from the REAL file (authoring cannot drift)
         val dead = s.read.parquet(s"$root/data/a.parquet")
           .filter(col("l_quantity") > 35)
@@ -4628,20 +4272,13 @@ object Storage extends QueryModule {
           .map(_.getLong(0)).sorted
         val (puffin, contentSize) = puffinDvBytes(dead.toSeq)
         Files.write(Paths.get(root, "data", "dv.puffin"), puffin)
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val t = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(t)
-          val f = new java.io.File(t).listFiles()
-            .find(_.getName.startsWith("part-")).get
-          assert(f.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(t))
-        }
+        val lake = LakeFiles.Local(root)
         import s.implicits._
-        writeAvro(Seq((1, "data/a.parquet")).toDF("status", "file_path")
+        lake.avro(Seq((1, "data/a.parquet")).toDF("status", "file_path")
           .select(col("status"),
             struct(col("file_path"), lit(0).as("content"))
               .as("data_file")), "metadata/m-data.avro")
-        writeAvro(Seq((1, "data/dv.puffin", 1, "data/a.parquet", 4L,
+        lake.avro(Seq((1, "data/dv.puffin", 1, "data/a.parquet", 4L,
           contentSize, dead.length.toLong))
           .toDF("status", "file_path", "content", "referenced_data_file",
             "content_offset", "content_size_in_bytes", "record_count")
@@ -4650,7 +4287,7 @@ object Storage extends QueryModule {
               col("referenced_data_file"), col("content_offset"),
               col("content_size_in_bytes"), col("record_count"))
               .as("data_file")), "metadata/m-dv.avro")
-        writeAvro(Seq(("metadata/m-data.avro", 0),
+        lake.avro(Seq(("metadata/m-data.avro", 0),
           ("metadata/m-dv.avro", 1)).toDF("manifest_path", "content"),
           "metadata/snap-1.avro")
         val fields = Seq(
@@ -4709,10 +4346,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_delta/dv_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "_delta_log"))
         Files.createDirectories(Paths.get(root, "data"))
@@ -4720,13 +4353,7 @@ object Storage extends QueryModule {
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
           .filter((col("l_orderkey") % 10).isin(0, 1))
-        val tmp = s"$root/_tmp"
-        a.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(part.renameTo(new java.io.File(s"$root/data/a.parquet")))
-        rm(new java.io.File(tmp))
+        LakeFiles.Local(root).parquet(a, "data/a.parquet")
         // dead ordinals from the REAL file (authoring cannot drift)
         val dead = s.read.parquet(s"$root/data/a.parquet")
           .filter(col("l_quantity") > 25)
@@ -4774,33 +4401,21 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_delta/v2ck_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "_delta_log", "_sidecars"))
         Files.createDirectories(Paths.get(root, "data"))
         val src = Tables.df(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
-        def writeOne(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         for (b <- 0 to 2)
-          writeOne(src.filter(col("l_orderkey") % 10 === b),
+          lake.parquet(src.filter(col("l_orderkey") % 10 === b),
             s"data/b$b.parquet")
         // two sidecars: one add action each (the file actions live
         // ONLY here — the manifest carries none)
         val addT = "struct<path:string,partitionValues:map<string,string>>"
         def sidecar(rel: String, path: String): Unit =
-          writeOne(s.range(1).select(
+          lake.parquet(s.range(1).select(
             struct(lit(path).as("path"),
               map().cast("map<string,string>").as("partitionValues"))
               .as("add")), rel)
@@ -4837,7 +4452,7 @@ object Storage extends QueryModule {
             struct(lit("sc-a.parquet").as("path")), nul))
           .unionAll(row(nul, nul, nul,
             struct(lit("sc-b.parquet").as("path")), nul))
-        writeOne(manifestDf,
+        lake.parquet(manifestDf,
           s"_delta_log/${f"${1L}%020d"}.checkpoint." +
             "80a083e8-7026-4e79-81be-64bd76c43a11.parquet")
         Files.writeString(
@@ -4865,10 +4480,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_delta/cdf_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "_delta_log"))
         Files.createDirectories(Paths.get(root, "data"))
@@ -4877,25 +4488,17 @@ object Storage extends QueryModule {
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
           .filter((col("l_orderkey") % 10).isin(0, 1))
-        def writeOne(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
-        writeOne(a, "data/a.parquet")
+        val lake = LakeFiles.Local(root)
+        lake.parquet(a, "data/a.parquet")
         val pre = a.filter(col("l_quantity") > 40)
         val post = pre.withColumn("l_extendedprice",
           col("l_extendedprice") * 2)
         // the post-update table state (for snapshot consistency)
-        writeOne(a.filter(col("l_quantity") <= 40).unionByName(post),
+        lake.parquet(a.filter(col("l_quantity") <= 40).unionByName(post),
           "data/a2.parquet")
         // the protocol's cdc file: preimage + postimage rows with
         // _change_type carried IN the file
-        writeOne(
+        lake.parquet(
           pre.withColumn("_change_type", lit("update_preimage"))
             .unionByName(post.withColumn("_change_type",
               lit("update_postimage"))),
@@ -4932,10 +4535,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_delta/cdfmap_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "_delta_log"))
         Files.createDirectories(Paths.get(root, "data"))
@@ -4949,22 +4548,14 @@ object Storage extends QueryModule {
         def toPhys(df: DataFrame): DataFrame =
           df.select(df.columns.toSeq.map(c =>
             col(c).as(phys.getOrElse(c, c))): _*)
-        def writeOne(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
-        writeOne(toPhys(a), "data/a.parquet")
+        val lake = LakeFiles.Local(root)
+        lake.parquet(toPhys(a), "data/a.parquet")
         val pre = a.filter(col("l_quantity") > 40)
         val post = pre.withColumn("l_extendedprice",
           col("l_extendedprice") * 2)
-        writeOne(toPhys(a.filter(col("l_quantity") <= 40)
+        lake.parquet(toPhys(a.filter(col("l_quantity") <= 40)
           .unionByName(post)), "data/a2.parquet")
-        writeOne(toPhys(
+        lake.parquet(toPhys(
           pre.withColumn("_change_type", lit("update_preimage"))
             .unionByName(post.withColumn("_change_type",
               lit("update_postimage")))),
@@ -5073,28 +4664,16 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_delta/cdfsynth_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "_delta_log"))
         Files.createDirectories(Paths.get(root, "data"))
         val src = Tables.df(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
-        def writeOne(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         val a = src.filter(col("l_orderkey") % 10 === 0)
-        writeOne(a, "data/a.parquet")
-        writeOne(src.filter(col("l_orderkey") % 10 === 1),
+        lake.parquet(a, "data/a.parquet")
+        lake.parquet(src.filter(col("l_orderkey") % 10 === 1),
           "data/b.parquet")
         // dead ordinals from the REAL file (authoring cannot drift)
         def deadWhere(c: org.apache.spark.sql.Column): Seq[Long] =
@@ -5146,43 +4725,26 @@ object Storage extends QueryModule {
     paimonOrcMemo.synchronized {
       paimonOrcMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_paimon/orc_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         for (d <- Seq("snapshot", "schema", "manifest", "bucket-0"))
           Files.createDirectories(Paths.get(root, d))
-        val tmp = s"$root/_tmp"
-        Tables.df(s, dir, "lineitem")
+        LakeFiles.stage(Tables.df(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
-          .filter((col("l_orderkey") % 10).isin(0, 1))
-          .coalesce(1).write.mode("overwrite").orc(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".orc") &&
-            !f.getName.startsWith(".")).get
-        assert(part.renameTo(new java.io.File(s"$root/bucket-0/data.orc")))
-        rm(new java.io.File(tmp))
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val t2 = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-          val p = new java.io.File(t2).listFiles()
-            .find(_.getName.startsWith("part-")).get
-          assert(p.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(t2))
-        }
+          .filter((col("l_orderkey") % 10).isin(0, 1)), "orc",
+          new java.io.File(s"$root/_tmp"),
+          new java.io.File(s"$root/bucket-0/data.orc"))
+        val lake = LakeFiles.Local(root)
         import s.implicits._
-        writeAvro(Seq((0, "data.orc")).toDF("_KIND", "_fn")
+        lake.avro(Seq((0, "data.orc")).toDF("_KIND", "_fn")
           .select(col("_KIND"), lit(0).as("_BUCKET"),
             struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
           "manifest/m-orc.avro")
-        writeAvro(Seq.empty[String].toDF("_FILE_NAME"),
+        lake.avro(Seq.empty[String].toDF("_FILE_NAME"),
           "manifest/ml-empty.avro")
-        writeAvro(Seq("m-orc.avro").toDF("_FILE_NAME"),
+        lake.avro(Seq("m-orc.avro").toDF("_FILE_NAME"),
           "manifest/ml-orc.avro")
         Files.writeString(Paths.get(root, "schema", "schema-0"),
           """{"id":0,"fields":[
@@ -5216,10 +4778,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_hudi/orc_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, ".hoodie"))
         Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -5235,15 +4793,8 @@ object Storage extends QueryModule {
         val stats = flags.map { rf =>
           val part = s"l_returnflag=$rf"
           val rel = s"$part/g-${rf}_0-0_001.orc"
-          val tmp = s"$root/_tmp"
-          src.filter(col("l_returnflag") === rf)
-            .coalesce(1).write.mode("overwrite").orc(tmp)
-          val pf = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".orc") &&
-              !f.getName.startsWith(".")).get
-          Files.createDirectories(Paths.get(root, part))
-          assert(pf.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
+          LakeFiles.stage(src.filter(col("l_returnflag") === rf), "orc",
+            new java.io.File(s"$root/_tmp"), new java.io.File(s"$root/$rel"))
           s"""${jstr(part)}:[{"fileId":${jstr(s"g-$rf")},"path":${jstr(rel)},"numWrites":1}]"""
         }.mkString(",")
         Files.writeString(Paths.get(root, ".hoodie", "001.commit"),
@@ -5267,10 +4818,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_delta/cmap_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "_delta_log"))
         Files.createDirectories(Paths.get(root, "data"))
@@ -5283,18 +4830,11 @@ object Storage extends QueryModule {
         // one data file per partition value, PHYSICAL column names,
         // partition column dropped from the file (Delta convention)
         val adds = flags.map { rf =>
-          val tmp = s"$root/_tmp"
-          src.filter(col("l_returnflag") === rf)
+          val rel = s"data/p-$rf.parquet"
+          LakeFiles.Local(root).parquet(src.filter(col("l_returnflag") === rf)
             .select(col("l_orderkey").as("col-1"),
               col("l_quantity").as("col-2"),
-              col("l_extendedprice").as("col-3"))
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val pf = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          val rel = s"data/p-$rf.parquet"
-          assert(pf.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
+              col("l_extendedprice").as("col-3")), rel)
           // partitionValues keyed by the PHYSICAL name, per protocol
           s"""{"add":{"path":${jstr(rel)},"partitionValues":{"col-4":${jstr(rf)}},"size":1,"modificationTime":0,"dataChange":true}}"""
         }
@@ -5340,10 +4880,6 @@ object Storage extends QueryModule {
     locally {
       locally {
         import java.nio.file.{Files, Paths}
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "_delta_log"))
         Files.createDirectories(Paths.get(root, "data"))
@@ -5354,22 +4890,15 @@ object Storage extends QueryModule {
         val flags = src.select(col("l_returnflag")).distinct()
           .collect().map(_.getString(0)).sorted
         val adds = flags.map { rf =>
-          val tmp = s"$root/_tmp"
+          val rel = s"data/p-$rf.parquet"
           // stored names rotated vs the mapping; the stamped FIELD IDS
           // carry the true identity
-          graft.sources.IcebergLite.stampFieldIds(
+          LakeFiles.Local(root).parquet(graft.sources.IcebergLite.stampFieldIds(
             src.filter(col("l_returnflag") === rf)
               .select(col("l_orderkey").as("col-2"),
                 col("l_quantity").as("col-3"),
                 col("l_extendedprice").as("col-1")),
-            Map("col-2" -> 1, "col-3" -> 2, "col-1" -> 3))
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val pf = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          val rel = s"data/p-$rf.parquet"
-          assert(pf.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
+            Map("col-2" -> 1, "col-3" -> 2, "col-1" -> 3)), rel)
           s"""{"add":{"path":${jstr(rel)},"partitionValues":{"col-4":${jstr(rf)}},"size":1,"modificationTime":0,"dataChange":true}}"""
         }
         def fld(name: String, tpe: String, id: Int): String =
@@ -5404,10 +4933,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_delta/idv_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "_delta_log"))
         Files.createDirectories(Paths.get(root, "data"))
@@ -5415,13 +4940,7 @@ object Storage extends QueryModule {
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
           .filter((col("l_orderkey") % 10).isin(0, 1))
-        val tmp = s"$root/_tmp"
-        a.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(part.renameTo(new java.io.File(s"$root/data/a.parquet")))
-        rm(new java.io.File(tmp))
+        LakeFiles.Local(root).parquet(a, "data/a.parquet")
         val dead = s.read.parquet(s"$root/data/a.parquet")
           .filter(col("l_quantity") > 25)
           .select(col("_metadata.row_index")).collect()
@@ -5474,13 +4993,8 @@ object Storage extends QueryModule {
     icebergEqMemo.synchronized {
       icebergEqMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_iceberg/eqdel_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "metadata"))
         Files.createDirectories(Paths.get(root, "data"))
@@ -5488,40 +5002,24 @@ object Storage extends QueryModule {
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
           .filter(col("l_orderkey") % 10 === 0)
-        def writeOne(df: DataFrame, out: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$out")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         val (fa, fb, feq) =
           ("data/a.parquet", "data/b.parquet", "data/eq-del.parquet")
         val stamp = graft.sources.IcebergLite.stampFieldIds _
-        writeOne(stamp(src, liFieldIds), fa)
-        writeOne(stamp(src.filter(col("l_quantity") > 45), liFieldIds), fb)
+        lake.parquet(stamp(src, liFieldIds), fa)
+        lake.parquet(stamp(src.filter(col("l_quantity") > 45), liFieldIds), fb)
         // equality-delete parquet: ONLY the equality column(s), footer
         // carrying its field id (the reader matches delete columns by id)
-        writeOne(stamp(src.filter(col("l_quantity") > 30)
+        lake.parquet(stamp(src.filter(col("l_quantity") > 30)
           .select(col("l_orderkey")).distinct(),
           Map("l_orderkey" -> 1)), feq)
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
         import s.implicits._
         // manifest: entry-level sequence_number (nullable) + data_file
         // struct carrying content and equality_ids (null for data)
         def manifest(rel: String, status: Int, path: String,
                      content: Int, seq: Option[Long],
                      eqIds: Seq[Int]): Unit =
-          writeAvro(Seq((status, path)).toDF("status", "file_path")
+          lake.avro(Seq((status, path)).toDF("status", "file_path")
             .select(col("status"),
               seq.map(v => lit(v)).getOrElse(lit(null))
                 .cast("long").as("sequence_number"),
@@ -5534,7 +5032,7 @@ object Storage extends QueryModule {
         manifest("metadata/m-eq.avro", 1, feq, 2, None, Seq(1))
         def manifestList(rel: String,
                          rows: (String, Int, Long)*): Unit =
-          writeAvro(rows.toSeq
+          lake.avro(rows.toSeq
             .toDF("manifest_path", "content", "sequence_number"), rel)
         manifestList("metadata/snap-1.avro",
           ("metadata/m-a.avro", 0, 1L))
@@ -5572,13 +5070,8 @@ object Storage extends QueryModule {
   private def authorIcebergSeqTable(s: SparkSession,
                                     dir: String): String = {
     import java.nio.file.{Files, Paths}
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
     val root =
       s"/tmp/graft_iceberg/eqwrite_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "metadata"))
     Files.createDirectories(Paths.get(root, "data"))
@@ -5587,35 +5080,20 @@ object Storage extends QueryModule {
       .filter(col("l_orderkey") % 10 < 2)
     val ids = Map("l_orderkey" -> 1, "l_quantity" -> 2,
       "l_returnflag" -> 3)
-    def writeOne(df: DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      graft.sources.IcebergLite.stampFieldIds(df, ids)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
-    writeOne(src.filter(col("l_orderkey") % 2 === 0), "data/a.parquet")
-    writeOne(src.filter(col("l_orderkey") % 2 === 1), "data/b.parquet")
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
+    lake.parquet(graft.sources.IcebergLite.stampFieldIds(
+      src.filter(col("l_orderkey") % 2 === 0), ids), "data/a.parquet")
+    lake.parquet(graft.sources.IcebergLite.stampFieldIds(
+      src.filter(col("l_orderkey") % 2 === 1), ids), "data/b.parquet")
     import s.implicits._
     def manifest(rel: String, path: String): Unit =
-      writeAvro(Seq((1, path)).toDF("status", "file_path")
+      lake.avro(Seq((1, path)).toDF("status", "file_path")
         .select(col("status"),
           struct(col("file_path"), lit(0).as("content")).as("data_file")),
         rel)
     manifest("metadata/m-a.avro", "data/a.parquet")
     manifest("metadata/m-b.avro", "data/b.parquet")
-    writeAvro(Seq(("metadata/m-a.avro", 0, 1L),
+    lake.avro(Seq(("metadata/m-a.avro", 0, 1L),
       ("metadata/m-b.avro", 0, 2L))
       .toDF("manifest_path", "content", "sequence_number"),
       "metadata/snap-1.avro")
@@ -5651,10 +5129,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_delta/${tag}_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "_delta_log"))
     Files.createDirectories(Paths.get(root, "data"))
@@ -5662,17 +5136,9 @@ object Storage extends QueryModule {
       .filter(col("l_orderkey") % 10 < 2)
       .select(col("l_orderkey"), col("l_quantity"),
         col("l_returnflag"))
-    def writeOne(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
-    writeOne(src.filter(col("l_orderkey") % 2 === 0), "data/a.parquet")
-    writeOne(src.filter(col("l_orderkey") % 2 === 1), "data/b.parquet")
+    val lake = LakeFiles.Local(root)
+    lake.parquet(src.filter(col("l_orderkey") % 2 === 0), "data/a.parquet")
+    lake.parquet(src.filter(col("l_orderkey") % 2 === 1), "data/b.parquet")
     val metaData =
       s"""{"metaData":{"id":"graft-q490","format":{"provider":"parquet","options":{}},"schemaString":${jstr(src.schema.json)},"partitionColumns":[],"configuration":{"delta.enableChangeDataFeed":"true"},"createdTime":0}}"""
     Files.writeString(Paths.get(root, "_delta_log", f"${0L}%020d.json"),
@@ -5691,10 +5157,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_hudi/upsert_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, ".hoodie"))
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -5703,18 +5165,10 @@ object Storage extends QueryModule {
       .select(lit("001").as("_hoodie_commit_time"),
         col("o_orderkey").cast(StringType).as("_hoodie_record_key"),
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    def writeOne(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
-    writeOne(src.filter(col("o_orderkey") % 10 === 0),
+    val lake = LakeFiles.Local(root)
+    lake.parquet(src.filter(col("o_orderkey") % 10 === 0),
       "gA_0-0_001.parquet")
-    writeOne(src.filter(col("o_orderkey") % 10 === 1),
+    lake.parquet(src.filter(col("o_orderkey") % 10 === 1),
       "gB_0-0_001.parquet")
     Files.writeString(Paths.get(root, ".hoodie", "001.commit"),
       s"""{"partitionToWriteStats":{"":[{"fileId":"gA","path":"gA_0-0_001.parquet","numWrites":1},{"fileId":"gB","path":"gB_0-0_001.parquet","numWrites":1}]}}""")
@@ -5726,28 +5180,16 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_delta/compact_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "_delta_log"))
     Files.createDirectories(Paths.get(root, "data"))
     val src = Tables.df(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"),
         col("l_extendedprice"), col("l_returnflag"))
-    def writeOne(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val a = src.filter(col("l_orderkey") % 10 === 0)
-    writeOne(a, "data/a.parquet")
-    writeOne(src.filter(col("l_orderkey") % 10 === 1), "data/b.parquet")
+    lake.parquet(a, "data/a.parquet")
+    lake.parquet(src.filter(col("l_orderkey") % 10 === 1), "data/b.parquet")
     val dead = s.read.parquet(s"$root/data/a.parquet")
       .filter(col("l_quantity") > 25)
       .select(col("_metadata.row_index")).collect()
@@ -5803,10 +5245,6 @@ object Storage extends QueryModule {
   private def buildDeltaPartTable(s: SparkSession, dir: String,
                                   root: String, mod: Int): String = {
     import java.nio.file.{Files, Paths}
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "_delta_log"))
     val src = Tables.df(s, dir, "lineitem")
@@ -5815,20 +5253,11 @@ object Storage extends QueryModule {
         col("l_extendedprice"), col("l_returnflag"))
     val flags = src.select(col("l_returnflag")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
-    def writeOne(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      Files.createDirectories(Paths.get(s"$root/$rel").getParent)
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val adds = flags.flatMap { f =>
       Seq(0, 1).map { half =>
         val rel = s"l_returnflag=$f/f$half.parquet"
-        writeOne(src.filter(col("l_returnflag") === f &&
+        lake.parquet(src.filter(col("l_returnflag") === f &&
           col("l_orderkey") % 2 === half).drop("l_returnflag"), rel)
         s"""{"add":{"path":${jstr(rel)},"partitionValues":{"l_returnflag":${
           jstr(f)}},"size":1,"modificationTime":0,"dataChange":true}}"""
@@ -5850,13 +5279,8 @@ object Storage extends QueryModule {
   private def authorIcebergPartCompactTable(s: SparkSession,
                                             dir: String): String = {
     import java.nio.file.{Files, Paths}
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
     val root =
       s"/tmp/graft_iceberg/partcompact_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "metadata"))
     Files.createDirectories(Paths.get(root, "data"))
@@ -5867,39 +5291,22 @@ object Storage extends QueryModule {
       "l_returnflag" -> 3)
     val flags = src.select(col("l_returnflag")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
-    def writeOne(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmp"
-      graft.sources.IcebergLite.stampFieldIds(df, ids)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      Files.createDirectories(Paths.get(s"$root/$rel").getParent)
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val rels = flags.flatMap { f =>
       Seq(0, 1).map { half =>
         val rel = s"data/l_returnflag=$f/f$half.parquet"
-        writeOne(src.filter(col("l_returnflag") === f &&
-          col("l_orderkey") % 2 === half), rel)
+        lake.parquet(graft.sources.IcebergLite.stampFieldIds(
+          src.filter(col("l_returnflag") === f &&
+            col("l_orderkey") % 2 === half), ids), rel)
         rel
       }
     }
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
     import s.implicits._
-    writeAvro(rels.toDF("file_path")
+    lake.avro(rels.toDF("file_path")
       .select(lit(1).as("status"),
         struct(col("file_path"), lit(0).as("content")).as("data_file")),
       "metadata/m1.avro")
-    writeAvro(Seq("metadata/m1.avro").toDF("manifest_path")
+    lake.avro(Seq("metadata/m1.avro").toDF("manifest_path")
       .select(col("manifest_path"), lit(0).as("content")),
       "metadata/snap-1.avro")
     Files.writeString(Paths.get(root, "metadata", "v1.metadata.json"),
@@ -5929,13 +5336,8 @@ object Storage extends QueryModule {
   private def authorPaimonPartCompactTable(s: SparkSession,
                                            dir: String): String = {
     import java.nio.file.{Files, Paths}
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
     val root =
       s"/tmp/graft_paimon/partcompact_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     for (d <- Seq("snapshot", "schema", "manifest"))
       Files.createDirectories(Paths.get(root, d))
@@ -5944,45 +5346,27 @@ object Storage extends QueryModule {
       .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
     val flags = src.select(col("l_returnflag")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
-    def writeOne(df: DataFrame, flag: String, name: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      Files.createDirectories(
-        Paths.get(root, s"l_returnflag=$flag", "bucket-0"))
-      assert(part.renameTo(new java.io.File(
-        s"$root/l_returnflag=$flag/bucket-0/$name")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val entries = flags.flatMap { f =>
       Seq(0, 1).map { half =>
         val name = s"f$half.parquet"
-        writeOne(src.filter(col("l_returnflag") === f &&
-          col("l_orderkey") % 2 === half).drop("l_returnflag"), f, name)
+        lake.parquet(src.filter(col("l_returnflag") === f &&
+          col("l_orderkey") % 2 === half).drop("l_returnflag"),
+          s"l_returnflag=$f/bucket-0/$name")
         (f, name)
       }
     }
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
     import s.implicits._
-    writeAvro(entries.map { case (f, name) =>
+    lake.avro(entries.map { case (f, name) =>
       (0, graft.sources.BinaryRowCodec.encode(Seq(f),
         Seq(org.apache.spark.sql.types.StringType)), name)
     }.toDF("_KIND", "_PARTITION", "_fn")
       .select(col("_KIND"), col("_PARTITION"), lit(0).as("_BUCKET"),
         struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
       "manifest/m1.avro")
-    writeAvro(Seq.empty[String].toDF("_FILE_NAME"),
+    lake.avro(Seq.empty[String].toDF("_FILE_NAME"),
       "manifest/ml-empty.avro")
-    writeAvro(Seq("m1.avro").toDF("_FILE_NAME"), "manifest/ml-1.avro")
+    lake.avro(Seq("m1.avro").toDF("_FILE_NAME"), "manifest/ml-1.avro")
     Files.writeString(Paths.get(root, "schema", "schema-0"),
       """{"id":0,"fields":[
         | {"id":0,"name":"l_orderkey","type":"BIGINT"},
@@ -6012,10 +5396,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_hudi/partcluster_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, ".hoodie"))
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -6027,16 +5407,7 @@ object Storage extends QueryModule {
         col("l_extendedprice"), col("l_returnflag"))
     val flags = src.select(col("l_returnflag")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
-    def one(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      Files.createDirectories(Paths.get(s"$root/$rel").getParent)
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     def stat(fid: String, p: String): String =
       s"""{"fileId":${jstr(fid)},"path":${jstr(p)},"numWrites":1}"""
     val statsByPart = flags.map { f =>
@@ -6044,7 +5415,7 @@ object Storage extends QueryModule {
       val stats = Seq(0, 1).map { half =>
         val fid = s"g$f$half"
         val rel = s"$partPath/${fid}_0-0_001.parquet"
-        one(src.filter(col("l_returnflag") === f &&
+        lake.parquet(src.filter(col("l_returnflag") === f &&
           col("l_orderkey") % 2 === half)
           .select(lit("001").as("_hoodie_commit_time"),
             concat_ws("-", col("l_orderkey"), col("l_linenumber"))
@@ -6072,26 +5443,14 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_delta/ckptvacuum_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "_delta_log"))
     val src = Tables.df(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
-    def writeOne(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
-    writeOne(src.filter(col("l_orderkey") % 10 === 0), "f0.parquet")
-    writeOne(src.filter(col("l_orderkey") % 10 === 1), "f1.parquet")
-    writeOne(src.filter(col("l_orderkey") % 10 === 2), "f2.parquet")
+    val lake = LakeFiles.Local(root)
+    lake.parquet(src.filter(col("l_orderkey") % 10 === 0), "f0.parquet")
+    lake.parquet(src.filter(col("l_orderkey") % 10 === 1), "f1.parquet")
+    lake.parquet(src.filter(col("l_orderkey") % 10 === 2), "f2.parquet")
     val addT = "struct<path:string,partitionValues:map<string,string>>"
     val removeT = "struct<path:string>"
     val metaT = "struct<schemaString:string," +
@@ -6112,14 +5471,9 @@ object Storage extends QueryModule {
         lit(null).cast(addT).as("add"),
         struct(lit("f0.parquet").as("path")).as("remove"),
         lit(null).cast(metaT).as("metaData")))
-    val tmpC = s"$root/_tmpckpt"
-    frame.coalesce(1).write.mode("overwrite").parquet(tmpC)
-    val ckpt = new java.io.File(tmpC).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(ckpt.renameTo(new java.io.File(
-      s"$root/_delta_log/${f"${1L}%020d"}.checkpoint.parquet")))
-    rm(new java.io.File(tmpC))
+    LakeFiles.stage(frame, "parquet", new java.io.File(s"$root/_tmpckpt"),
+      new java.io.File(
+        s"$root/_delta_log/${f"${1L}%020d"}.checkpoint.parquet"))
     Files.writeString(Paths.get(root, "_delta_log", "_last_checkpoint"),
       """{"version":1}""")
     Files.writeString(Paths.get(root, "_delta_log", f"${2L}%020d.json"),
@@ -6138,13 +5492,8 @@ object Storage extends QueryModule {
   private def authorPaimonLookupTable(s: SparkSession,
                                       dir: String): String = {
     import java.nio.file.{Files, Paths}
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
     val root =
       s"/tmp/graft_paimon/lookup_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     for (d <- Seq("snapshot", "schema", "manifest", "bucket-0"))
       Files.createDirectories(Paths.get(root, d))
@@ -6157,41 +5506,25 @@ object Storage extends QueryModule {
         lit(seq).as("_SEQUENCE_NUMBER"),
         lit(kind).cast("tinyint").as("_VALUE_KIND"),
         col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    def writeKv(df: DataFrame, name: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/bucket-0/$name")))
-      rm(new java.io.File(tmp))
-    }
-    writeKv(kv(base, 1L, 0), "kv-ins.parquet")
+    val lake = LakeFiles.Local(root)
+    lake.parquet(kv(base, 1L, 0), "bucket-0/kv-ins.parquet")
     val upSrc = base.filter((col("o_orderkey") % 10).isin(3, 4))
-    writeKv(kv(upSrc.withColumn("o_totalprice",
-      col("o_totalprice") * 2), 2L, 0), "kv-ups.parquet")
+    lake.parquet(kv(upSrc.withColumn("o_totalprice",
+      col("o_totalprice") * 2), 2L, 0), "bucket-0/kv-ups.parquet")
     // the lookup compaction's NORMALIZED changelog: -U old, +U new
-    writeKv(kv(upSrc, 2L, 1).unionByName(
+    lake.parquet(kv(upSrc, 2L, 1).unionByName(
       kv(upSrc.withColumn("o_totalprice", col("o_totalprice") * 2),
-        2L, 2)), "changelog-3.parquet")
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+        2L, 2)), "bucket-0/changelog-3.parquet")
     import s.implicits._
     def manifest(rel: String, entries: (Int, String)*): Unit =
-      writeAvro(entries.toSeq.toDF("_KIND", "_fn")
+      lake.avro(entries.toSeq.toDF("_KIND", "_fn")
         .select(col("_KIND"), lit(0).as("_BUCKET"),
           struct(col("_fn").as("_FILE_NAME")).as("_FILE")), rel)
     manifest("manifest/m-ins.avro", (0, "kv-ins.parquet"))
     manifest("manifest/m-ups.avro", (0, "kv-ups.parquet"))
     manifest("manifest/m-cl.avro", (0, "changelog-3.parquet"))
     def mlist(rel: String, names: String*): Unit =
-      writeAvro(
+      lake.avro(
         if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
         else names.toSeq.toDF("_FILE_NAME"), rel)
     mlist("manifest/ml-empty.avro")
@@ -6239,10 +5572,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_hudi/exactcdc_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, ".hoodie"))
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -6255,20 +5584,12 @@ object Storage extends QueryModule {
       df.select(lit("001").as("_hoodie_commit_time"),
         col("o_orderkey").cast(StringType).as("_hoodie_record_key"),
         col("o_orderkey"), col("o_totalprice"))
-    def one(df: DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
-    one(withMeta(src), "g_0-0_001.parquet")
+    val lake = LakeFiles.Local(root)
+    lake.parquet(withMeta(src), "g_0-0_001.parquet")
     val rewritten = src.withColumn("o_totalprice",
       when(col("o_orderkey") % 10 === 1, col("o_totalprice") * 2)
         .otherwise(col("o_totalprice")))
-    one(withMeta(rewritten), "g_0-0_002.parquet")
+    lake.parquet(withMeta(rewritten), "g_0-0_002.parquet")
     // the written CDC: an update record for EVERY key, including the
     // value-unchanged %10=0 half a diff would never see
     val images = src.select(
@@ -6306,13 +5627,8 @@ object Storage extends QueryModule {
   private def authorIcebergCompactTable(s: SparkSession,
                                         dir: String): String = {
     import java.nio.file.{Files, Paths}
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
     val root =
       s"/tmp/graft_iceberg/compact_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "metadata"))
     Files.createDirectories(Paths.get(root, "data"))
@@ -6320,20 +5636,12 @@ object Storage extends QueryModule {
       .select(col("l_orderkey"), col("l_quantity"),
         col("l_extendedprice"), col("l_returnflag"))
     val stamp = graft.sources.IcebergLite.stampFieldIds _
-    def writeOne(df: DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
-    writeOne(stamp(src.filter(col("l_orderkey") % 10 === 0), liFieldIds),
+    val lake = LakeFiles.Local(root)
+    lake.parquet(stamp(src.filter(col("l_orderkey") % 10 === 0), liFieldIds),
       "data/a.parquet")
-    writeOne(stamp(src.filter(col("l_orderkey") % 10 === 1), liFieldIds),
+    lake.parquet(stamp(src.filter(col("l_orderkey") % 10 === 1), liFieldIds),
       "data/b.parquet")
-    writeOne(stamp(src.filter(col("l_returnflag") === "R")
+    lake.parquet(stamp(src.filter(col("l_returnflag") === "R")
       .select(col("l_returnflag")).distinct(),
       Map("l_returnflag" -> 4)), "data/eq.parquet")
     val dead = s.read.parquet(s"$root/data/a.parquet")
@@ -6342,18 +5650,10 @@ object Storage extends QueryModule {
       .map(_.getLong(0)).sorted.toSeq
     val (puffin, contentSize) = puffinDvBytes(dead)
     Files.write(Paths.get(root, "data", "dv.puffin"), puffin)
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
     import s.implicits._
     def manifest(rel: String, path: String, content: Int,
                  eqIds: Seq[Int], dv: Boolean): Unit =
-      writeAvro(Seq((1, path)).toDF("status", "file_path")
+      lake.avro(Seq((1, path)).toDF("status", "file_path")
         .select(col("status"),
           struct(col("file_path"), lit(content).as("content"),
             (if (eqIds.isEmpty) lit(null).cast("array<int>")
@@ -6371,7 +5671,7 @@ object Storage extends QueryModule {
     manifest("metadata/m-dv.avro", "data/dv.puffin", 1, Nil, dv = true)
     manifest("metadata/m-eq.avro", "data/eq.parquet", 2, Seq(4),
       dv = false)
-    writeAvro(Seq(
+    lake.avro(Seq(
       ("metadata/m-a.avro", 0, 1L), ("metadata/m-b.avro", 0, 1L),
       ("metadata/m-dv.avro", 1, 1L), ("metadata/m-eq.avro", 1, 2L))
       .toDF("manifest_path", "content", "sequence_number"),
@@ -6413,13 +5713,8 @@ object Storage extends QueryModule {
     icebergChangesMemo.synchronized {
       icebergChangesMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_iceberg/changes_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "metadata"))
         Files.createDirectories(Paths.get(root, "data"))
@@ -6427,21 +5722,13 @@ object Storage extends QueryModule {
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
         val stamp = graft.sources.IcebergLite.stampFieldIds _
-        def writeOne(df: DataFrame, out: String): Unit = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/$out")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         for (b <- 0 to 2)
-          writeOne(stamp(src.filter(col("l_orderkey") % 10 === b),
+          lake.parquet(stamp(src.filter(col("l_orderkey") % 10 === b),
             liFieldIds), s"data/b$b.parquet")
         // equality-delete parquet: only the equality column, footer
         // carrying its field id
-        writeOne(stamp(src.filter(col("l_returnflag") === "R")
+        lake.parquet(stamp(src.filter(col("l_returnflag") === "R")
           .select(col("l_returnflag")).distinct(),
           Map("l_returnflag" -> 4)), "data/eq.parquet")
         // DV puffins, dead ordinals from the REAL files
@@ -6461,20 +5748,12 @@ object Storage extends QueryModule {
           deadOf("data/b0.parquet", col("l_quantity") > 35))
         val dv3 = dvFile("data/dv3.puffin",
           deadOf("data/b2.parquet", col("l_quantity") < 2))
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
         import s.implicits._
         // one manifest per file; every optional spec field spelled out
         def manifest(rel: String, path: String, content: Int,
                      eqIds: Seq[Int],
                      dv: Option[(String, (Long, Long))]): Unit =
-          writeAvro(Seq((1, path)).toDF("status", "file_path")
+          lake.avro(Seq((1, path)).toDF("status", "file_path")
             .select(col("status"),
               struct(col("file_path"), lit(content).as("content"),
                 (if (eqIds.isEmpty) lit(null).cast("array<int>")
@@ -6500,7 +5779,7 @@ object Storage extends QueryModule {
         manifest("metadata/m-eq.avro", "data/eq.parquet", 2, Seq(4), None)
         def manifestList(rel: String,
                          rows: (String, Int, Long)*): Unit =
-          writeAvro(rows.toSeq
+          lake.avro(rows.toSeq
             .toDF("manifest_path", "content", "sequence_number"), rel)
         manifestList("metadata/snap-1.avro",
           ("metadata/m-a.avro", 0, 1L), ("metadata/m-b.avro", 0, 1L),
@@ -6541,10 +5820,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root = s"/tmp/graft_deltastream/" +
       s"${if (cdf) "cdf" else "li"}_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "_delta_log"))
     Files.createDirectories(Paths.get(root, "data"))
@@ -6559,22 +5834,11 @@ object Storage extends QueryModule {
                                       root: String, v: Int,
                                       cdf: Boolean = false): Unit = {
     import java.nio.file.{Files, Paths}
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     val src = Tables.df(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"),
         col("l_extendedprice"), col("l_returnflag"))
-    val tmp = s"$root/_tmp"
-    src.filter(col("l_orderkey") % 10 === v)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
     val rel = s"data/b$v.parquet"
-    assert(part.renameTo(new java.io.File(s"$root/$rel")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(src.filter(col("l_orderkey") % 10 === v), rel)
     val conf =
       if (cdf) """{"delta.enableChangeDataFeed":"true"}""" else "{}"
     val head = if (v == 0)
@@ -6598,10 +5862,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_hudistream/li_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, ".hoodie"))
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
@@ -6618,23 +5878,12 @@ object Storage extends QueryModule {
   private def appendHudiStreamCommit(s: SparkSession, dir: String,
                                      root: String, v: Int): Unit = {
     import java.nio.file.Paths
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     val src = Tables.df(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"),
         col("l_extendedprice"), col("l_returnflag"))
-    val tmp = s"$root/_tmp"
-    src.filter(col("l_orderkey") % 10 === v)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
     val instant = (v + 1).toString
     val rel = s"b${v}_0-0_$instant.parquet"
-    assert(part.renameTo(new java.io.File(s"$root/$rel")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(src.filter(col("l_orderkey") % 10 === v), rel)
     graft.sources.AtomicFiles.write(
       Paths.get(root, ".hoodie", s"$instant.commit"),
       s"""{"partitionToWriteStats":{"":[{"fileId":${jstr(s"b$v")},"path":${jstr(rel)},"numWrites":1}]}}""")
@@ -6650,10 +5899,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_icestream/li_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "metadata"))
     Files.createDirectories(Paths.get(root, "data"))
@@ -6668,37 +5913,20 @@ object Storage extends QueryModule {
   private def appendIcebergSnapshot(s: SparkSession, dir: String,
                                     root: String, k: Int): Unit = {
     import java.nio.file.{Files, Paths}
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     val src = Tables.df(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"),
         col("l_extendedprice"), col("l_returnflag"))
-    val tmp = s"$root/_tmp"
-    graft.sources.IcebergLite.stampFieldIds(
-      src.filter(col("l_orderkey") % 10 === (k - 1)), liFieldIds)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/data/b$k.parquet")))
-    rm(new java.io.File(tmp))
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val t2 = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-      val p = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(t2))
-    }
+    LakeFiles.Local(root).parquet(
+      graft.sources.IcebergLite.stampFieldIds(
+        src.filter(col("l_orderkey") % 10 === (k - 1)), liFieldIds),
+      s"data/b$k.parquet")
+    val lake = LakeFiles.Local(root)
     import s.implicits._
-    writeAvro(Seq((1, s"data/b$k.parquet")).toDF("status", "file_path")
+    lake.avro(Seq((1, s"data/b$k.parquet")).toDF("status", "file_path")
       .select(col("status"),
         struct(col("file_path"), lit(0).as("content")).as("data_file")),
       s"metadata/m$k.avro")
-    writeAvro((1 to k).map(i => (s"metadata/m$i.avro", 0))
+    lake.avro((1 to k).map(i => (s"metadata/m$i.avro", 0))
       .toDF("manifest_path", "content"), s"metadata/snap-$k.avro")
     val fields = Seq(
       (1, "l_orderkey", "long"), (2, "l_quantity", "double"),
@@ -6729,10 +5957,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_paimonstream/li_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     for (d <- Seq("snapshot", "schema", "manifest", "bucket-0"))
       Files.createDirectories(Paths.get(root, d))
@@ -6755,38 +5979,19 @@ object Storage extends QueryModule {
   private def appendPaimonSnapshot(s: SparkSession, dir: String,
                                    root: String, k: Int): Unit = {
     import java.nio.file.{Files, Paths}
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     val src = Tables.df(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"),
         col("l_extendedprice"), col("l_returnflag"))
-    val tmp = s"$root/_tmp"
-    src.filter(col("l_orderkey") % 10 === (k - 1))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(
-      new java.io.File(s"$root/bucket-0/data-b$k.parquet")))
-    rm(new java.io.File(tmp))
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val t2 = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-      val p = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(t2))
-    }
+    val lake = LakeFiles.Local(root)
+    lake.parquet(src.filter(col("l_orderkey") % 10 === (k - 1)),
+      s"bucket-0/data-b$k.parquet")
     import s.implicits._
-    writeAvro(Seq((0, s"data-b$k.parquet")).toDF("_KIND", "_fn")
+    lake.avro(Seq((0, s"data-b$k.parquet")).toDF("_KIND", "_fn")
       .select(col("_KIND"), lit(0).as("_BUCKET"),
         struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
       s"manifest/m$k.avro")
     def mlist(rel: String, names: Seq[String]): Unit =
-      writeAvro(
+      lake.avro(
         if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
         else names.toDF("_FILE_NAME"), rel)
     mlist(s"manifest/ml-base-$k.avro", (1 until k).map(i => s"m$i.avro"))
@@ -6814,10 +6019,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_paimonstream/part_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     for (d <- Seq("snapshot", "schema", "manifest"))
       Files.createDirectories(Paths.get(root, d))
@@ -6839,40 +6040,18 @@ object Storage extends QueryModule {
   private def appendPaimonPartSnapshot(s: SparkSession, dir: String,
                                        root: String, k: Int): Unit = {
     import java.nio.file.{Files, Paths}
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     val batch = Tables.df(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"),
         col("l_extendedprice"), col("l_returnflag"))
       .filter(col("l_orderkey") % 10 === (k - 1))
     val flags = batch.select(col("l_returnflag")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
-    for (f <- flags) {
-      Files.createDirectories(
-        Paths.get(root, s"l_returnflag=$f", "bucket-0"))
-      val tmp = s"$root/_tmp"
-      batch.filter(col("l_returnflag") === f).drop("l_returnflag")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(p => p.getName.endsWith(".parquet") &&
-          !p.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(
-        s"$root/l_returnflag=$f/bucket-0/data-b$k.parquet")))
-      rm(new java.io.File(tmp))
-    }
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val t2 = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-      val p = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(t2))
-    }
+    val lake = LakeFiles.Local(root)
+    for (f <- flags)
+      lake.parquet(batch.filter(col("l_returnflag") === f)
+        .drop("l_returnflag"), s"l_returnflag=$f/bucket-0/data-b$k.parquet")
     import s.implicits._
-    writeAvro(flags.map(f => (0, s"data-b$k.parquet",
+    lake.avro(flags.map(f => (0, s"data-b$k.parquet",
       graft.sources.BinaryRowCodec.encode(Seq(f),
         Seq(org.apache.spark.sql.types.StringType))))
       .toDF("_KIND", "_fn", "_PARTITION")
@@ -6880,7 +6059,7 @@ object Storage extends QueryModule {
         struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
       s"manifest/m$k.avro")
     def mlist(rel: String, names: Seq[String]): Unit =
-      writeAvro(
+      lake.avro(
         if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
         else names.toDF("_FILE_NAME"), rel)
     mlist(s"manifest/ml-base-$k.avro", (1 until k).map(i => s"m$i.avro"))
@@ -6905,42 +6084,23 @@ object Storage extends QueryModule {
                                   kvFrames: Seq[DataFrame],
                                   highestFieldId: Int = 2): Unit = {
     import java.nio.file.{Files, Paths}
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     for (d <- Seq("snapshot", "schema", "manifest", "bucket-0"))
       Files.createDirectories(Paths.get(root, d))
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val session = kvFrames.head.sparkSession
     import session.implicits._
     kvFrames.zipWithIndex.foreach { case (df, i) =>
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(
-        new java.io.File(s"$root/bucket-0/kv$i.parquet")))
-      rm(new java.io.File(tmp))
-      writeAvro(Seq((0, s"kv$i.parquet")).toDF("_KIND", "_fn")
+      lake.parquet(df, s"bucket-0/kv$i.parquet")
+      lake.avro(Seq((0, s"kv$i.parquet")).toDF("_KIND", "_fn")
         .select(col("_KIND"), lit(0).as("_BUCKET"),
           struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
         s"manifest/m-kv$i.avro")
-      writeAvro((0 until i).map(j => s"m-kv$j.avro") match {
+      lake.avro((0 until i).map(j => s"m-kv$j.avro") match {
         case Nil => Seq.empty[String].toDF("_FILE_NAME")
         case ns  => ns.toDF("_FILE_NAME")
       }, s"manifest/ml-base-$i.avro")
-      writeAvro(Seq(s"m-kv$i.avro").toDF("_FILE_NAME"),
+      lake.avro(Seq(s"m-kv$i.avro").toDF("_FILE_NAME"),
         s"manifest/ml-delta-$i.avro")
       Files.writeString(Paths.get(root, "snapshot", s"snapshot-${i + 1}"),
         s"""{"version":3,"id":${i + 1},"schemaId":0,
@@ -7158,13 +6318,8 @@ object Storage extends QueryModule {
     paimonMemo.synchronized {
       paimonMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_paimon/li_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         for (d <- Seq("snapshot", "schema", "manifest", "bucket-0"))
           Files.createDirectories(Paths.get(root, d))
@@ -7172,36 +6327,23 @@ object Storage extends QueryModule {
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_returnflag"))
         def dataFile(b: Int): String = {
-          val tmp = s"$root/_tmp"
-          src.filter(col("l_orderkey") % 10 === b).coalesce(1)
-            .write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
           val name = s"data-b$b.parquet"
-          assert(part.renameTo(new java.io.File(s"$root/bucket-0/$name")))
-          rm(new java.io.File(tmp))
+          LakeFiles.Local(root).parquet(
+            src.filter(col("l_orderkey") % 10 === b), s"bucket-0/$name")
           name
         }
         val (fa, fb, fc) = (dataFile(0), dataFile(1), dataFile(2))
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         import s.implicits._
         // manifest rows: _KIND (0 ADD / 1 DELETE), _BUCKET, _FILE struct
         def manifest(rel: String, entries: (Int, String)*): Unit =
-          writeAvro(entries.toSeq.toDF("_KIND", "_fn")
+          lake.avro(entries.toSeq.toDF("_KIND", "_fn")
             .select(col("_KIND"), lit(0).as("_BUCKET"),
               struct(col("_fn").as("_FILE_NAME")).as("_FILE")), rel)
         manifest("manifest/m-ab.avro", (0, fa), (0, fb))
         manifest("manifest/m-delac.avro", (1, fa), (0, fc))
         def manifestList(rel: String, names: String*): Unit =
-          writeAvro(
+          lake.avro(
             if (names.isEmpty)
               Seq.empty[String].toDF("_FILE_NAME")
             else names.toSeq.toDF("_FILE_NAME"), rel)
@@ -7277,11 +6419,6 @@ object Storage extends QueryModule {
         import java.nio.file.{Files, Paths}
         val root =
           s"/tmp/graft_iceberg/benchsrc_${Integer.toHexString(dir.hashCode)}"
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         Files.createDirectories(Paths.get(root, "metadata"))
         Files.createDirectories(Paths.get(root, "data"))
@@ -7290,35 +6427,21 @@ object Storage extends QueryModule {
             col("l_returnflag"))
           .filter(col("l_orderkey") % 10 < 5)
         val names = (0 until 4).map { q =>
-          val tmp = s"$root/_tmp"
-          graft.sources.IcebergLite.stampFieldIds(
-            src.filter(col("l_orderkey") % 4 === q),
-            Map("l_orderkey" -> 1, "l_quantity" -> 2,
-              "l_returnflag" -> 3))
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(p => p.getName.endsWith(".parquet") &&
-              !p.getName.startsWith(".")).get
           val rel = s"data/h$q.parquet"
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
+          LakeFiles.Local(root).parquet(graft.sources.IcebergLite
+            .stampFieldIds(src.filter(col("l_orderkey") % 4 === q),
+              Map("l_orderkey" -> 1, "l_quantity" -> 2,
+                "l_returnflag" -> 3)), rel)
           rel
         }
-        def writeAvro(d: DataFrame, rel: String): Unit = {
-          val t2 = s"$root/_tmpavro"
-          d.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-          val p = new java.io.File(t2).listFiles()
-            .find(_.getName.startsWith("part-")).get
-          assert(p.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(t2))
-        }
+        val lake = LakeFiles.Local(root)
         import s.implicits._
-        writeAvro(names.toDF("file_path")
+        lake.avro(names.toDF("file_path")
           .select(lit(1).as("status"),
             struct(col("file_path"), lit(0).as("content"))
               .as("data_file")),
           "metadata/m1.avro")
-        writeAvro(Seq("metadata/m1.avro").toDF("manifest_path")
+        lake.avro(Seq("metadata/m1.avro").toDF("manifest_path")
           .select(col("manifest_path"), lit(0).as("content")),
           "metadata/snap-1.avro")
         Files.writeString(
@@ -7352,11 +6475,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_iceberg/${tag}_${Integer.toHexString(dir.hashCode)}"
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "metadata"))
     Files.createDirectories(Paths.get(root, "data"))
@@ -7364,30 +6482,18 @@ object Storage extends QueryModule {
       .select(col("o_orderkey"), col("o_totalprice"),
         col("o_orderstatus"))
       .filter(col("o_orderkey") % 10 < 5)
-    val tmp = s"$root/_tmp"
-    graft.sources.IcebergLite.stampFieldIds(src,
-      Map("o_orderkey" -> 1, "o_totalprice" -> 2, "o_orderstatus" -> 3))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(p => p.getName.endsWith(".parquet") &&
-        !p.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/data/h0.parquet")))
-    rm(new java.io.File(tmp))
-    def writeAvro(d: DataFrame, rel: String): Unit = {
-      val t2 = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-      val p = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(t2))
-    }
+    LakeFiles.Local(root).parquet(
+      graft.sources.IcebergLite.stampFieldIds(src,
+        Map("o_orderkey" -> 1, "o_totalprice" -> 2, "o_orderstatus" -> 3)),
+      "data/h0.parquet")
+    val lake = LakeFiles.Local(root)
     import s.implicits._
-    writeAvro(Seq((1, 1L, "data/h0.parquet"))
+    lake.avro(Seq((1, 1L, "data/h0.parquet"))
       .toDF("status", "sequence_number", "file_path")
       .select(col("status"), col("sequence_number"),
         struct(col("file_path"), lit(0).as("content")).as("data_file")),
       "metadata/m1.avro")
-    writeAvro(Seq(("metadata/m1.avro", 0, 1L))
+    lake.avro(Seq(("metadata/m1.avro", 0, 1L))
       .toDF("manifest_path", "content", "sequence_number"),
       "metadata/snap-1.avro")
     Files.writeString(Paths.get(root, "metadata", "v1.metadata.json"),
@@ -7422,11 +6528,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_iceberg/bucket_${Integer.toHexString(dir.hashCode)}"
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "metadata"))
     Files.createDirectories(Paths.get(root, "data"))
@@ -7434,34 +6535,18 @@ object Storage extends QueryModule {
       .select(col("o_orderkey"), col("o_totalprice"),
         col("o_orderstatus"))
       .filter(col("o_orderkey") % 10 < 2)
-    def one(f: org.apache.spark.sql.Column, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      graft.sources.IcebergLite.stampFieldIds(src.filter(f),
+    val lake = LakeFiles.Local(root)
+    for (h <- 0 to 1)
+      lake.parquet(graft.sources.IcebergLite.stampFieldIds(
+        src.filter(col("o_orderkey") % 10 === h),
         Map("o_orderkey" -> 1, "o_totalprice" -> 2,
-          "o_orderstatus" -> 3))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(p => p.getName.endsWith(".parquet") &&
-          !p.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
-    one(col("o_orderkey") % 10 === 0, "data/h0.parquet")
-    one(col("o_orderkey") % 10 === 1, "data/h1.parquet")
-    def writeAvro(d: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+          "o_orderstatus" -> 3)), s"data/h$h.parquet")
     import s.implicits._
-    writeAvro(Seq("data/h0.parquet", "data/h1.parquet").toDF("file_path")
+    lake.avro(Seq("data/h0.parquet", "data/h1.parquet").toDF("file_path")
       .select(lit(1).as("status"),
         struct(col("file_path"), lit(0).as("content")).as("data_file")),
       "metadata/m1.avro")
-    writeAvro(Seq("metadata/m1.avro").toDF("manifest_path")
+    lake.avro(Seq("metadata/m1.avro").toDF("manifest_path")
       .select(col("manifest_path"), lit(0).as("content")),
       "metadata/snap-1.avro")
     Files.writeString(Paths.get(root, "metadata", "v1.metadata.json"),
@@ -7492,11 +6577,6 @@ object Storage extends QueryModule {
     import java.nio.file.{Files, Paths}
     val root =
       s"/tmp/graft_paimon/pkwrite_${Integer.toHexString(dir.hashCode)}"
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     for (d <- Seq("snapshot", "schema", "manifest", "bucket-0"))
       Files.createDirectories(Paths.get(root, d))
@@ -7508,29 +6588,16 @@ object Storage extends QueryModule {
         lit(1L).as("_SEQUENCE_NUMBER"),
         lit(0).cast("tinyint").as("_VALUE_KIND"),
         col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    val tmp = s"$root/_tmp"
-    base.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/bucket-0/kv0.parquet")))
-    rm(new java.io.File(tmp))
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val t2 = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-      val p = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(t2))
-    }
+    LakeFiles.Local(root).parquet(base, "bucket-0/kv0.parquet")
+    val lake = LakeFiles.Local(root)
     import s.implicits._
-    writeAvro(Seq((0, "kv0.parquet")).toDF("_KIND", "_fn")
+    lake.avro(Seq((0, "kv0.parquet")).toDF("_KIND", "_fn")
       .select(col("_KIND"), lit(0).as("_BUCKET"),
         struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
       "manifest/m-0.avro")
-    writeAvro(Seq.empty[String].toDF("_FILE_NAME"),
+    lake.avro(Seq.empty[String].toDF("_FILE_NAME"),
       "manifest/ml-empty.avro")
-    writeAvro(Seq("m-0.avro").toDF("_FILE_NAME"), "manifest/ml-0.avro")
+    lake.avro(Seq("m-0.avro").toDF("_FILE_NAME"), "manifest/ml-0.avro")
     Files.writeString(Paths.get(root, "schema", "schema-0"),
       """{"id":0,"fields":[
         | {"id":0,"name":"o_orderkey","type":"BIGINT"},
@@ -7554,11 +6621,6 @@ object Storage extends QueryModule {
     locally {
       locally {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         for (d <- Seq("snapshot", "schema", "manifest", "bucket-0"))
           Files.createDirectories(Paths.get(root, d))
@@ -7571,45 +6633,29 @@ object Storage extends QueryModule {
             lit(seq).as("_SEQUENCE_NUMBER"),
             lit(kind).cast("tinyint").as("_VALUE_KIND"),
             col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-        def writeKv(df: DataFrame, name: String): String = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/bucket-0/$name")))
-          rm(new java.io.File(tmp))
-          name
-        }
-        val fa = writeKv(kv(base, 1L, 0), "kv-inserts.parquet")
+        val lake = LakeFiles.Local(root)
+        val (fa, fb) = ("kv-inserts.parquet", "kv-upserts.parquet")
+        lake.parquet(kv(base, 1L, 0), s"bucket-0/$fa")
         val upserts =
           kv(base.filter((col("o_orderkey") % 10).isin(3, 4))
             .withColumn("o_totalprice", col("o_totalprice") * 2), 2L, 2)
             .unionByName(
               kv(base.filter(col("o_orderkey") % 10 === 0), 2L, 3))
-        val fb = writeKv(upserts, "kv-upserts.parquet")
+        lake.parquet(upserts, s"bucket-0/$fb")
         // changelog-producer=input materialization: snapshot 2's raw
         // input rows, named by its changelogManifestList (q421 reads
         // them back as the change feed)
-        writeKv(upserts, "changelog-2.parquet"): Unit
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
+        lake.parquet(upserts, "bucket-0/changelog-2.parquet")
         import s.implicits._
         def manifest(rel: String, entries: (Int, String)*): Unit =
-          writeAvro(entries.toSeq.toDF("_KIND", "_fn")
+          lake.avro(entries.toSeq.toDF("_KIND", "_fn")
             .select(col("_KIND"), lit(0).as("_BUCKET"),
               struct(col("_fn").as("_FILE_NAME")).as("_FILE")), rel)
         manifest("manifest/m-ins.avro", (0, fa))
         manifest("manifest/m-ups.avro", (0, fb))
         manifest("manifest/m-cl.avro", (0, "changelog-2.parquet"))
         def manifestList(rel: String, names: String*): Unit =
-          writeAvro(
+          lake.avro(
             if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
             else names.toSeq.toDF("_FILE_NAME"), rel)
         manifestList("manifest/ml-empty.avro")
@@ -7654,13 +6700,8 @@ object Storage extends QueryModule {
   private def authorPaimonClStreamTable(s: SparkSession,
                                         dir: String): String = {
     import java.nio.file.{Files, Paths}
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
     val root =
       s"/tmp/graft_paimonstream/cl_${Integer.toHexString(dir.hashCode)}"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     for (d <- Seq("snapshot", "schema", "manifest", "bucket-0"))
       Files.createDirectories(Paths.get(root, d))
@@ -7673,42 +6714,26 @@ object Storage extends QueryModule {
         lit(seq).as("_SEQUENCE_NUMBER"),
         lit(kind).cast("tinyint").as("_VALUE_KIND"),
         col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    def writeKv(df: DataFrame, name: String): String = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/bucket-0/$name")))
-      rm(new java.io.File(tmp))
-      name
-    }
-    val fa = writeKv(kv(base, 1L, 0), "kv-inserts.parquet")
+    val lake = LakeFiles.Local(root)
+    val (fa, fb) = ("kv-inserts.parquet", "kv-upserts.parquet")
+    lake.parquet(kv(base, 1L, 0), s"bucket-0/$fa")
     val upserts =
       kv(base.filter((col("o_orderkey") % 10).isin(3, 4))
         .withColumn("o_totalprice", col("o_totalprice") * 2), 2L, 2)
         .unionByName(
           kv(base.filter(col("o_orderkey") % 10 === 0), 2L, 3))
-    val fb = writeKv(upserts, "kv-upserts.parquet")
-    writeKv(upserts, "changelog-2.parquet"): Unit
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    lake.parquet(upserts, s"bucket-0/$fb")
+    lake.parquet(upserts, "bucket-0/changelog-2.parquet")
     import s.implicits._
     def manifest(rel: String, entries: (Int, String)*): Unit =
-      writeAvro(entries.toSeq.toDF("_KIND", "_fn")
+      lake.avro(entries.toSeq.toDF("_KIND", "_fn")
         .select(col("_KIND"), lit(0).as("_BUCKET"),
           struct(col("_fn").as("_FILE_NAME")).as("_FILE")), rel)
     manifest("manifest/m-ins.avro", (0, fa))
     manifest("manifest/m-ups.avro", (0, fb))
     manifest("manifest/m-cl.avro", (0, "changelog-2.parquet"))
     def manifestList(rel: String, names: String*): Unit =
-      writeAvro(
+      lake.avro(
         if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
         else names.toSeq.toDF("_FILE_NAME"), rel)
     manifestList("manifest/ml-empty.avro")
@@ -7804,13 +6829,8 @@ object Storage extends QueryModule {
     paimonDvMemo.synchronized {
       paimonDvMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_paimon/dv_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         for (d <- Seq("snapshot", "schema", "manifest", "bucket-0",
           "index"))
@@ -7824,21 +6844,13 @@ object Storage extends QueryModule {
             lit(seq).as("_SEQUENCE_NUMBER"),
             lit(kind).cast("tinyint").as("_VALUE_KIND"),
             col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-        def writeKv(df: DataFrame, name: String): String = {
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(s"$root/bucket-0/$name")))
-          rm(new java.io.File(tmp))
-          name
-        }
-        val fa = writeKv(kv(base, 1L, 0), "kv-base.parquet")
-        val fb = writeKv(
+        val lake = LakeFiles.Local(root)
+        val (fa, fb) = ("kv-base.parquet", "kv-ups.parquet")
+        lake.parquet(kv(base, 1L, 0), s"bucket-0/$fa")
+        lake.parquet(
           kv(base.filter((col("o_orderkey") % 10).isin(3, 4))
             .withColumn("o_totalprice", col("o_totalprice") * 2), 2L, 2),
-          "kv-ups.parquet")
+          s"bucket-0/$fb")
         // dead positions come from the WRITTEN file's own row ordinals
         val deadPos = s.read.parquet(s"$root/bucket-0/$fa")
           .select(col("_metadata.row_index"))
@@ -7863,23 +6875,15 @@ object Storage extends QueryModule {
         idxOut.write(blob)
         idxOut.writeInt(crc.getValue.toInt)
         idxOut.close()
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
         import s.implicits._
         def manifest(rel: String, entries: (Int, String)*): Unit =
-          writeAvro(entries.toSeq.toDF("_KIND", "_fn")
+          lake.avro(entries.toSeq.toDF("_KIND", "_fn")
             .select(col("_KIND"), lit(0).as("_BUCKET"),
               struct(col("_fn").as("_FILE_NAME")).as("_FILE")), rel)
         manifest("manifest/m-base.avro", (0, fa))
         manifest("manifest/m-ups.avro", (0, fb))
         // index manifest: the real nested IndexManifestEntry shape
-        writeAvro(Seq(0).toDF("_KIND")
+        lake.avro(Seq(0).toDF("_KIND")
           .select(col("_KIND"), lit(Array.empty[Byte]).as("_PARTITION"),
             lit(0).as("_BUCKET"),
             struct(lit("DELETION_VECTORS").as("_INDEX_TYPE"),
@@ -7893,7 +6897,7 @@ object Storage extends QueryModule {
                 .as("_DELETIONS_VECTORS_RANGES")).as("_INDEX_FILE")),
           "manifest/idx-m-0.avro")
         def manifestList(rel: String, names: String*): Unit =
-          writeAvro(
+          lake.avro(
             if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
             else names.toSeq.toDF("_FILE_NAME"), rel)
         manifestList("manifest/ml-empty.avro")
@@ -7939,13 +6943,8 @@ object Storage extends QueryModule {
     paimonPartMemo.synchronized {
       paimonPartMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_paimon/part_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         for (d <- Seq("snapshot", "schema", "manifest"))
           Files.createDirectories(Paths.get(root, d))
@@ -7954,38 +6953,21 @@ object Storage extends QueryModule {
             col("l_extendedprice"), col("l_returnflag"))
         val flags = src.select(col("l_returnflag")).distinct()
           .collect().map(_.getString(0)).sorted.toSeq
-        for (f <- flags) {
-          Files.createDirectories(
-            Paths.get(root, s"l_returnflag=$f", "bucket-0"))
-          val tmp = s"$root/_tmp"
-          src.filter(col("l_returnflag") === f).drop("l_returnflag")
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(p => p.getName.endsWith(".parquet") &&
-              !p.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(
-            s"$root/l_returnflag=$f/bucket-0/data.parquet")))
-          rm(new java.io.File(tmp))
-        }
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
+        for (f <- flags)
+          lake.parquet(src.filter(col("l_returnflag") === f)
+            .drop("l_returnflag"), s"l_returnflag=$f/bucket-0/data.parquet")
         import s.implicits._
-        writeAvro(flags.map(f => (0, "data.parquet",
+        lake.avro(flags.map(f => (0, "data.parquet",
           graft.sources.BinaryRowCodec.encode(Seq(f),
             Seq(org.apache.spark.sql.types.StringType))))
           .toDF("_KIND", "_fn", "_PARTITION")
           .select(col("_KIND"), col("_PARTITION"), lit(0).as("_BUCKET"),
             struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
           "manifest/m-part.avro")
-        writeAvro(Seq.empty[String].toDF("_FILE_NAME"),
+        lake.avro(Seq.empty[String].toDF("_FILE_NAME"),
           "manifest/ml-empty.avro")
-        writeAvro(Seq("m-part.avro").toDF("_FILE_NAME"),
+        lake.avro(Seq("m-part.avro").toDF("_FILE_NAME"),
           "manifest/ml-part.avro")
         Files.writeString(Paths.get(root, "schema", "schema-0"),
           """{"id":0,"fields":[
@@ -8023,13 +7005,8 @@ object Storage extends QueryModule {
     paimonPartPkMemo.synchronized {
       paimonPartPkMemo.getOrElseUpdate(dir, {
         import java.nio.file.{Files, Paths}
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
         val root =
           s"/tmp/graft_paimon/ppk_${Integer.toHexString(dir.hashCode)}"
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
         rm(new java.io.File(root))
         for (d <- Seq("snapshot", "schema", "manifest"))
           Files.createDirectories(Paths.get(root, d))
@@ -8046,39 +7023,21 @@ object Storage extends QueryModule {
             lit(seq).as("_SEQUENCE_NUMBER"),
             lit(kind).cast("tinyint").as("_VALUE_KIND"),
             col("o_orderkey"), col("o_totalprice"))
-        def writeKv(df: DataFrame, st: String, name: String): Unit = {
-          Files.createDirectories(
-            Paths.get(root, s"o_orderstatus=$st", "bucket-0"))
-          val tmp = s"$root/_tmp"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(p => p.getName.endsWith(".parquet") &&
-              !p.getName.startsWith(".")).get
-          assert(part.renameTo(new java.io.File(
-            s"$root/o_orderstatus=$st/bucket-0/$name")))
-          rm(new java.io.File(tmp))
-        }
+        val lake = LakeFiles.Local(root)
         for (st <- statuses) {
           val slice = base.filter(col("o_orderstatus") === st)
-          writeKv(kv(slice, 1L, 0), st, "kv-ins.parquet")
-          writeKv(
+          lake.parquet(kv(slice, 1L, 0),
+            s"o_orderstatus=$st/bucket-0/kv-ins.parquet")
+          lake.parquet(
             kv(slice.filter((col("o_orderkey") % 10).isin(3, 4))
               .withColumn("o_totalprice", col("o_totalprice") * 2), 2L, 2)
               .unionByName(
                 kv(slice.filter(col("o_orderkey") % 10 === 0), 2L, 3)),
-            st, "kv-ups.parquet")
-        }
-        def writeAvro(df: DataFrame, rel: String): Unit = {
-          val tmp = s"$root/_tmpavro"
-          df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.startsWith("part-")).get
-          assert(part.renameTo(new java.io.File(s"$root/$rel")))
-          rm(new java.io.File(tmp))
+            s"o_orderstatus=$st/bucket-0/kv-ups.parquet")
         }
         import s.implicits._
         def manifest(rel: String, name: String): Unit =
-          writeAvro(statuses.map(st => (0, name,
+          lake.avro(statuses.map(st => (0, name,
             graft.sources.BinaryRowCodec.encode(Seq(st),
               Seq(org.apache.spark.sql.types.StringType))))
             .toDF("_KIND", "_fn", "_PARTITION")
@@ -8090,7 +7049,7 @@ object Storage extends QueryModule {
         // the raw input rows — here the same KeyValue file serves)
         manifest("manifest/m-cl.avro", "kv-ups.parquet")
         def mlist(rel: String, names: String*): Unit =
-          writeAvro(
+          lake.avro(
             if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
             else names.toSeq.toDF("_FILE_NAME"), rel)
         mlist("manifest/ml-empty.avro")

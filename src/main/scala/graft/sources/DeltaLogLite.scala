@@ -4,6 +4,7 @@ import java.io.FileNotFoundException
 
 import scala.collection.mutable
 
+import graft.sources.LakeFiles.{jstr, uriEncode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1493,12 +1494,6 @@ object DeltaLogLite {
               "scope")
       }
     }
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    } + "\""
     val version = snap.version + 1
     val fs = new Path(tableDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1571,8 +1566,6 @@ object DeltaLogLite {
     // add.path is an RFC 2396 URI — percent-encode the literal FS rel
     // path (the dirs keep their Hive-escaped names on disk) so
     // resolveAddPath's decode lands back on the real file
-    def uriEncode(rel: String): String =
-      new java.net.URI(null, null, rel, null).toASCIIString
     val moved = outputs.zipWithIndex.map { case ((relDir, pv, st), i) =>
       val dirRel = if (relDir.isEmpty) Seq("data") else relDir
       val rel = (dirRel :+ s"compact-${version}_$i.parquet").mkString("/")
@@ -1593,21 +1586,21 @@ object DeltaLogLite {
     }
     fs.delete(tmp, true)
     def dvJson(d: DvDescriptor): String =
-      s"""{"storageType":${jq(d.storageType)},"pathOrInlineDv":${
-        jq(d.pathOrInlineDv)},"offset":${d.offset},"sizeInBytes":${
+      s"""{"storageType":${jstr(d.storageType)},"pathOrInlineDv":${
+        jstr(d.pathOrInlineDv)},"offset":${d.offset},"sizeInBytes":${
         d.sizeInBytes},"cardinality":${d.cardinality}}"""
     def pvJson(pv: Seq[(String, String)]): String =
-      pv.map { case (k, v) => s"${jq(k)}:${jq(v)}" }
+      pv.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
         .mkString("{", ",", "}")
     val removes = snap.files.sortBy(_.path).map(f =>
-      s"""{"remove":{"path":${jq(f.path)},"deletionTimestamp":0,"dataChange":false,"partitionValues":${
+      s"""{"remove":{"path":${jstr(f.path)},"deletionTimestamp":0,"dataChange":false,"partitionValues":${
         pvJson(f.partitionValues.toSeq.sortBy(_._1))}""" +
         f.deletionVector.map(d => s""","deletionVector":${dvJson(d)}""")
           .getOrElse("") + "}}")
     val adds = moved.map { case (rel, pv, size, rc) =>
-      s"""{"add":{"path":${jq(uriEncode(rel))},"partitionValues":${
+      s"""{"add":{"path":${jstr(uriEncode(rel))},"partitionValues":${
         pvJson(pv)},"size":$size,"modificationTime":0,"dataChange":false,"stats":${
-        jq(s"""{"numRecords":$rc}""")}}}"""
+        jstr(s"""{"numRecords":$rc}""")}}}"""
     }
     AtomicFiles.write(fs,
       new Path(tableDir, f"_delta_log/$version%020d.json"),
@@ -1617,12 +1610,6 @@ object DeltaLogLite {
 
   /** JSON string literal with control-char escaping — shared by the
     * write paths' hand-rendered action lines. */
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c            => c.toString
-  } + "\""
 
   /** Serialize dead row ordinals into the deletion-vector PAYLOAD
     * layout [[decodeDvPayload]] reads — [4-byte LE magic][8-byte LE
@@ -1731,12 +1718,12 @@ object DeltaLogLite {
 
   private def pvJson(pv: Map[String, String]): String =
     pv.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
+      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
       .mkString("{", ",", "}")
 
   private def dvDescJson(d: DvDescriptor): String =
-    s"""{"storageType":${jsonStr(d.storageType)},"pathOrInlineDv":${
-      jsonStr(d.pathOrInlineDv)},"offset":${d.offset},"sizeInBytes":${
+    s"""{"storageType":${jstr(d.storageType)},"pathOrInlineDv":${
+      jstr(d.pathOrInlineDv)},"offset":${d.offset},"sizeInBytes":${
       d.sizeInBytes},"cardinality":${d.cardinality}}"""
 
   /** The writer features a LEGACY minWriterVersion implies
@@ -1776,8 +1763,8 @@ object DeltaLogLite {
           .contains("true")) Set("changeDataFeed")
          else Set.empty[String]) ++
         readerFeats).toSeq.distinct.sorted
-      val rArr = readerFeats.map(jsonStr).mkString("[", ",", "]")
-      val wArr = writerFeats.map(jsonStr).mkString("[", ",", "]")
+      val rArr = readerFeats.map(jstr).mkString("[", ",", "]")
+      val wArr = writerFeats.map(jstr).mkString("[", ",", "]")
       Some(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":$rArr,"writerFeatures":$wArr}}""")
     }
 
@@ -1862,7 +1849,7 @@ object DeltaLogLite {
     results.flatMap { case (path, b85, size, card) =>
       val f = byKey(path)
       val remove =
-        s"""{"remove":{"path":${jsonStr(f.path)},"deletionTimestamp":0,"dataChange":true,"partitionValues":${
+        s"""{"remove":{"path":${jstr(f.path)},"deletionTimestamp":0,"dataChange":true,"partitionValues":${
           pvJson(f.partitionValues)}""" +
           f.deletionVector.map(d => s""","deletionVector":${dvDescJson(d)}""")
             .getOrElse("") + "}}"
@@ -1876,11 +1863,11 @@ object DeltaLogLite {
         // back to driver-side footer reads (and cost external
         // readers their min/max pruning)
         val statsPart = f.stats
-          .map(s => s""","stats":${jsonStr(s)}""").getOrElse("")
+          .map(s => s""","stats":${jstr(s)}""").getOrElse("")
         val add =
-          s"""{"add":{"path":${jsonStr(f.path)},"partitionValues":${
+          s"""{"add":{"path":${jstr(f.path)},"partitionValues":${
             pvJson(f.partitionValues)},"size":$len,"modificationTime":0,"dataChange":true$statsPart,"deletionVector":{"storageType":"u","pathOrInlineDv":${
-            jsonStr(b85)},"offset":1,"sizeInBytes":$size,"cardinality":$card}}}"""
+            jstr(b85)},"offset":1,"sizeInBytes":$size,"cardinality":$card}}}"""
         Seq(remove, add)
       }
     }
@@ -2055,8 +2042,6 @@ object DeltaLogLite {
     val newAdds = stagePartitionedWrite(spark, tableDir, fs,
       stampMapped(snap, updated), partCols.map(physOf), dataBase,
       s"update-$version", fieldIdWrite)
-    def uriEncode(rel: String): String =
-      new java.net.URI(null, null, rel, null).toASCIIString
     // exact written CDF, only when the table records a change feed
     val cdcLines: Seq[String] =
       if (!snap.configuration.get("delta.enableChangeDataFeed")
@@ -2071,14 +2056,14 @@ object DeltaLogLite {
           partCols.map(physOf), Seq("_change_data"), s"cdc-$version",
           fieldIdWrite).map {
           case (rel, pv, size, _) =>
-            s"""{"cdc":{"path":${jsonStr(uriEncode(rel))},"partitionValues":${
+            s"""{"cdc":{"path":${jstr(uriEncode(rel))},"partitionValues":${
               pvJson(pv.toMap)},"size":$size,"dataChange":false}}"""
         }
       }
     val addLines = newAdds.map { case (rel, pv, size, rc) =>
-      s"""{"add":{"path":${jsonStr(uriEncode(rel))},"partitionValues":${
+      s"""{"add":{"path":${jstr(uriEncode(rel))},"partitionValues":${
         pvJson(pv.toMap)},"size":$size,"modificationTime":0,"dataChange":true,"stats":${
-        jsonStr(s"""{"numRecords":$rc}""")}}}"""
+        jstr(s"""{"numRecords":$rc}""")}}}"""
     }
     val lines = protocolUpgradeLine(snap).toSeq ++ cdcLines ++
       dvCommitLines(tableDir, fs, byKey, dvResults) ++ addLines
@@ -2155,8 +2140,6 @@ object DeltaLogLite {
     val newAdds = stagePartitionedWrite(spark, tableDir, fs,
       stampMapped(snap, typed), partCols.map(physOf), dataBase,
       s"upsert-$version", fieldIdWrite)
-    def uriEncode(rel: String): String =
-      new java.net.URI(null, null, rel, null).toASCIIString
     val cdcLines: Seq[String] =
       if (!snap.configuration.get("delta.enableChangeDataFeed")
         .contains("true")) Nil
@@ -2177,14 +2160,14 @@ object DeltaLogLite {
           partCols.map(physOf), Seq("_change_data"), s"cdc-$version",
           fieldIdWrite).map {
           case (rel, pv, size, _) =>
-            s"""{"cdc":{"path":${jsonStr(uriEncode(rel))},"partitionValues":${
+            s"""{"cdc":{"path":${jstr(uriEncode(rel))},"partitionValues":${
               pvJson(pv.toMap)},"size":$size,"dataChange":false}}"""
         }
       }
     val addLines = newAdds.map { case (rel, pv, size, rc) =>
-      s"""{"add":{"path":${jsonStr(uriEncode(rel))},"partitionValues":${
+      s"""{"add":{"path":${jstr(uriEncode(rel))},"partitionValues":${
         pvJson(pv.toMap)},"size":$size,"modificationTime":0,"dataChange":true,"stats":${
-        jsonStr(s"""{"numRecords":$rc}""")}}}"""
+        jstr(s"""{"numRecords":$rc}""")}}}"""
     }
     // a pure-insert upsert grows no vectors — don't upgrade the
     // protocol for a feature the commit doesn't use

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.LakeFiles.jstr
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.json4s._
@@ -953,20 +954,14 @@ object HudiCowLite {
                          written: Seq[(String, String, String, Long)],
                          cdcByFid: Map[String, String],
                          kind: String = "commit"): Unit = {
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    } + "\""
     val byPart = written.groupBy(_._1)
     val stats = byPart.toSeq.sortBy(_._1).map { case (part, ws) =>
       val arr = ws.sortBy(_._2).map { case (_, fid, rel, nw) =>
-        s"""{"fileId":${jq(fid)},"path":${jq(rel)},"numWrites":$nw""" +
+        s"""{"fileId":${jstr(fid)},"path":${jstr(rel)},"numWrites":$nw""" +
           cdcByFid.get(fid).map(rel2 =>
-            s""","cdcStats":{${jq(rel2)}:1}""").getOrElse("") + "}"
+            s""","cdcStats":{${jstr(rel2)}:1}""").getOrElse("") + "}"
       }.mkString("[", ",", "]")
-      s"${jq(part)}:$arr"
+      s"${jstr(part)}:$arr"
     }.mkString("{", ",", "}")
     graft.sources.AtomicFiles.write(fs,
       new Path(tableDir, s".hoodie/$instant.$kind"),
@@ -1086,20 +1081,14 @@ object HudiCowLite {
   private[sources] def replaceCommitJson(partitions: Seq[String],
       replaced: String => Seq[String],
       writes: String => Seq[(String, String, Long)]): String = {
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    } + "\""
     val repl = partitions.map { p =>
-      s"${jq(p)}:${replaced(p).map(jq).mkString("[", ",", "]")}"
+      s"${jstr(p)}:${replaced(p).map(jstr).mkString("[", ",", "]")}"
     }.mkString("{", ",", "}")
     val stats = partitions.map { p =>
       val ws = writes(p).map { case (fid, rel, nw) =>
-        s"""{"fileId":${jq(fid)},"path":${jq(rel)},"numWrites":$nw}"""
+        s"""{"fileId":${jstr(fid)},"path":${jstr(rel)},"numWrites":$nw}"""
       }.mkString("[", ",", "]")
-      s"${jq(p)}:$ws"
+      s"${jstr(p)}:$ws"
     }.mkString("{", ",", "}")
     s"""{"partitionToReplaceFileIds":$repl,"partitionToWriteStats":$stats}"""
   }

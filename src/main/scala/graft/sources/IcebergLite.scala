@@ -120,8 +120,6 @@ object IcebergLite {
 
   private implicit val fmts: Formats = DefaultFormats
 
-  private val AvroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-
   /** `file:`-scheme URIs and absolute paths pass through; a relative
     * path (some writers store table-relative locations) resolves
     * against the table root. Any OTHER scheme (s3://, hdfs://, …) is
@@ -603,12 +601,6 @@ object IcebergLite {
       !ml.columns.contains("content") || r.getAs[Any]("content") == null ||
         r.getAs[Number]("content").intValue() == 0
     }.map(_.getAs[String]("manifest_path")).toSeq
-    def jsonStr(s: String): String = "\"" + s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    } + "\""
     dataManifests.flatMap { mp =>
       val p = resolve(tableDir, mp)
       val m = MetaAvro.read(spark, p)
@@ -632,10 +624,10 @@ object IcebergLite {
             pr.schema.fieldNames.map { n =>
               val v = pr.getAs[Any](n) match {
                 case null      => "null"
-                case s: String => jsonStr(s)
+                case s: String => LakeFiles.jstr(s)
                 case other     => other.toString
               }
-              s"${jsonStr(n)}:$v"
+              s"${LakeFiles.jstr(n)}:$v"
             }.mkString("{", ",", "}")
           }
           Some((path, fmt,
@@ -1544,13 +1536,12 @@ object IcebergLite {
             "deleted) — nothing to rewrite; expire snapshots and " +
             "reclaim files instead", e)
     }
-    def writeAvro(df: DataFrame, rel: String): Unit =
-      writeAvroFile(spark, fs, tableDir, df, rel)
+    val files = LakeFiles.Hadoop(fs, tableDir)
     import spark.implicits._
-    writeAvro(stagedDataManifestDf(spark, moved, partFields,
+    files.avro(stagedDataManifestDf(spark, moved, partFields,
       seq = None, fileFormat = true),
       s"metadata/m-compact-$newSnapId.avro")
-    writeAvro(compactSeq match {
+    files.avro(compactSeq match {
       case Some(sq) => Seq((s"metadata/m-compact-$newSnapId.avro", 0, sq))
         .toDF("manifest_path", "content", "sequence_number")
       case None => Seq((s"metadata/m-compact-$newSnapId.avro", 0))
@@ -1694,28 +1685,17 @@ object IcebergLite {
     val newSnapId = snapshotIds(spark, tableDir).max + 1
     // the delete file itself: distinct key tuples, field ids stamped
     val delRel = s"data/eqdel-$newSnapId.parquet"
-    val tmp = new Path(tableDir, "_tmp_eqdel")
-    stampFieldIds(keys.distinct(),
-      keys.columns.zip(eqIds).toMap)
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val staged = fs.listStatus(tmp).map(_.getPath)
-      .find(p => p.getName.endsWith(".parquet") &&
-        !p.getName.startsWith(".")).getOrElse(
-        throw new IllegalStateException(
-          s"$tableDir: eqDelete staged no parquet"))
     val dest = new Path(tableDir, delRel)
-    fs.mkdirs(dest.getParent)
-    if (!fs.rename(staged, dest)) throw new IllegalStateException(
-      s"$tableDir: could not place $delRel")
-    fs.delete(tmp, true)
+    LakeFiles.stage(fs,
+      stampFieldIds(keys.distinct(), keys.columns.zip(eqIds).toMap),
+      "parquet", new Path(tableDir, "_tmp_eqdel"), dest)
     val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         dest, spark.sparkContext.hadoopConfiguration))
     val rc = try footer.getRecordCount finally footer.close()
     val size = fs.getFileStatus(dest).getLen
-    def writeAvro(df: DataFrame, rel: String): Unit =
-      writeAvroFile(spark, fs, tableDir, df, rel)
-    writeAvro(Seq((1, newSeq, delRel))
+    val files = LakeFiles.Hadoop(fs, tableDir)
+    files.avro(Seq((1, newSeq, delRel))
       .toDF("status", "sequence_number", "file_path")
       .select(col("status"), col("sequence_number"),
         struct(col("file_path"), lit(2).as("content"),
@@ -1723,7 +1703,7 @@ object IcebergLite {
           lit(rc).as("record_count"),
           lit(size).as("file_size_in_bytes")).as("data_file")),
       s"metadata/m-eqdel-$newSnapId.avro")
-    writeAvro((oldRows :+ ((s"metadata/m-eqdel-$newSnapId.avro",
+    files.avro((oldRows :+ ((s"metadata/m-eqdel-$newSnapId.avro",
       Some(1): Option[Int], Some(newSeq): Option[Long])))
       .toDF("manifest_path", "content", "sequence_number"),
       s"metadata/snap-$newSnapId.avro")
@@ -1764,28 +1744,6 @@ object IcebergLite {
     AtomicFiles.write(fs,
       new Path(tableDir, "metadata/version-hint.text"),
       version.toString, replace = true)
-  }
-
-  /** Stage `df` as ONE avro file and place it at `tableDir/rel` —
-    * the write paths' shared manifest/manifest-list/snapshot
-    * finish. Driver-bounded: every caller hands it O(files) manifest
-    * metadata, never data rows. */
-  private def writeAvroFile(spark: SparkSession,
-                            fs: org.apache.hadoop.fs.FileSystem,
-                            tableDir: String, df: DataFrame,
-                            rel: String): Unit = {
-    val t2 = new Path(tableDir, "_tmpavro")
-    df.coalesce(1).write.mode("overwrite").format(AvroFmt)
-      .save(t2.toString)
-    val p = fs.listStatus(t2).map(_.getPath)
-      .find(_.getName.startsWith("part-")).getOrElse(
-        throw new IllegalStateException(
-          s"$tableDir: avro staging produced no part file for $rel"))
-    val dest = new Path(tableDir, rel)
-    fs.mkdirs(dest.getParent)
-    if (!fs.rename(p, dest))
-      throw new IllegalStateException(s"$tableDir: could not place $rel")
-    fs.delete(t2, true): Unit
   }
 
   /** Resolve the CURRENT partition spec's transform fields over
@@ -2062,16 +2020,15 @@ object IcebergLite {
       .write.mode("overwrite").parquet(tmp.toString)
     val delFiles = moveStagedParquet(spark, tableDir, fs, tmp,
       "data/posdel", newSnapId)
-    def writeAvro(df: DataFrame, rel: String): Unit =
-      writeAvroFile(spark, fs, tableDir, df, rel)
-    writeAvro(delFiles
+    val files = LakeFiles.Hadoop(fs, tableDir)
+    files.avro(delFiles
       .toDF("file_path", "record_count", "file_size_in_bytes")
       .select(lit(1).as("status"), lit(newSeq).as("sequence_number"),
         struct(col("file_path"), lit(1).as("content"),
           col("record_count"), col("file_size_in_bytes"))
           .as("data_file")),
       s"metadata/m-posdel-$newSnapId.avro")
-    writeAvro((oldRows :+ ((s"metadata/m-posdel-$newSnapId.avro",
+    files.avro((oldRows :+ ((s"metadata/m-posdel-$newSnapId.avro",
       Some(1): Option[Int], Some(newSeq): Option[Long])))
       .toDF("manifest_path", "content", "sequence_number"),
       s"metadata/snap-$newSnapId.avro")
@@ -2154,19 +2111,18 @@ object IcebergLite {
       stampFieldIds(updated,
         snap.schema.fieldNames.map(c => c -> fieldId(c)).toMap),
       partFields, "upddata", newSnapId, packFiles = None)
-    def writeAvro(df: DataFrame, rel: String): Unit =
-      writeAvroFile(spark, fs, tableDir, df, rel)
-    writeAvro(delFiles
+    val files = LakeFiles.Hadoop(fs, tableDir)
+    files.avro(delFiles
       .toDF("file_path", "record_count", "file_size_in_bytes")
       .select(lit(1).as("status"), lit(newSeq).as("sequence_number"),
         struct(col("file_path"), lit(1).as("content"),
           col("record_count"), col("file_size_in_bytes"))
           .as("data_file")),
       s"metadata/m-upddel-$newSnapId.avro")
-    writeAvro(stagedDataManifestDf(spark, dataFiles, partFields,
+    files.avro(stagedDataManifestDf(spark, dataFiles, partFields,
       seq = Some(newSeq)),
       s"metadata/m-upddata-$newSnapId.avro")
-    writeAvro((oldRows ++ Seq(
+    files.avro((oldRows ++ Seq(
       (s"metadata/m-upddel-$newSnapId.avro",
         Some(1): Option[Int], Some(newSeq): Option[Long]),
       (s"metadata/m-upddata-$newSnapId.avro",
@@ -2260,9 +2216,8 @@ object IcebergLite {
     val dataFiles = stageTransformed(spark, tableDir, fs,
       stampFieldIds(typed, allIds), partFields, "upskdata",
       newSnapId, packFiles = None)
-    def writeAvro(df: DataFrame, rel: String): Unit =
-      writeAvroFile(spark, fs, tableDir, df, rel)
-    writeAvro(Seq((1, newSeq, delRel))
+    val files = LakeFiles.Hadoop(fs, tableDir)
+    files.avro(Seq((1, newSeq, delRel))
       .toDF("status", "sequence_number", "file_path")
       .select(col("status"), col("sequence_number"),
         struct(col("file_path"), lit(2).as("content"),
@@ -2270,12 +2225,12 @@ object IcebergLite {
           lit(delRc).as("record_count"),
           lit(delSize).as("file_size_in_bytes")).as("data_file")),
       s"metadata/m-upskdel-$newSnapId.avro")
-    writeAvro(stagedDataManifestDf(spark, dataFiles, partFields,
+    files.avro(stagedDataManifestDf(spark, dataFiles, partFields,
       seq = Some(newSeq)),
       s"metadata/m-upskdata-$newSnapId.avro")
     // BOTH new manifests ride ONE manifest list at ONE sequence — the
     // atomicity the two-snapshot composition lacks
-    writeAvro((oldRows ++ Seq(
+    files.avro((oldRows ++ Seq(
       (s"metadata/m-upskdel-$newSnapId.avro",
         Some(1): Option[Int], Some(newSeq): Option[Long]),
       (s"metadata/m-upskdata-$newSnapId.avro",

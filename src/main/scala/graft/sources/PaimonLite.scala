@@ -124,8 +124,6 @@ object PaimonLite {
 
   private implicit val fmts: Formats = DefaultFormats
 
-  private val AvroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-
   private def readText(fs: org.apache.hadoop.fs.FileSystem,
                        p: Path): String = {
     val in = fs.open(p)
@@ -1483,32 +1481,21 @@ object PaimonLite {
         (name, part, rc, fs.getFileStatus(dest).getLen)
     }
     fs.delete(tmp, true)
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val t2 = new Path(tableDir, "_tmpavro")
-      df.coalesce(1).write.mode("overwrite").format(AvroFmt)
-        .save(t2.toString)
-      val p = fs.listStatus(t2).map(_.getPath)
-        .find(_.getName.startsWith("part-")).get
-      val dest = new Path(tableDir, rel)
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(p, dest))
-        throw new IllegalStateException(s"$tableDir: could not place $rel")
-      fs.delete(t2, true): Unit
-    }
+    val files = LakeFiles.Hadoop(fs, tableDir)
     import spark.implicits._
     val entries = moved.map { case (name, part, rc, sz) =>
       (name, if (partKeys.isEmpty) null
              else BinaryRowCodec.encode(part, partTypes), rc, sz)
     }
-    writeAvro(entries.toDF("_fn", "_part", "_rc", "_sz")
+    files.avro(entries.toDF("_fn", "_part", "_rc", "_sz")
       .select(lit(0).as("_KIND"), col("_part").as("_PARTITION"),
         lit(0).as("_BUCKET"),
         struct(col("_fn").as("_FILE_NAME"), col("_sz").as("_FILE_SIZE"),
           col("_rc").as("_ROW_COUNT")).as("_FILE")),
       s"manifest/m-compact-$newId.avro")
-    writeAvro(Seq(s"m-compact-$newId.avro").toDF("_FILE_NAME"),
+    files.avro(Seq(s"m-compact-$newId.avro").toDF("_FILE_NAME"),
       s"manifest/ml-compact-$newId.avro")
-    writeAvro(Seq.empty[String].toDF("_FILE_NAME"),
+    files.avro(Seq.empty[String].toDF("_FILE_NAME"),
       s"manifest/ml-compact-empty-$newId.avro")
     AtomicFiles.write(fs,
       new Path(tableDir, s"snapshot/snapshot-$newId"),
@@ -1639,13 +1626,13 @@ object PaimonLite {
     val moved = stageKvWrite(spark, tableDir, fs, snap, kv, "compact",
       newId)
     import spark.implicits._
-    writeAvroFile(spark, fs, tableDir,
+    LakeFiles.Hadoop(fs, tableDir).avro(
       kvManifestDf(spark, moved, partCols, partTypes),
       s"manifest/m-compact-$newId.avro")
-    writeAvroFile(spark, fs, tableDir,
+    LakeFiles.Hadoop(fs, tableDir).avro(
       Seq(s"m-compact-$newId.avro").toDF("_FILE_NAME"),
       s"manifest/ml-compact-$newId.avro")
-    writeAvroFile(spark, fs, tableDir,
+    LakeFiles.Hadoop(fs, tableDir).avro(
       Seq.empty[String].toDF("_FILE_NAME"),
       s"manifest/ml-compact-empty-$newId.avro")
     AtomicFiles.write(fs,
@@ -1743,23 +1730,6 @@ object PaimonLite {
     }
     fs.delete(tmp, true)
     moved
-  }
-
-  /** Single-file Avro placement for manifests / manifest lists. */
-  private def writeAvroFile(spark: SparkSession,
-                            fs: org.apache.hadoop.fs.FileSystem,
-                            tableDir: String, df: DataFrame,
-                            rel: String): Unit = {
-    val t2 = new Path(tableDir, "_tmpavro")
-    df.coalesce(1).write.mode("overwrite").format(AvroFmt)
-      .save(t2.toString)
-    val p = fs.listStatus(t2).map(_.getPath)
-      .find(_.getName.startsWith("part-")).get
-    val dest = new Path(tableDir, rel)
-    fs.mkdirs(dest.getParent)
-    if (!fs.rename(p, dest))
-      throw new IllegalStateException(s"$tableDir: could not place $rel")
-    fs.delete(t2, true): Unit
   }
 
   /** The ADD (`_KIND`=0) manifest rows for [[stageKvWrite]]'s output:
@@ -2035,16 +2005,16 @@ object PaimonLite {
         partCols.map(k => col(s"_gp_$k")) :+ col("_gbucket"): _*)
     val newId = latestSnapshotId(spark, tableDir) + 1
     val moved = stageKvWrite(spark, tableDir, fs, snap, kv, "kv", newId)
-    writeAvroFile(spark, fs, tableDir,
+    LakeFiles.Hadoop(fs, tableDir).avro(
       kvManifestDf(spark, moved, partCols, partTypes),
       s"manifest/m-kv-$newId.avro")
     // base = everything the previous snapshot covered; delta = new
     val baseNames = manifestNames(spark, tableDir, snap.snapshotId)
-    writeAvroFile(spark, fs, tableDir,
+    LakeFiles.Hadoop(fs, tableDir).avro(
       (if (baseNames.isEmpty) Seq.empty[String] else baseNames)
         .toDF("_FILE_NAME"),
       s"manifest/ml-kv-base-$newId.avro")
-    writeAvroFile(spark, fs, tableDir,
+    LakeFiles.Hadoop(fs, tableDir).avro(
       Seq(s"m-kv-$newId.avro").toDF("_FILE_NAME"),
       s"manifest/ml-kv-delta-$newId.avro")
     // producer=input: the written rows ARE the changelog — copy each
@@ -2070,10 +2040,10 @@ object PaimonLite {
               s"$tableDir: could not place changelog file $clName")
           (clName, part, bucket, rc, sz)
         }
-        writeAvroFile(spark, fs, tableDir,
+        LakeFiles.Hadoop(fs, tableDir).avro(
           kvManifestDf(spark, clMoved, partCols, partTypes),
           s"manifest/m-kv-cl-$newId.avro")
-        writeAvroFile(spark, fs, tableDir,
+        LakeFiles.Hadoop(fs, tableDir).avro(
           Seq(s"m-kv-cl-$newId.avro").toDF("_FILE_NAME"),
           s"manifest/ml-kv-cl-$newId.avro")
         s"""\n"changelogManifestList":"ml-kv-cl-$newId.avro","""

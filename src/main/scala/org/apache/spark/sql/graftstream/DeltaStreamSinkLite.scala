@@ -7,7 +7,8 @@ import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.sources.DeltaLogLite
+import graft.sources.{DeltaLogLite, LakeFiles}
+import graft.sources.LakeFiles.{jstr, rm}
 
 /** Structured-Streaming SINK writing a Delta-layout table — the write
   * half of the lakehouse streaming loop next to [[DeltaStreamLite]].
@@ -60,13 +61,6 @@ class DeltaStreamSink(sqlContext: SQLContext, tableDir: String,
     * every addBatch re-parses all commit JSONs plus the checkpoint. */
   private var cachedTxn: Option[Long] = None
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c            => c.toString
-  } + "\""
-
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     // the engine sets the query id as a local property on the driver
     val appId = Option(spark.sparkContext
@@ -118,14 +112,8 @@ class DeltaStreamSink(sqlContext: SQLContext, tableDir: String,
         !f.getName.startsWith("."))
     val rels = parts.zipWithIndex.map { case (f, i) =>
       val rel = s"data/b${batchId}_$i.parquet"
-      if (!f.renameTo(new java.io.File(s"$tableDir/$rel")))
-        throw new IllegalStateException(
-          s"delta-sink-lite: could not move ${f.getName} into $tableDir")
+      LakeFiles.move(f, new java.io.File(s"$tableDir/$rel"))
       rel
-    }
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
     }
     rm(new java.io.File(tmp))
 
@@ -193,20 +181,9 @@ class DeltaStreamSink(sqlContext: SQLContext, tableDir: String,
       .select(struct(col("appId"), col("version")).as("txn"))
     val all = Seq(addDf, metaDf, protoDf, txnDf)
       .reduce(_.unionByName(_, allowMissingColumns = true))
-    val tmp = s"$tableDir/_tmp_ckpt"
-    all.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    val dest = new java.io.File(
-      s"$tableDir/_delta_log/" + f"$v%020d.checkpoint.parquet")
-    if (!part.renameTo(dest)) throw new IllegalStateException(
-      s"delta-sink-lite: could not place checkpoint $dest")
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
-    rm(new java.io.File(tmp))
+    LakeFiles.stage(all, "parquet", new java.io.File(s"$tableDir/_tmp_ckpt"),
+      new java.io.File(
+        s"$tableDir/_delta_log/" + f"$v%020d.checkpoint.parquet"))
     graft.sources.AtomicFiles.write(
       Paths.get(tableDir, "_delta_log", "_last_checkpoint"),
       s"""{"version":$v,"size":${snap.files.length + 2 + txns.length}}""")

@@ -8,7 +8,8 @@ import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.HudiCowLite
+import graft.sources.{HudiCowLite, LakeFiles}
+import graft.sources.LakeFiles.{jstr, rm}
 
 /** Structured-Streaming SINK writing an append-only Hudi
   * COPY_ON_WRITE table — the write half of the Hudi streaming leg
@@ -60,18 +61,6 @@ class HudiStreamSink(sqlContext: SQLContext, tableDir: String)
     * is the table's newest, so the scan stops immediately in steady
     * state), then tracked in-instance. */
   private var cachedBatch: Option[Long] = None
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c            => c.toString
-  } + "\""
-
-  private def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
-  }
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val appId = Option(spark.sparkContext
@@ -133,9 +122,7 @@ class HudiStreamSink(sqlContext: SQLContext, tableDir: String)
     val stats = parts.zipWithIndex.map { case (f, i) =>
       val fileId = s"s$batchId-$i"
       val rel = s"${fileId}_0-0_$instant.parquet"
-      if (!f.renameTo(new java.io.File(s"$tableDir/$rel")))
-        throw new IllegalStateException(
-          s"hudi-sink-lite: could not move ${f.getName} into $tableDir")
+      LakeFiles.move(f, new java.io.File(s"$tableDir/$rel"))
       s"""{"fileId":${jstr(fileId)},"path":${jstr(rel)},"numWrites":1}"""
     }
     rm(new java.io.File(tmp))

@@ -11,6 +11,9 @@ import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.{jstr, rm}
+
 /** Structured-Streaming SINK writing an Iceberg v2 table — completing
   * the sink trio next to [[DeltaStreamSinkLite]] and
   * [[PaimonStreamSinkLite]]. Each micro-batch becomes ONE snapshot:
@@ -54,7 +57,6 @@ class IcebergStreamSink(sqlContext: SQLContext, tableDir: String)
     extends Sink {
 
   private val spark = sqlContext.sparkSession
-  private val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
   private val OwnedUuid = "graft-sink-iceberg"
 
   private implicit val fmts: Formats = DefaultFormats
@@ -74,18 +76,6 @@ class IcebergStreamSink(sqlContext: SQLContext, tableDir: String)
     case other => throw new IllegalStateException(
       s"iceberg-sink-lite: column $name has unsupported type " +
         s"${other.simpleString} (primitive types only)")
-  }
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c            => c.toString
-  } + "\""
-
-  private def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
   }
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
@@ -153,28 +143,17 @@ class IcebergStreamSink(sqlContext: SQLContext, tableDir: String)
         !f.getName.startsWith("."))
     val rels = parts.zipWithIndex.map { case (f, i) =>
       val rel = s"data/b${batchId}_$i.parquet"
-      if (!f.renameTo(new java.io.File(s"$tableDir/$rel")))
-        throw new IllegalStateException(
-          s"iceberg-sink-lite: could not move ${f.getName} into $tableDir")
+      LakeFiles.move(f, new java.io.File(s"$tableDir/$rel"))
       rel
     }
     rm(new java.io.File(tmp))
 
     val newVersion = existing.map(_._1 + 1).getOrElse(1L)
     val newSnapId = newVersion
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val t2 = s"$tableDir/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-      val p = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      if (!p.renameTo(new java.io.File(s"$tableDir/$rel")))
-        throw new IllegalStateException(
-          s"iceberg-sink-lite: could not place $rel")
-      rm(new java.io.File(t2))
-    }
+    val files = LakeFiles.Local(tableDir)
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit, struct}
-    writeAvro(rels.toDF("_fp")
+    files.avro(rels.toDF("_fp")
       .select(lit(1).as("status"),
         struct(col("_fp").as("file_path"), lit(0).as("content"))
           .as("data_file")),
@@ -198,7 +177,7 @@ class IcebergStreamSink(sqlContext: SQLContext, tableDir: String)
     }
     val allManifests =
       prevManifests :+ (s"metadata/m-sink-$newSnapId.avro", 0)
-    writeAvro(allManifests.toDF("manifest_path", "content"),
+    files.avro(allManifests.toDF("manifest_path", "content"),
       s"metadata/snap-$newSnapId.avro")
 
     val fields = data.schema.fields.zipWithIndex.map { case (f, i) =>

@@ -8,7 +8,8 @@ import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
-import graft.sources.PaimonLite
+import graft.sources.{LakeFiles, PaimonLite}
+import graft.sources.LakeFiles.{jstr, rm}
 
 /** Structured-Streaming SINK writing an append-only Paimon table —
   * the write half of the Paimon streaming leg next to
@@ -53,7 +54,6 @@ class PaimonStreamSink(sqlContext: SQLContext, tableDir: String)
     extends Sink {
 
   private val spark = sqlContext.sparkSession
-  private val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
 
   /** Our user's max committed identifier — found once by scanning the
     * history BACKWARD from latest (identifiers are monotonic per user,
@@ -62,13 +62,6 @@ class PaimonStreamSink(sqlContext: SQLContext, tableDir: String)
     * older snapshot ends the scan instead of wedging the stream), then
     * tracked in-instance. */
   private var cachedIdent: Option[Long] = None
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c            => c.toString
-  } + "\""
 
   private def paimonTypeOf(dt: DataType, name: String): String = dt match {
     case BooleanType      => "BOOLEAN"
@@ -87,11 +80,6 @@ class PaimonStreamSink(sqlContext: SQLContext, tableDir: String)
     case other => throw new IllegalStateException(
       s"paimon-sink-lite: column $name has unsupported type " +
         s"${other.simpleString} (primitive types only)")
-  }
-
-  private def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
   }
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
@@ -160,9 +148,7 @@ class PaimonStreamSink(sqlContext: SQLContext, tableDir: String)
         !f.getName.startsWith("."))
     val names = parts.zipWithIndex.map { case (f, i) =>
       val name = s"data-b${batchId}_$i.parquet"
-      if (!f.renameTo(new java.io.File(s"$tableDir/bucket-0/$name")))
-        throw new IllegalStateException(
-          s"paimon-sink-lite: could not move ${f.getName} into $tableDir")
+      LakeFiles.move(f, new java.io.File(s"$tableDir/bucket-0/$name"))
       name
     }
     rm(new java.io.File(tmp))
@@ -170,18 +156,9 @@ class PaimonStreamSink(sqlContext: SQLContext, tableDir: String)
     val newId =
       if (hasSnapshots) PaimonLite.latestSnapshotId(spark, tableDir) + 1
       else 1L
-    def writeAvro(df: DataFrame, rel: String): Unit = {
-      val t2 = s"$tableDir/_tmpavro"
-      df.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-      val p = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      if (!p.renameTo(new java.io.File(s"$tableDir/$rel")))
-        throw new IllegalStateException(
-          s"paimon-sink-lite: could not place $rel")
-      rm(new java.io.File(t2))
-    }
+    val files = LakeFiles.Local(tableDir)
     import spark.implicits._
-    writeAvro(
+    files.avro(
       names.toDF("_fn")
         .select(org.apache.spark.sql.functions.lit(0).as("_KIND"),
           org.apache.spark.sql.functions.lit(0).as("_BUCKET"),
@@ -194,7 +171,7 @@ class PaimonStreamSink(sqlContext: SQLContext, tableDir: String)
       if (hasSnapshots) PaimonLite.manifestNames(spark, tableDir, newId - 1)
       else Nil
     def mlist(rel: String, ns: Seq[String]): Unit =
-      writeAvro(
+      files.avro(
         if (ns.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
         else ns.toDF("_FILE_NAME"), rel)
     mlist(s"manifest/ml-base-$newId.avro", baseNames)

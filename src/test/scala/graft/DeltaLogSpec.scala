@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.DeltaLogLite
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.{jstr, rm}
 
 /** DeltaLogLite contract: snapshot replay over public-protocol JSON
   * commits (metaData/add/remove, partition values in the log,
@@ -17,36 +19,17 @@ import graft.sources.DeltaLogLite
 class DeltaLogSpec extends AnyFunSuite {
   import TestSession._
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c            => c.toString
-  } + "\""
-
   /** Fresh table dir with data files f0.parquet (ids 0..4, part=a) and
     * `f one.parquet` (ids 5..9, part=b; name contains a SPACE so its
     * add.path must be percent-encoded). Returns (root, schemaString). */
   private def fixture(name: String): (String, String) = {
     val root = s"/tmp/graft_deltaspec/$name"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "_delta_log"))
     val df = spark.range(0, 10).select(col("id"),
       (col("id") * 2).as("v"), lit("x").as("part"))
-    def one(filter: org.apache.spark.sql.Column, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.filter(filter).drop("part").coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    def one(filter: org.apache.spark.sql.Column, out: String): Unit =
+      LakeFiles.Local(root).parquet(df.filter(filter).drop("part"), out)
     one(col("id") < 5, "f0.parquet")
     one(col("id") >= 5, "f one.parquet")
     val schema = df.schema.json
@@ -132,18 +115,8 @@ class DeltaLogSpec extends AnyFunSuite {
         map(lit("part"), col("v")).as("partitionValues")).as("add"),
       lit(null).cast(metaT).as("metaData"))
     val all = if (withMeta) metaRow.unionByName(addRows) else addRows
-    val tmp = s"$root/_tmpckpt"
-    all.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(
-      new java.io.File(s"$root/_delta_log/$file")))
-    def rmr(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rmr))
-      p.delete(): Unit
-    }
-    rmr(new java.io.File(tmp))
+    LakeFiles.stage(all, "parquet", new java.io.File(s"$root/_tmpckpt"),
+      new java.io.File(s"$root/_delta_log/$file"))
   }
 
   test("checkpoint replay: state loads from parquet, later JSON " +
@@ -293,22 +266,13 @@ class DeltaLogSpec extends AnyFunSuite {
   test("columnMapping mode=name reads: physical columns project back " +
     "to logical names, partitionValues resolve by physical key") {
     val root = "/tmp/graft_deltaspec/cmapread"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "_delta_log"))
     // data file carries PHYSICAL column names col-aa / col-bb
-    val tmp = s"$root/_tmp"
-    spark.range(0, 5).select(col("id").as("col-aa"),
-      (col("id") * 2).as("col-bb"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val pf = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(pf.renameTo(new java.io.File(s"$root/f0.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(0, 5).select(col("id").as("col-aa"),
+        (col("id") * 2).as("col-bb")),
+      "f0.parquet")
     // logical schema (id, v, part) whose field metadata names the
     // physical columns; `part` is log-borne and keyed physically
     def fld(name: String, tpe: String, phys: String): String =
@@ -337,21 +301,9 @@ class DeltaLogSpec extends AnyFunSuite {
     import spark.implicits._
     def author(name: String, mode: String): String = {
       val root = s"/tmp/graft_deltaspec/$name"
-      def rm(p: java.io.File): Unit = {
-        if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-        p.delete(): Unit
-      }
       rm(new java.io.File(root))
       Files.createDirectories(Paths.get(root, "_delta_log"))
-      def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-        val tmp = s"$root/_tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val pf = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(pf.renameTo(new java.io.File(s"$root/$out")))
-        rm(new java.io.File(tmp))
-      }
+      val lake = LakeFiles.Local(root)
       // two data files under PHYSICAL names (id-mode files also get
       // stamped field ids, as an id-mode writer would produce)
       def mk(lo: Long, hi: Long) = {
@@ -362,8 +314,8 @@ class DeltaLogSpec extends AnyFunSuite {
             Map("col-aa" -> 1, "col-bb" -> 2))
         else base
       }
-      one(mk(0, 5), "f0.parquet")
-      one(mk(5, 10), "f1.parquet")
+      lake.parquet(mk(0, 5), "f0.parquet")
+      lake.parquet(mk(5, 10), "f1.parquet")
       def fld(n: String, tpe: String, phys: String, id: Int): String =
         s"""{"name":${jstr(n)},"type":${jstr(tpe)},"nullable":true,
            |"metadata":{"delta.columnMapping.id":$id,
@@ -457,14 +409,9 @@ class DeltaLogSpec extends AnyFunSuite {
         map(lit("part"), col("v")).as("partitionValues")).as("add"),
       lit(null).cast(metaT).as("metaData"),
       lit(null).cast("struct<minReaderVersion:int>").as("protocol"))
-    val tmp = s"$root/_tmpp"
-    metaRow.unionByName(protoRow).unionByName(addRow)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(
-      s"$root/_delta_log/${f"${0L}%020d"}.checkpoint.parquet")))
+    LakeFiles.Local(root).parquet(
+      metaRow.unionByName(protoRow).unionByName(addRow),
+      s"_delta_log/${f"${0L}%020d"}.checkpoint.parquet")
     Files.writeString(Paths.get(root, "_delta_log", "_last_checkpoint"),
       """{"version":0}""")
     val e = intercept[IllegalStateException] {
@@ -484,22 +431,10 @@ class DeltaLogSpec extends AnyFunSuite {
                                 manifestNames: Option[Seq[String]] = None)
   : Unit = {
     Files.createDirectories(Paths.get(root, "_delta_log", "_sidecars"))
-    def writeOne(df: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpv2"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      def rm(p: java.io.File): Unit = {
-        if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-        p.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val addT = "struct<path:string,partitionValues:map<string,string>>"
     for ((name, addPath) <- sidecars)
-      writeOne(spark.range(1).select(
+      lake.parquet(spark.range(1).select(
         struct(lit(addPath).as("path"),
           map(lit("part"), lit("a")).as("partitionValues")).as("add")),
         s"_delta_log/_sidecars/$name")
@@ -525,7 +460,7 @@ class DeltaLogSpec extends AnyFunSuite {
     for (name <- manifestNames.getOrElse(sidecars.map(_._1)))
       df = df.unionAll(row(nul, nul, nul,
         struct(lit(name).as("path"))))
-    writeOne(df, s"_delta_log/${f"$version%020d"}.checkpoint." +
+    lake.parquet(df, s"_delta_log/${f"$version%020d"}.checkpoint." +
       "11112222-3333-4444-5555-666677778888.parquet")
     Files.writeString(Paths.get(root, "_delta_log", "_last_checkpoint"),
       s"""{"version":$version}""")
@@ -704,10 +639,6 @@ class DeltaLogSpec extends AnyFunSuite {
 
   test("deletion-vector decode: multi-bitmap keys, frame checks loud") {
     val root = "/tmp/graft_deltaspec/dvdecode"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root))
     // two 32-bit bitmaps: key 0 holds {1, 2}, key 1 holds {5} — the
@@ -848,25 +779,16 @@ class DeltaLogSpec extends AnyFunSuite {
   test("columnMapping mode=id reads: data columns resolve by parquet " +
     "field id under logical names") {
     val root = "/tmp/graft_deltaspec/cmapid"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "_delta_log"))
     // data file carries PHYSICAL names col-aa/col-bb AND field ids
     // 42/43 — id-mode writers stamp both
-    val tmp = s"$root/_tmp"
-    graft.sources.IcebergLite.stampFieldIds(
-      spark.range(0, 5).select(col("id").as("col-aa"),
-        (col("id") * 2).as("col-bb")),
-      Map("col-aa" -> 42, "col-bb" -> 43))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val pf = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(pf.renameTo(new java.io.File(s"$root/f0.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      graft.sources.IcebergLite.stampFieldIds(
+        spark.range(0, 5).select(col("id").as("col-aa"),
+          (col("id") * 2).as("col-bb")),
+        Map("col-aa" -> 42, "col-bb" -> 43)),
+      "f0.parquet")
     def fld(name: String, tpe: String, id: Int, phys: String): String =
       s"""{"name":${jstr(name)},"type":${jstr(tpe)},"nullable":true,
          |"metadata":{"delta.columnMapping.id":$id,
@@ -891,24 +813,12 @@ class DeltaLogSpec extends AnyFunSuite {
     "serve their files verbatim, refusals are loud") {
     import spark.implicits._
     val root = "/tmp/graft_deltaspec/cdf"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "_delta_log"))
-    def writeOne(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmp"
-      d.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val base = spark.range(0, 5).select(col("id"), (col("id") * 2).as("v"))
-    writeOne(base, "f0.parquet")
-    writeOne(base.filter(col("id") === 0)
+    lake.parquet(base, "f0.parquet")
+    lake.parquet(base.filter(col("id") === 0)
       .select(col("id"), col("v"), lit("delete").as("_change_type")),
       "cdc1.parquet")
     val schema = base.schema.json
@@ -957,20 +867,11 @@ class DeltaLogSpec extends AnyFunSuite {
     "and a cdc-less in-commit rewrite refuse") {
     import spark.implicits._
     val root = "/tmp/graft_deltaspec/cdfsynth"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "_delta_log"))
-    val tmp = s"$root/_tmp"
-    spark.range(0, 6).select(col("id"), (col("id") * 3).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/f0.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(0, 6).select(col("id"), (col("id") * 3).as("v")),
+      "f0.parquet")
     val schema =
       """{"type":"struct","fields":[
         |{"name":"id","type":"long","nullable":true,"metadata":{}},
@@ -1021,26 +922,14 @@ class DeltaLogSpec extends AnyFunSuite {
     "appends project back to logical names") {
     import spark.implicits._
     val root = "/tmp/graft_deltaspec/cdfmap"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "_delta_log"))
-    def writeOne(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmp"
-      d.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     // data + cdc files store PHYSICAL names; _change_type literal
     val base = spark.range(0, 5).select(col("id").as("col-a"),
       (col("id") * 2).as("col-b"))
-    writeOne(base, "f0.parquet")
-    writeOne(base.filter(col("col-a") === 1)
+    lake.parquet(base, "f0.parquet")
+    lake.parquet(base.filter(col("col-a") === 1)
       .select(col("col-a"), (col("col-b") * 10).as("col-b"),
         lit("update_postimage").as("_change_type")), "cdc1.parquet")
     def fld(name: String, phys: String): String =
@@ -1068,21 +957,13 @@ class DeltaLogSpec extends AnyFunSuite {
     val root2 = "/tmp/graft_deltaspec/cdfmapid"
     rm(new java.io.File(root2))
     Files.createDirectories(Paths.get(root2, "_delta_log"))
-    def writeTwo(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root2/_tmp"
-      d.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root2/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake2 = LakeFiles.Local(root2)
     val stamped = graft.sources.IcebergLite.stampFieldIds(
       spark.range(0, 3).select(col("id").as("col-a"),
         (col("id") * 2).as("col-b")),
       Map("col-a" -> 42, "col-b" -> 43))
-    writeTwo(stamped, "f0.parquet")
-    writeTwo(graft.sources.IcebergLite.stampFieldIds(
+    lake2.parquet(stamped, "f0.parquet")
+    lake2.parquet(graft.sources.IcebergLite.stampFieldIds(
       spark.range(0, 1).select(col("id").as("col-a"),
         lit(99L).as("col-b")),
       Map("col-a" -> 42, "col-b" -> 43))
@@ -1141,10 +1022,6 @@ class DeltaLogSpec extends AnyFunSuite {
     for (seed <- Seq(13, 60, 947)) {
       val rnd = new scala.util.Random(seed)
       val root = s"/tmp/graft_deltaspec/model$seed"
-      def rm(p: java.io.File): Unit = {
-        if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-        p.delete(): Unit
-      }
       rm(new java.io.File(root))
       Files.createDirectories(Paths.get(root, "_delta_log"))
       val schema = spark.range(0, 1)
@@ -1160,15 +1037,10 @@ class DeltaLogSpec extends AnyFunSuite {
         val rows = (nextBase until nextBase + n).toSeq
         nextBase += 100
         val name = s"f${rows.head}.parquet"
-        val tmp = s"$root/_tmp"
-        spark.range(rows.head, rows.head + n)
-          .select(col("id"), (col("id") * 2).as("v"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val p = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(p.renameTo(new java.io.File(s"$root/$name")))
-        rm(new java.io.File(tmp))
+        LakeFiles.Local(root).parquet(
+          spark.range(rows.head, rows.head + n)
+            .select(col("id"), (col("id") * 2).as("v")),
+          name)
         F(name, rows, Set.empty)
       }
       def addLine(f: F, v: Long): String = {
@@ -1242,10 +1114,6 @@ class DeltaLogSpec extends AnyFunSuite {
     for (seed <- Seq(7, 83, 402)) {
       val rnd = new scala.util.Random(seed)
       val root = s"/tmp/graft_deltaspec/cdfmodel$seed"
-      def rm(p: java.io.File): Unit = {
-        if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-        p.delete(): Unit
-      }
       rm(new java.io.File(root))
       Files.createDirectories(Paths.get(root, "_delta_log"))
       val schema = spark.range(0, 1)
@@ -1262,15 +1130,10 @@ class DeltaLogSpec extends AnyFunSuite {
         val rows = (nextBase until nextBase + n).toSeq
         nextBase += 100
         val name = s"f${rows.head}.parquet"
-        val tmp = s"$root/_tmp"
-        spark.range(rows.head, rows.head + n)
-          .select(col("id"), (col("id") * 2).as("v"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val p = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(p.renameTo(new java.io.File(s"$root/$name")))
-        rm(new java.io.File(tmp))
+        LakeFiles.Local(root).parquet(
+          spark.range(rows.head, rows.head + n)
+            .select(col("id"), (col("id") * 2).as("v")),
+          name)
         F(name, rows, Set.empty, None)
       }
       // (re)stamp f's descriptor: a fresh DV file per version, bitmap
@@ -1353,24 +1216,12 @@ class DeltaLogSpec extends AnyFunSuite {
     "partitionValues and real sizes") {
     import spark.implicits._
     val root = "/tmp/graft_deltaspec/compact"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "_delta_log"))
-    def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val df = spark.range(0, 10).select(col("id"), (col("id") * 2).as("v"))
-    one(df.filter(col("id") < 5), "f0.parquet")
-    one(df.filter(col("id") >= 5), "f1.parquet")
+    lake.parquet(df.filter(col("id") < 5), "f0.parquet")
+    lake.parquet(df.filter(col("id") >= 5), "f1.parquet")
     val schema = df.schema.json
     // DV on f0 kills ordinals 1, 3 (ids 1, 3)
     val size = writeDvFile(s"$root/dv.bin", Seq((0, Seq(1, 3))))
@@ -1427,22 +1278,14 @@ class DeltaLogSpec extends AnyFunSuite {
     val root2 = "/tmp/graft_deltaspec/compactpart"
     rm(new java.io.File(root2))
     Files.createDirectories(Paths.get(root2, "_delta_log"))
-    def oneAt(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root2/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      Files.createDirectories(
-        Paths.get(s"$root2/$out").getParent)
-      assert(part.renameTo(new java.io.File(s"$root2/$out")))
-      rm(new java.io.File(tmp))
-    }
+    val lake2 = LakeFiles.Local(root2)
     val dfP = spark.range(0, 20).select(col("id"))
-    oneAt(dfP.filter(col("id") < 5), "p=x/f0.parquet")
-    oneAt(dfP.filter(col("id") >= 5 && col("id") < 10), "p=x/f1.parquet")
-    oneAt(dfP.filter(col("id") >= 10 && col("id") < 15), "p=y/f2.parquet")
-    oneAt(dfP.filter(col("id") >= 15), "p=y/f3.parquet")
+    lake2.parquet(dfP.filter(col("id") < 5), "p=x/f0.parquet")
+    lake2.parquet(dfP.filter(col("id") >= 5 && col("id") < 10),
+      "p=x/f1.parquet")
+    lake2.parquet(dfP.filter(col("id") >= 10 && col("id") < 15),
+      "p=y/f2.parquet")
+    lake2.parquet(dfP.filter(col("id") >= 15), "p=y/f3.parquet")
     val schemaP = spark.range(0, 1)
       .select(col("id"), lit("x").as("p")).schema.json
     // a deletion vector on p=x/f0 (ordinals 1, 3 = ids 1, 3): the
@@ -1491,22 +1334,11 @@ class DeltaLogSpec extends AnyFunSuite {
     "missing classic names refuse") {
     import spark.implicits._
     val root = "/tmp/graft_deltaspec/vacuumckpt"
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete(): Unit
-    }
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "_delta_log"))
     val df = spark.range(0, 15).select(col("id"), (col("id") * 2).as("v"))
-    def one(filter: org.apache.spark.sql.Column, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.filter(filter).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    def one(filter: org.apache.spark.sql.Column, out: String): Unit =
+      LakeFiles.Local(root).parquet(df.filter(filter), out)
     one(col("id") < 5, "f0.parquet")
     one(col("id") >= 5 && col("id") < 10, "f1.parquet")
     one(col("id") >= 10, "f2.parquet")
@@ -1534,14 +1366,9 @@ class DeltaLogSpec extends AnyFunSuite {
         lit(null).cast(addT).as("add"),
         struct(lit("f0.parquet").as("path")).as("remove"),
         lit(null).cast(metaT).as("metaData")))
-    val tmpC = s"$root/_tmpckpt"
-    frame.coalesce(1).write.mode("overwrite").parquet(tmpC)
-    val ckpt = new java.io.File(tmpC).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(ckpt.renameTo(new java.io.File(
-      s"$root/_delta_log/${f"${1L}%020d"}.checkpoint.parquet")))
-    rm(new java.io.File(tmpC))
+    LakeFiles.Local(root).parquet(
+      frame,
+      s"_delta_log/${f"${1L}%020d"}.checkpoint.parquet")
     Files.writeString(Paths.get(root, "_delta_log", "_last_checkpoint"),
       """{"version":1}""")
     // commit 2: f1 superseded by f2
@@ -1571,15 +1398,8 @@ class DeltaLogSpec extends AnyFunSuite {
     val root2 = "/tmp/graft_deltaspec/vacuumckptv2"
     rm(new java.io.File(root2))
     Files.createDirectories(Paths.get(root2, "_delta_log", "_sidecars"))
-    def one2(filter: org.apache.spark.sql.Column, out: String): Unit = {
-      val tmp = s"$root2/_tmp"
-      df.filter(filter).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root2/$out")))
-      rm(new java.io.File(tmp))
-    }
+    def one2(filter: org.apache.spark.sql.Column, out: String): Unit =
+      LakeFiles.Local(root2).parquet(df.filter(filter), out)
     one2(col("id") < 5, "f0.parquet")
     one2(col("id") >= 5 && col("id") < 10, "f1.parquet")
     one2(col("id") >= 10, "f2.parquet")
@@ -1591,14 +1411,9 @@ class DeltaLogSpec extends AnyFunSuite {
       .unionByName(spark.range(1).select(
         lit(null).cast(addT).as("add"),
         struct(lit("f0.parquet").as("path")).as("remove")))
-    val tmpS = s"$root2/_tmpside"
-    sideFrame.coalesce(1).write.mode("overwrite").parquet(tmpS)
-    val side = new java.io.File(tmpS).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(side.renameTo(new java.io.File(
-      s"$root2/_delta_log/_sidecars/s1.parquet")))
-    rm(new java.io.File(tmpS))
+    LakeFiles.Local(root2).parquet(
+      sideFrame,
+      "_delta_log/_sidecars/s1.parquet")
     Files.writeString(Paths.get(root2, "_delta_log",
       f"${1L}%020d.checkpoint.aa11bb.json"),
       Seq(
@@ -1634,10 +1449,6 @@ class DeltaLogSpec extends AnyFunSuite {
     for (seed <- Seq(11, 402, 737)) {
       val rnd = new scala.util.Random(seed)
       val root = s"/tmp/graft_deltaspec/partmaint$seed"
-      def rm(p: java.io.File): Unit = {
-        if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-        p.delete(): Unit
-      }
       rm(new java.io.File(root))
       Files.createDirectories(Paths.get(root, "_delta_log"))
       val partitions = (0 until (2 + rnd.nextInt(2))).map(i => s"p$i")
@@ -1647,17 +1458,8 @@ class DeltaLogSpec extends AnyFunSuite {
       var nextKey = 0L
       var nFiles = 0
       var v = -1L
-      def writeFile(rows: Seq[Long], rel: String): Unit = {
-        val tmp = s"$root/_tmp"
-        rows.toDF("id").coalesce(1)
-          .write.mode("overwrite").parquet(tmp)
-        val f = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        Files.createDirectories(Paths.get(s"$root/$rel").getParent)
-        assert(f.renameTo(new java.io.File(s"$root/$rel")))
-        rm(new java.io.File(tmp))
-      }
+      def writeFile(rows: Seq[Long], rel: String): Unit =
+        LakeFiles.Local(root).parquet(rows.toDF("id"), rel)
       // commits: each adds 1-2 files to random partitions
       val nCommits = 2 + rnd.nextInt(3)
       for (_ <- 0 until nCommits) {
@@ -1714,10 +1516,6 @@ class DeltaLogSpec extends AnyFunSuite {
     for (seed <- Seq(5, 311, 926)) {
       val rnd = new scala.util.Random(seed)
       val root = s"/tmp/graft_deltaspec/maint$seed"
-      def rm(p: java.io.File): Unit = {
-        if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-        p.delete(): Unit
-      }
       rm(new java.io.File(root))
       Files.createDirectories(Paths.get(root, "_delta_log"))
       val schema = spark.range(0, 1)
@@ -1734,15 +1532,10 @@ class DeltaLogSpec extends AnyFunSuite {
         val rows = (nextBase until nextBase + n).toSeq
         nextBase += 100
         val name = s"f${rows.head}.parquet"
-        val tmp = s"$root/_tmp"
-        spark.range(rows.head, rows.head + n)
-          .select(col("id"), (col("id") * 2).as("v"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val p = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(p.renameTo(new java.io.File(s"$root/$name")))
-        rm(new java.io.File(tmp))
+        LakeFiles.Local(root).parquet(
+          spark.range(rows.head, rows.head + n)
+            .select(col("id"), (col("id") * 2).as("v")),
+          name)
         F(name, rows, Set.empty, None)
       }
       def withDv(f: F, v: Long): F =

@@ -8,6 +8,8 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.DeltaLogLite
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.{jstr, rm}
 
 /** DeltaStreamSinkLite contract: one Delta commit per micro-batch
   * with a txn action, exactly-once duplicate-batch skipping, loud
@@ -19,11 +21,6 @@ class DeltaSinkSpec extends AnyFunSuite {
 
   private val sinkFmt = "org.apache.spark.sql.graftstream.DeltaStreamSinkLite"
   private val srcFmt = "org.apache.spark.sql.graftstream.DeltaStreamLite"
-
-  private def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
-  }
 
   private def fresh(name: String): String = {
     val root = s"/tmp/graft_deltasinkspec/$name"
@@ -79,17 +76,10 @@ class DeltaSinkSpec extends AnyFunSuite {
     val dest = fresh("loop_dest")
     // author a 2-commit append-only source table
     Files.createDirectories(Paths.get(src, "_delta_log"))
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\")
-      .replace("\"", "\\\"") + "\""
     def append(v: Long): Unit = {
-      val tmp = s"$src/_tmp"
-      spark.range(5 * v, 5 * v + 5).select(col("id"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$src/b$v.parquet")))
-      rm(new java.io.File(tmp))
+      LakeFiles.Local(src).parquet(
+        spark.range(5 * v, 5 * v + 5).select(col("id")),
+        s"b$v.parquet")
       val schema = spark.range(0, 1).select(col("id")).schema.json
       val head = if (v == 0)
         s"""{"metaData":{"id":"t","format":{"provider":"parquet","options":{}},"schemaString":${jstr(schema)},"partitionColumns":[],"configuration":{},"createdTime":0}}

@@ -9,6 +9,8 @@ import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.DeltaLogLite
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.{jstr, rm}
 
 /** DeltaStreamLite contract: version-grain offsets, per-commit
   * micro-batches under maxVersionsPerTrigger=1, checkpoint restart
@@ -20,18 +22,6 @@ class DeltaStreamSpec extends AnyFunSuite {
   import TestSession._
 
   private val fmt = "org.apache.spark.sql.graftstream.DeltaStreamLite"
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c            => c.toString
-  } + "\""
-
-  private def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
-  }
 
   /** Fresh unpartitioned table root; commits appended via append(). */
   private def fixture(name: String): (String, String) = {
@@ -45,14 +35,9 @@ class DeltaStreamSpec extends AnyFunSuite {
 
   /** Commit `v` adds ids [5v, 5v+5) as b<v>.parquet. */
   private def append(root: String, schema: String, v: Long): Unit = {
-    val tmp = s"$root/_tmp"
-    spark.range(5 * v, 5 * v + 5).select(col("id"), (col("id") * 2).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/b$v.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(5 * v, 5 * v + 5).select(col("id"), (col("id") * 2).as("v")),
+      s"b$v.parquet")
     val head = if (v == 0)
       s"""{"metaData":{"id":"t","format":{"provider":"parquet","options":{}},"schemaString":${jstr(schema)},"partitionColumns":[],"configuration":{},"createdTime":0}}
          |""".stripMargin
@@ -189,14 +174,9 @@ class DeltaStreamSpec extends AnyFunSuite {
     import spark.implicits._
     val (root, schema) = fixture("cdf")
     // commit 0 with CDF enabled (the plain append() writes no config)
-    val tmp = s"$root/_tmp"
-    spark.range(0, 5).select(col("id"), (col("id") * 2).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/b0.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(0, 5).select(col("id"), (col("id") * 2).as("v")),
+      "b0.parquet")
     graft.sources.AtomicFiles.write(
       Paths.get(root, "_delta_log", f"${0L}%020d.json"),
       s"""{"metaData":{"id":"t","format":{"provider":"parquet","options":{}},"schemaString":${jstr(schema)},"partitionColumns":[],"configuration":{"delta.enableChangeDataFeed":"true"},"createdTime":0}}

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.GraftLake
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.rm
 
 /** GraftLake contract: layout detection per format marker, the
   * no-match and ambiguous refusals, and the time-travel argument
@@ -12,11 +14,6 @@ import graft.sources.GraftLake
   * oracle (all four authored tables through one entry point). */
 class GraftLakeSpec extends AnyFunSuite {
   import TestSession._
-
-  private def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
-  }
 
   private def fresh(name: String, dirs: String*): String = {
     val root = s"/tmp/graft_lakespec/$name"
@@ -44,20 +41,11 @@ class GraftLakeSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     // a minimal two-commit Delta table
     val root = fresh("sqltvf", "_delta_log", "data")
-    def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val p = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(p.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val a = spark.range(0, 5).select(col("id"), (col("id") * 2).as("v"))
-    one(a, "data/a.parquet")
-    one(spark.range(5, 8).select(col("id"), (col("id") * 2).as("v")),
+    lake.parquet(a, "data/a.parquet")
+    lake.parquet(spark.range(5, 8).select(col("id"), (col("id") * 2).as("v")),
       "data/b.parquet")
-    def jstr(s: String) = "\"" + s + "\""
     Files.writeString(Paths.get(root, "_delta_log",
       f"${0L}%020d.json"),
       s"""{"metaData":{"id":"tvf","format":{"provider":"parquet","options":{}},"schemaString":${
@@ -100,18 +88,10 @@ class GraftLakeSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     // the same minimal two-commit Delta table as the read TVF test
     val root = fresh("sqlmaint", "_delta_log", "data")
-    def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val p = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(p.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val a = spark.range(0, 5).select(col("id"), (col("id") * 2).as("v"))
-    one(a, "data/a.parquet")
-    one(spark.range(5, 8).select(col("id"), (col("id") * 2).as("v")),
+    lake.parquet(a, "data/a.parquet")
+    lake.parquet(spark.range(5, 8).select(col("id"), (col("id") * 2).as("v")),
       "data/b.parquet")
     Files.writeString(Paths.get(root, "_delta_log",
       f"${0L}%020d.json"),
@@ -164,17 +144,9 @@ class GraftLakeSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val root = fresh("sqldml", "_delta_log", "data")
-    def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val p = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(p.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val a = spark.range(0, 8).select(col("id"), (col("id") * 2).as("v"))
-    one(a, "data/a.parquet")
+    lake.parquet(a, "data/a.parquet")
     Files.writeString(Paths.get(root, "_delta_log",
       f"${0L}%020d.json"),
       s"""{"metaData":{"id":"dml","format":{"provider":"parquet","options":{}},"schemaString":${
@@ -224,14 +196,9 @@ class GraftLakeSpec extends AnyFunSuite {
         |{"id":1,"name":"v","type":"BIGINT"}],
         |"highestFieldId":1,"partitionKeys":[],"primaryKeys":["id"],
         |"options":{}}""".stripMargin)
-    val tmpAv = s"$p/_tmpavro"
-    Seq.empty[String].toDF("_FILE_NAME").coalesce(1)
-      .write.mode("overwrite")
-      .format("org.apache.spark.sql.avro.AvroFileFormat").save(tmpAv)
-    val av = new java.io.File(tmpAv).listFiles()
-      .find(_.getName.startsWith("part-")).get
-    assert(av.renameTo(new java.io.File(s"$p/manifest/ml-0.avro")))
-    rm(new java.io.File(tmpAv))
+    LakeFiles.Local(p).avro(
+      Seq.empty[String].toDF("_FILE_NAME"),
+      "manifest/ml-0.avro")
     Files.writeString(Paths.get(p, "snapshot", "snapshot-1"),
       """{"version":3,"id":1,"schemaId":0,
         |"baseManifestList":"ml-0.avro",
@@ -253,33 +220,19 @@ class GraftLakeSpec extends AnyFunSuite {
     import spark.implicits._
     val root = fresh("paimonpdel", "snapshot", "schema", "manifest",
       "bucket-0")
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite")
-        .format("org.apache.spark.sql.avro.AvroFileFormat").save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val kv = spark.range(0, 6).select(col("id").as("_KEY_id"),
       lit(1L).as("_SEQUENCE_NUMBER"),
       lit(0).cast("tinyint").as("_VALUE_KIND"),
       col("id"), (col("id") * 2).as("v"))
-    val tmpKv = s"$root/_tmpkv"
-    kv.coalesce(1).write.mode("overwrite").parquet(tmpKv)
-    val pf = new java.io.File(tmpKv).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(pf.renameTo(new java.io.File(s"$root/bucket-0/kv0.parquet")))
-    rm(new java.io.File(tmpKv))
-    writeAvro(Seq((0, "kv0.parquet")).toDF("_KIND", "_fn")
+    lake.parquet(kv, "bucket-0/kv0.parquet")
+    lake.avro(Seq((0, "kv0.parquet")).toDF("_KIND", "_fn")
       .select(col("_KIND"), lit(0).as("_BUCKET"),
         struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
       "manifest/m-0.avro")
-    writeAvro(Seq.empty[String].toDF("_FILE_NAME"),
+    lake.avro(Seq.empty[String].toDF("_FILE_NAME"),
       "manifest/ml-empty.avro")
-    writeAvro(Seq("m-0.avro").toDF("_FILE_NAME"), "manifest/ml-0.avro")
+    lake.avro(Seq("m-0.avro").toDF("_FILE_NAME"), "manifest/ml-0.avro")
     Files.writeString(Paths.get(root, "schema", "schema-0"),
       """{"id":0,"fields":[{"id":0,"name":"id","type":"BIGINT"},
         |{"id":1,"name":"v","type":"BIGINT"}],
@@ -351,17 +304,9 @@ class GraftLakeSpec extends AnyFunSuite {
     // Delta passthrough: a blind append's synthesized inserts arrive
     // with _change_type/_commit_version
     val root = fresh("chgd", "_delta_log", "data")
-    def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val p = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(p.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val a = spark.range(0, 5).select(col("id"), (col("id") * 2).as("v"))
-    one(a, "data/a.parquet")
+    lake.parquet(a, "data/a.parquet")
     Files.writeString(Paths.get(root, "_delta_log", f"${0L}%020d.json"),
       s"""{"metaData":{"id":"chg","format":{"provider":"parquet","options":{}},"schemaString":${
         org.json4s.jackson.JsonMethods.compact(
@@ -428,15 +373,10 @@ class GraftLakeSpec extends AnyFunSuite {
     val root = fresh("morsnap", ".hoodie")
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       "hoodie.table.type=MERGE_ON_READ\n")
-    val tmp = s"$root/_tmp"
-    spark.range(0, 3).select(col("id").cast("string")
-      .as("_hoodie_record_key"), col("id"), (col("id") * 3).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val pf = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(pf.renameTo(new java.io.File(s"$root/g1_0-0_001.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(0, 3).select(col("id").cast("string")
+        .as("_hoodie_record_key"), col("id"), (col("id") * 3).as("v")),
+      "g1_0-0_001.parquet")
     def commit(instant: String, path: String): Unit =
       Files.writeString(Paths.get(root, ".hoodie",
         s"$instant.deltacommit"),

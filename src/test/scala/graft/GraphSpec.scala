@@ -10,7 +10,19 @@ import org.apache.spark.sql.functions.col
 class GraphSpec extends AnyFunSuite {
   import TestSession._
 
+  /** (edges, wedges, triangles), counted twice: under the default
+    * Bloom gate (prefilter on) and with `bloomMaxEdges=0`, which takes
+    * the plain semi-join. Both paths must give the same counts. */
   private def stats(edges: Seq[(Long, Long)]): (Long, Long, Long) = {
+    val withBloom = count(edges)
+    val gate = "spark.graft.triangle.bloomMaxEdges"
+    spark.conf.set(gate, "0")
+    val plain = try count(edges) finally spark.conf.unset(gate)
+    assert(plain === withBloom, "Bloom and plain semi-join paths disagree")
+    withBloom
+  }
+
+  private def count(edges: Seq[(Long, Long)]): (Long, Long, Long) = {
     import spark.implicits._
     val e = edges.toDF("u", "v").filter(col("u") < col("v")).distinct()
     val r = graft.queries.Analytics4.triangleStats(e).collect().head

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{HudiCowLite, HudiMorLite}
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.rm
 
 /** HudiMorLite contract: timeline → file slices (base + ordered
   * logs, compaction starts a new slice), HoodieLogFormat block
@@ -15,11 +17,6 @@ import graft.sources.{HudiCowLite, HudiMorLite}
   * is q431's DuckDB oracle. */
 class HudiMorSpec extends AnyFunSuite {
   import TestSession._
-
-  private def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
-  }
 
   private val avroSchema =
     """{"type":"record","name":"r","fields":[
@@ -41,15 +38,10 @@ class HudiMorSpec extends AnyFunSuite {
     Files.createDirectories(Paths.get(root, ".hoodie"))
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       "hoodie.table.type=MERGE_ON_READ\n")
-    val tmp = s"$root/_tmp"
-    spark.range(0, 5).select(col("id").cast("string")
-      .as("_hoodie_record_key"), col("id"), (col("id") * 3).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val pf = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(pf.renameTo(new java.io.File(s"$root/g1_0-0_001.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(0, 5).select(col("id").cast("string")
+        .as("_hoodie_record_key"), col("id"), (col("id") * 3).as("v")),
+      "g1_0-0_001.parquet")
     commit(root, "001", "deltacommit", "g1_0-0_001.parquet")
     root
   }
@@ -112,15 +104,10 @@ class HudiMorSpec extends AnyFunSuite {
     import spark.implicits._
     val root = fixture("logcompact")
     // group g2: a second, LOG-LESS group that must stay untouched
-    val tmp = s"$root/_tmp2"
-    spark.range(10, 13).select(col("id").cast("string")
-      .as("_hoodie_record_key"), col("id"), (col("id") * 3).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val pf = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(pf.renameTo(new java.io.File(s"$root/g2_0-0_002.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(10, 13).select(col("id").cast("string")
+        .as("_hoodie_record_key"), col("id"), (col("id") * 3).as("v")),
+      "g2_0-0_002.parquet")
     commit(root, "002", "deltacommit", "g2_0-0_002.parquet",
       fileId = "g2")
     HudiMorLite.writeLogFile(s"$root/.g1_001.log.1",
@@ -176,7 +163,7 @@ class HudiMorSpec extends AnyFunSuite {
       val pf = dir.listFiles().find(f =>
         f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).get
       val name = s"g${g}_0-0_001.parquet"
-      assert(pf.renameTo(new java.io.File(s"$root/$name")))
+      LakeFiles.move(pf, new java.io.File(s"$root/$name"))
       s"""{"fileId":"g$g","path":"$name","numWrites":5}"""
     }
     rm(new java.io.File(tmp))
@@ -248,18 +235,12 @@ class HudiMorSpec extends AnyFunSuite {
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       "hoodie.table.type=MERGE_ON_READ\n")
     def one(ids: Range, part: String, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      spark.range(ids.start, ids.end).select(
-        col("id").cast("string").as("_hoodie_record_key"),
-        lit(s"p=$part").as("_hoodie_partition_path"),
-        col("id"), (col("id") * 3).as("v"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val pf = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      Files.createDirectories(Paths.get(s"$root/$out").getParent)
-      assert(pf.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
+      LakeFiles.Local(root).parquet(
+        spark.range(ids.start, ids.end).select(
+          col("id").cast("string").as("_hoodie_record_key"),
+          lit(s"p=$part").as("_hoodie_partition_path"),
+          col("id"), (col("id") * 3).as("v")),
+        out)
     }
     one(0 until 5, "x", "p=x/gx_0-0_001.parquet")
     one(10 until 15, "y", "p=y/gy_0-0_001.parquet")
@@ -324,16 +305,11 @@ class HudiMorSpec extends AnyFunSuite {
       Seq(avroSchema -> Seq(rec(1, 100))))
     commit(root, "002", "deltacommit", ".g1_001.log.1")
     // compaction at 003 rewrites the base (merged state: id1 -> 100)
-    val tmp = s"$root/_tmp2"
-    spark.range(0, 5).select(col("id").cast("string")
-      .as("_hoodie_record_key"), col("id"),
-      when(col("id") === 1, 100L).otherwise(col("id") * 3).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val pf = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(pf.renameTo(new java.io.File(s"$root/g1_0-0_003.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(0, 5).select(col("id").cast("string")
+        .as("_hoodie_record_key"), col("id"),
+        when(col("id") === 1, 100L).otherwise(col("id") * 3).as("v")),
+      "g1_0-0_003.parquet")
     commit(root, "003", "commit", "g1_0-0_003.parquet")
     val snap = HudiMorLite.snapshot(spark, root)
     assert(snap.slices.head.logs.isEmpty)
@@ -483,14 +459,12 @@ class HudiMorSpec extends AnyFunSuite {
     * PARQUET_DATA_BLOCK content shape. */
   private def parquetBytes(df: org.apache.spark.sql.DataFrame)
   : Array[Byte] = {
-    val tmp = s"/tmp/graft_hudimorspec/_pqtmp"
-    rm(new java.io.File(tmp))
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val p = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    val bytes = Files.readAllBytes(p.toPath)
-    rm(new java.io.File(tmp))
+    val tmp = new java.io.File("/tmp/graft_hudimorspec/_pqtmp")
+    rm(tmp)
+    val file = new java.io.File(tmp, "block.parquet")
+    LakeFiles.stage(df, "parquet", new java.io.File(tmp, "_tmp"), file)
+    val bytes = Files.readAllBytes(file.toPath)
+    rm(tmp)
     bytes
   }
 
@@ -588,14 +562,7 @@ class HudiMorSpec extends AnyFunSuite {
         lit(p).as("_hoodie_partition_path"),
         col("id"), (col("id") + off).as("v"))
       if (!withPartCol) df = df.drop("_hoodie_partition_path")
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val pf = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      Files.createDirectories(Paths.get(root, p))
-      assert(pf.renameTo(new java.io.File(s"$root/$p/g$p-0-0_001.parquet")))
-      rm(new java.io.File(tmp))
+      LakeFiles.Local(root).parquet(df, s"$p/g$p-0-0_001.parquet")
       s""""$p":[{"fileId":"g$p","path":"$p/g$p-0-0_001.parquet","numWrites":1}]"""
     }
     Files.writeString(Paths.get(root, ".hoodie", "001.deltacommit"),
@@ -657,16 +624,11 @@ class HudiMorSpec extends AnyFunSuite {
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       "hoodie.table.type=MERGE_ON_READ\n" +
         "hoodie.table.precombine.field=ts\n")
-    val tmp = s"$root/_tmp"
-    spark.range(0, 5).select(col("id").cast("string")
-      .as("_hoodie_record_key"), col("id"), (col("id") * 3).as("v"),
-      lit(10L).as("ts"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val pf = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(pf.renameTo(new java.io.File(s"$root/g1_0-0_001.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(0, 5).select(col("id").cast("string")
+        .as("_hoodie_record_key"), col("id"), (col("id") * 3).as("v"),
+        lit(10L).as("ts")),
+      "g1_0-0_001.parquet")
     commit(root, "001", "deltacommit", "g1_0-0_001.parquet")
     root
   }
@@ -696,16 +658,11 @@ class HudiMorSpec extends AnyFunSuite {
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       "hoodie.table.type=MERGE_ON_READ\n" +
         "hoodie.table.precombine.field=ts\n")
-    val tmp = s"$root/_tmp"
-    spark.range(0, 5).select(col("id").cast("string")
-      .as("_hoodie_record_key"), lit("001").as("_hoodie_commit_time"),
-      col("id"), (col("id") * 3).as("v"), lit(10L).as("ts"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val pf = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(pf.renameTo(new java.io.File(s"$root/g1_0-0_001.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(0, 5).select(col("id").cast("string")
+        .as("_hoodie_record_key"), lit("001").as("_hoodie_commit_time"),
+        col("id"), (col("id") * 3).as("v"), lit(10L).as("ts")),
+      "g1_0-0_001.parquet")
     commit(root, "001", "deltacommit", "g1_0-0_001.parquet")
     root
   }
@@ -801,16 +758,8 @@ class HudiMorSpec extends AnyFunSuite {
     Files.createDirectories(Paths.get(root, ".hoodie"))
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       "hoodie.table.type=MERGE_ON_READ\n")
-    def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val pf = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(pf.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
-    one(spark.range(0, 5).select(col("id").cast("string")
+    val lake = LakeFiles.Local(root)
+    lake.parquet(spark.range(0, 5).select(col("id").cast("string")
       .as("_hoodie_record_key"), lit("001").as("_hoodie_commit_time"),
       col("id"), (col("id") * 3).as("v")), "g1_0-0_001.parquet")
     commit(root, "001", "deltacommit", "g1_0-0_001.parquet")
@@ -827,7 +776,7 @@ class HudiMorSpec extends AnyFunSuite {
       HudiMorLite.AvroBlockSpec(ctAvroSchema,
         Seq(ctRec(1, 111, "003"), ctRec(2, 0, "003", deleted = true)))))
     // commit 003 also inserts a NEW file group g2 (ids 10, 11)
-    one(spark.range(10, 12).select(col("id").cast("string")
+    lake.parquet(spark.range(10, 12).select(col("id").cast("string")
       .as("_hoodie_record_key"), lit("003").as("_hoodie_commit_time"),
       col("id"), (col("id") * 3).as("v")), "g2_0-0_003.parquet")
     Files.writeString(Paths.get(root, ".hoodie", "003.deltacommit"),
@@ -889,16 +838,11 @@ class HudiMorSpec extends AnyFunSuite {
     Files.createDirectories(Paths.get(root, ".hoodie"))
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       "hoodie.table.type=MERGE_ON_READ\n")
-    val tmp = s"$root/_tmp"
-    spark.range(0, 5).select(col("id").cast("string")
-      .as("_hoodie_record_key"), lit("001").as("_hoodie_commit_time"),
-      col("id"), (col("id") * 3).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val pf = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(pf.renameTo(new java.io.File(s"$root/g1_0-0_001.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(0, 5).select(col("id").cast("string")
+        .as("_hoodie_record_key"), lit("001").as("_hoodie_commit_time"),
+        col("id"), (col("id") * 3).as("v")),
+      "g1_0-0_001.parquet")
     commit(root, "001", "deltacommit", "g1_0-0_001.parquet")
     root
   }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.HudiCowLite
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.rm
 
 /** HudiCowLite contract: copy-on-write timeline replay (latest base
   * file per file group wins), asOfInstant, inflight-commit exclusion,
@@ -15,11 +17,6 @@ import graft.sources.HudiCowLite
   * oracle. */
 class HudiSpec extends AnyFunSuite {
   import TestSession._
-
-  private def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
-  }
 
   /** Table with one file group "g" in partition "p=x": instant 001
     * writes ids 0..4, instant 002 rewrites the group with ids 5..9. */
@@ -32,15 +29,8 @@ class HudiSpec extends AnyFunSuite {
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       s"hoodie.table.name=t\nhoodie.table.type=$tableType\n")
     val df = spark.range(0, 10).select(col("id"), (col("id") * 2).as("v"))
-    def one(filter: org.apache.spark.sql.Column, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.filter(filter).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    def one(filter: org.apache.spark.sql.Column, out: String): Unit =
+      LakeFiles.Local(root).parquet(df.filter(filter), out)
     one(col("id") < 5, "p=x/g_0-0_001.parquet")
     one(col("id") >= 5, "p=x/g_0-0_002.parquet")
     def commit(instant: String, path: String): Unit =
@@ -61,26 +51,18 @@ class HudiSpec extends AnyFunSuite {
     Files.createDirectories(Paths.get(root, ".hoodie"))
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       "hoodie.table.name=t\nhoodie.table.type=COPY_ON_WRITE\n")
-    def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     def batch(ids: Range, ct: String) = spark.range(ids.start, ids.end)
       .select(lit(ct).as("_hoodie_commit_time"), col("id"),
         (col("id") * 2).as("v"))
-    one(batch(0 until 5, "001"), "gA_0-0_001.parquet")
-    one(batch(0 until 5, "001")
+    lake.parquet(batch(0 until 5, "001"), "gA_0-0_001.parquet")
+    lake.parquet(batch(0 until 5, "001")
       .withColumn("_hoodie_commit_time",
         when(col("id") === 1, "002").otherwise(col("_hoodie_commit_time")))
       .withColumn("v", when(col("id") === 1, 99L).otherwise(col("v"))),
       "gA_0-0_002.parquet")
-    one(batch(10 until 13, "002"), "gB_0-0_002.parquet")
-    one(batch(20 until 22, "003"), "gC_0-0_003.parquet")
+    lake.parquet(batch(10 until 13, "002"), "gB_0-0_002.parquet")
+    lake.parquet(batch(20 until 22, "003"), "gC_0-0_003.parquet")
     def commit(instant: String, stats: String): Unit =
       Files.writeString(Paths.get(root, ".hoodie", s"$instant.commit"),
         s"""{"partitionToWriteStats":{"":[$stats]}}""")
@@ -139,15 +121,7 @@ class HudiSpec extends AnyFunSuite {
       Files.createDirectories(Paths.get(root, ".hoodie"))
       Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
         "hoodie.table.name=t\nhoodie.table.type=COPY_ON_WRITE\n")
-      def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-        val tmp = s"$root/_tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(part.renameTo(new java.io.File(s"$root/$out")))
-        rm(new java.io.File(tmp))
-      }
+      val lake = LakeFiles.Local(root)
       def batch(ids: Seq[Long], ct: String) = {
         val base = ids.toDF("id")
           .select(lit(ct).as("_hoodie_commit_time"), col("id"))
@@ -157,15 +131,15 @@ class HudiSpec extends AnyFunSuite {
       }
       // gA v1: ids 0..4, v=2id; v2: id 0 deleted, id 1 → v=99,
       // ids 2..4 carried; gB: ids 10..11 new
-      one(batch(0L to 4L, "001"), "gA_0-0_001.parquet")
-      one(batch(1L to 4L, "001")
+      lake.parquet(batch(0L to 4L, "001"), "gA_0-0_001.parquet")
+      lake.parquet(batch(1L to 4L, "001")
         .withColumn("v",
           when(col("id") === 1, 99L).otherwise(col("v")))
         .withColumn("_hoodie_commit_time",
           when(col("id") === 1, "002")
             .otherwise(col("_hoodie_commit_time"))),
         "gA_0-0_002.parquet")
-      one(batch(10L to 11L, "002"), "gB_0-0_002.parquet")
+      lake.parquet(batch(10L to 11L, "002"), "gB_0-0_002.parquet")
       def stat(fid: String, p: String) =
         s"""{"fileId":"$fid","path":"$p","numWrites":1}"""
       Files.writeString(Paths.get(root, ".hoodie", "001.commit"),
@@ -219,22 +193,14 @@ class HudiSpec extends AnyFunSuite {
     Files.createDirectories(Paths.get(root, ".hoodie"))
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       "hoodie.table.name=t\nhoodie.table.type=COPY_ON_WRITE\n")
-    def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     def batch(ids: Seq[Long], ct: String) = ids.toDF("id")
       .select(lit(ct).as("_hoodie_commit_time"),
         col("id").cast("string").as("_hoodie_record_key"),
         col("id"), (col("id") * 2).as("v"))
-    one(batch(0L to 2L, "001"), "g_0-0_001.parquet")
+    lake.parquet(batch(0L to 2L, "001"), "g_0-0_001.parquet")
     // 002 rewrites g with IDENTICAL content — a diff sees nothing
-    one(batch(0L to 2L, "001"), "g_0-0_002.parquet")
+    lake.parquet(batch(0L to 2L, "001"), "g_0-0_002.parquet")
     // ...but the WRITTEN CDC declares an update for id 1 (same value)
     // and an insert... no: i with after for id 7 would break read;
     // keep: updates for ids 1 and 2 with unchanged values
@@ -256,7 +222,7 @@ class HudiSpec extends AnyFunSuite {
         stat("g", "g_0-0_002.parquet",
           ""","cdcStats":{".g_cdc_002.log.1":1}""")}]}}""")
     // a cdc-less commit 003 inserts group h — inferred leg
-    one(batch(Seq(9L), "003"), "h_0-0_003.parquet")
+    lake.parquet(batch(Seq(9L), "003"), "h_0-0_003.parquet")
     Files.writeString(Paths.get(root, ".hoodie", "003.commit"),
       s"""{"partitionToWriteStats":{"":[${
         stat("h", "h_0-0_003.parquet")}]}}""")
@@ -310,25 +276,17 @@ class HudiSpec extends AnyFunSuite {
     Files.createDirectories(Paths.get(root, ".hoodie"))
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       "hoodie.table.name=t\nhoodie.table.type=COPY_ON_WRITE\n")
-    def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     def batch(ids: Seq[Long], ct: String) = ids.toDF("id")
       .select(lit(ct).as("_hoodie_commit_time"),
         col("id").cast("string").as("_hoodie_record_key"),
         col("id"), (col("id") * 2).as("v"))
-    one(batch(0L to 2L, "001"), "g_0-0_001.parquet")
+    lake.parquet(batch(0L to 2L, "001"), "g_0-0_001.parquet")
     // ONE commit 002: rewrites g with identical content (CDC logged —
     // unchanged-value updates a diff cannot see) AND creates the
     // insert-only group h, which writes NO CDC file
-    one(batch(0L to 2L, "001"), "g_0-0_002.parquet")
-    one(batch(Seq(7L), "002"), "h_0-0_002.parquet")
+    lake.parquet(batch(0L to 2L, "001"), "g_0-0_002.parquet")
+    lake.parquet(batch(Seq(7L), "002"), "h_0-0_002.parquet")
     def img(id: Long, v: Long): String = s"""{"id":$id,"v":$v}"""
     HudiMorLite.writeLogFile(s"$root/.g_cdc_002.log.1",
       Seq(HudiMorLite.CdcSchema -> Seq(
@@ -366,22 +324,14 @@ class HudiSpec extends AnyFunSuite {
     Files.createDirectories(Paths.get(bare, ".hoodie"))
     Files.writeString(Paths.get(bare, ".hoodie", "hoodie.properties"),
       "hoodie.table.name=t\nhoodie.table.type=COPY_ON_WRITE\n")
-    def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$bare/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$bare/$out")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(bare)
     def batch(ids: Seq[Long], ct: String) = ids.toDF("id")
       .select(lit(ct).as("_hoodie_commit_time"),
         col("id").cast("string").as("_hoodie_record_key"),
         lit("").as("_hoodie_partition_path"),
         col("id"), (col("id") * 2).as("v"))
-    one(batch(0L to 4L, "001"), "gA_0-0_001.parquet")
-    one(batch(5L to 7L, "002"), "gB_0-0_002.parquet")
+    lake.parquet(batch(0L to 4L, "001"), "gA_0-0_001.parquet")
+    lake.parquet(batch(5L to 7L, "002"), "gB_0-0_002.parquet")
     def stat(fid: String, p: String) =
       s"""{"fileId":"$fid","path":"$p","numWrites":1}"""
     Files.writeString(Paths.get(bare, ".hoodie", "001.commit"),
@@ -420,21 +370,13 @@ class HudiSpec extends AnyFunSuite {
       Files.createDirectories(Paths.get(root, ".hoodie"))
       Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
         "hoodie.table.name=t\nhoodie.table.type=COPY_ON_WRITE\n")
-      def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-        val tmp = s"$root/_tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(part.renameTo(new java.io.File(s"$root/$out")))
-        rm(new java.io.File(tmp))
-      }
+      val lake = LakeFiles.Local(root)
       def batch(ids: Seq[Long], ct: String) = ids.toDF("id")
         .select(lit(ct).as("_hoodie_commit_time"),
           col("id").cast("string").as("_hoodie_record_key"),
           col("id"), (col("id") * 2).as("v"))
-      one(batch(0L to 4L, "001"), "gA_0-0_001.parquet")
-      one(batch(10L to 11L, "002"), "gB_0-0_002.parquet")
+      lake.parquet(batch(0L to 4L, "001"), "gA_0-0_001.parquet")
+      lake.parquet(batch(10L to 11L, "002"), "gB_0-0_002.parquet")
       def stat(fid: String, p: String) =
         s"""{"fileId":"$fid","path":"$p","numWrites":1}"""
       Files.writeString(Paths.get(root, ".hoodie", "001.commit"),
@@ -518,16 +460,7 @@ class HudiSpec extends AnyFunSuite {
     Files.createDirectories(Paths.get(root, ".hoodie"))
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       "hoodie.table.name=t\nhoodie.table.type=COPY_ON_WRITE\n")
-    def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      Files.createDirectories(Paths.get(s"$root/$out").getParent)
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     // the SAME record key "7" in two partitions — legal under Hudi's
     // default non-global index
     def batch(part: String) = Seq(7L).toDF("id")
@@ -535,8 +468,8 @@ class HudiSpec extends AnyFunSuite {
         col("id").cast("string").as("_hoodie_record_key"),
         lit(part).as("_hoodie_partition_path"),
         col("id"), (col("id") * 2).as("v"))
-    one(batch("p=x"), "p=x/gX_0-0_001.parquet")
-    one(batch("p=y"), "p=y/gY_0-0_001.parquet")
+    lake.parquet(batch("p=x"), "p=x/gX_0-0_001.parquet")
+    lake.parquet(batch("p=y"), "p=y/gY_0-0_001.parquet")
     Files.writeString(Paths.get(root, ".hoodie", "001.commit"),
       """{"partitionToWriteStats":{"p=x":[{"fileId":"gX","path":"p=x/gX_0-0_001.parquet","numWrites":1}],"p=y":[{"fileId":"gY","path":"p=y/gY_0-0_001.parquet","numWrites":1}]}}""")
     val updates = Seq((7L, 99L)).toDF("id", "v")
@@ -565,19 +498,13 @@ class HudiSpec extends AnyFunSuite {
       val partitions = Seq("p=x", "p=y")
       def writeGroup(rows: Seq[(Long, Long)], part: String, ct: String,
                      out: String): Unit = {
-        val tmp = s"$root/_tmp"
-        rows.toDF("id", "v")
-          .select(lit(ct).as("_hoodie_commit_time"),
-            col("id").cast("string").as("_hoodie_record_key"),
-            lit(part).as("_hoodie_partition_path"),
-            col("id"), col("v"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val f = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        Files.createDirectories(Paths.get(s"$root/$out").getParent)
-        assert(f.renameTo(new java.io.File(s"$root/$out")))
-        rm(new java.io.File(tmp))
+        LakeFiles.Local(root).parquet(
+          rows.toDF("id", "v")
+            .select(lit(ct).as("_hoodie_commit_time"),
+              col("id").cast("string").as("_hoodie_record_key"),
+              lit(part).as("_hoodie_partition_path"),
+              col("id"), col("v")),
+          out)
       }
       // model: the live rows per partition (clustering and cleaning
       // must never change them); instants minted in order
@@ -699,17 +626,12 @@ class HudiSpec extends AnyFunSuite {
         "hoodie.table.name=t\nhoodie.table.type=COPY_ON_WRITE\n")
       def writeGroup(rows: Seq[(Long, Long)], ct: String,
                      out: String): Unit = {
-        val tmp = s"$root/_tmp"
-        rows.toDF("id", "v")
-          .select(lit(ct).as("_hoodie_commit_time"),
-            col("id").cast("string").as("_hoodie_record_key"),
-            col("id"), col("v"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(part.renameTo(new java.io.File(s"$root/$out")))
-        rm(new java.io.File(tmp))
+        LakeFiles.Local(root).parquet(
+          rows.toDF("id", "v")
+            .select(lit(ct).as("_hoodie_commit_time"),
+              col("id").cast("string").as("_hoodie_record_key"),
+              col("id"), col("v")),
+          out)
       }
       var groups = Map.empty[String, Map[Long, Long]]
       var nextKey = 0L
@@ -822,16 +744,7 @@ class HudiSpec extends AnyFunSuite {
       Files.createDirectories(Paths.get(root, ".hoodie"))
       Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
         "hoodie.table.name=t\nhoodie.table.type=COPY_ON_WRITE\n")
-      def one(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-        val tmp = s"$root/_tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        Files.createDirectories(Paths.get(s"$root/$out").getParent)
-        assert(part.renameTo(new java.io.File(s"$root/$out")))
-        rm(new java.io.File(tmp))
-      }
+      val lake = LakeFiles.Local(root)
       def batch(ids: Range, part: String) = {
         val b = spark.range(ids.start, ids.end)
           .select(col("id"), (col("id") * 2).as("v"))
@@ -839,10 +752,10 @@ class HudiSpec extends AnyFunSuite {
           b.withColumn("_hoodie_partition_path", lit(s"p=$part"))
         else b
       }
-      one(batch(0 until 3, "x"), "p=x/gx1_0-0_001.parquet")
-      one(batch(3 until 5, "x"), "p=x/gx2_0-0_001.parquet")
-      one(batch(10 until 14, "y"), "p=y/gy1_0-0_001.parquet")
-      one(batch(14 until 15, "y"), "p=y/gy2_0-0_001.parquet")
+      lake.parquet(batch(0 until 3, "x"), "p=x/gx1_0-0_001.parquet")
+      lake.parquet(batch(3 until 5, "x"), "p=x/gx2_0-0_001.parquet")
+      lake.parquet(batch(10 until 14, "y"), "p=y/gy1_0-0_001.parquet")
+      lake.parquet(batch(14 until 15, "y"), "p=y/gy2_0-0_001.parquet")
       def stat(fid: String, p: String) =
         s"""{"fileId":"$fid","path":"$p","numWrites":1}"""
       Files.writeString(Paths.get(root, ".hoodie", "001.commit"),
@@ -937,15 +850,8 @@ class HudiSpec extends AnyFunSuite {
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       "hoodie.table.name=t\nhoodie.table.type=MERGE_ON_READ\n")
     val df = spark.range(0, 10).select(col("id"), (col("id") * 2).as("v"))
-    def one(filter: org.apache.spark.sql.Column, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.filter(filter).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    def one(filter: org.apache.spark.sql.Column, out: String): Unit =
+      LakeFiles.Local(root).parquet(df.filter(filter), out)
     one(col("id") < 5, "p=x/g_0-0_001.parquet")
     def instant(name: String, path: String): Unit =
       Files.writeString(Paths.get(root, ".hoodie", name),
@@ -991,14 +897,10 @@ class HudiSpec extends AnyFunSuite {
     Files.writeString(Paths.get(root, ".hoodie", "hoodie.properties"),
       "hoodie.table.name=t\nhoodie.table.type=COPY_ON_WRITE\n" +
         "hoodie.table.base.file.format=ORC\n")
-    val tmp = s"$root/_tmp"
-    spark.range(0, 7).select(col("id"), (col("id") * 2).as("v"))
-      .coalesce(1).write.mode("overwrite").orc(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".orc") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/p=x/g_0-0_001.orc")))
-    rm(new java.io.File(tmp))
+    LakeFiles.stage(
+      spark.range(0, 7).select(col("id"), (col("id") * 2).as("v")),
+      "orc", new java.io.File(s"$root/_tmp"),
+      new java.io.File(s"$root/p=x/g_0-0_001.orc"))
     Files.writeString(Paths.get(root, ".hoodie", "001.commit"),
       """{"partitionToWriteStats":{"p=x":[{"fileId":"g","path":"p=x/g_0-0_001.orc","numWrites":7}]}}""")
     assert(HudiCowLite.read(spark, root)

@@ -8,18 +8,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.{jstr, rm}
+
 /** Shared append-only Hudi COW test-table authoring, used by
   * [[HudiStreamSpec]] (source) and [[HudiSinkSpec]] (loop). */
 private[graft] object HudiStreamFixture {
   import TestSession.spark
-
-  private def jstr(s: String): String = "\"" + s.replace("\\", "\\\\")
-    .replace("\"", "\\\"") + "\""
-
-  private[graft] def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
-  }
 
   def init(root: String): Unit = {
     Files.createDirectories(Paths.get(root, ".hoodie"))
@@ -30,16 +25,11 @@ private[graft] object HudiStreamFixture {
   /** Instant k commits NEW file group b<k> holding ids
     * [5(k-1), 5(k-1)+5). Call init() first for k == 1. */
   def append(root: String, k: Int): Unit = {
-    val tmp = s"$root/_tmp"
-    spark.range(5L * (k - 1), 5L * (k - 1) + 5)
-      .select(col("id"), (col("id") * 2).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
     val rel = s"b${k}_0-0_$k.parquet"
-    assert(part.renameTo(new java.io.File(s"$root/$rel")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(5L * (k - 1), 5L * (k - 1) + 5)
+        .select(col("id"), (col("id") * 2).as("v")),
+      rel)
     graft.sources.AtomicFiles.write(
       Paths.get(root, ".hoodie", s"$k.commit"),
       s"""{"partitionToWriteStats":{"":[{"fileId":${jstr(s"b$k")},"path":${jstr(rel)},"numWrites":5}]}}""")
@@ -48,15 +38,10 @@ private[graft] object HudiStreamFixture {
   /** Instant k REWRITES group b1's base file (a copy-on-write UPDATE)
     * — must fail the stream's dropped-files gate. */
   def rewrite(root: String, k: Int): Unit = {
-    val tmp = s"$root/_tmp"
-    spark.range(0, 5).select(col("id"), (col("id") * 9).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
     val rel = s"b1_0-0_$k.parquet"
-    assert(part.renameTo(new java.io.File(s"$root/$rel")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(0, 5).select(col("id"), (col("id") * 9).as("v")),
+      rel)
     graft.sources.AtomicFiles.write(
       Paths.get(root, ".hoodie", s"$k.commit"),
       s"""{"partitionToWriteStats":{"":[{"fileId":"b1","path":${jstr(rel)},"numWrites":5}]}}""")
@@ -71,7 +56,7 @@ private[graft] object HudiStreamFixture {
   * path against real data is q412's DuckDB oracle. */
 class HudiStreamSpec extends AnyFunSuite {
   import TestSession._
-  import HudiStreamFixture.{append, rewrite, rm}
+  import HudiStreamFixture.{append, rewrite}
 
   private val fmt = "org.apache.spark.sql.graftstream.HudiStreamLite"
 

@@ -19,7 +19,7 @@ class IcebergSinkSpec extends AnyFunSuite {
 
   private def fresh(name: String): String = {
     val root = s"/tmp/graft_icesinkspec/$name"
-    IcebergStreamFixture.rm(new java.io.File(root))
+    graft.sources.LakeFiles.rm(new java.io.File(root))
     root
   }
 

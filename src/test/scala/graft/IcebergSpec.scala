@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.IcebergLite
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.{jstr, rm}
 
 /** IcebergLite contract: metadata-version resolution (version-hint +
   * highest-vN fallback), snapshot selection, tombstone-manifest
@@ -16,14 +18,6 @@ class IcebergSpec extends AnyFunSuite {
   import TestSession._
 
   private val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-
-  private def jstr(s: String): String = "\"" + s.replace("\\", "\\\\")
-    .replace("\"", "\\\"") + "\""
-
-  private def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
-  }
 
   /** Table with files f0.parquet (ids 0..4) and f1.parquet (ids 5..9),
     * snap 1 = f0+f1 added, snap 2 = f0 tombstoned + f1 existing,
@@ -40,29 +34,17 @@ class IcebergSpec extends AnyFunSuite {
     Files.createDirectories(Paths.get(root, "data"))
     val df = spark.range(0, 10).select(col("id"), (col("id") * 3).as("v"))
     def one(filter: org.apache.spark.sql.Column, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      IcebergLite.stampFieldIds(df.filter(filter),
-        Map("id" -> 1, "v" -> 2))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
+      LakeFiles.Local(root).parquet(
+        IcebergLite.stampFieldIds(df.filter(filter),
+          Map("id" -> 1, "v" -> 2)),
+        out)
     }
     one(col("id") < 5, "data/f0.parquet")
     one(col("id") >= 5, "data/f1.parquet")
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     import spark.implicits._
     def manifest(rel: String, entries: (Int, String)*): Unit =
-      writeAvro(entries.toSeq.toDF("status", "file_path")
+      lake.avro(entries.toSeq.toDF("status", "file_path")
         .select(col("status"),
           struct(col("file_path"), lit(dfContent).as("content"))
             .as("data_file")), rel)
@@ -71,7 +53,7 @@ class IcebergSpec extends AnyFunSuite {
     manifest("metadata/m2del.avro", (2, "data/f0.parquet"))
     manifest("metadata/m2b.avro", (0, "data/f1.parquet"))
     def mlist(rel: String, paths: String*): Unit =
-      writeAvro(paths.toSeq.toDF("manifest_path")
+      lake.avro(paths.toSeq.toDF("manifest_path")
         .select(col("manifest_path"), lit(mlContent).as("content")), rel)
     mlist("metadata/snap-1.avro", "metadata/m1.avro")
     mlist("metadata/snap-2.avro", "metadata/m2del.avro",
@@ -151,18 +133,13 @@ class IcebergSpec extends AnyFunSuite {
     assert(got1 == (0L to 9L).map(i => (i, Some(42L))))
     // rewrite f1 WITH w stored (id*10; id 5 stores an explicit NULL
     // that must SURVIVE — the default is not a coalesce)
-    val tmp = s"$root/_tmpw"
-    IcebergLite.stampFieldIds(
-      spark.range(5, 10).select(col("id"), (col("id") * 3).as("v"),
-        when(col("id") === 5, lit(null).cast("long"))
-          .otherwise(col("id") * 10).as("w")),
-      Map("id" -> 1, "v" -> 2, "w" -> 3))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val p = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(p.renameTo(new java.io.File(s"$root/data/f1.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      IcebergLite.stampFieldIds(
+        spark.range(5, 10).select(col("id"), (col("id") * 3).as("v"),
+          when(col("id") === 5, lit(null).cast("long"))
+            .otherwise(col("id") * 10).as("w")),
+        Map("id" -> 1, "v" -> 2, "w" -> 3)),
+      "data/f1.parquet")
     val got2 = IcebergLite.read(spark, root, snapshotId = Some(1L))
       .select("id", "w").as[(Long, Option[Long])]
       .collect().sorted.toSeq
@@ -211,28 +188,12 @@ class IcebergSpec extends AnyFunSuite {
                           reinsert: Option[org.apache.spark.sql.DataFrame] =
                             None, reinsertSeq: Long = 0L): Unit = {
     import spark.implicits._
-    def writeParquet(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpp"
-      d.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val p = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val t2 = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-      val p = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(t2))
-    }
-    writeParquet(IcebergLite.stampFieldIds(delDf,
+    val lake = LakeFiles.Local(root)
+    lake.parquet(IcebergLite.stampFieldIds(delDf,
       delDf.columns.map(_ -> fieldId).toMap), "data/eqdel.parquet")
     def manifest(rel: String, path: String, content: Int,
                  eqIds: Seq[Int]): Unit =
-      writeAvro(Seq((1, path)).toDF("status", "file_path")
+      lake.avro(Seq((1, path)).toDF("status", "file_path")
         .select(col("status"),
           struct(col("file_path"), lit(content).as("content"),
             (if (eqIds.isEmpty) lit(null).cast("array<int>")
@@ -243,12 +204,12 @@ class IcebergSpec extends AnyFunSuite {
       ("metadata/m1.avro", 0, dataSeq),
       ("metadata/m-eq.avro", 1, delSeq))
     reinsert.foreach { r =>
-      writeParquet(IcebergLite.stampFieldIds(r,
+      lake.parquet(IcebergLite.stampFieldIds(r,
         Map("id" -> 1, "v" -> 2)), "data/reins.parquet")
       manifest("metadata/m-reins.avro", "data/reins.parquet", 0, Nil)
       mlRows = mlRows :+ (("metadata/m-reins.avro", 0, reinsertSeq))
     }
-    writeAvro(mlRows.toDF("manifest_path", "content", "sequence_number"),
+    lake.avro(mlRows.toDF("manifest_path", "content", "sequence_number"),
       "metadata/snap-3.avro")
     val meta = Files.readString(
       Paths.get(root, "metadata", "v3.metadata.json"))
@@ -283,18 +244,13 @@ class IcebergSpec extends AnyFunSuite {
     import spark.implicits._
     val root = fixture("eqnull")
     // rewrite f1 to carry a NULL id row, re-listing it as snap 3 data
-    val tmp = s"$root/_tmpn"
-    IcebergLite.stampFieldIds(
-      spark.range(0, 1).select(lit(null).cast("long").as("id"),
-        lit(777L).as("v"))
-        .union(spark.read.parquet(s"$root/data/f1.parquet")),
-      Map("id" -> 1, "v" -> 2))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val p = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(p.renameTo(new java.io.File(s"$root/data/f1.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      IcebergLite.stampFieldIds(
+        spark.range(0, 1).select(lit(null).cast("long").as("id"),
+          lit(777L).as("v"))
+          .union(spark.read.parquet(s"$root/data/f1.parquet")),
+        Map("id" -> 1, "v" -> 2)),
+      "data/f1.parquet")
     // delete (null) at seq 5 over data at seq 1: the null-id row dies
     addEqDelete(root,
       Seq(Option.empty[Long]).toDF("id"), fieldId = 1,
@@ -313,12 +269,7 @@ class IcebergSpec extends AnyFunSuite {
     val ml = spark.read.format(avroFmt)
       .load(s"$root/metadata/snap-3.avro")
       .select("manifest_path", "content")
-    val t2 = s"$root/_tmpavro"
-    ml.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-    val part = new java.io.File(t2).listFiles()
-      .find(_.getName.startsWith("part-")).get
-    assert(part.renameTo(new java.io.File(s"$root/metadata/snap-3.avro")))
-    rm(new java.io.File(t2))
+    LakeFiles.Local(root).avro(ml, "metadata/snap-3.avro")
     val e = intercept[IllegalStateException] {
       IcebergLite.snapshot(spark, root)
     }
@@ -494,31 +445,19 @@ class IcebergSpec extends AnyFunSuite {
     // delete parquet: the two f0 rows with id < 2, ordinals read back
     // from the real file; file_path spelled file://-absolute to
     // exercise canonicalization against _metadata.file_path
-    val tmp = s"$root/_tmpdel"
-    spark.read.parquet(s"$root/data/f0.parquet")
-      .filter(col("id") < 2)
-      .select(lit(s"file://$root/data/f0.parquet").as("file_path"),
-        col("_metadata.row_index").as("pos"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/data/del0.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.read.parquet(s"$root/data/f0.parquet")
+        .filter(col("id") < 2)
+        .select(lit(s"file://$root/data/f0.parquet").as("file_path"),
+          col("_metadata.row_index").as("pos")),
+      "data/del0.parquet")
     import spark.implicits._
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val t2 = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-      val p = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(t2))
-    }
-    writeAvro(Seq((1, "data/del0.parquet")).toDF("status", "file_path")
+    val lake = LakeFiles.Local(root)
+    lake.avro(Seq((1, "data/del0.parquet")).toDF("status", "file_path")
       .select(col("status"),
         struct(col("file_path"), lit(1).as("content")).as("data_file")),
       "metadata/m-del.avro")
-    writeAvro(Seq(("metadata/m1.avro", 0), ("metadata/m-del.avro", 1))
+    lake.avro(Seq(("metadata/m1.avro", 0), ("metadata/m-del.avro", 1))
       .toDF("manifest_path", "content"), "metadata/snap-3.avro")
     val meta = Files.readString(
       Paths.get(root, "metadata", "v3.metadata.json"))
@@ -574,37 +513,21 @@ class IcebergSpec extends AnyFunSuite {
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "metadata"))
     Files.createDirectories(Paths.get(root, "data"))
-    def writeParquet(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpp"
-      d.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val p = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val t2 = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-      val p = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(t2))
-    }
+    val lake = LakeFiles.Local(root)
     import spark.implicits._
-    writeParquet(IcebergLite.stampFieldIds(
+    lake.parquet(IcebergLite.stampFieldIds(
       spark.range(0, 5).select(col("id"), (col("id") * 3).as("v")),
       Map("id" -> 1, "v" -> 2)), "data/f 0.parquet")
     // positional delete: ordinal 0 of the space-named file (id 0),
     // file_path stored RAW (unencoded), as real writers spell it
-    writeParquet(Seq((s"$root/data/f 0.parquet", 0L))
+    lake.parquet(Seq((s"$root/data/f 0.parquet", 0L))
       .toDF("file_path", "pos"), "data/pos.parquet")
     // equality delete on field id 1 (id): kills id 3
-    writeParquet(IcebergLite.stampFieldIds(Seq(3L).toDF("id"),
+    lake.parquet(IcebergLite.stampFieldIds(Seq(3L).toDF("id"),
       Map("id" -> 1)), "data/eq.parquet")
     def manifest(rel: String, path: String, content: Int,
                  eqIds: Seq[Int]): Unit =
-      writeAvro(Seq((1, path)).toDF("status", "file_path")
+      lake.avro(Seq((1, path)).toDF("status", "file_path")
         .select(col("status"),
           struct(col("file_path"), lit(content).as("content"),
             (if (eqIds.isEmpty) lit(null).cast("array<int>")
@@ -613,7 +536,7 @@ class IcebergSpec extends AnyFunSuite {
     manifest("metadata/m-data.avro", "data/f 0.parquet", 0, Nil)
     manifest("metadata/m-pos.avro", "data/pos.parquet", 1, Nil)
     manifest("metadata/m-eq.avro", "data/eq.parquet", 2, Seq(1))
-    writeAvro(Seq(("metadata/m-data.avro", 0, 1L),
+    lake.avro(Seq(("metadata/m-data.avro", 0, 1L),
       ("metadata/m-pos.avro", 1, 5L), ("metadata/m-eq.avro", 1, 5L))
       .toDF("manifest_path", "content", "sequence_number"),
       "metadata/snap-1.avro")
@@ -640,18 +563,10 @@ class IcebergSpec extends AnyFunSuite {
     val root = "/tmp/graft_icespec/noseqguard"
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "data"))
-    def writeParquet(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpp"
-      d.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val p = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
-    writeParquet(spark.range(0, 5).select(col("id"),
+    val lake = LakeFiles.Local(root)
+    lake.parquet(spark.range(0, 5).select(col("id"),
       (col("id") * 3).as("v")), "data/d.parquet")
-    writeParquet(IcebergLite.stampFieldIds(
+    lake.parquet(IcebergLite.stampFieldIds(
       spark.range(0, 5).select(col("id")), Map("id" -> 1)),
       "data/eq.parquet")
     val data = spark.read.parquet(s"$root/data/d.parquet")
@@ -723,24 +638,13 @@ class IcebergSpec extends AnyFunSuite {
     "refuse loudly") {
     val root = fixture("orcdata")
     // rewrite f1 as genuine ORC and re-point snapshot 2's manifest
-    val tmp = s"$root/_tmpo"
-    spark.read.parquet(s"$root/data/f1.parquet")
-      .coalesce(1).write.mode("overwrite").orc(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".orc") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/data/f1.orc")))
-    rm(new java.io.File(tmp))
+    LakeFiles.stage(
+      spark.read.parquet(s"$root/data/f1.parquet"),
+      "orc", new java.io.File(s"$root/_tmpo"),
+      new java.io.File(s"$root/data/f1.orc"))
     import spark.implicits._
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val t2 = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-      val p = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(t2))
-    }
-    writeAvro(Seq((0, "data/f1.orc")).toDF("status", "file_path")
+    val lake = LakeFiles.Local(root)
+    lake.avro(Seq((0, "data/f1.orc")).toDF("status", "file_path")
       .select(col("status"),
         struct(col("file_path"), lit(0).as("content")).as("data_file")),
       "metadata/m2b.avro")
@@ -748,20 +652,15 @@ class IcebergSpec extends AnyFunSuite {
     assert(got.select("id").as[Long].collect().sorted.toSeq == (5L to 9L))
     // add a positional delete over the ORC snapshot: must refuse
     // (row-ordinal addressing is parquet-only in lite scope)
-    val tmpd = s"$root/_tmpd"
-    spark.range(0, 1).select(lit(s"$root/data/f1.orc").as("file_path"),
-      lit(0L).as("pos"))
-      .coalesce(1).write.mode("overwrite").parquet(tmpd)
-    val dp = new java.io.File(tmpd).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(dp.renameTo(new java.io.File(s"$root/data/del.parquet")))
-    rm(new java.io.File(tmpd))
-    writeAvro(Seq((1, "data/del.parquet")).toDF("status", "file_path")
+    lake.parquet(
+      spark.range(0, 1).select(lit(s"$root/data/f1.orc").as("file_path"),
+        lit(0L).as("pos")),
+      "data/del.parquet")
+    lake.avro(Seq((1, "data/del.parquet")).toDF("status", "file_path")
       .select(col("status"),
         struct(col("file_path"), lit(1).as("content")).as("data_file")),
       "metadata/m-del.avro")
-    writeAvro(Seq(("metadata/m2b.avro", 0), ("metadata/m-del.avro", 1))
+    lake.avro(Seq(("metadata/m2b.avro", 0), ("metadata/m-del.avro", 1))
       .toDF("manifest_path", "content"), "metadata/snap-2.avro")
     val e = intercept[IllegalStateException] {
       IcebergLite.read(spark, root).collect()
@@ -791,14 +690,7 @@ class IcebergSpec extends AnyFunSuite {
       Files.createDirectories(Paths.get(root, "data"))
       def one(df: org.apache.spark.sql.DataFrame, ids: Map[String, Int],
               out: String): Unit = {
-        val tmp = s"$root/_tmp"
-        IcebergLite.stampFieldIds(df, ids)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(part.renameTo(new java.io.File(s"$root/$out")))
-        rm(new java.io.File(tmp))
+        LakeFiles.Local(root).parquet(IcebergLite.stampFieldIds(df, ids), out)
       }
       val ids = Map("id" -> 1, "v" -> 2)
       def batch(a: Long, b: Long) =
@@ -808,14 +700,7 @@ class IcebergSpec extends AnyFunSuite {
       // eq delete at seq 2 names ids {0, 10}: kills f0's 0 (seq 1<2),
       // spares f1's 10 (seq 2, not strictly below)
       one(Seq(0L, 10L).toDF("id"), Map("id" -> 1), "data/eq.parquet")
-      def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-        val t = s"$root/_tmpavro"
-        d.coalesce(1).write.mode("overwrite").format(avroFmt).save(t)
-        val f = new java.io.File(t).listFiles()
-          .find(_.getName.startsWith("part-")).get
-        assert(f.renameTo(new java.io.File(s"$root/$rel")))
-        rm(new java.io.File(t))
-      }
+      val lake = LakeFiles.Local(root)
       def dvPuffin(rel: String, ordinals: Seq[Long]): Long = {
         val blob = dvBlob(ordinals)
         Files.write(Paths.get(root, rel), "PFA1".getBytes("UTF-8") ++
@@ -827,7 +712,7 @@ class IcebergSpec extends AnyFunSuite {
       def manifest(rel: String, path: String, content: Int,
                    eqIds: Seq[Int], dv: Option[(String, Long, Long)])
       : Unit =
-        writeAvro(Seq((1, path)).toDF("status", "file_path")
+        lake.avro(Seq((1, path)).toDF("status", "file_path")
           .select(col("status"),
             struct(col("file_path"), lit(content).as("content"),
               (if (eqIds.isEmpty) lit(null).cast("array<int>")
@@ -849,7 +734,7 @@ class IcebergSpec extends AnyFunSuite {
         manifest("metadata/m-dv2.avro", "data/dv2.puffin", 1, Nil,
           Some(("data/f0.parquet", sz, dv2.get.length.toLong)))
       def mlist(rel: String, rows: (String, Int, Long)*): Unit =
-        writeAvro(rows.toSeq
+        lake.avro(rows.toSeq
           .toDF("manifest_path", "content", "sequence_number"), rel)
       mlist("metadata/snap-1.avro",
         ("metadata/m-f0.avro", 0, 1L), ("metadata/m-dv1.avro", 1, 1L))
@@ -921,22 +806,15 @@ class IcebergSpec extends AnyFunSuite {
       rm(new java.io.File(root))
       Files.createDirectories(Paths.get(root, "metadata"))
       Files.createDirectories(Paths.get(root, "data"))
-      def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-        val t = s"$root/_tmpavro"
-        d.coalesce(1).write.mode("overwrite").format(avroFmt).save(t)
-        val f = new java.io.File(t).listFiles()
-          .find(_.getName.startsWith("part-")).get
-        assert(f.renameTo(new java.io.File(s"$root/$rel")))
-        rm(new java.io.File(t))
-      }
+      val lake = LakeFiles.Local(root)
       def dataManifest(rel: String, path: String): Unit =
-        writeAvro(Seq((1, path)).toDF("status", "file_path")
+        lake.avro(Seq((1, path)).toDF("status", "file_path")
           .select(col("status"),
             struct(col("file_path"), lit(0).as("content"))
               .as("data_file")), rel)
       def dvManifest(rel: String, path: String, dataFile: String,
                      size: Long, card: Long): Unit =
-        writeAvro(Seq((1, path)).toDF("status", "file_path")
+        lake.avro(Seq((1, path)).toDF("status", "file_path")
           .select(col("status"),
             struct(col("file_path"), lit(1).as("content"),
               lit(dataFile).as("referenced_data_file"),
@@ -947,27 +825,17 @@ class IcebergSpec extends AnyFunSuite {
       // positional delete FILE manifest: content=1, NO
       // referenced_data_file (that field is what marks a DV)
       def posManifest(rel: String, path: String): Unit =
-        writeAvro(Seq((1, path)).toDF("status", "file_path")
+        lake.avro(Seq((1, path)).toDF("status", "file_path")
           .select(col("status"),
             struct(col("file_path"), lit(1).as("content"))
               .as("data_file")), rel)
       // equality delete manifest: content=2 + equality_ids
       def eqManifest(rel: String, path: String, ids: Seq[Int]): Unit =
-        writeAvro(Seq((1, path)).toDF("status", "file_path")
+        lake.avro(Seq((1, path)).toDF("status", "file_path")
           .select(col("status"),
             struct(col("file_path"), lit(2).as("content"),
               array(ids.map(lit(_)): _*).as("equality_ids"))
               .as("data_file")), rel)
-      def writeParquet(df: org.apache.spark.sql.DataFrame,
-                       rel: String): Unit = {
-        val tmp = s"$root/_tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val p = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(p.renameTo(new java.io.File(s"$root/$rel")))
-        rm(new java.io.File(tmp))
-      }
       var nextBase = 0L
       var files = Vector.empty[F]
       // accumulated delete-surface manifests beyond the per-file DV
@@ -981,7 +849,7 @@ class IcebergSpec extends AnyFunSuite {
         val rows = (nextBase until nextBase + n).toSeq
         nextBase += 100
         val name = s"f$sid"
-        writeParquet(IcebergLite.stampFieldIds(
+        lake.parquet(IcebergLite.stampFieldIds(
           spark.range(rows.head, rows.head + n)
             .select(col("id"), (col("id") * 3).as("v")),
           Map("id" -> 1, "v" -> 2)), s"data/$name.parquet")
@@ -1030,7 +898,7 @@ class IcebergSpec extends AnyFunSuite {
             val ords = (0 until (1 + rnd.nextInt(2)))
               .map(_ => rnd.nextInt(old.rows.size)).toSet
             val rel = s"data/pd-$sid.parquet"
-            writeParquet(
+            lake.parquet(
               ords.toSeq.sorted
                 .map(o => (s"data/${old.name}.parquet", o.toLong))
                 .toDF("file_path", "pos"), rel)
@@ -1048,7 +916,7 @@ class IcebergSpec extends AnyFunSuite {
               f.rows(rnd.nextInt(f.rows.size))
             }.toSet
             val rel = s"data/eq-$sid.parquet"
-            writeParquet(IcebergLite.stampFieldIds(
+            lake.parquet(IcebergLite.stampFieldIds(
               vals.toSeq.sorted.toDF("id"), Map("id" -> 1)), rel)
             val mRel = s"metadata/m-eq-$sid.avro"
             eqManifest(mRel, rel, Seq(1))
@@ -1056,7 +924,7 @@ class IcebergSpec extends AnyFunSuite {
             extraDelManifests :+= ((mRel, sid))
             eqDels :+= ((vals, sid))
         }
-        writeAvro(
+        lake.avro(
           (files.map(f => (s"metadata/m-${f.name}.avro", 0)) ++
             files.flatMap(_.dvManifest).map((_, 1)) ++
             extraDelManifests.map { case (m, _) => (m, 1) })
@@ -1155,34 +1023,22 @@ class IcebergSpec extends AnyFunSuite {
     val dfP = spark.range(0, 20).select(col("id"),
       when(col("id") < 10, "x").otherwise("y").as("p"))
     def oneP(filter: org.apache.spark.sql.Column, out: String): Unit = {
-      val tmp = s"$root2/_tmp"
-      IcebergLite.stampFieldIds(dfP.filter(filter),
-        Map("id" -> 1, "p" -> 2))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root2/$out")))
-      rm(new java.io.File(tmp))
+      LakeFiles.Local(root2).parquet(
+        IcebergLite.stampFieldIds(dfP.filter(filter),
+          Map("id" -> 1, "p" -> 2)),
+        out)
     }
     oneP(col("id") < 5, "data/g0.parquet")
     oneP(col("id") >= 5 && col("id") < 10, "data/g1.parquet")
     oneP(col("id") >= 10 && col("id") < 15, "data/g2.parquet")
     oneP(col("id") >= 15, "data/g3.parquet")
-    def writeAvroP(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root2/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root2/$rel")))
-      rm(new java.io.File(tmp))
-    }
-    writeAvroP(Seq("data/g0.parquet", "data/g1.parquet",
+    val lake = LakeFiles.Local(root2)
+    lake.avro(Seq("data/g0.parquet", "data/g1.parquet",
       "data/g2.parquet", "data/g3.parquet").toDF("file_path")
       .select(lit(1).as("status"),
         struct(col("file_path"), lit(0).as("content")).as("data_file")),
       "metadata/m1.avro")
-    writeAvroP(Seq("metadata/m1.avro").toDF("manifest_path")
+    lake.avro(Seq("metadata/m1.avro").toDF("manifest_path")
       .select(col("manifest_path"), lit(0).as("content")),
       "metadata/snap-1.avro")
     Files.writeString(Paths.get(root2, "metadata", "v1.metadata.json"),
@@ -1287,32 +1143,19 @@ class IcebergSpec extends AnyFunSuite {
     val df = spark.range(0, 40).select(col("id"),
       concat(lit("w"), (col("id") % 7).cast("string")).as("s"))
     def one(filter: org.apache.spark.sql.Column, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      IcebergLite.stampFieldIds(df.filter(filter),
-        Map("id" -> 1, "s" -> 2))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
+      LakeFiles.Local(root).parquet(
+        IcebergLite.stampFieldIds(df.filter(filter),
+          Map("id" -> 1, "s" -> 2)),
+        out)
     }
     one(col("id") < 20, "data/h0.parquet")
     one(col("id") >= 20, "data/h1.parquet")
-    def writeAvro(d: org.apache.spark.sql.DataFrame,
-                  rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
-    writeAvro(Seq("data/h0.parquet", "data/h1.parquet").toDF("file_path")
+    val lake = LakeFiles.Local(root)
+    lake.avro(Seq("data/h0.parquet", "data/h1.parquet").toDF("file_path")
       .select(lit(1).as("status"),
         struct(col("file_path"), lit(0).as("content")).as("data_file")),
       "metadata/m1.avro")
-    writeAvro(Seq("metadata/m1.avro").toDF("manifest_path")
+    lake.avro(Seq("metadata/m1.avro").toDF("manifest_path")
       .select(col("manifest_path"), lit(0).as("content")),
       "metadata/snap-1.avro")
     Files.writeString(Paths.get(root, "metadata", "v1.metadata.json"),
@@ -1370,32 +1213,19 @@ class IcebergSpec extends AnyFunSuite {
     val df = spark.range(0, 20).select(col("id"),
       when(col("id") < 10, "x").otherwise("y").as("p"))
     def one(filter: org.apache.spark.sql.Column, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      IcebergLite.stampFieldIds(df.filter(filter),
-        Map("id" -> 1, "p" -> 2))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
+      LakeFiles.Local(root).parquet(
+        IcebergLite.stampFieldIds(df.filter(filter),
+          Map("id" -> 1, "p" -> 2)),
+        out)
     }
     one(col("id") < 10, "data/g0.parquet")
     one(col("id") >= 10, "data/g1.parquet")
-    def writeAvro(d: org.apache.spark.sql.DataFrame,
-                  rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
-    writeAvro(Seq("data/g0.parquet", "data/g1.parquet").toDF("file_path")
+    val lake = LakeFiles.Local(root)
+    lake.avro(Seq("data/g0.parquet", "data/g1.parquet").toDF("file_path")
       .select(lit(1).as("status"),
         struct(col("file_path"), lit(0).as("content")).as("data_file")),
       "metadata/m1.avro")
-    writeAvro(Seq(("metadata/m1.avro", 0, 1L))
+    lake.avro(Seq(("metadata/m1.avro", 0, 1L))
       .toDF("manifest_path", "content", "sequence_number"),
       "metadata/snap-1.avro")
     Files.writeString(Paths.get(root, "metadata", "v1.metadata.json"),
@@ -1510,22 +1340,15 @@ class IcebergSpec extends AnyFunSuite {
       rm(new java.io.File(root))
       Files.createDirectories(Paths.get(root, "metadata"))
       Files.createDirectories(Paths.get(root, "data"))
-      def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-        val t = s"$root/_tmpavro"
-        d.coalesce(1).write.mode("overwrite").format(avroFmt).save(t)
-        val f = new java.io.File(t).listFiles()
-          .find(_.getName.startsWith("part-")).get
-        assert(f.renameTo(new java.io.File(s"$root/$rel")))
-        rm(new java.io.File(t))
-      }
+      val lake = LakeFiles.Local(root)
       def dataManifest(rel: String, path: String): Unit =
-        writeAvro(Seq((1, path)).toDF("status", "file_path")
+        lake.avro(Seq((1, path)).toDF("status", "file_path")
           .select(col("status"),
             struct(col("file_path"), lit(0).as("content"))
               .as("data_file")), rel)
       def dvManifest(rel: String, path: String, dataFile: String,
                      size: Long, card: Long): Unit =
-        writeAvro(Seq((1, path)).toDF("status", "file_path")
+        lake.avro(Seq((1, path)).toDF("status", "file_path")
           .select(col("status"),
             struct(col("file_path"), lit(1).as("content"),
               lit(dataFile).as("referenced_data_file"),
@@ -1540,17 +1363,12 @@ class IcebergSpec extends AnyFunSuite {
         val rows = (nextBase until nextBase + n).toSeq
         nextBase += 100
         val name = s"f$sid"
-        val tmp = s"$root/_tmp"
-        IcebergLite.stampFieldIds(
-          spark.range(rows.head, rows.head + n)
-            .select(col("id"), (col("id") * 3).as("v")),
-          Map("id" -> 1, "v" -> 2))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val p = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(p.renameTo(new java.io.File(s"$root/data/$name.parquet")))
-        rm(new java.io.File(tmp))
+        lake.parquet(
+          IcebergLite.stampFieldIds(
+            spark.range(rows.head, rows.head + n)
+              .select(col("id"), (col("id") * 3).as("v")),
+            Map("id" -> 1, "v" -> 2)),
+          s"data/$name.parquet")
         dataManifest(s"metadata/m-$name.avro", s"data/$name.parquet")
         F(name, rows, Set.empty, None)
       }
@@ -1578,7 +1396,7 @@ class IcebergSpec extends AnyFunSuite {
             files = files.updated(i,
               old.copy(dead = dead, dvManifest = Some(mRel)))
         }
-        writeAvro(
+        lake.avro(
           (files.map(f => (s"metadata/m-${f.name}.avro", 0)) ++
             files.flatMap(_.dvManifest).map((_, 1)))
             .toDF("manifest_path", "content"),
@@ -1643,30 +1461,17 @@ class IcebergSpec extends AnyFunSuite {
       val df0 = spark.range(0, 10).select(col("id"),
         (col("id") * 2).as("v"),
         when(col("id") < 5, "a").otherwise("b").as("p"))
-      val tmp = s"$root/_tmp"
-      IcebergLite.stampFieldIds(df0,
-        Map("id" -> 1, "v" -> 2, "p" -> 3))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part0 = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part0.renameTo(new java.io.File(s"$root/data/g0.parquet")))
-      rm(new java.io.File(tmp))
-      def writeAvro(d: org.apache.spark.sql.DataFrame,
-                    rel: String): Unit = {
-        val t = s"$root/_tmpavro"
-        d.coalesce(1).write.mode("overwrite").format(avroFmt).save(t)
-        val f = new java.io.File(t).listFiles()
-          .find(_.getName.startsWith("part-")).get
-        assert(f.renameTo(new java.io.File(s"$root/$rel")))
-        rm(new java.io.File(t))
-      }
-      writeAvro(Seq((1, 1L, "data/g0.parquet"))
+      LakeFiles.Local(root).parquet(
+        IcebergLite.stampFieldIds(df0,
+          Map("id" -> 1, "v" -> 2, "p" -> 3)),
+        "data/g0.parquet")
+      val lake = LakeFiles.Local(root)
+      lake.avro(Seq((1, 1L, "data/g0.parquet"))
         .toDF("status", "sequence_number", "file_path")
         .select(col("status"), col("sequence_number"),
           struct(col("file_path"), lit(0).as("content"))
             .as("data_file")), "metadata/m1.avro")
-      writeAvro(Seq(("metadata/m1.avro", 0, 1L))
+      lake.avro(Seq(("metadata/m1.avro", 0, 1L))
         .toDF("manifest_path", "content", "sequence_number"),
         "metadata/snap-1.avro")
       Files.writeString(Paths.get(root, "metadata", "v1.metadata.json"),
@@ -1768,14 +1573,10 @@ class IcebergSpec extends AnyFunSuite {
   test("non-file scheme in a stored path refuses loudly") {
     val root = fixture("scheme")
     import spark.implicits._
-    val t2 = s"$root/_tmpavro"
-    Seq(("s3://bucket/metadata/m1.avro", 0))
-      .toDF("manifest_path", "content")
-      .coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-    val p = new java.io.File(t2).listFiles()
-      .find(_.getName.startsWith("part-")).get
-    assert(p.renameTo(new java.io.File(s"$root/metadata/snap-2.avro")))
-    rm(new java.io.File(t2))
+    LakeFiles.Local(root).avro(
+      Seq(("s3://bucket/metadata/m1.avro", 0))
+        .toDF("manifest_path", "content"),
+      "metadata/snap-2.avro")
     val e = intercept[IllegalStateException] {
       IcebergLite.snapshot(spark, root)
     }
@@ -1803,14 +1604,9 @@ class IcebergSpec extends AnyFunSuite {
     // overwrite f1 with an UNSTAMPED parquet: a footer with no field
     // ids under an id-resolving read schema must fail, not silently
     // fall back to names (a renamed table would then read nulls)
-    val tmp = s"$root/_tmpu"
-    spark.range(5, 10).select(col("id"), (col("id") * 3).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val p = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(p.renameTo(new java.io.File(s"$root/data/f1.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(5, 10).select(col("id"), (col("id") * 3).as("v")),
+      "data/f1.parquet")
     val e = intercept[Exception] {
       IcebergLite.read(spark, root).collect()
     }
@@ -1822,16 +1618,11 @@ class IcebergSpec extends AnyFunSuite {
 
   private def unstamped(root: String, out: String,
                         df: org.apache.spark.sql.DataFrame): Unit = {
-    val tmp = s"$root/_tmpu"
     import org.apache.spark.sql.types.Metadata
-    df.select(df.columns.toSeq.map(c =>
-      col(c).as(c, Metadata.empty)): _*)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val p = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(p.renameTo(new java.io.File(s"$root/$out")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      df.select(df.columns.toSeq.map(c =>
+        col(c).as(c, Metadata.empty)): _*),
+      out)
   }
 
   private def addMapping(root: String, mapping: String): Unit = {
@@ -1899,42 +1690,26 @@ class IcebergSpec extends AnyFunSuite {
     rm(new java.io.File(root))
     Files.createDirectories(Paths.get(root, "metadata"))
     Files.createDirectories(Paths.get(root, "data"))
-    def writeOne(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val p = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(p.renameTo(new java.io.File(s"$root/$out")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     // f0: id-stamped current names; f1: id-LESS pre-migration names
-    writeOne(IcebergLite.stampFieldIds(
+    lake.parquet(IcebergLite.stampFieldIds(
       spark.range(0, 5).select(col("id"), (col("id") * 3).as("v")),
       Map("id" -> 1, "v" -> 2)), "data/f0.parquet")
     import org.apache.spark.sql.types.Metadata
-    writeOne(spark.range(5, 10).select(
+    lake.parquet(spark.range(5, 10).select(
       col("id").as("id_old", Metadata.empty),
       (col("id") * 3).as("v_old", Metadata.empty)), "data/f1.parquet")
     // positional delete: rows 0 and 2 OF THE ID-LESS FILE (ids 5, 7)
-    writeOne(Seq((s"$root/data/f1.parquet", 0L),
+    lake.parquet(Seq((s"$root/data/f1.parquet", 0L),
       (s"$root/data/f1.parquet", 2L)).toDF("file_path", "pos"),
       "data/pos.parquet")
     // equality delete on field id 1: ids 1 (id-stamped file) and 6
     // (id-less file) — the delete must reach BOTH legs
-    writeOne(IcebergLite.stampFieldIds(
+    lake.parquet(IcebergLite.stampFieldIds(
       Seq(1L, 6L).toDF("id"), Map("id" -> 1)), "data/eq.parquet")
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val p = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
     def manifest(rel: String, path: String, content: Int,
                  eqIds: Seq[Int]): Unit =
-      writeAvro(Seq((1, path)).toDF("status", "file_path")
+      lake.avro(Seq((1, path)).toDF("status", "file_path")
         .select(col("status"),
           lit(null).cast("long").as("sequence_number"),
           struct(col("file_path"), lit(content).as("content"),
@@ -1945,7 +1720,7 @@ class IcebergSpec extends AnyFunSuite {
     manifest("metadata/m-f1.avro", "data/f1.parquet", 0, Nil)
     manifest("metadata/m-pos.avro", "data/pos.parquet", 1, Nil)
     manifest("metadata/m-eq.avro", "data/eq.parquet", 2, Seq(1))
-    writeAvro(Seq(("metadata/m-f0.avro", 0, 1L),
+    lake.avro(Seq(("metadata/m-f0.avro", 0, 1L),
       ("metadata/m-f1.avro", 0, 1L),
       ("metadata/m-pos.avro", 1, 2L),
       ("metadata/m-eq.avro", 1, 2L))
@@ -1978,17 +1753,12 @@ class IcebergSpec extends AnyFunSuite {
     val root = fixture("nmapmixed")
     // one column carries a field id, the other does not
     import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
-    val tmp = s"$root/_tmpm"
-    spark.range(5, 10).select(
-      col("id").as("id",
-        new MetadataBuilder().putLong("parquet.field.id", 1L).build()),
-      (col("id") * 3).as("v", Metadata.empty))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val p = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(p.renameTo(new java.io.File(s"$root/data/f1.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(5, 10).select(
+        col("id").as("id",
+          new MetadataBuilder().putLong("parquet.field.id", 1L).build()),
+        (col("id") * 3).as("v", Metadata.empty)),
+      "data/f1.parquet")
     addMapping(root, """[{"field-id":1,"names":["id"]},""" +
       """{"field-id":2,"names":["v"]}]""")
     val e = intercept[IllegalStateException] {
@@ -2035,16 +1805,11 @@ class IcebergSpec extends AnyFunSuite {
       rm(new java.io.File(root))
       Files.createDirectories(Paths.get(root, "metadata"))
       Files.createDirectories(Paths.get(root, "data"))
-      val tmp = s"$root/_tmp"
-      IcebergLite.stampFieldIds(
-        spark.range(0, 10).select(col("id"), (col("id") * 3).as("v")),
-        Map("id" -> 1, "v" -> 2))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val p = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(p.renameTo(new java.io.File(s"$root/data/f0.parquet")))
-      rm(new java.io.File(tmp))
+      LakeFiles.Local(root).parquet(
+        IcebergLite.stampFieldIds(
+          spark.range(0, 10).select(col("id"), (col("id") * 3).as("v")),
+          Map("id" -> 1, "v" -> 2)),
+        "data/f0.parquet")
       // puffin: leading magic + blob (ordinals 1, 3 dead) + trailing
       // magic (the reader navigates by manifest offsets, per the spec)
       val blob = dvBlob(Seq(1L, 3L))
@@ -2057,15 +1822,8 @@ class IcebergSpec extends AnyFunSuite {
       val puffin = "PFA1".getBytes("UTF-8") ++ blob ++
         "PFA1".getBytes("UTF-8")
       Files.write(Paths.get(root, "data", "dv.puffin"), puffin)
-      def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-        val t = s"$root/_tmpavro"
-        d.coalesce(1).write.mode("overwrite").format(avroFmt).save(t)
-        val f = new java.io.File(t).listFiles()
-          .find(_.getName.startsWith("part-")).get
-        assert(f.renameTo(new java.io.File(s"$root/$rel")))
-        rm(new java.io.File(t))
-      }
-      writeAvro(Seq((1, "data/f0.parquet")).toDF("status", "file_path")
+      val lake = LakeFiles.Local(root)
+      lake.avro(Seq((1, "data/f0.parquet")).toDF("status", "file_path")
         .select(col("status"),
           struct(col("file_path"), lit(0).as("content")).as("data_file")),
         "metadata/m-data.avro")
@@ -2084,12 +1842,12 @@ class IcebergSpec extends AnyFunSuite {
           dvRow("data/dv.puffin")) else Seq(dvRow("data/dv.puffin")))
           .toDF("status", "file_path", "content", "referenced_data_file",
             "content_offset", "content_size_in_bytes", "record_count")
-      writeAvro(dvRows.select(col("status"),
+      lake.avro(dvRows.select(col("status"),
         struct(col("file_path"), col("content"),
           col("referenced_data_file"), col("content_offset"),
           col("content_size_in_bytes"), col("record_count"))
           .as("data_file")), "metadata/m-dv.avro")
-      writeAvro(Seq(("metadata/m-data.avro", 0),
+      lake.avro(Seq(("metadata/m-data.avro", 0),
         ("metadata/m-dv.avro", 1)).toDF("manifest_path", "content"),
         "metadata/snap-1.avro")
       Files.writeString(Paths.get(root, "metadata", "v1.metadata.json"),
@@ -2223,32 +1981,19 @@ class IcebergSpec extends AnyFunSuite {
       rm(new java.io.File(root))
       Files.createDirectories(Paths.get(root, "metadata"))
       Files.createDirectories(Paths.get(root, "data"))
-      def writeAvro(d: org.apache.spark.sql.DataFrame,
-                    rel: String): Unit = {
-        val t = s"$root/_tmpavro"
-        d.coalesce(1).write.mode("overwrite").format(avroFmt).save(t)
-        val f = new java.io.File(t).listFiles()
-          .find(_.getName.startsWith("part-")).get
-        assert(f.renameTo(new java.io.File(s"$root/$rel")))
-        rm(new java.io.File(t))
-      }
+      val lake = LakeFiles.Local(root)
       var nextBase = 0L
       def newDataFile(s: Int): F = {
         val n = 3 + rnd.nextInt(5)
         val rows = (nextBase until nextBase + n).toSeq
         nextBase += 100
         val name = s"data/f${rows.head}.parquet"
-        val tmp = s"$root/_tmp"
-        IcebergLite.stampFieldIds(
-          spark.range(rows.head, rows.head + n)
-            .select(col("id"), (col("id") * 3).as("v")),
-          Map("id" -> 1, "v" -> 2))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val p = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")).get
-        assert(p.renameTo(new java.io.File(s"$root/$name")))
-        rm(new java.io.File(tmp))
+        lake.parquet(
+          IcebergLite.stampFieldIds(
+            spark.range(rows.head, rows.head + n)
+              .select(col("id"), (col("id") * 3).as("v")),
+            Map("id" -> 1, "v" -> 2)),
+          name)
         F(name, rows, Set.empty, None)
       }
       var live = Vector.empty[F]
@@ -2283,7 +2028,7 @@ class IcebergSpec extends AnyFunSuite {
         // per-snapshot manifests reflect the CURRENT state: all live
         // files (plus this commit's status-2 tombstone, which the
         // replay must drop) and every live DV
-        writeAvro((live.map(f => (if (s == 1) 1 else 0, f.name)) ++
+        lake.avro((live.map(f => (if (s == 1) 1 else 0, f.name)) ++
           tombstone.map(t => (2, t))).toDF("status", "file_path")
           .select(col("status"),
             struct(col("file_path"), lit(0).as("content"))
@@ -2291,7 +2036,7 @@ class IcebergSpec extends AnyFunSuite {
         val dvs = live.flatMap(f => f.dv.map(d =>
           (1, d._1, 1, f.name, d._2, d._3, f.dead.size.toLong)))
         if (dvs.nonEmpty)
-          writeAvro(dvs.toDF("status", "file_path", "content",
+          lake.avro(dvs.toDF("status", "file_path", "content",
             "referenced_data_file", "content_offset",
             "content_size_in_bytes", "record_count")
             .select(col("status"), struct(col("file_path"),
@@ -2299,7 +2044,7 @@ class IcebergSpec extends AnyFunSuite {
               col("content_offset"), col("content_size_in_bytes"),
               col("record_count")).as("data_file")),
             s"metadata/m-dv-$s.avro")
-        writeAvro((Seq((s"metadata/m-data-$s.avro", 0)) ++
+        lake.avro((Seq((s"metadata/m-data-$s.avro", 0)) ++
           (if (dvs.nonEmpty) Seq((s"metadata/m-dv-$s.avro", 1))
            else Nil)).toDF("manifest_path", "content"),
           s"metadata/snap-$s.avro")

@@ -10,35 +10,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.graftstream.IcebergStreamSource
 
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.{jstr, rm}
+
 /** Shared append-only Iceberg test-table authoring, used by
   * [[IcebergStreamSpec]] (source) and [[IcebergSinkSpec]] (loop). */
 private[graft] object IcebergStreamFixture {
   import TestSession.spark
 
-  private val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-
-  private def jstr(s: String): String = "\"" + s.replace("\\", "\\\\")
-    .replace("\"", "\\\"") + "\""
-
-  private[graft] def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
-  }
-
   def init(root: String): Unit = {
     Files.createDirectories(Paths.get(root, "metadata"))
     Files.createDirectories(Paths.get(root, "data"))
-  }
-
-  private[graft] def writeAvro(root: String,
-                        df: org.apache.spark.sql.DataFrame,
-                        rel: String): Unit = {
-    val t2 = s"$root/_tmpavro"
-    df.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-    val p = new java.io.File(t2).listFiles()
-      .find(_.getName.startsWith("part-")).get
-    assert(p.renameTo(new java.io.File(s"$root/$rel")))
-    rm(new java.io.File(t2))
   }
 
   /** Snapshot k adds data/bk.parquet (ids [5(k-1), 5(k-1)+5)); its
@@ -47,24 +29,18 @@ private[graft] object IcebergStreamFixture {
   def append(root: String, k: Int,
              manifests: Option[Seq[Int]] = None): Unit = {
     import spark.implicits._
-    val tmp = s"$root/_tmp"
-    graft.sources.IcebergLite.stampFieldIds(
-      spark.range(5L * (k - 1), 5L * (k - 1) + 5)
-        .select(col("id"), (col("id") * 2).as("v")),
-      Map("id" -> 1, "v" -> 2))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/data/b$k.parquet")))
-    rm(new java.io.File(tmp))
-    writeAvro(root,
-      Seq((1, s"data/b$k.parquet")).toDF("status", "file_path")
+    val lake = LakeFiles.Local(root)
+    lake.parquet(
+      graft.sources.IcebergLite.stampFieldIds(
+        spark.range(5L * (k - 1), 5L * (k - 1) + 5)
+          .select(col("id"), (col("id") * 2).as("v")),
+        Map("id" -> 1, "v" -> 2)),
+      s"data/b$k.parquet")
+    lake.avro(Seq((1, s"data/b$k.parquet")).toDF("status", "file_path")
         .select(col("status"),
           struct(col("file_path"), lit(0).as("content")).as("data_file")),
       s"metadata/m$k.avro")
-    writeAvro(root,
-      manifests.getOrElse(1 to k).map(i => (s"metadata/m$i.avro", 0))
+    lake.avro(manifests.getOrElse(1 to k).map(i => (s"metadata/m$i.avro", 0))
         .toDF("manifest_path", "content"), s"metadata/snap-$k.avro")
     val snaps = (1 to k).map(i =>
       s"""{"snapshot-id":$i,"manifest-list":${jstr(s"metadata/snap-$i.avro")}}""")
@@ -90,7 +66,7 @@ private[graft] object IcebergStreamFixture {
   * query. The happy path against real data is q401's DuckDB oracle. */
 class IcebergStreamSpec extends AnyFunSuite {
   import TestSession._
-  import IcebergStreamFixture.{append, rm}
+  import IcebergStreamFixture.append
 
   private val fmt = "org.apache.spark.sql.graftstream.IcebergStreamLite"
 
@@ -147,23 +123,17 @@ class IcebergStreamSpec extends AnyFunSuite {
       graft.sources.IcebergLite.compact(spark, root): Unit
       q.processAllAvailable() // skipped — no wedge, no duplicates
       // snapshot 4: a plain append on TOP of the compacted state
-      val tmp = s"$root/_tmp"
-      graft.sources.IcebergLite.stampFieldIds(
-        spark.range(20, 25).select(col("id"), (col("id") * 2).as("v")),
-        Map("id" -> 1, "v" -> 2))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/data/b4.parquet")))
-      rm(new java.io.File(tmp))
-      IcebergStreamFixture.writeAvro(root,
-        Seq((1, "data/b4.parquet")).toDF("status", "file_path")
+      val lake = LakeFiles.Local(root)
+      lake.parquet(
+        graft.sources.IcebergLite.stampFieldIds(
+          spark.range(20, 25).select(col("id"), (col("id") * 2).as("v")),
+          Map("id" -> 1, "v" -> 2)),
+        "data/b4.parquet")
+      lake.avro(Seq((1, "data/b4.parquet")).toDF("status", "file_path")
           .select(col("status"),
             struct(col("file_path"), lit(0).as("content"))
               .as("data_file")), "metadata/m4.avro")
-      IcebergStreamFixture.writeAvro(root,
-        Seq(("metadata/m-compact-3.avro", 0), ("metadata/m4.avro", 0))
+      lake.avro(Seq(("metadata/m-compact-3.avro", 0), ("metadata/m4.avro", 0))
           .toDF("manifest_path", "content"), "metadata/snap-4.avro")
       implicit val fmts: Formats = DefaultFormats
       val v3 = JsonMethods.parse(Files.readString(

@@ -11,6 +11,9 @@ import org.apache.spark.sql.graft.MetaAvro
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.rm
+
 /** MetaAvro, the driver-side reader of Iceberg/Paimon Avro metadata,
   * against the Spark Avro scan it replaced: for every manifest list,
   * manifest and index manifest the lakehouse fixtures (and any spec
@@ -21,11 +24,6 @@ class MetaAvroSpec extends AnyFunSuite {
   import TestSession._
 
   private val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-
-  private def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
-  }
 
   /** Avro metadata files under `root`: Iceberg's `metadata/` .avro files
     * and everything in Paimon's `manifest/` (lists, manifests, index
@@ -82,14 +80,8 @@ class MetaAvroSpec extends AnyFunSuite {
 
   /** One Spark-written Avro file at `dir/name` (the fixtures' way). */
   private def writeAvro(df: DataFrame, dir: String, name: String): String = {
-    val tmp = s"$dir/_tmpavro"
-    df.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(_.getName.startsWith("part-")).get
-    val out = new java.io.File(s"$dir/$name")
-    assert(part.renameTo(out))
-    rm(new java.io.File(tmp))
-    out.getPath
+    LakeFiles.Local(dir).avro(df, name)
+    new java.io.File(s"$dir/$name").getPath
   }
 
   test("every fixture and spec-table metadata file reads identically " +

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.PaimonLite
+import graft.sources.LakeFiles.rm
 
 /** PaimonStreamSinkLite contract: one snapshot per micro-batch with
   * commitUser/commitIdentifier, exactly-once duplicate-batch skipping
@@ -15,11 +16,6 @@ class PaimonSinkSpec extends AnyFunSuite {
   import TestSession._
 
   private val sinkFmt = "org.apache.spark.sql.graftstream.PaimonStreamSinkLite"
-
-  private def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
-  }
 
   private def fresh(name: String): String = {
     val root = s"/tmp/graft_paimonsinkspec/$name"

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.PaimonLite
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.rm
 
 /** PaimonLite contract: snapshot resolution (explicit id / LATEST
   * hint / highest-N fallback), base+delta manifest-list replay with
@@ -20,11 +22,6 @@ class PaimonSpec extends AnyFunSuite {
 
   private val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
 
-  private def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
-  }
-
   /** Table with bucket-0/f0.parquet (ids 0..4) and f1.parquet (5..9):
     * snapshot 1 delta-adds both; snapshot 2 base-lists both and
     * delta-DELETEs f0 + adds f2 (ids 10..12). LATEST = 2. */
@@ -38,32 +35,20 @@ class PaimonSpec extends AnyFunSuite {
     for (d <- Seq("snapshot", "schema", "manifest", "bucket-0"))
       Files.createDirectories(Paths.get(root, d))
     val df = spark.range(0, 13).select(col("id"), (col("id") * 3).as("v"))
-    def one(filter: org.apache.spark.sql.Column, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      // write REAL bytes for the named extension (orc fixtures must be
-      // genuine ORC; other extensions only exercise refusals)
-      val w = df.filter(filter).coalesce(1).write.mode("overwrite")
-      if (out.endsWith(".orc")) w.orc(tmp) else w.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => (f.getName.endsWith(".parquet") ||
-          f.getName.endsWith(".orc")) && !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/bucket-0/$out")))
-      rm(new java.io.File(tmp))
-    }
+    // write REAL bytes for the named extension (orc fixtures must be
+    // genuine ORC; other extensions only exercise refusals)
+    def one(filter: org.apache.spark.sql.Column, out: String): Unit =
+      LakeFiles.stage(df.filter(filter),
+        if (out.endsWith(".orc")) "orc" else "parquet",
+        new java.io.File(s"$root/_tmp"),
+        new java.io.File(s"$root/bucket-0/$out"))
     one(col("id") < 5, s"f0.$fileExt")
     one(col("id") >= 5 && col("id") < 10, s"f1.$fileExt")
     one(col("id") >= 10, s"f2.$fileExt")
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     import spark.implicits._
     def manifest(rel: String, entries: (Int, String)*): Unit =
-      writeAvro(entries.toSeq.toDF("_KIND", "_fn")
+      lake.avro(entries.toSeq.toDF("_KIND", "_fn")
         .select(col("_KIND"), lit(0).as("_BUCKET"),
           struct(col("_fn").as("_FILE_NAME")).as("_FILE")), rel)
     manifest("manifest/m-add01.avro",
@@ -71,7 +56,7 @@ class PaimonSpec extends AnyFunSuite {
     manifest("manifest/m-del0add2.avro",
       (1, s"f0.$fileExt"), (0, s"f2.$fileExt"))
     def mlist(rel: String, names: String*): Unit =
-      writeAvro(
+      lake.avro(
         if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
         else names.toSeq.toDF("_FILE_NAME"), rel)
     mlist("manifest/ml-empty.avro")
@@ -186,29 +171,16 @@ class PaimonSpec extends AnyFunSuite {
       (0L to 4L).map(i => (i, i * 3)))
     // a LATER write (snapshot 4, sequence 3) still overrides the
     // re-stamped rows — the override contract survives compaction
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val late = Seq((3L, 777L)).toDF("id", "v")
       .select(col("id").as("_KEY_id"), lit(3L).as("_SEQUENCE_NUMBER"),
         lit(2).cast("tinyint").as("_VALUE_KIND"), col("id"), col("v"))
-    val tmp2 = s"$root/_tmpl"
-    late.coalesce(1).write.mode("overwrite").parquet(tmp2)
-    val lp = new java.io.File(tmp2).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(lp.renameTo(new java.io.File(s"$root/bucket-0/kv2.parquet")))
-    rm(new java.io.File(tmp2))
-    writeAvro(Seq((0, "kv2.parquet")).toDF("_KIND", "_fn")
+    lake.parquet(late, "bucket-0/kv2.parquet")
+    lake.avro(Seq((0, "kv2.parquet")).toDF("_KIND", "_fn")
       .select(col("_KIND"), lit(0).as("_BUCKET"),
         struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
       "manifest/m-kv2.avro")
-    writeAvro(Seq("m-kv2.avro").toDF("_FILE_NAME"),
+    lake.avro(Seq("m-kv2.avro").toDF("_FILE_NAME"),
       "manifest/ml-kv2.avro")
     Files.writeString(Paths.get(root, "snapshot", "snapshot-4"),
       s"""{"version":3,"id":4,"schemaId":0,
@@ -366,15 +338,8 @@ class PaimonSpec extends AnyFunSuite {
            kind: Int): org.apache.spark.sql.DataFrame =
       df.select(col("id").as("_KEY_id"), lit(seq).as("_SEQUENCE_NUMBER"),
         lit(kind).cast("tinyint").as("_VALUE_KIND"), col("id"), col("v"))
-    def writeKv(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/bucket-0/$out")))
-      rm(new java.io.File(tmp))
-    }
+    def writeKv(df: org.apache.spark.sql.DataFrame, out: String): Unit =
+      LakeFiles.Local(root).parquet(df, s"bucket-0/$out")
     val base = spark.range(0, 5).select(col("id"), (col("id") * 3).as("v"))
     writeKv(kv(base, 1L, 0), "kv0.parquet")
     writeKv(
@@ -382,23 +347,16 @@ class PaimonSpec extends AnyFunSuite {
         .withColumn("v", lit(100L)), 2L, 2)
         .unionByName(kv(base.filter(col("id") === 0), 2L, 3)),
       "kv1.parquet")
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     import spark.implicits._
     def manifest(rel: String, entries: (Int, String)*): Unit =
-      writeAvro(entries.toSeq.toDF("_KIND", "_fn")
+      lake.avro(entries.toSeq.toDF("_KIND", "_fn")
         .select(col("_KIND"), lit(0).as("_BUCKET"),
           struct(col("_fn").as("_FILE_NAME")).as("_FILE")), rel)
     manifest("manifest/m-kv0.avro", (0, "kv0.parquet"))
     manifest("manifest/m-kv1.avro", (0, "kv1.parquet"))
     def mlist(rel: String, names: String*): Unit =
-      writeAvro(
+      lake.avro(
         if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
         else names.toSeq.toDF("_FILE_NAME"), rel)
     mlist("manifest/ml-empty.avro")
@@ -435,32 +393,19 @@ class PaimonSpec extends AnyFunSuite {
     rm(new java.io.File(root))
     for (d <- Seq("snapshot", "schema", "manifest", "bucket-0"))
       Files.createDirectories(Paths.get(root, d))
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     import spark.implicits._
     kvFiles.zipWithIndex.foreach { case (df, i) =>
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/bucket-0/kv$i.parquet")))
-      rm(new java.io.File(tmp))
-      writeAvro(Seq((0, s"kv$i.parquet")).toDF("_KIND", "_fn")
+      lake.parquet(df, s"bucket-0/kv$i.parquet")
+      lake.avro(Seq((0, s"kv$i.parquet")).toDF("_KIND", "_fn")
         .select(col("_KIND"), lit(0).as("_BUCKET"),
           struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
         s"manifest/m-kv$i.avro")
-      writeAvro((0 until i).map(j => s"m-kv$j.avro") match {
+      lake.avro((0 until i).map(j => s"m-kv$j.avro") match {
         case Nil => Seq.empty[String].toDF("_FILE_NAME")
         case ns  => ns.toDF("_FILE_NAME")
       }, s"manifest/ml-base-$i.avro")
-      writeAvro(Seq(s"m-kv$i.avro").toDF("_FILE_NAME"),
+      lake.avro(Seq(s"m-kv$i.avro").toDF("_FILE_NAME"),
         s"manifest/ml-delta-$i.avro")
       Files.writeString(Paths.get(root, "snapshot", s"snapshot-${i + 1}"),
         s"""{"version":3,"id":${i + 1},"schemaId":0,
@@ -719,15 +664,10 @@ class PaimonSpec extends AnyFunSuite {
     import spark.implicits._
     val root = pkFixture("pktie")
     // rewrite kv1 at sequence 1 — SAME sequence as the inserts
-    val tmp = s"$root/_tmpt"
-    spark.read.parquet(s"$root/bucket-0/kv1.parquet")
-      .withColumn("_SEQUENCE_NUMBER", lit(1L))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/bucket-0/kv1.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.read.parquet(s"$root/bucket-0/kv1.parquet")
+        .withColumn("_SEQUENCE_NUMBER", lit(1L)),
+      "bucket-0/kv1.parquet")
     val got = PaimonLite.read(spark, root)
       .as[(Long, Long)].collect().sorted.toSeq
     // -D(3) > +U(2) > +I(0): id 0 still dies, ids 1,2 still update
@@ -747,15 +687,8 @@ class PaimonSpec extends AnyFunSuite {
     assert(cl2.count() == 0)
     // publish the lookup COMPACT snapshot with the deferred
     // NORMALIZED changelog: -U/+U for ids 1,2 and -D for id 0
-    def writeKv(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/bucket-0/$out")))
-      rm(new java.io.File(tmp))
-    }
+    def writeKv(df: org.apache.spark.sql.DataFrame, out: String): Unit =
+      LakeFiles.Local(root).parquet(df, s"bucket-0/$out")
     def kvRows(rows: Seq[(Long, Long)], kind: Int) =
       rows.toDF("id", "v").select(col("id").as("_KEY_id"),
         lit(2L).as("_SEQUENCE_NUMBER"),
@@ -764,19 +697,12 @@ class PaimonSpec extends AnyFunSuite {
     writeKv(kvRows(Seq((1L, 3L), (2L, 6L)), 1)
       .unionByName(kvRows(Seq((1L, 100L), (2L, 100L)), 2))
       .unionByName(kvRows(Seq((0L, 0L)), 3)), "changelog-3.parquet")
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
-    writeAvro(Seq((0, "changelog-3.parquet")).toDF("_KIND", "_fn")
+    val lake = LakeFiles.Local(root)
+    lake.avro(Seq((0, "changelog-3.parquet")).toDF("_KIND", "_fn")
       .select(col("_KIND"), lit(0).as("_BUCKET"),
         struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
       "manifest/m-cl3.avro")
-    writeAvro(Seq("m-cl3.avro").toDF("_FILE_NAME"),
+    lake.avro(Seq("m-cl3.avro").toDF("_FILE_NAME"),
       "manifest/ml-cl3.avro")
     Files.writeString(Paths.get(root, "snapshot", "snapshot-3"),
       """{"version":3,"id":3,"schemaId":0,
@@ -805,34 +731,20 @@ class PaimonSpec extends AnyFunSuite {
     import spark.implicits._
     val root = pkFixture("clexpire",
       options = """{"changelog-producer":"input"}""")
-    def writeKv(df: org.apache.spark.sql.DataFrame, out: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/bucket-0/$out")))
-      rm(new java.io.File(tmp))
-    }
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    def writeKv(df: org.apache.spark.sql.DataFrame, out: String): Unit =
+      LakeFiles.Local(root).parquet(df, s"bucket-0/$out")
+    val lake = LakeFiles.Local(root)
     def clFile(rows: Seq[(Long, Long)], out: String): Unit =
       writeKv(rows.toDF("id", "v").select(col("id").as("_KEY_id"),
         lit(2L).as("_SEQUENCE_NUMBER"),
         lit(2).cast("tinyint").as("_VALUE_KIND"), col("id"), col("v")),
         out)
     def manifest(rel: String, fn: String): Unit =
-      writeAvro(Seq((0, fn)).toDF("_KIND", "_fn")
+      lake.avro(Seq((0, fn)).toDF("_KIND", "_fn")
         .select(col("_KIND"), lit(0).as("_BUCKET"),
           struct(col("_fn").as("_FILE_NAME")).as("_FILE")), rel)
     def mlist(rel: String, names: String*): Unit =
-      writeAvro(names.toDF("_FILE_NAME"), rel)
+      lake.avro(names.toDF("_FILE_NAME"), rel)
     // snapshot 2 gains an input changelog; snapshot 3 (same state)
     // carries its own
     clFile(Seq((1L, 100L), (2L, 100L)), "changelog-2.parquet")
@@ -920,15 +832,8 @@ class PaimonSpec extends AnyFunSuite {
           | {"id":1,"name":"v","type":"BIGINT"}],
           |"highestFieldId":1,"partitionKeys":[],"primaryKeys":[],
           |"options":{"file.format":"parquet"}}""".stripMargin)
-      def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-        val tmp = s"$root/_tmpavro"
-        d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.startsWith("part-")).get
-        assert(part.renameTo(new java.io.File(s"$root/$rel")))
-        rm(new java.io.File(tmp))
-      }
-      writeAvro(Seq.empty[String].toDF("_FILE_NAME"),
+      val lake = LakeFiles.Local(root)
+      lake.avro(Seq.empty[String].toDF("_FILE_NAME"),
         "manifest/ml-empty.avro")
       // model: rows per snapshot id (cumulative appends; a COMPACT
       // snapshot repeats its predecessor's rows), live = newest
@@ -942,9 +847,9 @@ class PaimonSpec extends AnyFunSuite {
                   kind: String): Unit = {
         val bs = s"ml-base-$snapId.avro"
         val ds = s"ml-delta-$snapId.avro"
-        writeAvro(if (base.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
+        lake.avro(if (base.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
           else base.toDF("_FILE_NAME"), s"manifest/$bs")
-        writeAvro(if (delta.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
+        lake.avro(if (delta.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
           else delta.toDF("_FILE_NAME"), s"manifest/$ds")
         Files.writeString(Paths.get(root, "snapshot", s"snapshot-$snapId"),
           s"""{"version":3,"id":$snapId,"schemaId":0,
@@ -983,16 +888,11 @@ class PaimonSpec extends AnyFunSuite {
             val rows = (nextKey until nextKey + n).map(k => (k, k * 7))
             nextKey += 100
             val fn = s"f$snapId.parquet"
-            val tmp = s"$root/_tmp"
-            rows.toDF("id", "v").coalesce(1)
-              .write.mode("overwrite").parquet(tmp)
-            val pf = new java.io.File(tmp).listFiles()
-              .find(f => f.getName.endsWith(".parquet") &&
-                !f.getName.startsWith(".")).get
-            assert(pf.renameTo(new java.io.File(s"$root/bucket-0/$fn")))
-            rm(new java.io.File(tmp))
+            lake.parquet(
+              rows.toDF("id", "v"),
+              s"bucket-0/$fn")
             val mf = s"m$snapId.avro"
-            writeAvro(Seq((0, fn)).toDF("_KIND", "_fn")
+            lake.avro(Seq((0, fn)).toDF("_KIND", "_fn")
               .select(col("_KIND"), lit(0).as("_BUCKET"),
                 struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
               s"manifest/$mf")
@@ -1263,15 +1163,8 @@ class PaimonSpec extends AnyFunSuite {
         |"highestFieldId":0,"partitionKeys":[],"primaryKeys":[],
         |"options":{}}""".stripMargin)
     // one empty snapshot so snapshot() resolves
-    def writeAvro0(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$rootAo/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$rootAo/$rel")))
-      rm(new java.io.File(tmp))
-    }
-    writeAvro0(Seq.empty[String].toDF("_FILE_NAME"),
+    val lake = LakeFiles.Local(rootAo)
+    lake.avro(Seq.empty[String].toDF("_FILE_NAME"),
       "manifest/ml-0.avro")
     Files.writeString(Paths.get(rootAo, "snapshot", "snapshot-1"),
       """{"version":3,"id":1,"schemaId":0,
@@ -1292,28 +1185,14 @@ class PaimonSpec extends AnyFunSuite {
                             kv: org.apache.spark.sql.DataFrame,
                             baseId: Long, baseList: String): Unit = {
     import spark.implicits._
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     val newId = baseId + 1
-    val tmp = s"$root/_tmpl"
-    kv.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val lp = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(lp.renameTo(
-      new java.io.File(s"$root/bucket-0/kv-late-$newId.parquet")))
-    rm(new java.io.File(tmp))
-    writeAvro(Seq((0, s"kv-late-$newId.parquet")).toDF("_KIND", "_fn")
+    lake.parquet(kv, s"bucket-0/kv-late-$newId.parquet")
+    lake.avro(Seq((0, s"kv-late-$newId.parquet")).toDF("_KIND", "_fn")
       .select(col("_KIND"), lit(0).as("_BUCKET"),
         struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
       s"manifest/m-late-$newId.avro")
-    writeAvro(Seq(s"m-late-$newId.avro").toDF("_FILE_NAME"),
+    lake.avro(Seq(s"m-late-$newId.avro").toDF("_FILE_NAME"),
       s"manifest/ml-late-$newId.avro")
     Files.writeString(Paths.get(root, "snapshot", s"snapshot-$newId"),
       s"""{"version":3,"id":$newId,"schemaId":0,
@@ -1358,7 +1237,6 @@ class PaimonSpec extends AnyFunSuite {
       out.close()
       blob.length
     }.getOrElse(0)
-    val tmp = s"$root/_tmpidx"
     val entry = Seq((0, indexType, "index-x-0"))
       .toDF("_KIND", "_it", "_fn")
     val withRanges = positions match {
@@ -1374,13 +1252,7 @@ class PaimonSpec extends AnyFunSuite {
               .as("_CARDINALITY")))
             .as("_DELETIONS_VECTORS_RANGES")).as("_INDEX_FILE"))
     }
-    withRanges.coalesce(1).write.mode("overwrite")
-      .format("org.apache.spark.sql.avro.AvroFileFormat").save(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(_.getName.startsWith("part-")).get
-    assert(part.renameTo(
-      new java.io.File(s"$root/manifest/idx-$name.avro")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).avro(withRanges, s"manifest/idx-$name.avro")
     val snapPath = java.nio.file.Paths.get(root, "snapshot",
       "snapshot-2")
     val snapJson = java.nio.file.Files.readString(snapPath)
@@ -1479,14 +1351,9 @@ class PaimonSpec extends AnyFunSuite {
   test("PK data file without KeyValue columns refuses loudly") {
     val root = pkFixture("pkbad")
     // overwrite kv0 with a PLAIN (id, v) parquet — no system columns
-    val tmp = s"$root/_tmpb"
-    spark.range(0, 5).select(col("id"), (col("id") * 3).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/bucket-0/kv0.parquet")))
-    rm(new java.io.File(tmp))
+    LakeFiles.Local(root).parquet(
+      spark.range(0, 5).select(col("id"), (col("id") * 3).as("v")),
+      "bucket-0/kv0.parquet")
     val e = intercept[IllegalStateException] {
       PaimonLite.read(spark, root, Some(1L))
     }
@@ -1563,37 +1430,25 @@ class PaimonSpec extends AnyFunSuite {
     val df = spark.range(0, 10).select(col("id"), (col("id") * 3).as("v"))
     def one(filter: org.apache.spark.sql.Column, dirName: String): Unit = {
       Files.createDirectories(Paths.get(root, s"p=$dirName", "bucket-0"))
-      val tmp = s"$root/_tmp"
-      df.filter(filter).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(
-        s"$root/p=$dirName/bucket-0/data.parquet")))
-      rm(new java.io.File(tmp))
+      LakeFiles.Local(root).parquet(
+        df.filter(filter),
+        s"p=$dirName/bucket-0/data.parquet")
     }
     one(col("id") < 5, "a")
     one(col("id") >= 5 && col("id") < 8,
       if (withNull) "__DEFAULT_PARTITION__" else "b")
     one(col("id") >= 8, "a%3Ab")
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     import spark.implicits._
-    writeAvro(Seq[Any]("a", if (withNull) null else "b", "a:b")
+    lake.avro(Seq[Any]("a", if (withNull) null else "b", "a:b")
       .map(v => (0, "data.parquet",
         BinaryRowCodec.encode(Seq(v), Seq(StringType))))
       .toDF("_KIND", "_fn", "_PARTITION")
       .select(col("_KIND"), col("_PARTITION"), lit(0).as("_BUCKET"),
         struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
       "manifest/m-part.avro")
-    writeAvro(Seq.empty[String].toDF("_FILE_NAME"), "manifest/ml-e.avro")
-    writeAvro(Seq("m-part.avro").toDF("_FILE_NAME"), "manifest/ml-p.avro")
+    lake.avro(Seq.empty[String].toDF("_FILE_NAME"), "manifest/ml-e.avro")
+    lake.avro(Seq("m-part.avro").toDF("_FILE_NAME"), "manifest/ml-p.avro")
     Files.writeString(Paths.get(root, "schema", "schema-0"),
       """{"id":0,"fields":[
         | {"id":0,"name":"id","type":"BIGINT"},
@@ -1643,34 +1498,21 @@ class PaimonSpec extends AnyFunSuite {
     def writeKv(df: org.apache.spark.sql.DataFrame, st: String,
                 name: String): Unit = {
       Files.createDirectories(Paths.get(root, s"p=$st", "bucket-0"))
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/p=$st/bucket-0/$name")))
-      rm(new java.io.File(tmp))
+      LakeFiles.Local(root).parquet(df, s"p=$st/bucket-0/$name")
     }
     writeKv(kv(Seq((0L, 1L), (1L, 2L)), 1L, 0), "a", "kv0.parquet")
     writeKv(kv(Seq((1L, 100L)), 2L, 2), "a", "kv1.parquet")
     writeKv(kv(Seq((0L, 10L), (1L, 20L)), 1L, 0), "b", "kv0.parquet")
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     def enc(v: String) = BinaryRowCodec.encode(Seq(v), Seq(StringType))
-    writeAvro(Seq((0, "kv0.parquet", enc("a")), (0, "kv1.parquet", enc("a")),
+    lake.avro(Seq((0, "kv0.parquet", enc("a")), (0, "kv1.parquet", enc("a")),
       (0, "kv0.parquet", enc("b")))
       .toDF("_KIND", "_fn", "_PARTITION")
       .select(col("_KIND"), col("_PARTITION"), lit(0).as("_BUCKET"),
         struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
       "manifest/m-kv.avro")
-    writeAvro(Seq.empty[String].toDF("_FILE_NAME"), "manifest/ml-e.avro")
-    writeAvro(Seq("m-kv.avro").toDF("_FILE_NAME"), "manifest/ml-kv.avro")
+    lake.avro(Seq.empty[String].toDF("_FILE_NAME"), "manifest/ml-e.avro")
+    lake.avro(Seq("m-kv.avro").toDF("_FILE_NAME"), "manifest/ml-kv.avro")
     Files.writeString(Paths.get(root, "schema", "schema-0"),
       """{"id":0,"fields":[
         | {"id":0,"name":"id","type":"BIGINT"},
@@ -1736,38 +1578,25 @@ class PaimonSpec extends AnyFunSuite {
     rm(new java.io.File(root))
     for (d <- Seq("snapshot", "schema", "manifest"))
       Files.createDirectories(Paths.get(root, d))
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val tmp = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(part.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(tmp))
-    }
+    val lake = LakeFiles.Local(root)
     // changelog KeyValue files under their partition dirs: p=a holds
     // an insert and a delete, p=b an update-after
     def cl(pv: String, rows: Seq[(Int, Long, Long)]): Unit = {
       Files.createDirectories(Paths.get(root, s"p=$pv", "bucket-0"))
-      val tmp = s"$root/_tmp"
-      rows.toDF("_VALUE_KIND", "id", "v")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(
-        new java.io.File(s"$root/p=$pv/bucket-0/cl.parquet")))
-      rm(new java.io.File(tmp))
+      lake.parquet(
+        rows.toDF("_VALUE_KIND", "id", "v"),
+        s"p=$pv/bucket-0/cl.parquet")
     }
     cl("a", Seq((0, 0L, 1L), (3, 1L, 2L)))
     cl("b", Seq((2, 0L, 9L)))
-    writeAvro(Seq("a", "b").map(v => (0, "cl.parquet",
+    lake.avro(Seq("a", "b").map(v => (0, "cl.parquet",
       BinaryRowCodec.encode(Seq(v), Seq(StringType))))
       .toDF("_KIND", "_fn", "_PARTITION")
       .select(col("_KIND"), col("_PARTITION"), lit(0).as("_BUCKET"),
         struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
       "manifest/m-cl.avro")
-    writeAvro(Seq.empty[String].toDF("_FILE_NAME"), "manifest/ml-e.avro")
-    writeAvro(Seq("m-cl.avro").toDF("_FILE_NAME"), "manifest/ml-cl.avro")
+    lake.avro(Seq.empty[String].toDF("_FILE_NAME"), "manifest/ml-e.avro")
+    lake.avro(Seq("m-cl.avro").toDF("_FILE_NAME"), "manifest/ml-cl.avro")
     Files.writeString(Paths.get(root, "schema", "schema-0"),
       """{"id":0,"fields":[
         | {"id":0,"name":"id","type":"BIGINT"},
@@ -1808,28 +1637,17 @@ class PaimonSpec extends AnyFunSuite {
   test("a snapshot mixing parquet and orc refuses loudly") {
     val root = fixture("mixed")
     // rewrite f2 as real ORC under an .orc name and re-list it
-    val tmp = s"$root/_tmpm"
-    spark.range(10, 13).select(col("id"), (col("id") * 3).as("v"))
-      .coalesce(1).write.mode("overwrite").orc(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".orc") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/bucket-0/f2.orc")))
-    rm(new java.io.File(tmp))
+    LakeFiles.stage(
+      spark.range(10, 13).select(col("id"), (col("id") * 3).as("v")),
+      "orc", new java.io.File(s"$root/_tmpm"),
+      new java.io.File(s"$root/bucket-0/f2.orc"))
     import spark.implicits._
-    def writeAvro(d: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val t2 = s"$root/_tmpavro"
-      d.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-      val p2 = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(p2.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(t2))
-    }
-    writeAvro(Seq((0, "f2.orc")).toDF("_KIND", "_fn")
+    val lake = LakeFiles.Local(root)
+    lake.avro(Seq((0, "f2.orc")).toDF("_KIND", "_fn")
       .select(col("_KIND"), lit(0).as("_BUCKET"),
         struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
       "manifest/m-orc.avro")
-    writeAvro(Seq("m-add01.avro", "m-orc.avro").toDF("_FILE_NAME"),
+    lake.avro(Seq("m-add01.avro", "m-orc.avro").toDF("_FILE_NAME"),
       "manifest/ml-mixed.avro")
     Files.writeString(Paths.get(root, "snapshot", "snapshot-3"),
       """{"version":3,"id":3,"schemaId":0,

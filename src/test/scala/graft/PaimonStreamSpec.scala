@@ -8,17 +8,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.LakeFiles
+import graft.sources.LakeFiles.rm
+
 /** Shared append-only Paimon test-table authoring, used by
   * [[PaimonStreamSpec]] (source) and [[PaimonSinkSpec]] (loop). */
 private[graft] object PaimonStreamFixture {
   import TestSession.spark
-
-  private val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-
-  private[graft] def rm(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-    p.delete(): Unit
-  }
 
   /** Lay out an empty table (dirs + schema-0) at `root`. */
   def init(root: String): Unit = {
@@ -32,39 +28,22 @@ private[graft] object PaimonStreamFixture {
         |"options":{}}""".stripMargin)
   }
 
-  private def writeAvro(root: String,
-                        df: org.apache.spark.sql.DataFrame,
-                        rel: String): Unit = {
-    val t2 = s"$root/_tmpavro"
-    df.coalesce(1).write.mode("overwrite").format(avroFmt).save(t2)
-    val p = new java.io.File(t2).listFiles()
-      .find(_.getName.startsWith("part-")).get
-    assert(p.renameTo(new java.io.File(s"$root/$rel")))
-    rm(new java.io.File(t2))
-  }
-
   /** Snapshot k: base = m1..m(k-1), delta adds fk.parquet
     * (ids [5(k-1), 5(k-1)+5)); `deltaKind` lets a test author a
     * DELETE entry instead. Call init() first for k == 1. */
   def append(root: String, k: Int, deltaKind: Int = 0): Unit = {
     import spark.implicits._
-    val tmp = s"$root/_tmp"
-    spark.range(5L * (k - 1), 5L * (k - 1) + 5)
-      .select(col("id"), (col("id") * 2).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".")).get
-    assert(part.renameTo(new java.io.File(s"$root/bucket-0/f$k.parquet")))
-    rm(new java.io.File(tmp))
-    writeAvro(root,
-      Seq((deltaKind, s"f$k.parquet")).toDF("_KIND", "_fn")
+    val lake = LakeFiles.Local(root)
+    lake.parquet(
+      spark.range(5L * (k - 1), 5L * (k - 1) + 5)
+        .select(col("id"), (col("id") * 2).as("v")),
+      s"bucket-0/f$k.parquet")
+    lake.avro(Seq((deltaKind, s"f$k.parquet")).toDF("_KIND", "_fn")
         .select(col("_KIND"), lit(0).as("_BUCKET"),
           struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
       s"manifest/m$k.avro")
     def mlist(rel: String, names: Seq[String]): Unit =
-      writeAvro(root,
-        if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
+      lake.avro(if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
         else names.toDF("_FILE_NAME"), rel)
     mlist(s"manifest/ml-base-$k.avro", (1 until k).map(i => s"m$i.avro"))
     mlist(s"manifest/ml-delta-$k.avro", Seq(s"m$k.avro"))
@@ -87,7 +66,7 @@ private[graft] object PaimonStreamFixture {
   * path against real data is q402's DuckDB oracle. */
 class PaimonStreamSpec extends AnyFunSuite {
   import TestSession._
-  import PaimonStreamFixture.{append, rm}
+  import PaimonStreamFixture.append
 
   private val fmt = "org.apache.spark.sql.graftstream.PaimonStreamLite"
 
@@ -159,35 +138,21 @@ class PaimonStreamSpec extends AnyFunSuite {
         | {"id":2,"name":"p","type":"STRING"}],
         |"highestFieldId":2,"partitionKeys":["p"],"primaryKeys":[],
         |"options":{}}""".stripMargin)
-    def writeAvro(df: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val t2 = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite")
-        .format("org.apache.spark.sql.avro.AvroFileFormat").save(t2)
-      val p = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(t2))
-    }
+    val lake = LakeFiles.Local(root)
     def appendPart(k: Int, pVal: String): Unit = {
       Files.createDirectories(Paths.get(root, s"p=$pVal", "bucket-0"))
-      val tmp = s"$root/_tmp"
-      spark.range(5L * (k - 1), 5L * (k - 1) + 5)
-        .select(col("id"), (col("id") * 2).as("v"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(
-        new java.io.File(s"$root/p=$pVal/bucket-0/f$k.parquet")))
-      rm(new java.io.File(tmp))
-      writeAvro(Seq((0, s"f$k.parquet",
+      lake.parquet(
+        spark.range(5L * (k - 1), 5L * (k - 1) + 5)
+          .select(col("id"), (col("id") * 2).as("v")),
+        s"p=$pVal/bucket-0/f$k.parquet")
+      lake.avro(Seq((0, s"f$k.parquet",
         BinaryRowCodec.encode(Seq(pVal), Seq(StringType))))
         .toDF("_KIND", "_fn", "_PARTITION")
         .select(col("_KIND"), col("_PARTITION"), lit(0).as("_BUCKET"),
           struct(col("_fn").as("_FILE_NAME")).as("_FILE")),
         s"manifest/m$k.avro")
       def mlist(rel: String, names: Seq[String]): Unit =
-        writeAvro(
+        lake.avro(
           if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
           else names.toDF("_FILE_NAME"), rel)
       mlist(s"manifest/ml-base-$k.avro", (1 until k).map(i => s"m$i.avro"))
@@ -236,15 +201,8 @@ class PaimonStreamSpec extends AnyFunSuite {
         | {"id":1,"name":"v","type":"BIGINT"}],
         |"highestFieldId":1,"partitionKeys":[],"primaryKeys":["id"],
         |"options":{"changelog-producer":"input"}}""".stripMargin)
-    def writeKv(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = s"$root/_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".")).get
-      assert(part.renameTo(new java.io.File(s"$root/bucket-0/$name")))
-      rm(new java.io.File(tmp))
-    }
+    def writeKv(df: org.apache.spark.sql.DataFrame, name: String): Unit =
+      LakeFiles.Local(root).parquet(df, s"bucket-0/$name")
     def kv(df: org.apache.spark.sql.DataFrame, seq: Long,
            kind: Int): org.apache.spark.sql.DataFrame =
       df.select(col("id").as("_KEY_id"),
@@ -258,24 +216,16 @@ class PaimonStreamSpec extends AnyFunSuite {
       .unionByName(kv(base.filter(col("id") === 0), 2L, 3))
     writeKv(ups, "kv2.parquet")
     writeKv(ups, "changelog-2.parquet")
-    def writeAvro(df: org.apache.spark.sql.DataFrame, rel: String): Unit = {
-      val t2 = s"$root/_tmpavro"
-      df.coalesce(1).write.mode("overwrite")
-        .format("org.apache.spark.sql.avro.AvroFileFormat").save(t2)
-      val p = new java.io.File(t2).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      assert(p.renameTo(new java.io.File(s"$root/$rel")))
-      rm(new java.io.File(t2))
-    }
+    val lake = LakeFiles.Local(root)
     def manifest(rel: String, fn: String): Unit =
-      writeAvro(Seq((0, fn)).toDF("_KIND", "_fn")
+      lake.avro(Seq((0, fn)).toDF("_KIND", "_fn")
         .select(col("_KIND"), lit(0).as("_BUCKET"),
           struct(col("_fn").as("_FILE_NAME")).as("_FILE")), rel)
     manifest("manifest/m1.avro", "kv1.parquet")
     manifest("manifest/m2.avro", "kv2.parquet")
     manifest("manifest/mcl.avro", "changelog-2.parquet")
     def mlist(rel: String, names: String*): Unit =
-      writeAvro(
+      lake.avro(
         if (names.isEmpty) Seq.empty[String].toDF("_FILE_NAME")
         else names.toSeq.toDF("_FILE_NAME"), rel)
     mlist("manifest/ml-empty.avro")

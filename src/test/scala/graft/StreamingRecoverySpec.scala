@@ -25,10 +25,8 @@ class StreamingRecoverySpec extends AnyFunSuite {
   private def addFile(df: org.apache.spark.sql.DataFrame, dir: Path,
                       name: String): Unit = {
     val tmp = Files.createTempDirectory("graft_ckpt_stage")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = Files.list(tmp).filter(_.getFileName.toString
-      .endsWith(".parquet")).findFirst().get()
-    Files.move(part, dir.resolve(name))
+    graft.sources.LakeFiles.stage(df, "parquet", tmp.toFile,
+      dir.resolve(name).toFile)
   }
 
   test("stateful aggregation restarts from its checkpoint: state " +
