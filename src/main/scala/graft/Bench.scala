@@ -4,8 +4,12 @@ import java.util.Locale
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.LakeFiles.jstr
+
 /** Benchmark main (driver contract): runs the headline query set on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
+  * SPARK_GRAFT_ONLY=a,b,... runs those exact query names instead, in
+  * that order, from all of `SparkEntry.queries`.
   *
   * A warmup pass (flagship query, executed twice) absorbs JVM/codegen/
   * file-index startup so per-query numbers measure the plans, not the
@@ -98,12 +102,13 @@ object Bench {
   /** Drain the ContextCleaner so no prior query's cleanup I/O bills the
     * next timed region. A GC enqueues the dead weak refs; the cleaner
     * thread then pops each one off `referenceBuffer` and (in blocking
-    * mode, set above) waits for the shuffle files / broadcast blocks to
-    * actually be removed before taking the next. We watch the buffer
-    * size via reflection until it stops shrinking (3 consecutive stable
-    * 50 ms samples, ≤2 s total — the buffer also holds refs for still-
-    * live objects such as cached tables, so "stable", not "empty"), then
-    * GC once more for the refs freed by the cleanup itself.
+    * mode, which main sets) waits for the shuffle files / broadcast
+    * blocks to actually be removed before taking the next. We watch the
+    * buffer size via reflection until it stops shrinking (3 consecutive
+    * stable 50 ms samples, ≤2 s total — the buffer also holds refs for
+    * still-live objects such as cached tables, so "stable", not
+    * "empty"), then GC once more for the refs freed by the cleanup
+    * itself.
     */
   private def quiesceCleaner(spark: SparkSession): Unit = {
     System.gc()
@@ -140,28 +145,57 @@ object Bench {
   def jsonLine(results: Seq[(String, Double)], failed: Seq[String],
                sfDir: String): String = {
     def secs(v: Double) = String.format(Locale.ROOT, "%.3f", Double.box(v))
-    def str(v: String) = "\"" + v.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case c if c < ' ' => String.format(Locale.ROOT, "\\u%04x", Int.box(c))
-      case c            => c.toString
-    } + "\""
-    val qs = results.map { case (k, v) => s"${str(k)}:${secs(v)}" }
+    val qs = results.map { case (k, v) => s"${jstr(k)}:${secs(v)}" }
       .mkString("{", ",", "}")
     val total = secs(results.map(_._2).sum)
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""failed":${failed.map(str).mkString("[", ",", "]")},""" +
-      s""""sf":${str(sfDir)}}"""
+      s""""failed":${failed.map(jstr).mkString("[", ",", "]")},""" +
+      s""""sf":${jstr(sfDir)}}"""
+  }
+
+  /** The names to time: the headline roster, or the comma-separated
+    * exact names of `only` in the given order. */
+  def roster(only: Option[String]): Seq[String] = only.fold(headline)(
+    _.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+
+  /** Times each name of `names` and returns the JSON line. Two timed
+    * passes per query, keep the MIN: a single pass is at the mercy of
+    * whatever else the machine is doing (round 6 committed a 69.9 s
+    * artifact that re-measured at 27.2 s on a quiet box); the min of two
+    * runs discards one-off scheduler/IO stalls while still measuring a
+    * cold-cache-realistic plan (parquet footers and JIT are already warm
+    * from the warmup pass, identically for both). A name with no query
+    * is listed as failed. */
+  def run(spark: SparkSession, sfDir: String, names: Seq[String]): String = {
+    val runs = names.map { name =>
+      def once(): Double = {
+        // Quiesce INSIDE once(), before the clock starts: Spark frees
+        // shuffle files / broadcast / checkpoint blocks via weak
+        // references, so prior queries' cleanup only begins after a
+        // GC, and (without draining) the deletion work runs
+        // asynchronously DURING the next timed pass. gc → settle →
+        // gc, between passes too, all outside the timed region.
+        quiesceCleaner(spark)
+        val t0 = System.nanoTime()
+        SparkEntry.queries(name)(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      }
+      // a query that throws has no time: it is reported as failed,
+      // never as however long it took to throw
+      name -> (try Right(math.min(once(), once()))
+        catch { case e: Throwable =>
+          System.err.println(s"[Bench] FAILED $name: $e")
+          Left(e)
+        })
+    }
+    val results = runs.collect { case (n, Right(secs)) => n -> secs }
+    val failed = runs.collect { case (n, Left(_)) => n }
+    jsonLine(results, failed, sfDir)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.local()
       // Shuffle-file removal is async by default: the ContextCleaner
       // fires removeShuffle and returns, so the disk I/O for a heavy
       // query's shuffle files lands inside the NEXT query's timed
@@ -171,9 +205,6 @@ object Bench {
       // lets quiesce() below observe actual completion.
       .config("spark.cleaner.referenceTracking.blocking", "true")
       .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -187,43 +218,7 @@ object Bench {
     try SparkEntry.queries("q85_stream_tumbling")(spark, sfDir).count()
     catch { case _: Throwable => }
 
-    // SPARK_GRAFT_ONLY=<prefix>: bench only matching queries (local
-    // iteration; the driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-    // Two timed passes per query, keep the MIN: a single pass is at the
-    // mercy of whatever else the machine is doing (round 6 committed a
-    // 69.9 s artifact that re-measured at 27.2 s on a quiet box); the
-    // min of two runs discards one-off scheduler/IO stalls while still
-    // measuring a cold-cache-realistic plan (parquet footers and JIT
-    // are already warm from the warmup pass, identically for both).
-    val runs = headline
-      .filter(n => only.forall(n.startsWith))
-      .flatMap { name =>
-      SparkEntry.queries.get(name).map { fn =>
-        def once(): Double = {
-          // Quiesce INSIDE once(), before the clock starts: Spark frees
-          // shuffle files / broadcast / checkpoint blocks via weak
-          // references, so prior queries' cleanup only begins on a
-          // driver GC, and (without draining) the deletion work runs
-          // asynchronously DURING the next timed pass. gc → settle →
-          // gc, between passes too, all outside the timed region.
-          quiesceCleaner(spark)
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        // a query that throws has no time: it is reported as failed,
-        // never as however long it took to throw
-        name -> (try Right(math.min(once(), once()))
-          catch { case e: Throwable =>
-            System.err.println(s"[Bench] FAILED $name: $e")
-            Left(e)
-          })
-      }
-    }
-    val results = runs.collect { case (n, Right(secs)) => n -> secs }
-    val failed = runs.collect { case (n, Left(_)) => n }
-    println(jsonLine(results, failed, sfDir))
+    println(run(spark, sfDir, roster(sys.env.get("SPARK_GRAFT_ONLY"))))
     spark.stop()
   }
 }

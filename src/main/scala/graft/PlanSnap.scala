@@ -5,9 +5,9 @@ import java.nio.file.{Files, Paths}
 /** Dev-only plan snapshotter for the optimization rounds: writes the
   * `.explain("formatted")` output of each named query to
   * plans/<round>/<query>_<tag>.txt — the before/after plan evidence the
-  * optimization deliverable asks for. Unlike PlanDump (which appends the
-  * post-AQE plan of the whole roster into one PLANS.md), this emits one
-  * file per query so a reviewer can diff `_before` vs `_after` directly.
+  * optimization deliverable asks for, one file per query so `_before`
+  * and `_after` diff directly. With GRAFT_PLANSNAP_EXEC=1
+  * it writes the executed (post-AQE) plans, as PLANS.md holds them.
   *
   * Usage: runMain graft.PlanSnap <sfDir> <outDir> <tag> <q1,q2,...>
   */
@@ -17,16 +17,7 @@ object PlanSnap {
     val outDir = args(1)
     val tag = args(2)
     val names = args(3).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plansnap")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     // GRAFT_PLANSNAP_EXEC=1: execute the query first and snapshot the

@@ -1,22 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.SimHash64
 import graft.functions.TextOps.tokens
 
-/** Dev-only pin regenerator: prints the q76 checksum row at sf0.01.
-  * Not part of the library surface; see Pipeline.scala's pinned
+/** Dev-only pin regenerator: prints the pinned literals the oracle
+  * compares against at sf0.01 — the q76 checksum row and the q129,
+  * q133, q78 and q170b id sets. Not part of the library surface; see
+  * Pipeline.scala, Pipeline3.scala and Similarity.scala's pinned
   * literals for where the output goes. */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-scratch")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val row = Tables.df(spark, dir, "documents")

@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.sources.LakeFiles.jstr
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,24 +13,7 @@ object Verify {
       case Array(a, b)    => (a, b, None)
       case Array(a, b, c) => (a, b, Some(c))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep catalog state out of the launch CWD even when run outside
-      // sbt (whose javaOptions normally pin these)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      // r20 post-mortem: two queries vanished from the driver's verify
-      // (q392/q497) yet pass on the identical tree, fresh /tmp, same
-      // cpus — the only uncontrolled variable is co-tenant load, and a
-      // loaded box can push a broadcast build past the 300 s default
-      // and throw. The dump is a correctness surface, not a timed one:
-      // give slow-box broadcasts 30 min before declaring failure.
-      .config("spark.sql.broadcastTimeout", "1800")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Per-query failures must be VISIBLE to the driver: stderr is
@@ -62,23 +47,13 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
     if (errors.nonEmpty)
       System.err.println(

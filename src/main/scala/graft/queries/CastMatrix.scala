@@ -173,11 +173,7 @@ object CastMatrix extends QueryModule {
   /** Dev-only pin regenerator: prints each cell's actual value plus
     * ready-to-paste pin source for any Spark-version drift. */
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GraftSession.local(4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     resultDf(s).collect().foreach { r =>
       println(s"PIN ${r.getInt(0)} -> \"${r.getString(2)}\",  // ${r.getString(1)}")

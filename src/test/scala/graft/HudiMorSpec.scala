@@ -186,26 +186,12 @@ class HudiMorSpec extends AnyFunSuite {
       .select("id", "v").as[(Long, Long)].collect().sorted.toSeq
     // count jobs DURING the compaction
     val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
+    val instant = listening(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(): Unit
       }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val instant =
-      try {
-        val i = HudiMorLite.compactLogs(spark, root)
-        // listener events are async — let the bus drain
-        var last = -1
-        var stable = 0
-        while (stable < 5) {
-          Thread.sleep(100)
-          if (jobs.get() == last) stable += 1
-          else { last = jobs.get(); stable = 0 }
-        }
-        i
-      } finally spark.sparkContext.removeSparkListener(listener)
+    })(HudiMorLite.compactLogs(spark, root))
     // the OLD per-slice loop submitted >= 2 jobs per slice (24+ here);
     // the one-rewrite shape is a small constant independent of slices
     assert(jobs.get() <= 15,

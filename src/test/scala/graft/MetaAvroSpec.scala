@@ -160,22 +160,13 @@ class MetaAvroSpec extends AnyFunSuite {
   /** Call sites of the Spark jobs `body` launches. */
   private def jobsDuring(body: => Unit): List[String] = {
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         jobs.add(js.stageInfos.headOption.map(_.details)
           .getOrElse(s"job ${js.jobId}")): Unit
       }
-    }
-    def drain(): Unit = {
-      val sc = spark.sparkContext
-      // SparkContext.listenerBus is private[spark], public in bytecode
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus): Unit
-    }
-    drain()
-    spark.sparkContext.addSparkListener(listener)
-    try { body; drain(); jobs.asScala.toList }
-    finally spark.sparkContext.removeSparkListener(listener)
+    })(body)
+    jobs.asScala.toList
   }
 
   test("resolving q391/q397/q406 on authored fixtures launches no Spark " +

@@ -13,12 +13,11 @@ class MetricsSpec extends AnyFunSuite {
   import TestSession._
 
   /** Run a query and return (input bytes read, shuffle bytes written),
-    * summed over its tasks. Listener events are posted async, so poll
-    * until the counters go quiet. */
+    * summed over its tasks. */
   private def measured(q: String): (Long, Long) = {
     val read = new AtomicLong(0L)
     val shuf = new AtomicLong(0L)
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
         if (m != null) {
@@ -26,18 +25,7 @@ class MetricsSpec extends AnyFunSuite {
           shuf.addAndGet(m.shuffleWriteMetrics.bytesWritten)
         }
       }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      SparkEntry.queries(q)(spark, sf).collect()
-      var prev = -1L
-      var spins = 0
-      while (prev != read.get() + shuf.get() && spins < 40) {
-        prev = read.get() + shuf.get()
-        Thread.sleep(100)
-        spins += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    })(SparkEntry.queries(q)(spark, sf).collect())
     (read.get(), shuf.get())
   }
 

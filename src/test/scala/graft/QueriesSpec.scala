@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.SparkListener
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,26 +8,35 @@ import org.scalatest.funsuite.AnyFunSuite
   * Deep value checks run via scripts/check.py (DuckDB oracle replica). */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // local(4): every plan golden pins `…, 4)` partitioning
+    val s = GraftSession.local(4)
       // force UnsafeExternalSorter to spill past 64k elements so specs
       // can exercise spill-reader row reuse (AsOfJoinSpec); test-scale
       // sorts stay under it except where a spec overshoots on purpose
       .config("spark.shuffle.spill.numElementsForceSpillThreshold", "65536")
-      // r21 (driver flake hardening, same reasoning as Verify): the
-      // r20 driver box failed 1 of 469 tests that two builder runs of
-      // the identical tree pass — a loaded co-tenant box can push a
-      // broadcast build past the 300 s default and throw. Correctness
-      // suites should wait on a slow box, not fail on it.
-      .config("spark.sql.broadcastTimeout", "1800")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Runs `body` with `l` on the listener bus and returns its result.
+    * Events are posted asynchronously, so the bus is drained before `l`
+    * is added (no earlier job reaches it) and after `body` (every event
+    * of `body` has). */
+  def listening[T](l: SparkListener)(body: => T): T = {
+    drainListenerBus()
+    spark.sparkContext.addSparkListener(l)
+    try { val r = body; drainListenerBus(); r }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    // SparkContext.listenerBus is private[spark], public in bytecode
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus): Unit
+  }
+
   val sf = "/root/testdata/sf0.001"
 }
 

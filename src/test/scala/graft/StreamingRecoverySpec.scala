@@ -7,6 +7,8 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.LakeFiles
+
 /** Checkpoint-recovery durability: a stateful streaming aggregation
   * stopped and RESTARTED from its checkpoint must (a) resume the
   * aggregation state (totals include pre-restart data) and (b) process
@@ -25,7 +27,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
   private def addFile(df: org.apache.spark.sql.DataFrame, dir: Path,
                       name: String): Unit = {
     val tmp = Files.createTempDirectory("graft_ckpt_stage")
-    graft.sources.LakeFiles.stage(df, "parquet", tmp.toFile,
+    LakeFiles.stage(df, "parquet", tmp.toFile,
       dir.resolve(name).toFile)
   }
 
@@ -33,46 +35,48 @@ class StreamingRecoverySpec extends AnyFunSuite {
     "resumes, already-read files are not reprocessed") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val base = Files.createTempDirectory("graft_ckpt")
-    val input = Files.createDirectories(base.resolve("in"))
-    val ckpt = base.resolve("ckpt").toString
+    try {
+      val input = Files.createDirectories(base.resolve("in"))
+      val ckpt = base.resolve("ckpt").toString
 
-    val events = spark.read.schema(eventsSchema)
-      .parquet(sf + "/events.parquet")
-    val early = events.filter(col("event_id") % 2 === 0)
-    val late = events.filter(col("event_id") % 2 =!= 0)
-    addFile(early, input, "a.parquet")
+      val events = spark.read.schema(eventsSchema)
+        .parquet(sf + "/events.parquet")
+      val early = events.filter(col("event_id") % 2 === 0)
+      val late = events.filter(col("event_id") % 2 =!= 0)
+      addFile(early, input, "a.parquet")
 
-    def runOnce(sinkName: String): Map[String, Long] = {
-      val agg = spark.readStream.schema(eventsSchema)
-        .parquet(input.toString)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-      val q = agg.writeStream.outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckpt)
-        .format("memory").queryName(sinkName).start()
-      try q.processAllAvailable() finally q.stop()
-      spark.table(sinkName).collect()
+      def runOnce(sinkName: String): Map[String, Long] = {
+        val agg = spark.readStream.schema(eventsSchema)
+          .parquet(input.toString)
+          .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+        val q = agg.writeStream.outputMode(OutputMode.Complete())
+          .option("checkpointLocation", ckpt)
+          .format("memory").queryName(sinkName).start()
+        try q.processAllAvailable() finally q.stop()
+        spark.table(sinkName).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
+
+      val run1 = runOnce("ckpt_run1")
+      val expectEarly = early.groupBy(col("event_type")).count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
+      assert(run1 == expectEarly, "first run must aggregate file A")
 
-    val run1 = runOnce("ckpt_run1")
-    val expectEarly = early.groupBy(col("event_type")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(run1 == expectEarly, "first run must aggregate file A")
+      addFile(late, input, "b.parquet")
+      val run2 = runOnce("ckpt_run2")
+      val expectAll = events.groupBy(col("event_type")).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(run2 == expectAll,
+        "restart must RESUME state: totals include pre-restart data")
 
-    addFile(late, input, "b.parquet")
-    val run2 = runOnce("ckpt_run2")
-    val expectAll = events.groupBy(col("event_type")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(run2 == expectAll,
-      "restart must RESUME state: totals include pre-restart data")
-
-    // the checkpoint's file log must show file A was not re-read: the
-    // restarted query's input total equals file B's row count
-    val lateN = late.count()
-    val sourcesLog = Files.list(Paths.get(ckpt, "sources", "0")).count()
-    assert(sourcesLog >= 2, "file-source log must record both batches")
-    assert(run2.values.sum - run1.values.sum == lateN,
-      "restart must process exactly the new file's rows")
+      // the checkpoint's file log must show file A was not re-read: the
+      // restarted query's input total equals file B's row count
+      val lateN = late.count()
+      val sourcesLog = Files.list(Paths.get(ckpt, "sources", "0")).count()
+      assert(sourcesLog >= 2, "file-source log must record both batches")
+      assert(run2.values.sum - run1.values.sum == lateN,
+        "restart must process exactly the new file's rows")
+    } finally LakeFiles.rm(base.toFile)
   }
 
   test("q188 boundary-exclusion contract: every purchase older than " +
