@@ -89,7 +89,11 @@ object TpcdsShapes extends QueryModule {
     // the chains per market segment. Both fact sides shuffle on the
     // composite (cust, part) key (co-partitioned equi join; the date
     // comparison stays a cheap residual predicate, never a join
-    // explosion driver), and the customer dim broadcasts.
+    // explosion driver), and the customer dim broadcasts. The merge
+    // hint keeps that join a sort-merge join at every scale: left to
+    // AQE, a small run broadcasts whichever leg's shuffle stage
+    // finishes first (its runtime size against the other leg's
+    // join-product estimate), so the plan flipped from run to run.
     "q386_return_repurchase" -> { (s, dir) =>
       val li = Tables.df(s, dir, "lineitem")
       val o = Tables.df(s, dir, "orders")
@@ -105,7 +109,7 @@ object TpcdsShapes extends QueryModule {
           col("l_partkey").as("rpart"),
           col("o_orderdate").cast(DateType).as("pdate"),
           col("l_quantity").cast(LongType).as("q"))
-      val chains = ret.join(rep,
+      val chains = ret.hint("merge").join(rep,
         col("cust") === col("rcust") && col("part") === col("rpart") &&
           col("pdate") > col("rdate"))
       val seg = Tables.df(s, dir, "customer")
