@@ -256,9 +256,7 @@ object DeltaLogLite {
     val p = new Path(logDir, "_last_checkpoint")
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      val text = LakeFiles.readText(fs, p)
       val json = try JsonMethods.parse(text)
         catch { case e: Exception => throw new IllegalStateException(
           s"$tableDir: malformed _last_checkpoint: ${e.getMessage}")
@@ -430,9 +428,7 @@ object DeltaLogLite {
     var sidecars = Vector.empty[String]
     var ckptVersion: Option[Long] = None
     if (manifest.getName.endsWith(".json")) {
-      val in = fs.open(manifest)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      val text = LakeFiles.readText(fs, manifest)
       var schema: Option[StructType] = None
       var partCols: Seq[String] = Nil
       var conf: Map[String, String] = Map.empty
@@ -583,9 +579,7 @@ object DeltaLogLite {
     }
 
     for ((v, p) <- wanted) {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      val text = LakeFiles.readText(fs, p)
       for (line <- text.linesIterator if line.trim.nonEmpty) {
         val action = try JsonMethods.parse(line)
           catch { case e: Exception => throw new IllegalStateException(
@@ -668,9 +662,7 @@ object DeltaLogLite {
     if (commits.isEmpty) throw new IllegalStateException(
       s"$tableDir: empty _delta_log (timestamp travel needs JSON commits)")
     val stamped = commits.map { case (v, p) =>
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      val text = LakeFiles.readText(fs, p)
       val ts = text.linesIterator.filter(_.trim.nonEmpty).flatMap { line =>
         val action = try JsonMethods.parse(line)
           catch { case _: Exception => JNothing }
@@ -733,9 +725,7 @@ object DeltaLogLite {
     val commits = fs.listStatus(logDir).toSeq.map(_.getPath)
       .filter(_.getName.matches("\\d{20}\\.json"))
     val fromJson: Seq[(String, Long)] = commits.flatMap { p =>
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      val text = LakeFiles.readText(fs, p)
       text.linesIterator.filter(_.trim.nonEmpty).flatMap { line =>
         val action = try JsonMethods.parse(line)
           catch { case _: Exception => JNothing }
@@ -776,9 +766,7 @@ object DeltaLogLite {
             // v2: txn actions live in the MANIFEST (sidecars carry
             // only file actions per the spec)
             if (m.getName.endsWith(".json")) {
-              val in = fs.open(m)
-              val text = try scala.io.Source
-                .fromInputStream(in, "UTF-8").mkString finally in.close()
+              val text = LakeFiles.readText(fs, m)
               text.linesIterator.filter(_.trim.nonEmpty).flatMap { line =>
                 val a = try JsonMethods.parse(line)
                   catch { case _: Exception => JNothing }
@@ -841,9 +829,7 @@ object DeltaLogLite {
       val p = new Path(logDir, f"$v%020d.json")
       if (!fs.exists(p)) throw new IllegalStateException(
         s"$tableDir: change range needs commit $v but its JSON is gone")
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      val text = LakeFiles.readText(fs, p)
       var cdcFiles = Vector.empty[AddFile]
       var adds = Vector.empty[AddFile]
       var removes = Vector.empty[AddFile]
@@ -1011,9 +997,7 @@ object DeltaLogLite {
       if (!fs.exists(p)) throw new IllegalStateException(
         s"$tableDir: streaming range needs commit $v but its JSON is " +
           "gone (log cleanup passed the stream's offset)")
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      val text = LakeFiles.readText(fs, p)
       for (line <- text.linesIterator if line.trim.nonEmpty) {
         val action = try JsonMethods.parse(line)
           catch { case e: Exception => throw new IllegalStateException(
@@ -2259,9 +2243,7 @@ object DeltaLogLite {
               "UUID-named manifest exist"))
         var sidecars = Vector.empty[String]
         if (manifest.getName.endsWith(".json")) {
-          val in = fs.open(manifest)
-          val text = try scala.io.Source
-            .fromInputStream(in, "UTF-8").mkString finally in.close()
+          val text = LakeFiles.readText(fs, manifest)
           for (line <- text.linesIterator if line.trim.nonEmpty) {
             val action = try JsonMethods.parse(line)
               catch { case e: Exception =>
@@ -2322,9 +2304,7 @@ object DeltaLogLite {
       .filter(_.getName.matches("\\d{20}\\.json"))
       .sortBy(_.getName)
     for (p <- commits) {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString finally in.close()
+      val text = LakeFiles.readText(fs, p)
       for (line <- text.linesIterator if line.trim.nonEmpty) {
         val action = JsonMethods.parse(line)
         for (side <- Seq("add", "remove")) (action \ side) match {
@@ -2345,23 +2325,10 @@ object DeltaLogLite {
         snap.files.flatMap(_.deletionVector)
           .filter(_.storageType != "i")
           .map(dvFilePath(tableDir, _))).toSet
-    // delete through the table's OWN Hadoop filesystem (hdfs:// and
-    // object-store roots reclaim exactly like file://; java.io/NIO
-    // would silently reclaim nothing there). Containment rides
-    // QUALIFIED paths; a '..' component can dodge a string-prefix
-    // guard, so it disqualifies outright.
-    val rootQ = fs.makeQualified(new Path(tableDir)).toString + "/"
-    val deleted = (referenced -- live).toSeq.sorted.filter { p =>
-      val q = fs.makeQualified(new Path(p))
-      // never reach outside the table root (clone sources)
-      q.toString.startsWith(rootQ) &&
-        !q.toUri.getPath.split('/').contains("..") &&
-        fs.exists(q) && {
-          if (!fs.delete(q, false)) throw new IllegalStateException(
-            s"$tableDir: vacuum could not delete $p")
-          true
-        }
-    }
-    deleted
+    // through the table's OWN Hadoop filesystem (java.io/NIO would
+    // reclaim nothing on hdfs:// or object stores), never outside the
+    // table root (clone sources)
+    LakeFiles.deleteInside(fs, tableDir, referenced -- live)(p =>
+      s"$tableDir: vacuum could not delete $p")
   }
 }

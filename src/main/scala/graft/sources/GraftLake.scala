@@ -81,13 +81,8 @@ object GraftLake {
                                 tableDir: String): Boolean = {
     val props = new Path(tableDir, ".hoodie/hoodie.properties")
     val fs = props.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(props) && {
-      val in = fs.open(props)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString finally in.close()
-      text.linesIterator.map(_.trim)
-        .exists(_ == "hoodie.table.type=MERGE_ON_READ")
-    }
+    fs.exists(props) && LakeFiles.readText(fs, props).linesIterator
+      .map(_.trim).exists(_ == "hoodie.table.type=MERGE_ON_READ")
   }
 
   /** Detect + dispatch. `version` is a Delta version / Iceberg

@@ -70,13 +70,6 @@ object HudiCowLite {
 
   private implicit val fmts: Formats = DefaultFormats
 
-  private def readText(fs: org.apache.hadoop.fs.FileSystem,
-                       p: Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
-
   /** Replay the commit timeline up to (and including) `asOfInstant`,
     * or fully. Returns the live base-file set. `readOptimized` opts a
     * MERGE_ON_READ table into the read-optimized query mode (base
@@ -93,7 +86,7 @@ object HudiCowLite {
     val props = new Path(hoodieDir, "hoodie.properties")
     val tableType: Option[String] =
       if (!fs.exists(props)) None
-      else readText(fs, props).linesIterator
+      else LakeFiles.readText(fs, props).linesIterator
         .map(_.trim).find(_.startsWith("hoodie.table.type="))
         .map(_.split("=", 2)(1).trim)
     tableType.foreach {
@@ -144,7 +137,7 @@ object HudiCowLite {
       .empty[(String, String), (String, String)]
     for ((instant, kind) <- wanted) {
       val p = new Path(hoodieDir, s"$instant.$kind")
-      val json = try JsonMethods.parse(readText(fs, p))
+      val json = try JsonMethods.parse(LakeFiles.readText(fs, p))
         catch { case e: Exception => throw new IllegalStateException(
           s"$tableDir: malformed commit $instant: ${e.getMessage}")
         }
@@ -224,7 +217,7 @@ object HudiCowLite {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) throw new IllegalStateException(
       s"$tableDir: no completed commit at instant $instant")
-    (JsonMethods.parse(readText(fs, p)) \ "extraMetadata") match {
+    (JsonMethods.parse(LakeFiles.readText(fs, p)) \ "extraMetadata") match {
       case JObject(kvs) => kvs.collect {
         case (k, JString(v)) => k -> v }.toMap
       case _ => Map.empty
@@ -405,7 +398,7 @@ object HudiCowLite {
       Seq("commit", "deltacommit")
         .map(k => new Path(hoodieDir, s"$c.$k")).find(fs.exists)
         .toSeq.flatMap { p =>
-          (JsonMethods.parse(readText(fs, p)) \
+          (JsonMethods.parse(LakeFiles.readText(fs, p)) \
             "partitionToWriteStats") match {
             case JObject(parts) => parts.flatMap {
               case (part, JArray(stats)) => stats.flatMap { st =>

@@ -157,13 +157,6 @@ object HudiMorLite {
                                precombineField: Option[String] = None,
                                commits: Seq[String] = Nil)
 
-  private def readText(fs: org.apache.hadoop.fs.FileSystem,
-                       p: Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
-
   /** Log file name "`.<fileId>_<baseInstant>.log.<version>[_<token>]`"
     * → (fileId, baseInstant, version); anything else refuses. */
   private[graft] def parseLogName(name: String): (String, String, Int) = {
@@ -186,7 +179,7 @@ object HudiMorLite {
     val props = new Path(hoodieDir, "hoodie.properties")
     val propLines: Seq[String] =
       if (!fs.exists(props)) Nil
-      else readText(fs, props).linesIterator.map(_.trim).toSeq
+      else LakeFiles.readText(fs, props).linesIterator.map(_.trim).toSeq
     def prop(key: String): Option[String] = propLines
       .find(_.startsWith(s"$key="))
       .map(_.split("=", 2)(1).trim).filter(_.nonEmpty)
@@ -225,7 +218,7 @@ object HudiMorLite {
       .empty[(String, String), (String, String, Vector[LogFile])]
     for ((instant, kind) <- wanted) {
       val p = new Path(hoodieDir, s"$instant.$kind")
-      val json = try JsonMethods.parse(readText(fs, p))
+      val json = try JsonMethods.parse(LakeFiles.readText(fs, p))
         catch { case e: Exception => throw new IllegalStateException(
           s"$tableDir: malformed commit $instant: ${e.getMessage}")
         }

@@ -1,7 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graft.MetaAvro
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -285,111 +285,187 @@ object IcebergLite {
     case _ => Map.empty
   }
 
-  /** Current metadata file: latest version via version-hint.text, else
-    * the highest v<N>.metadata.json. Returns (path, parsed JSON). */
-  private def loadMeta(spark: SparkSession,
-                       tableDir: String): (Path, JValue) = {
-    val metaDir = new Path(tableDir, "metadata")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(metaDir))
-      throw new IllegalStateException(s"$tableDir has no metadata directory")
-    val hint = new Path(metaDir, "version-hint.text")
-    val metaFile: Path =
-      if (fs.exists(hint)) {
-        val in = fs.open(hint)
-        val v = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim finally in.close()
-        new Path(metaDir, s"v$v.metadata.json")
-      } else {
-        val versions = fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
-          .collect { case n if n.matches("v\\d+\\.metadata\\.json") =>
-            n.stripPrefix("v").stripSuffix(".metadata.json").toLong }
-        if (versions.isEmpty) throw new IllegalStateException(
-          s"$tableDir: no v<N>.metadata.json in metadata/")
-        new Path(metaDir, s"v${versions.max}.metadata.json")
-      }
-    if (!fs.exists(metaFile))
-      throw new IllegalStateException(s"$tableDir: $metaFile missing")
-    val in = fs.open(metaFile)
-    val meta = try JsonMethods.parse(
-      scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    (metaFile, meta)
-  }
-
-  /** Snapshot ids in METADATA-LIST ORDER (append-only history appends
-    * at the end) — the ordered offset surface for streaming reads. */
-  def snapshotIds(spark: SparkSession, tableDir: String): Seq[Long] =
-    (loadMeta(spark, tableDir)._2 \ "snapshots") match {
+  /** One metadata version of a table: its number, file and parsed JSON,
+    * and the filesystem (of the session's Hadoop conf, as [[MetaAvro]]
+    * and [[FooterSweep]] use) that a resolve or a commit reads, writes
+    * and publishes through. */
+  private final case class Meta(fs: FileSystem, tableDir: String,
+                                version: Long, file: Path, json: JValue) {
+    /** Snapshot ids in METADATA-LIST ORDER (append-only history
+      * appends at the end). */
+    def snapshotIds: Seq[Long] = (json \ "snapshots") match {
       case JArray(ss) => ss.map(s => (s \ "snapshot-id").extract[Long])
       case _ => Nil
     }
 
-  /** Each snapshot's `summary.operation` (None when unstamped), by id
-    * — the surface streaming consumers use to SKIP replace/rewrite
-    * snapshots (the library's streaming-skip-overwrite-snapshots). */
-  def snapshotOperations(spark: SparkSession,
-                         tableDir: String): Map[Long, Option[String]] =
-    (loadMeta(spark, tableDir)._2 \ "snapshots") match {
-      case JArray(ss) => ss.map(s =>
-        (s \ "snapshot-id").extract[Long] ->
-          (s \ "summary" \ "operation").extractOpt[String]).toMap
-      case _ => Map.empty
+    /** The manifest list of snapshot `id`, as written. */
+    def manifestList(id: Long): String = ((json \ "snapshots") match {
+      case JArray(ss) => ss.collectFirst {
+        case s if (s \ "snapshot-id").extractOpt[Long].contains(id) =>
+          (s \ "manifest-list").extract[String]
+      }
+      case _ => None
+    }).getOrElse(throw new IllegalArgumentException(
+      s"$file: snapshot $id not found " +
+        s"(have ${snapshotIds.mkString(", ")})"))
+
+    def currentId: Option[Long] =
+      (json \ "current-snapshot-id").extractOpt[Long].filter(_ != -1L)
+  }
+
+  /** The table's current metadata version: `version-hint.text`, else the
+    * highest `v<N>.metadata.json`, then advanced while
+    * `v<N+1>.metadata.json` exists — a writer that crashed between
+    * publishing a version and moving the hint leaves the hint one
+    * behind, and Iceberg's Hadoop catalog probes past it the same way.
+    * None when the table has no metadata version yet. */
+  private def findMeta(spark: SparkSession,
+                       tableDir: String): Option[Meta] = {
+    val metaDir = new Path(tableDir, "metadata")
+    val fs = metaDir.getFileSystem(spark.sessionState.newHadoopConf())
+    def file(v: Long) = new Path(metaDir, s"v$v.metadata.json")
+    val hint = new Path(metaDir, "version-hint.text")
+    val start: Option[Long] =
+      if (fs.exists(hint)) Some(LakeFiles.readText(fs, hint).trim.toLong)
+      else if (!fs.exists(metaDir)) None
+      else fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
+        .collect { case n if n.matches("v\\d+\\.metadata\\.json") =>
+          n.stripPrefix("v").stripSuffix(".metadata.json").toLong }
+        .maxOption
+    start.map { v0 =>
+      var v = v0
+      while (fs.exists(file(v + 1))) v += 1
+      if (!fs.exists(file(v)))
+        throw new IllegalStateException(s"$tableDir: ${file(v)} missing")
+      Meta(fs, tableDir, v, file(v),
+        JsonMethods.parse(LakeFiles.readText(fs, file(v))))
+    }
+  }
+
+  private def loadMeta(spark: SparkSession, tableDir: String): Meta =
+    findMeta(spark, tableDir).getOrElse(throw new IllegalStateException(
+      s"$tableDir: no v<N>.metadata.json under metadata/"))
+
+  /** The current metadata version, its JSON and the current snapshot's
+    * manifest-list rows as (manifest path, content) — what the stream
+    * sink commits on top of; None before the table's first commit. */
+  def current(spark: SparkSession,
+              tableDir: String): Option[(Long, JValue, Seq[(String, Int)])] =
+    findMeta(spark, tableDir).map { m =>
+      (m.version, m.json, m.currentId.toSeq.flatMap(id =>
+        manifestList(spark, tableDir, m.manifestList(id))
+          .map(r => r.path -> r.content.getOrElse(0))))
     }
 
-  /** Resolve the table's snapshot: latest metadata version (via
-    * version-hint.text, else the highest v<N>.metadata.json), then the
-    * current snapshot, `snapshotId`, a named `ref` (the metadata's
-    * `refs` branch/tag map — Iceberg's VERSION AS OF 'tag' axis;
-    * unknown names refuse listing what exists), or — the other public
-    * time-travel axis — `asOfTimestampMs` (the LATEST snapshot whose
-    * `timestamp-ms` is ≤ the asked instant; a table whose snapshots
-    * lack timestamps, or an instant before the first snapshot, refuse
-    * loudly). */
-  def snapshot(spark: SparkSession, tableDir: String,
-               snapshotId: Option[Long] = None,
-               asOfTimestampMs: Option[Long] = None,
-               ref: Option[String] = None): Snapshot = {
-    val (metaFile, meta) = loadMeta(spark, tableDir)
+  /** Publish metadata version `version`: create-new
+    * `v<version>.metadata.json` (a taken version means another writer
+    * committed first — single-writer scope refuses), then move the hint.
+    * The one commit point of the writers and the stream sink: a reader
+    * resolves either the old version or the new one, never half a
+    * snapshot. */
+  def publish(fs: FileSystem, tableDir: String, version: Long,
+              json: String): Unit = {
+    try AtomicFiles.write(fs,
+      new Path(tableDir, s"metadata/v$version.metadata.json"), json,
+      replace = false)
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        throw new IllegalStateException(
+          s"$tableDir: metadata v$version already exists — another " +
+            "writer is active (single-writer scope)")
+    }
+    AtomicFiles.write(fs, new Path(tableDir, "metadata/version-hint.text"),
+      version.toString, replace = true)
+  }
+
+  /** One manifest-list row as written: the manifest's path, its content
+    * (0 data, 1 deletes), sequence number and byte length when
+    * recorded. */
+  private final case class ListRow(path: String, content: Option[Int],
+                                   seq: Option[Long], length: Option[Long])
+
+  private def manifestList(spark: SparkSession, tableDir: String,
+                           rel: String): Seq[ListRow] = {
+    val p = resolve(tableDir, rel)
+    val ml = MetaAvro.read(spark, p)
+    if (!ml.columns.contains("manifest_path"))
+      throw new IllegalStateException(s"$p: manifest list lacks manifest_path")
+    def num(r: Row, n: String): Option[Number] =
+      if (ml.columns.contains(n) && r.getAs[Any](n) != null)
+        Some(r.getAs[Number](n))
+      else None
+    ml.rows.toSeq.map(r => ListRow(r.getAs[String]("manifest_path"),
+      num(r, "content").map(_.intValue()),
+      num(r, "sequence_number").map(_.longValue()),
+      num(r, "manifest_length").map(_.longValue())))
+  }
+
+  /** One manifest entry, decoded once: the resolved manifest it sits in
+    * and that manifest's list content (0 data, else deletes), its status
+    * (2 = DELETED tombstone), the data_file content, the sequence number
+    * (the entry's own, else inherited from the list row — the spec's
+    * ADDED-entry rule), the file path as written (resolved on first
+    * use: only the replay needs its scheme checked) and the stats,
+    * canonical-JSON partition and v2/v3 delete fields the writer
+    * recorded. */
+  private final case class Entry(manifest: String, listContent: Int,
+                                 status: Int, content: Int,
+                                 seq: Option[Long], rawPath: String,
+                                 format: Option[String],
+                                 recordCount: Option[Long],
+                                 fileSize: Option[Long],
+                                 partition: Option[String],
+                                 equalityIds: Seq[Int],
+                                 referencedDataFile: Option[String],
+                                 contentOffset: Option[Long],
+                                 contentSize: Option[Long])
+                                (tableDir: String) {
+    lazy val path: String = resolve(tableDir, rawPath)
+  }
+
+  /** One snapshot's metadata, walked once: the metadata version it was
+    * resolved in, its id, its manifest-list rows and every entry of
+    * every manifest they name. Snapshots, metadata tables and writers
+    * all build on it; none of it reaches the [[Snapshot]] that query
+    * plans capture. */
+  private final case class Walk(meta: Meta, snapshotId: Long,
+                                manifests: Seq[ListRow],
+                                entries: Seq[Entry]) {
+    def live: Seq[Entry] = entries.filter(_.status != 2)
+
+    /** The highest sequence number of a live entry (0 with none); None
+      * when a live entry has none (legacy seq-less tables). */
+    def maxSeq: Option[Long] =
+      if (live.exists(_.seq.isEmpty)) None
+      else Some(live.flatMap(_.seq).maxOption.getOrElse(0L))
+  }
+
+  /** Walk the wanted snapshot of `meta`: `snapshotId`, a named `ref`
+    * (the metadata's `refs` branch/tag map — Iceberg's VERSION AS OF
+    * 'tag' axis; unknown names refuse listing what exists), the LATEST
+    * snapshot whose `timestamp-ms` is ≤ `asOfTimestampMs` (unstamped
+    * snapshots, or an instant before the first one, refuse), else the
+    * current one. The manifest list is read once and each manifest
+    * once. */
+  private def walk(spark: SparkSession, meta: Meta,
+                   snapshotId: Option[Long] = None,
+                   asOfTimestampMs: Option[Long] = None,
+                   ref: Option[String] = None): Walk = {
+    val Meta(_, tableDir, _, metaFile, json) = meta
     require(Seq(snapshotId, asOfTimestampMs, ref).count(_.nonEmpty) <= 1,
       "snapshotId, asOfTimestampMs and ref are mutually exclusive")
-    // named REF (branch/tag) resolution — the metadata's `refs` map is
-    // the spec's name → snapshot-id surface (VERSION AS OF 'tag')
     val byRef: Option[Long] = ref.map { name =>
-      (meta \ "refs" \ name \ "snapshot-id").extractOpt[Long].getOrElse(
+      (json \ "refs" \ name \ "snapshot-id").extractOpt[Long].getOrElse(
         throw new IllegalArgumentException(
           s"$metaFile: no ref named '$name'" +
-            ((meta \ "refs") match {
+            ((json \ "refs") match {
               case JObject(rs) if rs.nonEmpty =>
                 s" (have ${rs.map(_._1).sorted.mkString(", ")})"
               case _ => " (table has no refs)"
             })))
     }
-
-    val fv = (meta \ "format-version").extract[Int]
-    if (fv != 1 && fv != 2 && fv != 3) throw new IllegalStateException(
-      s"$metaFile: format-version $fv unsupported " +
-        "(IcebergLite reads v1/v2/v3)")
-    val schemaFields = (meta \ "schemas") match {
-      case JArray(ss) => // v2: pick current-schema-id
-        val cur = (meta \ "current-schema-id").extractOpt[Int].getOrElse(0)
-        val s = ss.find(s => (s \ "schema-id").extractOpt[Int].contains(cur))
-          .getOrElse(throw new IllegalStateException(
-            s"$metaFile: current-schema-id $cur not in schemas"))
-        s \ "fields"
-      case _ => meta \ "schema" \ "fields"
-    }
-    val schema = parseSchema(schemaFields, metaFile.toString)
-    val fieldNames = fieldIdMap(schemaFields)
-    val snaps = (meta \ "snapshots") match {
-      case JArray(ss) => ss.map { s =>
-        (s \ "snapshot-id").extract[Long] ->
-          (s \ "manifest-list").extract[String]
-      }
-      case _ => Nil
-    }
     val byTimestamp: Option[Long] = asOfTimestampMs.map { ts =>
-      val stamped = (meta \ "snapshots") match {
+      val stamped = (json \ "snapshots") match {
         case JArray(ss) => ss.map { s =>
           (s \ "snapshot-id").extract[Long] ->
             (s \ "timestamp-ms").extractOpt[Long].getOrElse(
@@ -410,91 +486,120 @@ object IcebergLite {
       val maxTs = eligible.map(_._2).max
       eligible.filter(_._2 == maxTs).last._1
     }
-    val wantedId = snapshotId.orElse(byRef).orElse(byTimestamp).orElse(
-      (meta \ "current-snapshot-id").extractOpt[Long].filter(_ != -1L))
-      .getOrElse(throw new IllegalStateException(
+    val wantedId = snapshotId.orElse(byRef).orElse(byTimestamp)
+      .orElse(meta.currentId).getOrElse(throw new IllegalStateException(
         s"$metaFile: table has no current snapshot"))
-    val manifestList = snaps.toMap.getOrElse(wantedId,
-      throw new IllegalArgumentException(
-        s"$metaFile: snapshot $wantedId not found " +
-          s"(have ${snaps.map(_._1).mkString(", ")})"))
-
     // manifest list: bounded plan-time read (one row per manifest)
-    val mlPath = resolve(tableDir, manifestList)
-    val ml = MetaAvro.read(spark, mlPath)
-    if (!ml.columns.contains("manifest_path"))
-      throw new IllegalStateException(
-        s"$mlPath: manifest list lacks manifest_path")
-    val mlRows = ml.rows
-    // manifest-list content: 0 = data manifest, 1 = delete manifest
-    val (dataManifests, deleteManifests) = mlRows.partition { r =>
-      !ml.columns.contains("content") || r.getAs[Any]("content") == null ||
-        r.getAs[Number]("content").intValue() == 0
-    }
-    // the manifest-list row's sequence_number — inherited by entries
-    // whose own sequence_number is null (the spec's ADDED-entry rule)
-    def mlSeq(r: org.apache.spark.sql.Row): Option[Long] =
-      if (ml.columns.contains("sequence_number") &&
-        r.getAs[Any]("sequence_number") != null)
-        Some(r.getAs[Number]("sequence_number").longValue())
-      else None
-
-    /** Live (path, content, seq, equality_ids) entries of one
-      * manifest; `allowed` guards content placement (a data manifest
-      * may only hold content=0 entries; a delete manifest 1 or 2). */
-    final case class Entry(path: String, content: Int, seq: Option[Long],
-                           equalityIds: Seq[Int],
-                           referencedDataFile: Option[String] = None,
-                           contentOffset: Option[Long] = None,
-                           contentSize: Option[Long] = None,
-                           recordCount: Option[Long] = None)
-    def replay(manifests: Seq[(String, Option[Long])],
-               allowed: Set[Int], what: String): Seq[Entry] =
-      manifests.flatMap { case (mp, inherited) =>
-        val p = resolve(tableDir, mp)
-        val m = MetaAvro.read(spark, p)
-        if (!m.columns.contains("data_file") || !m.columns.contains("status"))
-          throw new IllegalStateException(
-            s"$p: manifest lacks status/data_file fields")
-        m.rows.flatMap { r =>
-          val status = r.getAs[Number]("status").intValue()
-          val df = r.getAs[org.apache.spark.sql.Row]("data_file")
-          def fld[T](row: org.apache.spark.sql.Row, n: String)
-              (get: => T): Option[T] =
-            if (row.schema.fieldNames.contains(n) &&
-              row.getAs[Any](n) != null) Some(get) else None
-          val content =
-            fld(df, "content")(df.getAs[Number]("content").intValue())
-              .getOrElse(0)
-          if (!allowed.contains(content)) throw new IllegalStateException(
-            s"$p: $what manifest entry has content=$content " +
-              s"(expected ${allowed.mkString("/")})")
-          val seq = fld(r, "sequence_number")(
-            r.getAs[Number]("sequence_number").longValue())
-            .orElse(inherited)
-          val eqIds = fld(df, "equality_ids")(
-            df.getAs[scala.collection.Seq[Any]]("equality_ids")
-              .map(_.asInstanceOf[Number].intValue()).toSeq)
-            .getOrElse(Nil)
-          // status 2 = DELETED (tombstone retained for one snapshot)
-          if (status == 2) None
-          else Some(Entry(resolve(tableDir, df.getAs[String]("file_path")),
-            content, seq, eqIds,
-            fld(df, "referenced_data_file")(
-              df.getAs[String]("referenced_data_file")),
-            fld(df, "content_offset")(
-              df.getAs[Number]("content_offset").longValue()),
-            fld(df, "content_size_in_bytes")(
-              df.getAs[Number]("content_size_in_bytes").longValue()),
-            fld(df, "record_count")(
-              df.getAs[Number]("record_count").longValue())))
-        }
+    val rows = manifestList(spark, tableDir, meta.manifestList(wantedId))
+    val entries = rows.flatMap { row =>
+      val p = resolve(tableDir, row.path)
+      val m = MetaAvro.read(spark, p)
+      if (!m.columns.contains("data_file") || !m.columns.contains("status"))
+        throw new IllegalStateException(
+          s"$p: manifest lacks status/data_file fields")
+      m.rows.toSeq.map { r =>
+        val df = r.getAs[Row]("data_file")
+        def fld[T](n: String)(get: => T): Option[T] =
+          if (df.schema.fieldNames.contains(n) && df.getAs[Any](n) != null)
+            Some(get)
+          else None
+        def long(n: String) = fld(n)(df.getAs[Number](n).longValue())
+        val ownSeq =
+          if (m.columns.contains("sequence_number") &&
+            r.getAs[Any]("sequence_number") != null)
+            Some(r.getAs[Number]("sequence_number").longValue())
+          else None
+        Entry(p, row.content.getOrElse(0),
+          r.getAs[Number]("status").intValue(),
+          fld("content")(df.getAs[Number]("content").intValue()).getOrElse(0),
+          ownSeq.orElse(row.seq), df.getAs[String]("file_path"),
+          fld("file_format")(df.getAs[String]("file_format")),
+          long("record_count"), long("file_size_in_bytes"),
+          fld("partition")(df.getAs[Row]("partition")).map { pr =>
+            pr.schema.fieldNames.map { n =>
+              val v = pr.getAs[Any](n) match {
+                case null      => "null"
+                case s: String => LakeFiles.jstr(s)
+                case other     => other.toString
+              }
+              s"${LakeFiles.jstr(n)}:$v"
+            }.mkString("{", ",", "}")
+          },
+          fld("equality_ids")(df.getAs[scala.collection.Seq[Any]](
+            "equality_ids").map(_.asInstanceOf[Number].intValue()).toSeq)
+            .getOrElse(Nil),
+          fld("referenced_data_file")(
+            df.getAs[String]("referenced_data_file")),
+          long("content_offset"), long("content_size_in_bytes"))(tableDir)
       }
+    }
+    Walk(meta, wantedId, rows, entries)
+  }
 
-    def withSeqs(ms: Array[org.apache.spark.sql.Row]) =
-      ms.map(r => r.getAs[String]("manifest_path") -> mlSeq(r)).toSeq
-    val dataEntries = replay(withSeqs(dataManifests), Set(0), "data")
-    val delEntries = replay(withSeqs(deleteManifests), Set(1, 2), "delete")
+  /** Snapshot ids in METADATA-LIST ORDER (append-only history appends
+    * at the end) — the ordered offset surface for streaming reads. */
+  def snapshotIds(spark: SparkSession, tableDir: String): Seq[Long] =
+    loadMeta(spark, tableDir).snapshotIds
+
+  /** Each snapshot's `summary.operation` (None when unstamped), by id
+    * — the surface streaming consumers use to SKIP replace/rewrite
+    * snapshots (the library's streaming-skip-overwrite-snapshots). */
+  def snapshotOperations(spark: SparkSession,
+                         tableDir: String): Map[Long, Option[String]] =
+    (loadMeta(spark, tableDir).json \ "snapshots") match {
+      case JArray(ss) => ss.map(s =>
+        (s \ "snapshot-id").extract[Long] ->
+          (s \ "summary" \ "operation").extractOpt[String]).toMap
+      case _ => Map.empty
+    }
+
+  /** Resolve the table's snapshot: latest metadata version (via
+    * version-hint.text, else the highest v<N>.metadata.json, probed
+    * forward past a stale hint), then the current snapshot,
+    * `snapshotId`, a named `ref` or `asOfTimestampMs` — see [[walk]]. */
+  def snapshot(spark: SparkSession, tableDir: String,
+               snapshotId: Option[Long] = None,
+               asOfTimestampMs: Option[Long] = None,
+               ref: Option[String] = None): Snapshot =
+    toSnapshot(walk(spark, loadMeta(spark, tableDir), snapshotId,
+      asOfTimestampMs, ref))
+
+  /** The current snapshot, walked once: the writers' shared start. */
+  private def resolved(spark: SparkSession,
+                       tableDir: String): (Walk, Snapshot) = {
+    val w = walk(spark, loadMeta(spark, tableDir))
+    (w, toSnapshot(w))
+  }
+
+  /** The readable [[Snapshot]] of a walk, with the reader's scope
+    * checks: format version, schema, content placement (a data
+    * manifest may only hold content=0 entries; a delete manifest 1 or
+    * 2), deletion-vector and equality-delete rules. */
+  private def toSnapshot(w: Walk): Snapshot = {
+    val Meta(_, tableDir, _, metaFile, meta) = w.meta
+    val fv = (meta \ "format-version").extract[Int]
+    if (fv != 1 && fv != 2 && fv != 3) throw new IllegalStateException(
+      s"$metaFile: format-version $fv unsupported " +
+        "(IcebergLite reads v1/v2/v3)")
+    val schemaFields = (meta \ "schemas") match {
+      case JArray(ss) => // v2: pick current-schema-id
+        val cur = (meta \ "current-schema-id").extractOpt[Int].getOrElse(0)
+        val s = ss.find(s => (s \ "schema-id").extractOpt[Int].contains(cur))
+          .getOrElse(throw new IllegalStateException(
+            s"$metaFile: current-schema-id $cur not in schemas"))
+        s \ "fields"
+      case _ => meta \ "schema" \ "fields"
+    }
+    val schema = parseSchema(schemaFields, metaFile.toString)
+    val fieldNames = fieldIdMap(schemaFields)
+    for (e <- w.entries) {
+      val (allowed, what) =
+        if (e.listContent == 0) (Set(0), "data") else (Set(1, 2), "delete")
+      if (!allowed.contains(e.content)) throw new IllegalStateException(
+        s"${e.manifest}: $what manifest entry has content=${e.content} " +
+          s"(expected ${allowed.mkString("/")})")
+    }
+    val (dataEntries, delEntries) = w.live.partition(_.listContent == 0)
 
     val files = dataEntries.map(_.path)
     // content=1 entries: format-v3 DELETION VECTORS carry
@@ -560,85 +665,8 @@ object IcebergLite {
       (meta \ "properties" \ "schema.name-mapping.default")
         .extractOpt[String]
         .map(parseNameMapping(_, metaFile.toString))
-    val liveMaxSeq: Option[Long] = {
-      val entries = dataEntries ++ delEntries
-      if (entries.isEmpty) Some(0L)
-      else if (entries.forall(_.seq.nonEmpty))
-        Some(entries.flatMap(_.seq).max)
-      else None
-    }
-    Snapshot(wantedId, schema, files, posDeletes, fileSeqs, eqDeletes,
-      nameMapping, dvs, liveMaxSeq)
-  }
-
-  /** Per-file rows of the CURRENT snapshot's DATA manifests — the
-    * bounded replay behind the `files`/`partitions` metadata tables:
-    * (path, file_format, record_count, file_size_in_bytes,
-    * partition-as-canonical-JSON). Stats the writer did not record
-    * come back None (real Iceberg manifests always carry
-    * record_count/file_size_in_bytes; `partitions` refuses on absent
-    * counts rather than mis-summing); file_format falls back to the
-    * extension — the same identity the scan itself keys on. */
-  private def dataFileStats(spark: SparkSession, tableDir: String)
-  : Seq[(String, String, Option[Long], Option[Long], Option[String])] = {
-    val (metaFile, meta) = loadMeta(spark, tableDir)
-    val curId = (meta \ "current-snapshot-id").extractOpt[Long]
-      .filter(_ != -1L).getOrElse(throw new IllegalStateException(
-        s"$metaFile: table has no current snapshot"))
-    val manifestList = ((meta \ "snapshots") match {
-      case JArray(ss) => ss.collectFirst {
-        case s if (s \ "snapshot-id").extract[Long] == curId =>
-          (s \ "manifest-list").extract[String]
-      }
-      case _ => None
-    }).getOrElse(throw new IllegalStateException(
-      s"$metaFile: current snapshot $curId not in snapshots"))
-    val ml = MetaAvro.read(spark, resolve(tableDir, manifestList))
-    if (!ml.columns.contains("manifest_path"))
-      throw new IllegalStateException(
-        s"$manifestList: manifest list lacks manifest_path")
-    val dataManifests = ml.rows.filter { r =>
-      !ml.columns.contains("content") || r.getAs[Any]("content") == null ||
-        r.getAs[Number]("content").intValue() == 0
-    }.map(_.getAs[String]("manifest_path")).toSeq
-    dataManifests.flatMap { mp =>
-      val p = resolve(tableDir, mp)
-      val m = MetaAvro.read(spark, p)
-      if (!m.columns.contains("data_file") || !m.columns.contains("status"))
-        throw new IllegalStateException(
-          s"$p: manifest lacks status/data_file fields")
-      m.rows.flatMap { r =>
-        val df = r.getAs[org.apache.spark.sql.Row]("data_file")
-        def fld[T](n: String)(get: => T): Option[T] =
-          if (df.schema.fieldNames.contains(n) &&
-            df.getAs[Any](n) != null) Some(get) else None
-        // status 2 = DELETED tombstone; content != 0 cannot appear in
-        // a data manifest (snapshot() enforces; tolerate here too)
-        if (r.getAs[Number]("status").intValue() == 2) None
-        else {
-          val path = resolve(tableDir, df.getAs[String]("file_path"))
-          val fmt = fld("file_format")(df.getAs[String]("file_format"))
-            .getOrElse(path.split('.').last.toUpperCase)
-          val partition = fld("partition")(
-            df.getAs[org.apache.spark.sql.Row]("partition")).map { pr =>
-            pr.schema.fieldNames.map { n =>
-              val v = pr.getAs[Any](n) match {
-                case null      => "null"
-                case s: String => LakeFiles.jstr(s)
-                case other     => other.toString
-              }
-              s"${LakeFiles.jstr(n)}:$v"
-            }.mkString("{", ",", "}")
-          }
-          Some((path, fmt,
-            fld("record_count")(
-              df.getAs[Number]("record_count").longValue()),
-            fld("file_size_in_bytes")(
-              df.getAs[Number]("file_size_in_bytes").longValue()),
-            partition))
-        }
-      }
-    }
+    Snapshot(w.snapshotId, schema, files, posDeletes, fileSeqs, eqDeletes,
+      nameMapping, dvs, w.maxSeq)
   }
 
   /** Iceberg METADATA TABLES — the library's `table$snapshots` /
@@ -673,7 +701,14 @@ object IcebergLite {
   def metadataTable(spark: SparkSession, tableDir: String,
                     table: String): DataFrame = {
     import spark.implicits._
-    val (_, meta) = loadMeta(spark, tableDir)
+    val m = loadMeta(spark, tableDir)
+    val meta = m.json
+    // the current snapshot's walk, for the manifest-backed tables
+    lazy val w = walk(spark, m)
+    // its live DATA files, without the reader's scope checks: a
+    // file_format the writer left out falls back to the extension —
+    // the same identity the scan itself keys on
+    def dataFiles = w.live.filter(_.listContent == 0)
     table match {
       case "snapshots" =>
         val rows: Seq[(Long, Option[Long], String)] =
@@ -705,104 +740,48 @@ object IcebergLite {
         }
         rows.toDF("made_current_at", "snapshot_id")
       case "files" =>
-        dataFileStats(spark, tableDir).toDF("file_path", "file_format",
-          "record_count", "file_size_in_bytes", "partition")
+        dataFiles.map(e => (e.path,
+          e.format.getOrElse(e.path.split('.').last.toUpperCase),
+          e.recordCount, e.fileSize, e.partition))
+          .toDF("file_path", "file_format", "record_count",
+            "file_size_in_bytes", "partition")
       case "partitions" =>
-        val stats = dataFileStats(spark, tableDir)
-        for ((p, _, rc, _, _) <- stats if rc.isEmpty)
+        for (e <- dataFiles if e.recordCount.isEmpty)
           throw new IllegalStateException(
-            s"$tableDir: data file $p has no record_count in its " +
+            s"$tableDir: data file ${e.path} has no record_count in its " +
               "manifest — the partitions table cannot sum absent counts")
-        stats.groupBy(_._5).toSeq.map { case (part, fs) =>
-          (part, fs.map(_._3.get).sum, fs.size.toLong)
+        dataFiles.groupBy(_.partition).toSeq.map { case (part, fs) =>
+          (part, fs.map(_.recordCount.get).sum, fs.size.toLong)
         }.toDF("partition", "record_count", "file_count")
-      case "manifests" | "entries" =>
-        val curId = (meta \ "current-snapshot-id").extractOpt[Long]
-          .filter(_ != -1L).getOrElse(throw new IllegalStateException(
-            s"$tableDir: table has no current snapshot"))
-        val manifestList = ((meta \ "snapshots") match {
-          case JArray(ss) => ss.collectFirst {
-            case s if (s \ "snapshot-id").extract[Long] == curId =>
-              (s \ "manifest-list").extract[String]
-          }
-          case _ => None
-        }).getOrElse(throw new IllegalStateException(
-          s"$tableDir: current snapshot $curId not in snapshots"))
-        val ml = MetaAvro.read(spark, resolve(tableDir, manifestList))
-        if (!ml.columns.contains("manifest_path"))
-          throw new IllegalStateException(
-            s"$manifestList: manifest list lacks manifest_path")
-        val manifests: Seq[(String, Int, Option[Long])] =
-          ml.rows.map { r =>
-            val content =
-              if (ml.columns.contains("content") &&
-                r.getAs[Any]("content") != null)
-                r.getAs[Number]("content").intValue()
-              else 0
-            // the manifest list's own manifest_length is the spec's
-            // source of truth; the filesystem is only the fallback for
-            // lists (like this writer's compaction lists) without it
-            val len =
-              if (ml.columns.contains("manifest_length") &&
-                r.getAs[Any]("manifest_length") != null)
-                Some(r.getAs[Number]("manifest_length").longValue())
-              else None
-            (r.getAs[String]("manifest_path"), content, len)
-          }.toSeq
-        // one bounded replay serves both shapes: each manifest's
-        // entries with status + the stats its writer recorded
-        val entryRows: Seq[(String, Int, Int, String, Int,
-                            Option[Long], Option[Long])] =
-          manifests.flatMap { case (mp, content, _) =>
-            val p = resolve(tableDir, mp)
-            val m = MetaAvro.read(spark, p)
-            if (!m.columns.contains("data_file") ||
-              !m.columns.contains("status"))
-              throw new IllegalStateException(
-                s"$p: manifest lacks status/data_file fields")
-            m.rows.map { r =>
-              val df = r.getAs[org.apache.spark.sql.Row]("data_file")
-              def fld[T](n: String)(get: => T): Option[T] =
-                if (df.schema.fieldNames.contains(n) &&
-                  df.getAs[Any](n) != null) Some(get) else None
-              (p, content, r.getAs[Number]("status").intValue(),
-                df.getAs[String]("file_path"),
-                fld("content")(df.getAs[Number]("content").intValue())
-                  .getOrElse(0),
-                fld("record_count")(
-                  df.getAs[Number]("record_count").longValue()),
-                fld("file_size_in_bytes")(
-                  df.getAs[Number]("file_size_in_bytes").longValue()))
-            }
-          }
-        if (table == "entries")
-          entryRows.toDF("manifest_path", "manifest_content", "status",
+      case "entries" =>
+        w.entries.map(e => (e.manifest, e.listContent, e.status, e.rawPath,
+          e.content, e.recordCount, e.fileSize))
+          .toDF("manifest_path", "manifest_content", "status",
             "file_path", "content", "record_count", "file_size_in_bytes")
-        else {
-          val fs = new org.apache.hadoop.fs.Path(tableDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val byManifest = entryRows.groupBy(m => (m._1, m._2))
-          // Iceberg's own manifests-table spelling: data counts for
-          // data manifests (content 0), delete counts for delete
-          // manifests (content 1) — tooling written against the
-          // format's metadata-table schema resolves these names
-          manifests.map { case (mp, content, len) =>
-            val p = resolve(tableDir, mp)
-            val es = byManifest.getOrElse((p, content), Nil)
-            def cnt(status: Int, forContent: Int): Long =
-              if (content == forContent) es.count(_._3 == status).toLong
-              else 0L
-            (p,
-              len.getOrElse(fs.getFileStatus(
-                new org.apache.hadoop.fs.Path(p)).getLen),
-              content,
-              cnt(1, 0), cnt(0, 0), cnt(2, 0),
-              cnt(1, 1), cnt(0, 1), cnt(2, 1))
-          }.toDF("path", "length", "content",
-            "added_data_files_count", "existing_data_files_count",
-            "deleted_data_files_count", "added_delete_files_count",
-            "existing_delete_files_count", "deleted_delete_files_count")
-        }
+      case "manifests" =>
+        val byManifest = w.entries.groupBy(e => (e.manifest, e.listContent))
+        // Iceberg's own manifests-table spelling: data counts for
+        // data manifests (content 0), delete counts for delete
+        // manifests (content 1) — tooling written against the
+        // format's metadata-table schema resolves these names
+        w.manifests.map { r =>
+          val p = resolve(tableDir, r.path)
+          val content = r.content.getOrElse(0)
+          val es = byManifest.getOrElse((p, content), Nil)
+          def cnt(status: Int, forContent: Int): Long =
+            if (content == forContent) es.count(_.status == status).toLong
+            else 0L
+          // the manifest list's own manifest_length is the spec's
+          // source of truth; the filesystem is only the fallback for
+          // lists (like this writer's compaction lists) without it
+          (p, r.length.getOrElse(m.fs.getFileStatus(new Path(p)).getLen),
+            content,
+            cnt(1, 0), cnt(0, 0), cnt(2, 0),
+            cnt(1, 1), cnt(0, 1), cnt(2, 1))
+        }.toDF("path", "length", "content",
+          "added_data_files_count", "existing_data_files_count",
+          "deleted_data_files_count", "added_delete_files_count",
+          "existing_delete_files_count", "deleted_delete_files_count")
       case other => throw new IllegalArgumentException(
         s"$tableDir: metadata table '$other' — IcebergLite serves " +
           "snapshots, refs, history, files, partitions, manifests " +
@@ -1061,9 +1040,12 @@ object IcebergLite {
   def read(spark: SparkSession, tableDir: String,
            snapshotId: Option[Long] = None,
            asOfTimestampMs: Option[Long] = None,
-           ref: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val snap = snapshot(spark, tableDir, snapshotId, asOfTimestampMs, ref)
+           ref: Option[String] = None): DataFrame =
+    readSnapshot(spark, tableDir,
+      snapshot(spark, tableDir, snapshotId, asOfTimestampMs, ref))
+
+  private def readSnapshot(spark: SparkSession, tableDir: String,
+                           snap: Snapshot): DataFrame = {
     if (snap.files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
@@ -1496,8 +1478,7 @@ object IcebergLite {
     import org.apache.spark.sql.functions.{col, lit, struct, pmod,
       xxhash64}
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    val (metaFile, meta) = loadMeta(spark, tableDir)
-    val snap = snapshot(spark, tableDir)
+    val (w, snap) = resolved(spark, tableDir)
     if (snap.files.isEmpty) throw new IllegalStateException(
       s"$tableDir: nothing to compact (no data files)")
     val ids: Map[String, Int] = snap.schema.fields.map { f =>
@@ -1506,8 +1487,8 @@ object IcebergLite {
           "cannot stamp the rewrite")
       f.name -> f.metadata.getLong(FieldIdKey).toInt
     }.toMap
-    val partFields = resolvedPartFields(tableDir, meta, snap)
-    val newSnapId = snapshotIds(spark, tableDir).max + 1
+    val partFields = resolvedPartFields(tableDir, w.meta.json, snap)
+    val newSnapId = w.meta.snapshotIds.max + 1
     // stamp the replace manifest at a FRESH resolvable sequence when
     // the pre-compact sequences resolve, so row-level DML writers
     // can order themselves against the compacted table (a rewrite
@@ -1516,12 +1497,11 @@ object IcebergLite {
     // unstamped list, preserving their read behavior. snap.maxSeq
     // comes free from the snapshot parse — no manifest re-read.
     val compactSeq: Option[Long] = snap.maxSeq.map(_ + 1)
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = w.meta.fs
     // one distributed scan of the live rows (full delete surface
     // applied), id-stamped so the spec's column identity survives,
     // packed into numFiles under the deterministic content-hash salt
-    val stamped = stampFieldIds(read(spark, tableDir), ids)
+    val stamped = stampFieldIds(readSnapshot(spark, tableDir, snap), ids)
     val moved = try stageTransformed(spark, tableDir, fs, stamped,
       partFields, "compact", newSnapId, packFiles = Some(numFiles))
     catch {
@@ -1550,33 +1530,24 @@ object IcebergLite {
       s"metadata/snap-$newSnapId.avro")
     // roll the metadata: append the replace snapshot, point current at
     // it, carry EVERYTHING else verbatim (refs keep their pins)
-    val newSnapJson: JValue = JObject(
-      "snapshot-id" -> JInt(newSnapId),
-      "manifest-list" -> JString(s"metadata/snap-$newSnapId.avro"),
-      "summary" -> JObject("operation" -> JString("replace")))
-    val withSnap = meta transformField {
-      case ("snapshots", JArray(ss)) =>
-        ("snapshots", JArray(ss :+ newSnapJson))
-      case ("current-snapshot-id", _) =>
-        ("current-snapshot-id", JInt(newSnapId))
-    }
-    val metaName = metaFile.getName
-    val version = metaName.stripPrefix("v")
-      .stripSuffix(".metadata.json").toLong + 1
-    try AtomicFiles.write(fs,
-      new Path(tableDir, s"metadata/v$version.metadata.json"),
-      JsonMethods.compact(JsonMethods.render(withSnap)), replace = false)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"$tableDir: metadata v$version already exists — another " +
-            "writer is active (single-writer scope)")
-    }
-    AtomicFiles.write(fs,
-      new Path(tableDir, "metadata/version-hint.text"),
-      version.toString, replace = true)
+    rollMetadata(w.meta, newSnapId, "replace")
     newSnapId
   }
+
+  /** The sequence number a new commit on `w` stamps: one above every
+    * live entry's. A live entry with no resolvable sequence refuses (a
+    * new delete could not be ordered against it). */
+  private def nextSeq(w: Walk): Long = w.maxSeq.map(_ + 1).getOrElse {
+    throw new IllegalStateException(
+      s"${w.live.find(_.seq.isEmpty).get.manifest}: live manifest entry " +
+        "without a resolvable sequence number — a new write cannot be " +
+        "ordered against it; outside lite write scope")
+  }
+
+  /** The current manifest-list rows as (path, content, sequence) —
+    * what a new manifest list re-lists before its own manifests. */
+  private def oldRows(w: Walk): Seq[(String, Option[Int], Option[Long])] =
+    w.manifests.map(r => (r.path, r.content, r.seq))
 
   /** EQUALITY-DELETE write (format v2 row-level deletes, the
     * PK-style flow): commit a content=2 delete file whose rows are
@@ -1599,73 +1570,11 @@ object IcebergLite {
     * parquet file (delete keys are change-volume, not table-volume);
     * everything else is bounded manifest metadata. Single-writer
     * scope. */
-  /** The CURRENT snapshot's manifest-list rows (path, content,
-    * sequence) plus the max live sequence number — the write paths'
-    * shared preamble. A live entry with no resolvable sequence
-    * refuses (a new delete could not be ordered against it). */
-  private def liveManifestRows(spark: SparkSession, tableDir: String,
-                               meta: JValue)
-  : (Seq[(String, Option[Int], Option[Long])], Long) = {
-    val curId = (meta \ "current-snapshot-id").extractOpt[Long]
-      .filter(_ != -1L).getOrElse(throw new IllegalStateException(
-        s"$tableDir: table has no current snapshot"))
-    val mlRel = ((meta \ "snapshots") match {
-      case JArray(ss) => ss.collectFirst {
-        case s if (s \ "snapshot-id").extractOpt[Long].contains(curId) =>
-          (s \ "manifest-list").extract[String]
-      }
-      case _ => None
-    }).getOrElse(throw new IllegalStateException(
-      s"$tableDir: current snapshot $curId not in snapshots"))
-    val ml = MetaAvro.read(spark, resolve(tableDir, mlRel))
-    if (!ml.columns.contains("manifest_path"))
-      throw new IllegalStateException(
-        s"$tableDir: manifest list lacks manifest_path")
-    val oldRows: Seq[(String, Option[Int], Option[Long])] =
-      ml.rows.toSeq.map { r =>
-        val content =
-          if (ml.columns.contains("content") &&
-            r.getAs[Any]("content") != null)
-            Some(r.getAs[Number]("content").intValue())
-          else None
-        val seq =
-          if (ml.columns.contains("sequence_number") &&
-            r.getAs[Any]("sequence_number") != null)
-            Some(r.getAs[Number]("sequence_number").longValue())
-          else None
-        (r.getAs[String]("manifest_path"), content, seq)
-      }
-    var maxSeq = 0L
-    oldRows.foreach { case (mp, _, listSeq) =>
-      val p = resolve(tableDir, mp)
-      val m = MetaAvro.read(spark, p)
-      m.rows.foreach { r =>
-        val status = r.getAs[Number]("status").intValue()
-        if (status != 2) {
-          val entrySeq =
-            if (m.columns.contains("sequence_number") &&
-              r.getAs[Any]("sequence_number") != null)
-              Some(r.getAs[Number]("sequence_number").longValue())
-            else None
-          entrySeq.orElse(listSeq) match {
-            case Some(sq) => maxSeq = math.max(maxSeq, sq)
-            case None => throw new IllegalStateException(
-              s"$p: live manifest entry without a resolvable sequence " +
-                "number — a new write cannot be ordered against it; " +
-                "outside lite write scope")
-          }
-        }
-      }
-    }
-    (oldRows, maxSeq)
-  }
-
   def eqDelete(spark: SparkSession, tableDir: String,
                keys: DataFrame): Long = {
     import org.apache.spark.sql.functions.{array, col, lit, struct}
     import spark.implicits._
-    val (metaFile, meta) = loadMeta(spark, tableDir)
-    val snap = snapshot(spark, tableDir)
+    val (w, snap) = resolved(spark, tableDir)
     if (snap.files.isEmpty) throw new IllegalStateException(
       s"$tableDir: no data files to delete from")
     require(keys.columns.nonEmpty, "eqDelete needs at least one key column")
@@ -1678,11 +1587,9 @@ object IcebergLite {
           "stamp equality_ids")
       f.metadata.getLong(FieldIdKey).toInt
     }
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (oldRows, maxSeq) = liveManifestRows(spark, tableDir, meta)
-    val newSeq = maxSeq + 1
-    val newSnapId = snapshotIds(spark, tableDir).max + 1
+    val fs = w.meta.fs
+    val newSeq = nextSeq(w)
+    val newSnapId = w.meta.snapshotIds.max + 1
     // the delete file itself: distinct key tuples, field ids stamped
     val delRel = s"data/eqdel-$newSnapId.parquet"
     val dest = new Path(tableDir, delRel)
@@ -1691,7 +1598,7 @@ object IcebergLite {
       "parquet", new Path(tableDir, "_tmp_eqdel"), dest)
     val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        dest, spark.sparkContext.hadoopConfiguration))
+        dest, fs.getConf))
     val rc = try footer.getRecordCount finally footer.close()
     val size = fs.getFileStatus(dest).getLen
     val files = LakeFiles.Hadoop(fs, tableDir)
@@ -1703,47 +1610,32 @@ object IcebergLite {
           lit(rc).as("record_count"),
           lit(size).as("file_size_in_bytes")).as("data_file")),
       s"metadata/m-eqdel-$newSnapId.avro")
-    files.avro((oldRows :+ ((s"metadata/m-eqdel-$newSnapId.avro",
+    files.avro((oldRows(w) :+ ((s"metadata/m-eqdel-$newSnapId.avro",
       Some(1): Option[Int], Some(newSeq): Option[Long])))
       .toDF("manifest_path", "content", "sequence_number"),
       s"metadata/snap-$newSnapId.avro")
-    rollMetadata(fs, tableDir, metaFile, meta, newSnapId, "delete")
+    rollMetadata(w.meta, newSnapId, "delete")
     newSnapId
   }
 
   /** Append snapshot `newSnapId` (manifest list
-    * `metadata/snap-<id>.avro`, already written) to the metadata and
-    * publish the next version — the write paths' shared ATOMIC
-    * commit: a reader resolves either the old metadata or the new
-    * one, never half a snapshot. */
-  private def rollMetadata(fs: org.apache.hadoop.fs.FileSystem,
-                           tableDir: String, metaFile: Path,
-                           meta: JValue, newSnapId: Long,
+    * `metadata/snap-<id>.avro`, already written) to `meta` and
+    * [[publish]] the next version — the write paths' shared ATOMIC
+    * commit. */
+  private def rollMetadata(meta: Meta, newSnapId: Long,
                            operation: String): Unit = {
     val newSnapJson: JValue = JObject(
       "snapshot-id" -> JInt(newSnapId),
       "manifest-list" -> JString(s"metadata/snap-$newSnapId.avro"),
       "summary" -> JObject("operation" -> JString(operation)))
-    val withSnap = meta transformField {
+    val withSnap = meta.json transformField {
       case ("snapshots", JArray(ss)) =>
         ("snapshots", JArray(ss :+ newSnapJson))
       case ("current-snapshot-id", _) =>
         ("current-snapshot-id", JInt(newSnapId))
     }
-    val version = metaFile.getName.stripPrefix("v")
-      .stripSuffix(".metadata.json").toLong + 1
-    try AtomicFiles.write(fs,
-      new Path(tableDir, s"metadata/v$version.metadata.json"),
-      JsonMethods.compact(JsonMethods.render(withSnap)), replace = false)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"$tableDir: metadata v$version already exists — another " +
-            "writer is active (single-writer scope)")
-    }
-    AtomicFiles.write(fs,
-      new Path(tableDir, "metadata/version-hint.text"),
-      version.toString, replace = true)
+    publish(meta.fs, meta.tableDir, meta.version + 1,
+      JsonMethods.compact(JsonMethods.render(withSnap)))
   }
 
   /** Resolve the CURRENT partition spec's transform fields over
@@ -1874,7 +1766,7 @@ object IcebergLite {
             "the table")
       val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          dest, spark.sparkContext.hadoopConfiguration))
+          dest, fs.getConf))
       val recordCount = try footer.getRecordCount finally footer.close()
       (rel, vals, recordCount, fs.getFileStatus(dest).getLen)
     }
@@ -1967,7 +1859,7 @@ object IcebergLite {
         s"$tableDir: could not place $rel")
       val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          dest, spark.sparkContext.hadoopConfiguration))
+          dest, fs.getConf))
       val rc = try footer.getRecordCount finally footer.close()
       (rel, rc, fs.getFileStatus(dest).getLen)
     }.toSeq
@@ -1997,21 +1889,18 @@ object IcebergLite {
              condition: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{col, lit, struct}
     import spark.implicits._
-    val (metaFile, meta) = loadMeta(spark, tableDir)
-    val snap = snapshot(spark, tableDir)
+    val (w, snap) = resolved(spark, tableDir)
     if (snap.files.isEmpty) throw new IllegalStateException(
       s"$tableDir: no data files to delete from")
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = w.meta.fs
     val data = scanData(spark, tableDir, snap, withMeta = true)
     val live = applyDeleteChain(spark, tableDir, snap, data)
     val matched = live.filter(condition)
       .select(col("_ice_path").as("file_path"),
         col("_ice_pos").cast("long").as("pos"))
     if (matched.limit(1).count() == 0) return snap.snapshotId
-    val (oldRows, maxSeq) = liveManifestRows(spark, tableDir, meta)
-    val newSeq = maxSeq + 1
-    val newSnapId = snapshotIds(spark, tableDir).max + 1
+    val newSeq = nextSeq(w)
+    val newSnapId = w.meta.snapshotIds.max + 1
     // the spec orders positional delete rows by (file_path, pos);
     // a range-partitioned sorted write keeps every staged file sorted
     val tmp = new Path(tableDir, "_tmp_posdel")
@@ -2028,11 +1917,11 @@ object IcebergLite {
           col("record_count"), col("file_size_in_bytes"))
           .as("data_file")),
       s"metadata/m-posdel-$newSnapId.avro")
-    files.avro((oldRows :+ ((s"metadata/m-posdel-$newSnapId.avro",
+    files.avro((oldRows(w) :+ ((s"metadata/m-posdel-$newSnapId.avro",
       Some(1): Option[Int], Some(newSeq): Option[Long])))
       .toDF("manifest_path", "content", "sequence_number"),
       s"metadata/snap-$newSnapId.avro")
-    rollMetadata(fs, tableDir, metaFile, meta, newSnapId, "delete")
+    rollMetadata(w.meta, newSnapId, "delete")
     newSnapId
   }
 
@@ -2061,8 +1950,7 @@ object IcebergLite {
              set: Map[String, org.apache.spark.sql.Column]): Long = {
     import org.apache.spark.sql.functions.{col, lit, struct}
     import spark.implicits._
-    val (metaFile, meta) = loadMeta(spark, tableDir)
-    val snap = snapshot(spark, tableDir)
+    val (w, snap) = resolved(spark, tableDir)
     if (snap.files.isEmpty) throw new IllegalStateException(
       s"$tableDir: no data files to update")
     require(set.nonEmpty, "update needs at least one SET column")
@@ -2075,9 +1963,8 @@ object IcebergLite {
     // spec's transforms exactly like compact's rewrite, so a SET
     // that moves a row across partitions lands it under its new
     // values (recomputed from the row at stage time)
-    val partFields = resolvedPartFields(tableDir, meta, snap)
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val partFields = resolvedPartFields(tableDir, w.meta.json, snap)
+    val fs = w.meta.fs
     val data = scanData(spark, tableDir, snap, withMeta = true)
     val live = applyDeleteChain(spark, tableDir, snap, data)
     val matchedRows = live.filter(condition)
@@ -2085,9 +1972,8 @@ object IcebergLite {
       .select(col("_ice_path").as("file_path"),
         col("_ice_pos").cast("long").as("pos"))
     if (matched.limit(1).count() == 0) return snap.snapshotId
-    val (oldRows, maxSeq) = liveManifestRows(spark, tableDir, meta)
-    val newSeq = maxSeq + 1
-    val newSnapId = snapshotIds(spark, tableDir).max + 1
+    val newSeq = nextSeq(w)
+    val newSnapId = w.meta.snapshotIds.max + 1
     val tmpDel = new Path(tableDir, "_tmp_updposdel")
     stampFieldIds(matched.orderBy(col("file_path"), col("pos")),
       Map("file_path" -> 2147483546, "pos" -> 2147483545))
@@ -2122,14 +2008,14 @@ object IcebergLite {
     files.avro(stagedDataManifestDf(spark, dataFiles, partFields,
       seq = Some(newSeq)),
       s"metadata/m-upddata-$newSnapId.avro")
-    files.avro((oldRows ++ Seq(
+    files.avro((oldRows(w) ++ Seq(
       (s"metadata/m-upddel-$newSnapId.avro",
         Some(1): Option[Int], Some(newSeq): Option[Long]),
       (s"metadata/m-upddata-$newSnapId.avro",
         Some(0): Option[Int], Some(newSeq): Option[Long])))
       .toDF("manifest_path", "content", "sequence_number"),
       s"metadata/snap-$newSnapId.avro")
-    rollMetadata(fs, tableDir, metaFile, meta, newSnapId, "overwrite")
+    rollMetadata(w.meta, newSnapId, "overwrite")
     newSnapId
   }
 
@@ -2160,12 +2046,11 @@ object IcebergLite {
                   rows: DataFrame, keyCols: Seq[String]): Long = {
     import org.apache.spark.sql.functions.{array, col, lit, struct}
     import spark.implicits._
-    val (metaFile, meta) = loadMeta(spark, tableDir)
-    val snap = snapshot(spark, tableDir)
+    val (w, snap) = resolved(spark, tableDir)
     require(keyCols.nonEmpty, "upsertKeyed needs at least one key column")
     // partitioned tables SERVE: the data leg stages under the spec's
     // transforms; the equality delete stays global (see scaladoc)
-    val partFields = resolvedPartFields(tableDir, meta, snap)
+    val partFields = resolvedPartFields(tableDir, w.meta.json, snap)
     val missing = snap.schema.fieldNames.filterNot(rows.columns.contains)
     if (missing.nonEmpty) throw new IllegalStateException(
       s"$tableDir: upsertKeyed input lacks schema columns " +
@@ -2182,11 +2067,9 @@ object IcebergLite {
     }
     val eqIds = keyCols.map(fieldId)
     val allIds = snap.schema.fieldNames.map(c => c -> fieldId(c)).toMap
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (oldRows, maxSeq) = liveManifestRows(spark, tableDir, meta)
-    val newSeq = maxSeq + 1
-    val newSnapId = snapshotIds(spark, tableDir).max + 1
+    val fs = w.meta.fs
+    val newSeq = nextSeq(w)
+    val newSnapId = w.meta.snapshotIds.max + 1
     def moveStaged(tmp: Path, relPrefix: String)
     : Seq[(String, Long, Long)] =
       moveStagedParquet(spark, tableDir, fs, tmp, relPrefix, newSnapId)
@@ -2230,14 +2113,14 @@ object IcebergLite {
       s"metadata/m-upskdata-$newSnapId.avro")
     // BOTH new manifests ride ONE manifest list at ONE sequence — the
     // atomicity the two-snapshot composition lacks
-    files.avro((oldRows ++ Seq(
+    files.avro((oldRows(w) ++ Seq(
       (s"metadata/m-upskdel-$newSnapId.avro",
         Some(1): Option[Int], Some(newSeq): Option[Long]),
       (s"metadata/m-upskdata-$newSnapId.avro",
         Some(0): Option[Int], Some(newSeq): Option[Long])))
       .toDF("manifest_path", "content", "sequence_number"),
       s"metadata/snap-$newSnapId.avro")
-    rollMetadata(fs, tableDir, metaFile, meta, newSnapId, "overwrite")
+    rollMetadata(w.meta, newSnapId, "overwrite")
     newSnapId
   }
 
@@ -2258,21 +2141,21 @@ object IcebergLite {
   def expireSnapshots(spark: SparkSession, tableDir: String,
                       keepLast: Int = 1): Seq[Long] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val (metaFile, meta) = loadMeta(spark, tableDir)
-    val ids = snapshotIds(spark, tableDir)
+    val m = loadMeta(spark, tableDir)
+    val meta = m.json
+    val ids = m.snapshotIds
     if (ids.size <= keepLast) return Nil
     val (expired, retained) = ids.splitAt(ids.size - keepLast)
     // the main table pointer is a pin too: a rolled-back table whose
     // current-snapshot-id targets an older snapshot must not have that
     // snapshot expired out from under it (same contract as named refs)
-    (meta \ "current-snapshot-id").extractOpt[Long]
-      .filter(_ != -1L).foreach { cur =>
-        if (expired.contains(cur)) throw new IllegalStateException(
-          s"$tableDir: current-snapshot-id $cur is not among the last " +
-            s"$keepLast snapshots (rolled-back table) — this expiry " +
-            "would drop the CURRENT snapshot; roll forward or raise " +
-            "keepLast")
-      }
+    m.currentId.foreach { cur =>
+      if (expired.contains(cur)) throw new IllegalStateException(
+        s"$tableDir: current-snapshot-id $cur is not among the last " +
+          s"$keepLast snapshots (rolled-back table) — this expiry " +
+          "would drop the CURRENT snapshot; roll forward or raise " +
+          "keepLast")
+    }
     (meta \ "refs") match {
       case JObject(refs) => refs.foreach { case (name, r) =>
         (r \ "snapshot-id").extractOpt[Long].foreach { sid =>
@@ -2286,20 +2169,10 @@ object IcebergLite {
     // every path a snapshot references: its manifest list, manifests,
     // and data/delete/DV files (all resolved for set comparison)
     def pathsOf(sid: Long): Set[String] = {
-      val ml = (meta \ "snapshots") match {
-        case JArray(ss) => ss.find(s =>
-          (s \ "snapshot-id").extractOpt[Long].contains(sid))
-          .map(s => (s \ "manifest-list").extract[String]).getOrElse(
-            throw new IllegalStateException(
-              s"$tableDir: snapshot $sid missing from metadata"))
-        case _ => throw new IllegalStateException(
-          s"$tableDir: metadata has no snapshots array")
-      }
-      val mlResolved = resolve(tableDir, ml)
-      val manifests = MetaAvro.read(spark, mlResolved)
-        .rows.map(r => r.getAs[String]("manifest_path")).toSeq
-      val snap = snapshot(spark, tableDir, Some(sid))
-      (Seq(mlResolved) ++ manifests.map(resolve(tableDir, _)) ++
+      val w = walk(spark, m, Some(sid))
+      val snap = toSnapshot(w)
+      (Seq(resolve(tableDir, m.manifestList(sid))) ++
+        w.manifests.map(r => resolve(tableDir, r.path)) ++
         snap.files ++ snap.deleteFiles ++ snap.eqDeletes.map(_.path) ++
         snap.dvs.map(_.path)).toSet
     }
@@ -2312,39 +2185,14 @@ object IcebergLite {
         ("snapshots", JArray(ss.filter(s =>
           (s \ "snapshot-id").extractOpt[Long].exists(retained.contains))))
     }
-    val version = metaFile.getName.stripPrefix("v")
-      .stripSuffix(".metadata.json").toLong + 1
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try AtomicFiles.write(fs,
-      new Path(tableDir, s"metadata/v$version.metadata.json"),
-      JsonMethods.compact(JsonMethods.render(withSnaps)),
-      replace = false)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"$tableDir: metadata v$version already exists — another " +
-            "writer is active (single-writer scope)")
-    }
-    AtomicFiles.write(fs,
-      new Path(tableDir, "metadata/version-hint.text"),
-      version.toString, replace = true)
+    publish(m.fs, tableDir, m.version + 1,
+      JsonMethods.compact(JsonMethods.render(withSnaps)))
     // Iceberg metadata routinely carries absolute paths that can live
     // OUTSIDE the table root (imported/registered files, shared
     // locations) — never delete those, mirroring DeltaLogLite.vacuum's
-    // root-containment guard for clone sources. Deletion rides the
-    // table's OWN Hadoop filesystem (hdfs://, object stores) with
-    // QUALIFIED-path containment; a failed delete of an existing file
-    // refuses loudly rather than silently stranding it.
-    val rootQ = fs.makeQualified(new Path(tableDir)).toString + "/"
-    orphans.toSeq.sorted.foreach { p =>
-      val q = fs.makeQualified(new Path(p))
-      if (q.toString.startsWith(rootQ) &&
-        !q.toUri.getPath.split('/').contains("..") &&
-        fs.exists(q) && !fs.delete(q, false))
-        throw new IllegalStateException(
-          s"$tableDir: expiry could not delete orphan $p")
-    }
+    // root-containment guard for clone sources
+    LakeFiles.deleteInside(m.fs, tableDir, orphans)(p =>
+      s"$tableDir: expiry could not delete orphan $p")
     expired
   }
 }

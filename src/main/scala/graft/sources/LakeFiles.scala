@@ -2,22 +2,25 @@ package graft.sources
 
 import java.io.File
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 
 /** The format-free file mechanics shared by the table writers, the
   * stream sinks and the query fixture authors: recursive delete, a
-  * checked rename, single-file staging, and the JSON / URI spellings
-  * of log entries. Nothing here knows a table format, so a fixture
-  * author that uses it stays independent of the library's Iceberg,
-  * Paimon, Delta and Hudi writers.
+  * checked rename, single-file staging, a whole-file text read, the
+  * root-contained orphan delete of the maintenance writers, and the
+  * JSON / URI spellings of log entries. Nothing here knows a table
+  * format, so a fixture author that uses it stays independent of the
+  * library's Iceberg, Paimon, Delta and Hudi writers.
   *
   * Staging comes in two variants that keep each caller's filesystem:
   * the `java.io.File` one for local fixture and sink directories, and
   * the Hadoop `FileSystem` one for table roots that may be qualified
-  * URIs. On a local path the Hadoop variant goes through Hadoop's
-  * `ChecksumFileSystem`, whose rename carries the `.crc` sidecar into
-  * the table; the `File` variant leaves it in the temp directory. */
+  * URIs. Neither carries a `.crc` sidecar into the table: the Hadoop
+  * variant renames through the raw filesystem under a
+  * `ChecksumFileSystem` (a sidecar goes stale once [[AtomicFiles]]
+  * replaces its file through nio), and both leave the sidecar in the
+  * temp directory they delete. */
 object LakeFiles {
 
   /** Spark's built-in Avro source, by class name. */
@@ -52,8 +55,12 @@ object LakeFiles {
             dst: Path): Unit = {
     write(df, fmt, tmp.toString)
     val part = onePart(tmp, fs.listStatus(tmp).map(_.getPath.getName))
-    fs.mkdirs(dst.getParent)
-    move(fs, new Path(tmp, part), dst)
+    val raw = fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
+    raw.mkdirs(dst.getParent)
+    move(raw, new Path(tmp, part), dst)
     fs.delete(tmp, true): Unit
   }
 
@@ -82,6 +89,33 @@ object LakeFiles {
       case parts => throw new IllegalStateException(
         s"staging $tmp left ${parts.size} part files, expected one")
     }
+
+  /** The whole file at `p` as UTF-8 text. */
+  def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
+  /** Delete each of `paths` that exists inside the table `root`, through
+    * the table's own filesystem; returns the deleted ones, sorted. Paths
+    * outside the root (imported or cloned files) are never touched:
+    * containment compares QUALIFIED paths, and a `..` component, which
+    * can dodge a prefix test, disqualifies a path outright. A delete
+    * that fails throws `failure(path)` rather than stranding the file. */
+  def deleteInside(fs: FileSystem, root: String, paths: Iterable[String])
+                  (failure: String => String): Seq[String] = {
+    val rootQ = fs.makeQualified(new Path(root)).toString + "/"
+    paths.toSeq.sorted.filter { p =>
+      val q = fs.makeQualified(new Path(p))
+      q.toString.startsWith(rootQ) &&
+        !q.toUri.getPath.split('/').contains("..") &&
+        fs.exists(q) && {
+          if (!fs.delete(q, false)) throw new IllegalStateException(failure(p))
+          true
+        }
+    }
+  }
 
   /** A JSON string literal: quotes, backslashes and control characters
     * escaped, everything else (non-ASCII included) as is. */

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graft.MetaAvro
 import org.apache.spark.sql.types._
@@ -105,7 +105,9 @@ object PaimonLite {
                               Nil,
                             fieldListaggDelims: Map[String, String] =
                               Map.empty,
-                            dvs: Seq[Dv] = Nil)
+                            dvs: Seq[Dv] = Nil,
+                            schemaId: Long = 0L,
+                            changelogProducer: String = "none")
 
   /** The published PK merge engines this reader serves. */
   val MergeEngines: Set[String] =
@@ -123,13 +125,6 @@ object PaimonLite {
       "first_non_null_value", "listagg")
 
   private implicit val fmts: Formats = DefaultFormats
-
-  private def readText(fs: org.apache.hadoop.fs.FileSystem,
-                       p: Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
 
   /** Paimon types are SQL-style strings (possibly "... NOT NULL"). */
   private def paimonType(raw: String, where: String): (DataType, Boolean) = {
@@ -181,30 +176,211 @@ object PaimonLite {
     if (noScheme.startsWith("/")) noScheme else s"$tableDir/$noScheme"
   }
 
+  /** The table's filesystem, of the session's Hadoop conf (as
+    * [[MetaAvro]] and [[FooterSweep]] use): every snapshot, tag, schema
+    * and hint a resolve or a commit reads or publishes goes through it. */
+  private def fsOf(spark: SparkSession, tableDir: String): FileSystem =
+    new Path(tableDir).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** The JSON document at `rel` under the table — a
+    * `snapshot/snapshot-<N>` or a `tag/tag-<name>`; None when absent. */
+  private def doc(fs: FileSystem, tableDir: String,
+                  rel: String): Option[JValue] = {
+    val p = new Path(tableDir, rel)
+    if (fs.exists(p)) Some(JsonMethods.parse(LakeFiles.readText(fs, p)))
+    else None
+  }
+
+  /** Snapshot ids present under `snapshot/`, ascending. */
+  private def snapshotFiles(fs: FileSystem, tableDir: String): Seq[Long] =
+    fs.listStatus(new Path(tableDir, "snapshot")).toSeq
+      .map(_.getPath.getName)
+      .collect { case n if n.matches("snapshot-\\d+") =>
+        n.stripPrefix("snapshot-").toLong }.sorted
+
+  /** The latest snapshot id: the `snapshot/LATEST` hint, else the
+    * highest `snapshot-<N>`, then advanced while `snapshot-<N+1>`
+    * exists — a writer that crashed between publishing a snapshot and
+    * moving the hint leaves the hint one behind, and Paimon's own
+    * SnapshotManager probes past it the same way. */
+  private def latestId(fs: FileSystem, tableDir: String): Long = {
+    val snapDir = new Path(tableDir, "snapshot")
+    if (!fs.exists(snapDir))
+      throw new IllegalStateException(s"$tableDir has no snapshot directory")
+    val hint = new Path(snapDir, "LATEST")
+    var id =
+      if (fs.exists(hint)) LakeFiles.readText(fs, hint).trim.toLong
+      else snapshotFiles(fs, tableDir).lastOption.getOrElse(
+        throw new IllegalStateException(
+          s"$tableDir: no snapshot-<N> files in snapshot/"))
+    while (fs.exists(new Path(snapDir, s"snapshot-${id + 1}"))) id += 1
+    id
+  }
+
+  /** Publish snapshot `id`: create-new `snapshot/snapshot-<id>` (a taken
+    * id means another writer committed first — single-writer scope
+    * refuses), then move the `LATEST` hint. The one commit point of the
+    * writers and the stream sink. */
+  def publish(fs: FileSystem, tableDir: String, id: Long,
+              json: String): Unit = {
+    try AtomicFiles.write(fs, new Path(tableDir, s"snapshot/snapshot-$id"),
+      json, replace = false)
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        throw new IllegalStateException(
+          s"$tableDir: snapshot $id already exists — another writer is " +
+            "active (single-writer scope)")
+    }
+    AtomicFiles.write(fs, new Path(tableDir, "snapshot/LATEST"),
+      id.toString, replace = true)
+  }
+
+  /** One schema document `schema/schema-<id>`, loaded once: its path
+    * (for messages), its JSON, and the parts every reader of it needs.
+    * The field list parses on first use, so a reader that only places
+    * files of an unpartitioned table never parses it. */
+  private final case class SchemaDoc(file: String, json: JValue) {
+    def option(k: String): Option[String] =
+      (json \ "options" \ k).extractOpt[String]
+    def keys(k: String): Seq[String] = (json \ k) match {
+      case JArray(ks) => ks.map(_.extract[String])
+      case _          => Nil
+    }
+    def partitionKeys: Seq[String] = keys("partitionKeys")
+    def defaultPartName: String =
+      option("partition.default-name").getOrElse("__DEFAULT_PARTITION__")
+    lazy val struct: StructType = (json \ "fields") match {
+      case JArray(fls) => StructType(fls.map { f =>
+        val name = (f \ "name").extract[String]
+        (f \ "type") match {
+          case JString(t) =>
+            val (dt, nullable) = paimonType(t, file)
+            StructField(name, dt, nullable)
+          case _ => throw new IllegalStateException(
+            s"$file: field $name has a non-primitive type")
+        }
+      })
+      case _ => throw new IllegalStateException(s"$file: schema has no fields")
+    }
+    // path formatting and BinaryRow decode both need the bounded
+    // primitive set
+    lazy val partTypes: Seq[DataType] =
+      boundedPartTypes(struct, partitionKeys, file)
+  }
+
+  private def loadSchema(fs: FileSystem, tableDir: String,
+                         id: Long): SchemaDoc = {
+    val f = new Path(tableDir, s"schema/schema-$id")
+    if (!fs.exists(f)) throw new IllegalStateException(
+      s"$tableDir: schema/schema-$id missing")
+    SchemaDoc(f.toString, JsonMethods.parse(LakeFiles.readText(fs, f)))
+  }
+
+  private def schemaIdOf(snap: JValue): Long =
+    (snap \ "schemaId").extractOpt[Long].getOrElse(0L)
+
+  /** Bare manifest names (the layout's convention) live under
+    * manifest/; absolute/URI spellings go through the scheme-checked
+    * resolver. */
+  private def resolveManifest(tableDir: String, name: String): String =
+    if (name.startsWith("/") || name.contains("://") ||
+      name.startsWith("file:")) resolve(tableDir, name)
+    else s"$tableDir/manifest/$name"
+
+  /** The manifest names a manifest list holds. */
+  private def manifestList(spark: SparkSession, tableDir: String,
+                           name: String): Seq[String] = {
+    val p = resolveManifest(tableDir, name)
+    val list = MetaAvro.read(spark, p)
+    if (!list.columns.contains("_FILE_NAME"))
+      throw new IllegalStateException(s"$p: manifest list lacks _FILE_NAME")
+    list.rows.map(_.getAs[String]("_FILE_NAME")).toSeq
+  }
+
+  /** The manifest names the list under `key` of snapshot document `snap`
+    * holds; an absent key holds none. */
+  private def listedIn(spark: SparkSession, tableDir: String, snap: JValue,
+                       key: String, where: => String): Seq[String] =
+    (snap \ key) match {
+      case JString(ml) => manifestList(spark, tableDir, ml)
+      case JNull | JNothing => Nil
+      case other => throw new IllegalStateException(
+        s"$where: $key is not a string: $other")
+    }
+
+  /** One manifest entry: its `_KIND` (0 = ADD, 1 = DELETE), the file's
+    * name, and the file placed under its partition directory and bucket
+    * with the typed partition values its `_PARTITION` BinaryRow
+    * decodes to. */
+  private final case class Entry(kind: Int, name: String, file: DataFile)
+
+  /** Decode every entry of manifest `name` under `schema`'s partition
+    * keys; `what` names the manifest's role in a refusal. */
+  private def entries(spark: SparkSession, tableDir: String,
+                      schema: SchemaDoc, name: String,
+                      what: String): Seq[Entry] = {
+    val p = resolveManifest(tableDir, name)
+    val m = MetaAvro.read(spark, p)
+    for (need <- Seq("_KIND", "_BUCKET", "_FILE"))
+      if (!m.columns.contains(need)) throw new IllegalStateException(
+        s"$p: manifest lacks $need")
+    val partitionKeys = schema.partitionKeys
+    if (partitionKeys.nonEmpty && !m.columns.contains("_PARTITION"))
+      throw new IllegalStateException(
+        s"$p: partitioned table but the $what lacks _PARTITION — " +
+          "cannot place its files")
+    m.rows.toSeq.map { r =>
+      val bucket = r.getAs[Number]("_BUCKET").intValue()
+      val file = r.getAs[org.apache.spark.sql.Row]("_FILE")
+        .getAs[String]("_FILE_NAME")
+      val part: Seq[Any] =
+        if (partitionKeys.isEmpty) Nil
+        else BinaryRowCodec.decode(r.getAs[Array[Byte]]("_PARTITION"),
+          schema.partTypes, s"$p ($file)")
+      val partDirs = partitionKeys.zip(part).map { case (k, v) =>
+        s"$k=${partPathValue(v, schema.defaultPartName)}/"
+      }.mkString
+      Entry(r.getAs[Number]("_KIND").intValue(), file,
+        DataFile(s"$tableDir/$partDirs" + s"bucket-$bucket/$file", part))
+    }
+  }
+
+  /** One snapshot, walked once: the filesystem it was read through, its
+    * JSON document and schema, the manifest names its base and delta
+    * lists hold, and the readable [[Snapshot]]. The document, schema and
+    * manifest names stay out of the [[Snapshot]] that query plans
+    * capture. */
+  private final case class Walk(fs: FileSystem, json: JValue,
+                                schema: SchemaDoc, manifests: Seq[String],
+                                snap: Snapshot)
+
   /** Resolve a snapshot: `snapshotId`, else a named `tag` (Paimon's
     * `tag/tag-<name>` files each hold a full copy of the snapshot
     * JSON they pin — readable even after the numbered snapshot
     * expired, which is the point of tags; unknown names refuse
     * listing what exists), else `asOfTimestampMs` (the LATEST
     * snapshot whose `timeMillis` is ≤ the instant — Paimon's own
-    * commit stamp), else the `snapshot/LATEST` hint, else the highest
-    * snapshot-<N> present. */
+    * commit stamp), else the latest snapshot ([[latestId]]). */
   def snapshot(spark: SparkSession, tableDir: String,
                snapshotId: Option[Long] = None,
                asOfTimestampMs: Option[Long] = None,
-               tag: Option[String] = None): Snapshot = {
+               tag: Option[String] = None): Snapshot =
+    walk(spark, tableDir, snapshotId, asOfTimestampMs, tag).snap
+
+  private def walk(spark: SparkSession, tableDir: String,
+                   snapshotId: Option[Long] = None,
+                   asOfTimestampMs: Option[Long] = None,
+                   tag: Option[String] = None): Walk = {
     require(Seq(snapshotId, asOfTimestampMs, tag).count(_.nonEmpty) <= 1,
       "snapshotId, asOfTimestampMs and tag are mutually exclusive")
-    val snapDir = new Path(tableDir, "snapshot")
-    val fs = snapDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(snapDir))
+    val fs = fsOf(spark, tableDir)
+    if (!fs.exists(new Path(tableDir, "snapshot")))
       throw new IllegalStateException(s"$tableDir has no snapshot directory")
 
     // a TAG is its own snapshot document — resolve it first and skip
     // the numbered-snapshot lookup entirely (the number may be expired)
     val tagJson: Option[JValue] = tag.map { name =>
-      val tagFile = new Path(tableDir, s"tag/tag-$name")
-      if (!fs.exists(tagFile)) {
+      doc(fs, tableDir, s"tag/tag-$name").getOrElse {
         val tagDir = new Path(tableDir, "tag")
         val have =
           if (!fs.exists(tagDir)) "table has no tag directory"
@@ -218,18 +394,14 @@ object PaimonLite {
         throw new IllegalArgumentException(
           s"$tableDir: no tag named '$name' ($have)")
       }
-      JsonMethods.parse(readText(fs, tagFile))
     }
 
     val byTimestamp: Option[Long] = asOfTimestampMs.map { ts =>
-      val ids = fs.listStatus(snapDir).toSeq.map(_.getPath.getName)
-        .collect { case n if n.matches("snapshot-\\d+") =>
-          n.stripPrefix("snapshot-").toLong }
+      val ids = snapshotFiles(fs, tableDir)
       if (ids.isEmpty) throw new IllegalStateException(
         s"$tableDir: no snapshot-<N> files in snapshot/")
-      val stamped = ids.sorted.map { id =>
-        val j = JsonMethods.parse(
-          readText(fs, new Path(snapDir, s"snapshot-$id")))
+      val stamped = ids.map { id =>
+        val j = doc(fs, tableDir, s"snapshot/snapshot-$id").get
         id -> (j \ "timeMillis").extractOpt[Long].getOrElse(
           throw new IllegalStateException(
             s"$tableDir: snapshot $id has no timeMillis — timestamp " +
@@ -249,37 +421,21 @@ object PaimonLite {
             s"$tableDir: tag ${tag.get} holds no snapshot id — " +
               "malformed tag file")), j)
       case None =>
-        val id = snapshotId.orElse(byTimestamp).getOrElse {
-          val hint = new Path(snapDir, "LATEST")
-          if (fs.exists(hint)) readText(fs, hint).trim.toLong
-          else {
-            val ids = fs.listStatus(snapDir).toSeq.map(_.getPath.getName)
-              .collect { case n if n.matches("snapshot-\\d+") =>
-                n.stripPrefix("snapshot-").toLong }
-            if (ids.isEmpty) throw new IllegalStateException(
-              s"$tableDir: no snapshot-<N> files in snapshot/")
-            ids.max
-          }
-        }
-        val snapFile = new Path(snapDir, s"snapshot-$id")
-        if (!fs.exists(snapFile)) throw new IllegalArgumentException(
-          s"$tableDir: snapshot $id not found")
-        (id, JsonMethods.parse(readText(fs, snapFile)))
+        val id = snapshotId.orElse(byTimestamp)
+          .getOrElse(latestId(fs, tableDir))
+        (id, doc(fs, tableDir, s"snapshot/snapshot-$id").getOrElse(
+          throw new IllegalArgumentException(
+            s"$tableDir: snapshot $id not found")))
     }
 
-    val schemaId = (snap \ "schemaId").extractOpt[Long].getOrElse(0L)
-    val schemaFile = new Path(tableDir, s"schema/schema-$schemaId")
-    if (!fs.exists(schemaFile)) throw new IllegalStateException(
-      s"$tableDir: schema/schema-$schemaId missing")
-    val schemaJson = JsonMethods.parse(readText(fs, schemaFile))
-    val primaryKeys: Seq[String] = (schemaJson \ "primaryKeys") match {
-      case JArray(ks) if ks.nonEmpty => ks.map(_.extract[String])
-      case _ => Nil
-    }
+    val schemaId = schemaIdOf(snap)
+    val sd = loadSchema(fs, tableDir, schemaId)
+    val schemaJson = sd.json
+    val schemaFile = sd.file
+    val primaryKeys = sd.keys("primaryKeys")
     // all four published PK merge engines are READ (each folds into a
     // partial-combining aggregate — see read()); anything else refuses
-    val mergeEngine = (schemaJson \ "options" \ "merge-engine")
-      .extractOpt[String].getOrElse("deduplicate")
+    val mergeEngine = sd.option("merge-engine").getOrElse("deduplicate")
     if (primaryKeys.nonEmpty && !MergeEngines.contains(mergeEngine))
       throw new IllegalStateException(
         s"$schemaFile: merge-engine=$mergeEngine — PaimonLite reads " +
@@ -311,26 +467,9 @@ object PaimonLite {
         }.toMap
         case _ => Map.empty
       }
-    val partitionKeys: Seq[String] = (schemaJson \ "partitionKeys") match {
-      case JArray(ks) => ks.map(_.extract[String])
-      case _          => Nil
-    }
-    val defaultPartName = (schemaJson \ "options" \ "partition.default-name")
-      .extractOpt[String].getOrElse("__DEFAULT_PARTITION__")
-    val schema = (schemaJson \ "fields") match {
-      case JArray(fls) => StructType(fls.map { f =>
-        val name = (f \ "name").extract[String]
-        (f \ "type") match {
-          case JString(t) =>
-            val (dt, nullable) = paimonType(t, schemaFile.toString)
-            StructField(name, dt, nullable)
-          case _ => throw new IllegalStateException(
-            s"$schemaFile: field $name has a non-primitive type")
-        }
-      })
-      case _ => throw new IllegalStateException(
-        s"$schemaFile: schema has no fields")
-    }
+    val partitionKeys = sd.partitionKeys
+    val defaultPartName = sd.defaultPartName
+    val schema = sd.struct
 
     // declared aggregate functions must name schema columns whose
     // type can carry the fold — a mismatch would cast-coerce silently
@@ -397,77 +536,31 @@ object PaimonLite {
         case _ => Nil
       }
 
-    // bare names (the layout's convention) live under manifest/;
-    // absolute/URI spellings go through the scheme-checked resolver
-    def resolveManifest(name: String): String =
-      if (name.startsWith("/") || name.contains("://") ||
-        name.startsWith("file:")) resolve(tableDir, name)
-      else s"$tableDir/manifest/$name"
-
     // base (compacted history) + delta (this commit) manifest lists
-    def manifestsOf(key: String): Seq[String] =
-      (snap \ key) match {
-        case JString(ml) =>
-          val p = resolveManifest(ml)
-          val list = MetaAvro.read(spark, p)
-          if (!list.columns.contains("_FILE_NAME"))
-            throw new IllegalStateException(
-              s"$p: manifest list lacks _FILE_NAME")
-          list.rows.map(_.getAs[String]("_FILE_NAME")).toSeq
-        case JNull | JNothing => Nil
-        case other => throw new IllegalStateException(
-          s"$tableDir snapshot $wantedId: $key is not a string: $other")
-      }
+    def manifestsOf(key: String): Seq[String] = listedIn(spark, tableDir,
+      snap, key, s"$tableDir snapshot $wantedId")
     val manifests =
       manifestsOf("baseManifestList") ++ manifestsOf("deltaManifestList")
-
-    // validate partition-key types up front (path formatting and
-    // BinaryRow decode both need the bounded primitive set)
-    val partTypes: Seq[DataType] =
-      boundedPartTypes(schema, partitionKeys, schemaFile.toString)
+    val partTypes = sd.partTypes
 
     // replay ADD/DELETE per (partition, bucket, file name); later
     // entries win. Partition values ride each entry's _PARTITION
     // BinaryRow (decoded with the schema's partition types).
-    val live =
-      scala.collection.mutable.LinkedHashSet.empty[(Seq[Any], Int, String)]
-    for (mf <- manifests) {
-      val p = resolveManifest(mf)
-      val m = MetaAvro.read(spark, p)
-      for (need <- Seq("_KIND", "_BUCKET", "_FILE"))
-        if (!m.columns.contains(need)) throw new IllegalStateException(
-          s"$p: manifest lacks $need")
-      if (partitionKeys.nonEmpty && !m.columns.contains("_PARTITION"))
-        throw new IllegalStateException(
-          s"$p: partitioned table but the manifest lacks _PARTITION — " +
-            "cannot place its files")
-      m.rows.foreach { r =>
-        val kind = r.getAs[Number]("_KIND").intValue()
-        val bucket = r.getAs[Number]("_BUCKET").intValue()
-        val file = r.getAs[org.apache.spark.sql.Row]("_FILE")
-        val name = file.getAs[String]("_FILE_NAME")
-        val part: Seq[Any] =
-          if (partitionKeys.isEmpty) Nil
-          else BinaryRowCodec.decode(r.getAs[Array[Byte]]("_PARTITION"),
-            partTypes, s"$p ($name)")
-        kind match {
-          case 0 => live += ((part, bucket, name))
-          case 1 => live -= ((part, bucket, name))
-          case k => throw new IllegalStateException(
-            s"$p: unknown manifest entry kind $k for $name")
-        }
+    val live = scala.collection.mutable.LinkedHashSet.empty[DataFile]
+    for (mf <- manifests; e <- entries(spark, tableDir, sd, mf, "manifest"))
+      e.kind match {
+        case 0 => live += e.file
+        case 1 => live -= e.file
+        case k => throw new IllegalStateException(
+          s"${resolveManifest(tableDir, mf)}: unknown manifest entry kind " +
+            s"$k for ${e.name}")
       }
-    }
-    val files = live.toSeq.map { case (part, bucket, name) =>
+    val files = live.toSeq
+    for (f <- files; name = f.path.split('/').last)
       if (!name.endsWith(".parquet") && !name.endsWith(".orc"))
         throw new IllegalStateException(
           s"$tableDir: data file $name is neither parquet nor orc — " +
             "outside PaimonLite scope (set file.format=parquet|orc)")
-      val partDirs = partitionKeys.zip(part).map { case (k, v) =>
-        s"$k=${partPathValue(v, defaultPartName)}/"
-      }.mkString
-      DataFile(s"$tableDir/$partDirs" + s"bucket-$bucket/$name", part)
-    }
 
     // DELETION VECTORS mark rows dead OUTSIDE the KeyValue stream —
     // a reader that ignored them would silently RESURRECT deleted
@@ -584,9 +677,11 @@ object PaimonLite {
           s"$tableDir: deletion vectors over ORC data files — " +
             "row-ordinal addressing is parquet-only in lite scope")
     }
-    Snapshot(wantedId, schema, files, primaryKeys, partitionKeys,
-      defaultPartName, mergeEngine, fieldAggregates, sequenceGroups,
-      fieldListaggDelims, dvs)
+    Walk(fs, snap, sd, manifests,
+      Snapshot(wantedId, schema, files, primaryKeys, partitionKeys,
+        defaultPartName, mergeEngine, fieldAggregates, sequenceGroups,
+        fieldListaggDelims, dvs, schemaId,
+        sd.option("changelog-producer").getOrElse("none")))
   }
 
   /** The bounded partition-key types PaimonLite serves (path spelling
@@ -749,43 +844,18 @@ object PaimonLite {
   def readChangelog(spark: SparkSession, tableDir: String,
                     snapshotId: Long): DataFrame = {
     import org.apache.spark.sql.functions._
-    val snapDir = new Path(tableDir, "snapshot")
-    val fs = snapDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snapFile = new Path(snapDir, s"snapshot-$snapshotId")
-    if (!fs.exists(snapFile)) throw new IllegalArgumentException(
-      s"$tableDir: snapshot $snapshotId not found")
-    val snapJson = JsonMethods.parse(readText(fs, snapFile))
-    val producerSchemaId =
-      (snapJson \ "schemaId").extractOpt[Long].getOrElse(0L)
-    val producer = {
-      val sf = new Path(tableDir, s"schema/schema-$producerSchemaId")
-      if (!fs.exists(sf)) throw new IllegalStateException(
-        s"$tableDir: schema/schema-$producerSchemaId missing")
-      (JsonMethods.parse(readText(fs, sf)) \ "options" \
-        "changelog-producer").extractOpt[String].getOrElse("none")
-    }
-    if (producer == "full-compaction")
-      return mergeDiffChangelog(spark, tableDir, snapshotId)
     // value schema + KeyValue check ride the snapshot resolver;
     // PARTITIONED tables decode each entry's _PARTITION BinaryRow and
     // attach typed partition columns exactly like the batch path
-    val snap = snapshot(spark, tableDir, Some(snapshotId))
-    val partTypes = boundedPartTypes(snap.schema, snap.partitionKeys,
-      s"$tableDir changelog")
-    def resolveManifest(name: String): String =
-      if (name.startsWith("/") || name.contains("://") ||
-        name.startsWith("file:")) resolve(tableDir, name)
-      else s"$tableDir/manifest/$name"
-    val manifests = (snapJson \ "changelogManifestList") match {
-      case JString(ml) =>
-        val p = resolveManifest(ml)
-        val list = MetaAvro.read(spark, p)
-        if (!list.columns.contains("_FILE_NAME"))
-          throw new IllegalStateException(
-            s"$p: manifest list lacks _FILE_NAME")
-        list.rows.map(_.getAs[String]("_FILE_NAME")).toSeq
+    val w = walk(spark, tableDir, Some(snapshotId))
+    val snap = w.snap
+    val producer = snap.changelogProducer
+    if (producer == "full-compaction")
+      return mergeDiffChangelog(spark, tableDir, w)
+    val manifests = (w.json \ "changelogManifestList") match {
+      case JString(ml) => manifestList(spark, tableDir, ml)
       case _
-        if (snapJson \ "commitKind").extractOpt[String]
+        if (w.json \ "commitKind").extractOpt[String]
           .contains("COMPACT") =>
         // a compaction rearranges files without changing data — its
         // changelog is EMPTY, and consumers skip it (the format's own
@@ -810,31 +880,12 @@ object PaimonLite {
           "full-compaction (a materializing producer)")
     }
     val files: Seq[DataFile] = manifests.flatMap { mf =>
-      val p = resolveManifest(mf)
-      val m = MetaAvro.read(spark, p)
-      for (need <- Seq("_KIND", "_BUCKET", "_FILE"))
-        if (!m.columns.contains(need)) throw new IllegalStateException(
-          s"$p: manifest lacks $need")
-      if (snap.partitionKeys.nonEmpty && !m.columns.contains("_PARTITION"))
-        throw new IllegalStateException(
-          s"$p: partitioned table but the changelog manifest lacks " +
-            "_PARTITION — cannot place its files")
-      m.rows.map { r =>
-        if (r.getAs[Number]("_KIND").intValue() != 0)
-          throw new IllegalStateException(
-            s"$p: DELETE entry in a changelog manifest — malformed")
-        val bucket = r.getAs[Number]("_BUCKET").intValue()
-        val name = r.getAs[org.apache.spark.sql.Row]("_FILE")
-          .getAs[String]("_FILE_NAME")
-        val part: Seq[Any] =
-          if (snap.partitionKeys.isEmpty) Nil
-          else BinaryRowCodec.decode(r.getAs[Array[Byte]]("_PARTITION"),
-            partTypes, s"$p ($name)")
-        val partDirs = snap.partitionKeys.zip(part).map { case (k, v) =>
-          s"$k=${partPathValue(v, snap.defaultPartName)}/"
-        }.mkString
-        DataFile(s"$tableDir/$partDirs" + s"bucket-$bucket/$name", part)
-      }.toSeq
+      entries(spark, tableDir, w.schema, mf, "changelog manifest").map { e =>
+        if (e.kind != 0) throw new IllegalStateException(
+          s"${resolveManifest(tableDir, mf)}: DELETE entry in a changelog " +
+            "manifest — malformed")
+        e.file
+      }
     }
     val outSchema = StructType(snap.schema.fields :+
       StructField("_row_kind", StringType, nullable = true))
@@ -872,20 +923,20 @@ object PaimonLite {
     * carry over for free. Scale shape: both sides arrive already
     * aggregated on the key, the join is the only extra exchange. */
   private def mergeDiffChangelog(spark: SparkSession, tableDir: String,
-                                 snapshotId: Long): DataFrame = {
+                                 w: Walk): DataFrame = {
     import org.apache.spark.sql.functions._
-    val snap = snapshot(spark, tableDir, Some(snapshotId))
+    val snap = w.snap
+    val snapshotId = snap.snapshotId
     if (snap.primaryKeys.isEmpty) throw new IllegalStateException(
       s"$tableDir: changelog-producer=full-compaction on an " +
         "append-only table — no primary key to diff on")
     val keys = (snap.primaryKeys ++ snap.partitionKeys).distinct
     val vals = snap.schema.fieldNames.toSeq.filterNot(keys.contains)
     val names = snap.schema.fieldNames.toSeq
-    val cur = read(spark, tableDir, Some(snapshotId))
-    val snapDir = new Path(tableDir, "snapshot")
-    val fs = snapDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cur = readSnapshot(spark, tableDir, snap)
     val prev =
-      if (fs.exists(new Path(snapDir, s"snapshot-${snapshotId - 1}")))
+      if (w.fs.exists(
+        new Path(tableDir, s"snapshot/snapshot-${snapshotId - 1}")))
         read(spark, tableDir, Some(snapshotId - 1))
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -913,37 +964,19 @@ object PaimonLite {
         hasC && (!hasP || changed)))
   }
 
-  /** Latest snapshot id: LATEST hint, else the highest snapshot-<N>.
-    * Paimon snapshot ids are CONTIGUOUS longs — the natural streaming
-    * offset surface. */
-  def latestSnapshotId(spark: SparkSession, tableDir: String): Long = {
-    val snapDir = new Path(tableDir, "snapshot")
-    val fs = snapDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(snapDir))
-      throw new IllegalStateException(s"$tableDir has no snapshot directory")
-    val hint = new Path(snapDir, "LATEST")
-    if (fs.exists(hint)) readText(fs, hint).trim.toLong
-    else {
-      val ids = fs.listStatus(snapDir).toSeq.map(_.getPath.getName)
-        .collect { case n if n.matches("snapshot-\\d+") =>
-          n.stripPrefix("snapshot-").toLong }
-      if (ids.isEmpty) throw new IllegalStateException(
-        s"$tableDir: no snapshot-<N> files in snapshot/")
-      ids.max
-    }
-  }
+  /** Latest snapshot id ([[latestId]]). Paimon snapshot ids are
+    * CONTIGUOUS longs — the natural streaming offset surface. */
+  def latestSnapshotId(spark: SparkSession, tableDir: String): Long =
+    latestId(fsOf(spark, tableDir), tableDir)
 
   /** Snapshot `id`'s (commitUser, commitIdentifier) — Paimon's OWN
     * exactly-once surface: a committer dedups re-delivered work by
     * checking the identifiers it already committed under its user. */
   def commitInfo(spark: SparkSession, tableDir: String,
                  id: Long): (String, Long) = {
-    val snapDir = new Path(tableDir, "snapshot")
-    val fs = snapDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snapFile = new Path(snapDir, s"snapshot-$id")
-    if (!fs.exists(snapFile)) throw new IllegalStateException(
-      s"$tableDir: snapshot $id not found")
-    val snap = JsonMethods.parse(readText(fs, snapFile))
+    val snap = doc(fsOf(spark, tableDir), tableDir,
+      s"snapshot/snapshot-$id").getOrElse(throw new IllegalStateException(
+        s"$tableDir: snapshot $id not found"))
     ((snap \ "commitUser").extractOpt[String].getOrElse(""),
       (snap \ "commitIdentifier").extractOpt[Long].getOrElse(-1L))
   }
@@ -953,25 +986,11 @@ object PaimonLite {
     * append-only commit. Bounded metadata reads. */
   def manifestNames(spark: SparkSession, tableDir: String,
                     id: Long): Seq[String] = {
-    val snapDir = new Path(tableDir, "snapshot")
-    val fs = snapDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snapFile = new Path(snapDir, s"snapshot-$id")
-    if (!fs.exists(snapFile)) throw new IllegalStateException(
-      s"$tableDir: snapshot $id not found")
-    val snap = JsonMethods.parse(readText(fs, snapFile))
-    def namesOf(key: String): Seq[String] = (snap \ key) match {
-      case JString(ml) =>
-        val p = s"$tableDir/manifest/$ml"
-        val list = MetaAvro.read(spark, p)
-        if (!list.columns.contains("_FILE_NAME"))
-          throw new IllegalStateException(
-            s"$p: manifest list lacks _FILE_NAME")
-        list.rows.map(_.getAs[String]("_FILE_NAME")).toSeq
-      case JNull | JNothing => Nil
-      case other => throw new IllegalStateException(
-        s"$snapFile: $key is not a string: $other")
-    }
-    namesOf("baseManifestList") ++ namesOf("deltaManifestList")
+    val snap = doc(fsOf(spark, tableDir), tableDir,
+      s"snapshot/snapshot-$id").getOrElse(throw new IllegalStateException(
+        s"$tableDir: snapshot $id not found"))
+    Seq("baseManifestList", "deltaManifestList").flatMap(
+      listedIn(spark, tableDir, snap, _, s"$tableDir snapshot $id"))
   }
 
   /** The data files ADDED by snapshot `id`'s DELTA manifest list — the
@@ -984,103 +1003,34 @@ object PaimonLite {
     * history). */
   def deltaAdds(spark: SparkSession, tableDir: String,
                 id: Long): Seq[DataFile] = {
-    val snapDir = new Path(tableDir, "snapshot")
-    val fs = snapDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snapFile = new Path(snapDir, s"snapshot-$id")
-    if (!fs.exists(snapFile)) throw new IllegalStateException(
-      s"$tableDir: streaming range needs snapshot $id but its JSON is " +
-        "gone (snapshot expiry passed the stream's offset)")
-    val snap = JsonMethods.parse(readText(fs, snapFile))
+    val fs = fsOf(spark, tableDir)
+    val snap = doc(fs, tableDir, s"snapshot/snapshot-$id").getOrElse(
+      throw new IllegalStateException(
+        s"$tableDir: streaming range needs snapshot $id but its JSON is " +
+          "gone (snapshot expiry passed the stream's offset)"))
     // the commit's own schema document supplies partition keys/types
-    val schemaId = (snap \ "schemaId").extractOpt[Long].getOrElse(0L)
-    val schemaFile = new Path(tableDir, s"schema/schema-$schemaId")
-    if (!fs.exists(schemaFile)) throw new IllegalStateException(
-      s"$tableDir: schema/schema-$schemaId missing")
-    val schemaJson = JsonMethods.parse(readText(fs, schemaFile))
+    val schema = loadSchema(fs, tableDir, schemaIdOf(snap))
     // a DV-enabled table's commits can kill rows via index files the
     // delta manifest never mentions — streaming its ADDs would
     // silently keep dead rows in the stream
-    (schemaJson \ "options" \ "deletion-vectors.enabled") match {
-      case JString(v) if v.equalsIgnoreCase("true") =>
-        throw new IllegalStateException(
-          s"$tableDir: deletion-vectors.enabled=true — the per-commit " +
-            "ADD surface cannot see DV kills; streaming DV tables is " +
-            "outside PaimonLite scope")
-      case _ =>
-    }
-    val partitionKeys: Seq[String] = (schemaJson \ "partitionKeys") match {
-      case JArray(ks) => ks.map(_.extract[String])
-      case _          => Nil
-    }
-    val defaultPartName =
-      (schemaJson \ "options" \ "partition.default-name")
-        .extractOpt[String].getOrElse("__DEFAULT_PARTITION__")
-    val partTypes: Seq[DataType] =
-      if (partitionKeys.isEmpty) Nil
-      else {
-        val schema = (schemaJson \ "fields") match {
-          case JArray(fls) => StructType(fls.map { f =>
-            val name = (f \ "name").extract[String]
-            (f \ "type") match {
-              case JString(t) =>
-                val (dt, nullable) = paimonType(t, schemaFile.toString)
-                StructField(name, dt, nullable)
-              case _ => throw new IllegalStateException(
-                s"$schemaFile: field $name has a non-primitive type")
-            }
-          })
-          case _ => throw new IllegalStateException(
-            s"$schemaFile: schema has no fields")
-        }
-        boundedPartTypes(schema, partitionKeys, schemaFile.toString)
-      }
-    def resolveManifest(name: String): String =
-      if (name.startsWith("/") || name.contains("://") ||
-        name.startsWith("file:")) resolve(tableDir, name)
-      else s"$tableDir/manifest/$name"
-    val manifests = (snap \ "deltaManifestList") match {
-      case JString(ml) =>
-        val p = resolveManifest(ml)
-        val list = MetaAvro.read(spark, p)
-        if (!list.columns.contains("_FILE_NAME"))
-          throw new IllegalStateException(
-            s"$p: manifest list lacks _FILE_NAME")
-        list.rows.map(_.getAs[String]("_FILE_NAME")).toSeq
-      case JNull | JNothing => Nil
-      case other => throw new IllegalStateException(
-        s"$snapFile: deltaManifestList is not a string: $other")
-    }
-    manifests.flatMap { mf =>
-      val p = resolveManifest(mf)
-      val m = MetaAvro.read(spark, p)
-      for (need <- Seq("_KIND", "_BUCKET", "_FILE"))
-        if (!m.columns.contains(need)) throw new IllegalStateException(
-          s"$p: manifest lacks $need")
-      if (partitionKeys.nonEmpty && !m.columns.contains("_PARTITION"))
-        throw new IllegalStateException(
-          s"$p: partitioned table but the delta manifest lacks " +
-            "_PARTITION — cannot place its files")
-      m.rows.map { r =>
-        val kind = r.getAs[Number]("_KIND").intValue()
-        val bucket = r.getAs[Number]("_BUCKET").intValue()
-        val name = r.getAs[org.apache.spark.sql.Row]("_FILE")
-          .getAs[String]("_FILE_NAME")
-        if (kind != 0) throw new IllegalStateException(
-          s"$tableDir snapshot $id: DELETE entry for $name in the delta " +
-            "manifest — streaming reads are append-only scope " +
+    if (schema.option("deletion-vectors.enabled")
+        .exists(_.equalsIgnoreCase("true")))
+      throw new IllegalStateException(
+        s"$tableDir: deletion-vectors.enabled=true — the per-commit " +
+          "ADD surface cannot see DV kills; streaming DV tables is " +
+          "outside PaimonLite scope")
+    listedIn(spark, tableDir, snap, "deltaManifestList",
+      s"$tableDir snapshot $id").flatMap { mf =>
+      entries(spark, tableDir, schema, mf, "delta manifest").map { e =>
+        if (e.kind != 0) throw new IllegalStateException(
+          s"$tableDir snapshot $id: DELETE entry for ${e.name} in the " +
+            "delta manifest — streaming reads are append-only scope " +
             "(compaction/overwrite mid-stream would drop streamed rows)")
-        if (!name.endsWith(".parquet") && !name.endsWith(".orc"))
+        if (!e.name.endsWith(".parquet") && !e.name.endsWith(".orc"))
           throw new IllegalStateException(
-            s"$tableDir: data file $name is neither parquet nor orc")
-        val part: Seq[Any] =
-          if (partitionKeys.isEmpty) Nil
-          else BinaryRowCodec.decode(r.getAs[Array[Byte]]("_PARTITION"),
-            partTypes, s"$p ($name)")
-        val partDirs = partitionKeys.zip(part).map { case (k, v) =>
-          s"$k=${partPathValue(v, defaultPartName)}/"
-        }.mkString
-        DataFile(s"$tableDir/$partDirs" + s"bucket-$bucket/$name", part)
-      }.toSeq
+            s"$tableDir: data file ${e.name} is neither parquet nor orc")
+        e.file
+      }
     }
   }
 
@@ -1095,36 +1045,30 @@ object PaimonLite {
   def metadataTable(spark: SparkSession, tableDir: String,
                     table: String): DataFrame = {
     import spark.implicits._
-    val base = new Path(tableDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, tableDir)
     table match {
       case "snapshots" =>
-        val snapDir = new Path(base, "snapshot")
-        if (!fs.exists(snapDir)) throw new IllegalStateException(
-          s"$tableDir: no snapshot/ directory")
+        if (!fs.exists(new Path(tableDir, "snapshot")))
+          throw new IllegalStateException(
+            s"$tableDir: no snapshot/ directory")
         val rows: Seq[(Long, Long, String, Long, Option[Long])] =
-          fs.listStatus(snapDir).toSeq.map(_.getPath.getName)
-            .collect { case n if n.matches("snapshot-\\d+") =>
-              n.stripPrefix("snapshot-").toLong }
-            .sorted.map { id =>
-              val j = JsonMethods.parse(
-                readText(fs, new Path(snapDir, s"snapshot-$id")))
-              (id, (j \ "schemaId").extractOpt[Long].getOrElse(0L),
-                (j \ "commitKind").extractOpt[String].getOrElse(""),
-                (j \ "commitIdentifier").extractOpt[Long].getOrElse(0L),
-                (j \ "timeMillis").extractOpt[Long])
-            }
+          snapshotFiles(fs, tableDir).map { id =>
+            val j = doc(fs, tableDir, s"snapshot/snapshot-$id").get
+            (id, schemaIdOf(j),
+              (j \ "commitKind").extractOpt[String].getOrElse(""),
+              (j \ "commitIdentifier").extractOpt[Long].getOrElse(0L),
+              (j \ "timeMillis").extractOpt[Long])
+          }
         rows.toDF("snapshot_id", "schema_id", "commit_kind",
           "commit_identifier", "time_millis")
       case "tags" =>
-        val tagDir = new Path(base, "tag")
+        val tagDir = new Path(tableDir, "tag")
         val rows: Seq[(String, Long)] =
           if (!fs.exists(tagDir)) Nil
           else fs.listStatus(tagDir).toSeq.map(_.getPath.getName)
             .collect { case n if n.startsWith("tag-") => n }
             .sorted.map { n =>
-              val j = JsonMethods.parse(
-                readText(fs, new Path(tagDir, n)))
+              val j = doc(fs, tableDir, s"tag/$n").get
               (n.stripPrefix("tag-"),
                 (j \ "id").extractOpt[Long].getOrElse(
                   throw new IllegalStateException(
@@ -1150,9 +1094,13 @@ object PaimonLite {
   def read(spark: SparkSession, tableDir: String,
            snapshotId: Option[Long] = None,
            asOfTimestampMs: Option[Long] = None,
-           tag: Option[String] = None): DataFrame = {
+           tag: Option[String] = None): DataFrame =
+    readSnapshot(spark, tableDir,
+      snapshot(spark, tableDir, snapshotId, asOfTimestampMs, tag))
+
+  private def readSnapshot(spark: SparkSession, tableDir: String,
+                           snap: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions._
-    val snap = snapshot(spark, tableDir, snapshotId, asOfTimestampMs, tag)
     if (snap.files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
@@ -1392,23 +1340,19 @@ object PaimonLite {
     import org.apache.spark.sql.functions.{col, lit, struct, pmod,
       xxhash64}
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    val snap = snapshot(spark, tableDir)
+    val w = walk(spark, tableDir)
+    val (fs, snap) = (w.fs, w.snap)
     if (snap.files.isEmpty) throw new IllegalStateException(
       s"$tableDir: nothing to compact (no data files)")
     if (snap.primaryKeys.nonEmpty)
-      return compactPk(spark, tableDir, snap)
+      return compactPk(spark, tableDir, fs, snap)
     val partKeys = snap.partitionKeys
     val partTypes: Seq[DataType] =
       if (partKeys.isEmpty) Nil
       else partKeys.map(k => snap.schema(k).dataType)
-    val snapDir = new Path(tableDir, "snapshot")
-    val fs = snapDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val schemaId = (JsonMethods.parse(readText(fs,
-      new Path(snapDir, s"snapshot-${snap.snapshotId}"))) \ "schemaId")
-      .extractOpt[Long].getOrElse(0L)
-    val newId = latestSnapshotId(spark, tableDir) + 1
+    val newId = snap.snapshotId + 1
     val tmp = new Path(tableDir, "_tmp_compact")
-    val live = read(spark, tableDir)
+    val live = readSnapshot(spark, tableDir, snap)
     if (partKeys.isEmpty)
       live.coalesce(numFiles).write.mode("overwrite")
         .parquet(tmp.toString)
@@ -1476,7 +1420,7 @@ object PaimonLite {
               s"${partDirs}bucket-0")
         val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            dest, spark.sparkContext.hadoopConfiguration))
+            dest, fs.getConf))
         val rc = try footer.getRecordCount finally footer.close()
         (name, part, rc, fs.getFileStatus(dest).getLen)
     }
@@ -1497,19 +1441,20 @@ object PaimonLite {
       s"manifest/ml-compact-$newId.avro")
     files.avro(Seq.empty[String].toDF("_FILE_NAME"),
       s"manifest/ml-compact-empty-$newId.avro")
-    AtomicFiles.write(fs,
-      new Path(tableDir, s"snapshot/snapshot-$newId"),
-      s"""{"version":3,"id":$newId,"schemaId":$schemaId,
+    publishCompact(fs, tableDir, snap, newId)
+    newId
+  }
+
+  /** Publish compaction snapshot `newId` over `snap`: the new files in
+    * the base list `ml-compact-<newId>.avro`, an empty delta. */
+  private def publishCompact(fs: FileSystem, tableDir: String,
+                             snap: Snapshot, newId: Long): Unit =
+    publish(fs, tableDir, newId,
+      s"""{"version":3,"id":$newId,"schemaId":${snap.schemaId},
          |"baseManifestList":"ml-compact-$newId.avro",
          |"deltaManifestList":"ml-compact-empty-$newId.avro",
          |"commitKind":"COMPACT","commitUser":"graft",
-         |"commitIdentifier":$newId,"timeMillis":0}""".stripMargin,
-      replace = false)
-    AtomicFiles.write(fs,
-      new Path(tableDir, "snapshot/LATEST"),
-      newId.toString, replace = true)
-    newId
-  }
+         |"commitIdentifier":$newId,"timeMillis":0}""".stripMargin)
 
   /** ONE scan of a PK table's live KeyValue files projecting the
     * trimmed key columns, `_SEQUENCE_NUMBER`, the home bucket
@@ -1572,18 +1517,9 @@ object PaimonLite {
     * preservation (future writes hash keys to buckets — collapsing
     * them would corrupt the table for the owning engine). */
   private def compactPk(spark: SparkSession, tableDir: String,
-                        snap: Snapshot): Long = {
+                        fs: FileSystem, snap: Snapshot): Long = {
     import org.apache.spark.sql.functions._
-    val snapDir = new Path(tableDir, "snapshot")
-    val fs = snapDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snapJson = JsonMethods.parse(readText(fs,
-      new Path(snapDir, s"snapshot-${snap.snapshotId}")))
-    val schemaId = (snapJson \ "schemaId").extractOpt[Long].getOrElse(0L)
-    val producer = {
-      val sf = new Path(tableDir, s"schema/schema-$schemaId")
-      (JsonMethods.parse(readText(fs, sf)) \ "options" \
-        "changelog-producer").extractOpt[String].getOrElse("none")
-    }
+    val producer = snap.changelogProducer
     if (producer == "lookup" || producer == "full-compaction")
       throw new IllegalStateException(
         s"$tableDir: changelog-producer=$producer demands a " +
@@ -1599,7 +1535,7 @@ object PaimonLite {
     val valueNames = snap.schema.fieldNames
       .filterNot(partCols.contains).toSeq
     // merged state: the read contract itself (engine fold + DVs)
-    val merged = read(spark, tableDir)
+    val merged = readSnapshot(spark, tableDir, snap)
     // winning sequence + home bucket per key from the raw KeyValue
     // scan: re-stamping MAX (MIN under first-row) keeps every future
     // write's override semantics exactly
@@ -1622,7 +1558,7 @@ object PaimonLite {
         valueNames.map(n => merged(n).as(n)) ++
         partCols.map(k => merged(k).as(s"_gp_$k")) :+
         col("_pc_bucket").as("_gbucket"): _*)
-    val newId = latestSnapshotId(spark, tableDir) + 1
+    val newId = snap.snapshotId + 1
     val moved = stageKvWrite(spark, tableDir, fs, snap, kv, "compact",
       newId)
     import spark.implicits._
@@ -1635,17 +1571,7 @@ object PaimonLite {
     LakeFiles.Hadoop(fs, tableDir).avro(
       Seq.empty[String].toDF("_FILE_NAME"),
       s"manifest/ml-compact-empty-$newId.avro")
-    AtomicFiles.write(fs,
-      new Path(tableDir, s"snapshot/snapshot-$newId"),
-      s"""{"version":3,"id":$newId,"schemaId":$schemaId,
-         |"baseManifestList":"ml-compact-$newId.avro",
-         |"deltaManifestList":"ml-compact-empty-$newId.avro",
-         |"commitKind":"COMPACT","commitUser":"graft",
-         |"commitIdentifier":$newId,"timeMillis":0}""".stripMargin,
-      replace = false)
-    AtomicFiles.write(fs,
-      new Path(tableDir, "snapshot/LATEST"),
-      newId.toString, replace = true)
+    publishCompact(fs, tableDir, snap, newId)
     newId
   }
 
@@ -1724,7 +1650,7 @@ object PaimonLite {
               s"${partDirs}bucket-$bucket")
         val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            dest, spark.sparkContext.hadoopConfiguration))
+            dest, fs.getConf))
         val rc = try footer.getRecordCount finally footer.close()
         (name, part, bucket, rc, fs.getFileStatus(dest).getLen)
     }
@@ -1871,7 +1797,8 @@ object PaimonLite {
                       input: DataFrame, deleteMode: Boolean): Long = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val snap = snapshot(spark, tableDir)
+    val w = walk(spark, tableDir)
+    val (fs, snap) = (w.fs, w.snap)
     if (snap.primaryKeys.isEmpty) throw new IllegalStateException(
       s"$tableDir: append-only table (no primary key) — KeyValue " +
         "writes need a PK; append through the Paimon sink instead")
@@ -1881,16 +1808,7 @@ object PaimonLite {
         s"$tableDir: merge-engine=${snap.mergeEngine} cannot fold -D " +
           "retractions — key deletes are deduplicate-engine scope " +
           "(this matches the read side's own per-row refusal)")
-    val snapDir = new Path(tableDir, "snapshot")
-    val fs = snapDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snapJson = JsonMethods.parse(readText(fs,
-      new Path(snapDir, s"snapshot-${snap.snapshotId}")))
-    val schemaId = (snapJson \ "schemaId").extractOpt[Long].getOrElse(0L)
-    val producer = {
-      val sf = new Path(tableDir, s"schema/schema-$schemaId")
-      (JsonMethods.parse(readText(fs, sf)) \ "options" \
-        "changelog-producer").extractOpt[String].getOrElse("none")
-    }
+    val producer = snap.changelogProducer
     // producer=input: the INPUT rows ARE the changelog — this writer
     // emits them as changelog files beside the data (below). The
     // compaction-materialized producers demand a changelog this
@@ -2003,16 +1921,13 @@ object PaimonLite {
         Seq(col("_SEQUENCE_NUMBER"), col("_VALUE_KIND")) ++
         valueNames.map(col) ++
         partCols.map(k => col(s"_gp_$k")) :+ col("_gbucket"): _*)
-    val newId = latestSnapshotId(spark, tableDir) + 1
+    val newId = snap.snapshotId + 1
     val moved = stageKvWrite(spark, tableDir, fs, snap, kv, "kv", newId)
     LakeFiles.Hadoop(fs, tableDir).avro(
       kvManifestDf(spark, moved, partCols, partTypes),
       s"manifest/m-kv-$newId.avro")
     // base = everything the previous snapshot covered; delta = new
-    val baseNames = manifestNames(spark, tableDir, snap.snapshotId)
-    LakeFiles.Hadoop(fs, tableDir).avro(
-      (if (baseNames.isEmpty) Seq.empty[String] else baseNames)
-        .toDF("_FILE_NAME"),
+    LakeFiles.Hadoop(fs, tableDir).avro(w.manifests.toDF("_FILE_NAME"),
       s"manifest/ml-kv-base-$newId.avro")
     LakeFiles.Hadoop(fs, tableDir).avro(
       Seq(s"m-kv-$newId.avro").toDF("_FILE_NAME"),
@@ -2035,7 +1950,7 @@ object PaimonLite {
           val dest = new Path(tableDir,
             s"${partDirs}bucket-$bucket/$clName")
           if (!org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dest,
-            false, spark.sparkContext.hadoopConfiguration))
+            false, fs.getConf))
             throw new IllegalStateException(
               s"$tableDir: could not place changelog file $clName")
           (clName, part, bucket, rc, sz)
@@ -2048,18 +1963,13 @@ object PaimonLite {
           s"manifest/ml-kv-cl-$newId.avro")
         s"""\n"changelogManifestList":"ml-kv-cl-$newId.avro","""
       }
-    AtomicFiles.write(fs,
-      new Path(tableDir, s"snapshot/snapshot-$newId"),
-      s"""{"version":3,"id":$newId,"schemaId":$schemaId,
+    publish(fs, tableDir, newId,
+      s"""{"version":3,"id":$newId,"schemaId":${snap.schemaId},
          |"baseManifestList":"ml-kv-base-$newId.avro",
          |"deltaManifestList":"ml-kv-delta-$newId.avro",""".stripMargin +
         changelogLine +
         s"""\n"commitKind":"APPEND","commitUser":"graft",
-           |"commitIdentifier":$newId,"timeMillis":0}""".stripMargin,
-      replace = false)
-    AtomicFiles.write(fs,
-      new Path(tableDir, "snapshot/LATEST"),
-      newId.toString, replace = true)
+           |"commitIdentifier":$newId,"timeMillis":0}""".stripMargin)
     newId
   }
 
@@ -2089,103 +1999,38 @@ object PaimonLite {
                       keepLast: Int = 1,
                       dropChangelogs: Boolean = false): Seq[Long] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val snapDir = new Path(tableDir, "snapshot")
-    val fs = snapDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(snapDir))
+    val fs = fsOf(spark, tableDir)
+    if (!fs.exists(new Path(tableDir, "snapshot")))
       throw new IllegalStateException(s"$tableDir has no snapshot directory")
-    val ids = fs.listStatus(snapDir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.matches("snapshot-\\d+") =>
-        n.stripPrefix("snapshot-").toLong }.sorted
+    val ids = snapshotFiles(fs, tableDir)
     if (ids.size <= keepLast) return Nil
     val (expired, retained) = ids.splitAt(ids.size - keepLast)
-    // the changelog DATA files a snapshot's changelogManifestList
-    // names (built exactly like the changelog reader's paths) — they
-    // live outside the base/delta replay, so expiry must account for
-    // them explicitly
-    def changelogFiles(json: JValue): Set[String] =
-      (json \ "changelogManifestList").extractOpt[String] match {
-        case None => Set.empty
-        case Some(l) =>
-          val schemaId = (json \ "schemaId").extractOpt[Long]
-            .getOrElse(0L)
-          val sf = new Path(tableDir, s"schema/schema-$schemaId")
-          val sjson = JsonMethods.parse(readText(fs, sf))
-          val partitionKeys = (sjson \ "partitionKeys") match {
-            case JArray(ks) => ks.map(_.extract[String])
-            case _          => Nil
-          }
-          val defaultName =
-            (sjson \ "options" \ "partition.default-name")
-              .extractOpt[String].getOrElse("__DEFAULT_PARTITION__")
-          val partTypes: Seq[DataType] = partitionKeys.map { k =>
-            (sjson \ "fields") match {
-              case JArray(fls) =>
-                fls.find(f =>
-                  (f \ "name").extractOpt[String].contains(k)) match {
-                  case Some(f) => (f \ "type") match {
-                    case JString(t) => paimonType(t, sf.toString)._1
-                    case _ => throw new IllegalStateException(
-                      s"$sf: partition key $k has a non-primitive type")
-                  }
-                  case None => throw new IllegalStateException(
-                    s"$sf: partition key $k is not a schema field")
-                }
-              case _ => throw new IllegalStateException(
-                s"$sf: schema has no fields array")
-            }
-          }
-          val lp = new Path(tableDir, s"manifest/$l")
-          if (!fs.exists(lp)) Set.empty
-          else MetaAvro.read(spark, lp.toString).rows
-            .map(_.getAs[String]("_FILE_NAME")).toSet
-            .flatMap { (mf: String) =>
-              val mp = new Path(tableDir, s"manifest/$mf")
-              if (!fs.exists(mp)) Set.empty[String]
-              else MetaAvro.read(spark, mp.toString)
-                .rows.map { r =>
-                  val bucket = r.getAs[Number]("_BUCKET").intValue()
-                  val name = r.getAs[org.apache.spark.sql.Row]("_FILE")
-                    .getAs[String]("_FILE_NAME")
-                  val part: Seq[Any] =
-                    if (partitionKeys.isEmpty) Nil
-                    else BinaryRowCodec.decode(
-                      r.getAs[Array[Byte]]("_PARTITION"), partTypes,
-                      mp.toString)
-                  val partDirs = partitionKeys.zip(part)
-                    .map { case (k, v) =>
-                      s"$k=${partPathValue(v, defaultName)}/"
-                    }.mkString
-                  s"$tableDir/$partDirs" + s"bucket-$bucket/$name"
-                }.toSet
-            }
-      }
     // paths one snapshot document references: its manifest lists,
-    // their manifests, the data files, and its changelog files
+    // their manifests, the data files, and its changelog files — the
+    // latter live outside the base/delta replay, so expiry locates
+    // them explicitly, exactly as the changelog reader does
     def pathsOf(id: Option[Long], tag: Option[String]): Set[String] = {
-      val json = JsonMethods.parse(readText(fs,
-        id.map(i => new Path(snapDir, s"snapshot-$i"))
-          .getOrElse(new Path(tableDir, s"tag/tag-${tag.get}"))))
-      val lists = Seq("baseManifestList", "deltaManifestList",
-        "changelogManifestList").flatMap(k =>
-        (json \ k).extractOpt[String])
+      val w = walk(spark, tableDir, snapshotId = id, tag = tag)
+      val changelog = (w.json \ "changelogManifestList").extractOpt[String]
       if (!dropChangelogs && id.exists(expired.contains) &&
-        (json \ "changelogManifestList").extractOpt[String].nonEmpty)
+        changelog.nonEmpty)
         throw new IllegalStateException(
           s"$tableDir: snapshot ${id.get} carries a changelog — " +
             "changelog retention is its own knob " +
             "(changelog.num-retained); pass dropChangelogs=true to " +
             "expire the changelog with the snapshot")
-      val manifests = lists.flatMap { l =>
-        val p = new Path(tableDir, s"manifest/$l")
-        if (!fs.exists(p)) Nil
-        else MetaAvro.read(spark, p.toString).rows
-          .map(_.getAs[String]("_FILE_NAME")).toSeq
-      }
-      val dataFiles = snapshot(spark, tableDir,
-        snapshotId = id, tag = tag).files.map(_.path)
-      (lists.map(l => s"$tableDir/manifest/$l") ++
-        manifests.map(m => s"$tableDir/manifest/$m") ++
-        dataFiles ++ changelogFiles(json)).toSet
+      def exists(m: String) =
+        fs.exists(new Path(resolveManifest(tableDir, m)))
+      val clManifests = changelog.filter(exists).toSeq
+        .flatMap(manifestList(spark, tableDir, _))
+      val lists = Seq("baseManifestList", "deltaManifestList")
+        .flatMap(k => (w.json \ k).extractOpt[String]) ++ changelog
+      val clFiles = clManifests.filter(exists).flatMap(mf =>
+        entries(spark, tableDir, w.schema, mf, "changelog manifest"))
+        .map(_.file.path)
+      ((lists ++ w.manifests ++ clManifests)
+        .map(resolveManifest(tableDir, _)) ++
+        w.snap.files.map(_.path) ++ clFiles).toSet
     }
     val tagNames: Seq[String] = {
       val tagDir = new Path(tableDir, "tag")
@@ -2202,20 +2047,10 @@ object PaimonLite {
     // drop the expired snapshot documents FIRST (a crash between
     // steps leaves a valid table plus unreferenced files), then the
     // orphans, then the EARLIEST hint
-    expired.foreach(i =>
-      fs.delete(new Path(snapDir, s"snapshot-$i"), false): Unit)
-    // orphan deletion rides the table's OWN Hadoop filesystem
-    // (hdfs://, object stores) with qualified-path containment; a
-    // failed delete of an existing file refuses loudly
-    val rootQ = fs.makeQualified(new Path(tableDir)).toString + "/"
-    orphans.toSeq.sorted.foreach { p =>
-      val q = fs.makeQualified(new Path(p))
-      if (q.toString.startsWith(rootQ) &&
-        !q.toUri.getPath.split('/').contains("..") &&
-        fs.exists(q) && !fs.delete(q, false))
-        throw new IllegalStateException(
-          s"$tableDir: expiry could not delete orphan $p")
-    }
+    expired.foreach(i => fs.delete(
+      new Path(tableDir, s"snapshot/snapshot-$i"), false): Unit)
+    LakeFiles.deleteInside(fs, tableDir, orphans)(p =>
+      s"$tableDir: expiry could not delete orphan $p")
     AtomicFiles.write(fs,
       new Path(tableDir, "snapshot/EARLIEST"),
       retained.head.toString, replace = true)

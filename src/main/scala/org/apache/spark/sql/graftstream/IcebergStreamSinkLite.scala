@@ -4,14 +4,13 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SQLContext}
 import org.apache.spark.sql.execution.streaming.Sink
-import org.apache.spark.sql.graft.MetaAvro
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.sources.LakeFiles
+import graft.sources.{IcebergLite, LakeFiles}
 import graft.sources.LakeFiles.{jstr, rm}
 
 /** Structured-Streaming SINK writing an Iceberg v2 table — completing
@@ -82,18 +81,10 @@ class IcebergStreamSink(sqlContext: SQLContext, tableDir: String)
     val appId = Option(spark.sparkContext
       .getLocalProperty("sql.streaming.queryId")).getOrElse("graft-stream")
 
-    val hintFile = Paths.get(tableDir, "metadata", "version-hint.text")
-    val existing: Option[(Long, JValue)] =
-      if (Files.exists(hintFile)) {
-        val v = Files.readString(hintFile).trim.toLong
-        val metaFile = Paths.get(tableDir, "metadata", s"v$v.metadata.json")
-        if (!Files.exists(metaFile)) throw new IllegalStateException(
-          s"iceberg-sink-lite: version-hint names v$v but " +
-            s"$metaFile is missing")
-        Some(v -> JsonMethods.parse(Files.readString(metaFile)))
-      } else None
+    // (version, metadata JSON, current manifest-list rows)
+    val existing = IcebergLite.current(spark, tableDir)
 
-    existing.foreach { case (_, meta) =>
+    existing.foreach { case (_, meta, _) =>
       val uuid = (meta \ "table-uuid").extractOpt[String].getOrElse("")
       if (uuid != OwnedUuid) throw new IllegalStateException(
         s"iceberg-sink-lite: $tableDir was not created by this sink " +
@@ -112,7 +103,7 @@ class IcebergStreamSink(sqlContext: SQLContext, tableDir: String)
       if (committed.nonEmpty && batchId <= committed.max)
         return // re-delivered batch: already committed
       // schema drift check against the stored schema field list
-      val want = graft.sources.IcebergLite.snapshot(spark, tableDir)
+      val want = IcebergLite.snapshot(spark, tableDir)
         .schema.map(f => (f.name, f.dataType))
       val got = data.schema.map(f => (f.name, f.dataType))
       if (want != got) throw new IllegalStateException(
@@ -136,7 +127,7 @@ class IcebergStreamSink(sqlContext: SQLContext, tableDir: String)
     // identity — IcebergLite resolves columns by field id
     val idMap = data.schema.fieldNames.zipWithIndex
       .map { case (n, i) => n -> (i + 1) }.toMap
-    graft.sources.IcebergLite.stampFieldIds(batchDf, idMap)
+    IcebergLite.stampFieldIds(batchDf, idMap)
       .write.mode("overwrite").parquet(tmp)
     val parts = new java.io.File(tmp).listFiles().toSeq
       .filter(f => f.getName.endsWith(".parquet") &&
@@ -159,24 +150,8 @@ class IcebergStreamSink(sqlContext: SQLContext, tableDir: String)
           .as("data_file")),
       s"metadata/m-sink-$newSnapId.avro")
     // cumulative manifest list: previous list's rows + the new manifest
-    val prevManifests: Seq[(String, Int)] = existing match {
-      case Some((_, meta)) =>
-        val curId = (meta \ "current-snapshot-id").extract[Long]
-        val prevList = (meta \ "snapshots") match {
-          case JArray(ss) => ss.find(s =>
-            (s \ "snapshot-id").extractOpt[Long].contains(curId))
-            .map(s => (s \ "manifest-list").extract[String])
-          case _ => None
-        }
-        prevList.toSeq.flatMap { ml =>
-          MetaAvro.read(spark, s"$tableDir/$ml").rows
-            .map(r => (r.getAs[String]("manifest_path"),
-              r.getAs[Number]("content").intValue())).toSeq
-        }
-      case None => Nil
-    }
-    val allManifests =
-      prevManifests :+ (s"metadata/m-sink-$newSnapId.avro", 0)
+    val allManifests = existing.toSeq.flatMap(_._3) :+
+      (s"metadata/m-sink-$newSnapId.avro", 0)
     files.avro(allManifests.toDF("manifest_path", "content"),
       s"metadata/snap-$newSnapId.avro")
 
@@ -188,7 +163,7 @@ class IcebergStreamSink(sqlContext: SQLContext, tableDir: String)
       s"""{"snapshot-id":$newSnapId,"manifest-list":${jstr(
         s"metadata/snap-$newSnapId.avro")},"summary":{"operation":"append","graft-app-id":${jstr(appId)},"graft-batch-id":${jstr(batchId.toString)}}}"""
     val prevSnapsJson = existing match {
-      case Some((_, meta)) => (meta \ "snapshots") match {
+      case Some((_, meta, _)) => (meta \ "snapshots") match {
         case JArray(ss) => ss.map(s => JsonMethods.compact(
           JsonMethods.render(s)))
         case _ => Nil
@@ -202,19 +177,11 @@ class IcebergStreamSink(sqlContext: SQLContext, tableDir: String)
          |"schemas":[{"schema-id":0,"type":"struct","fields":$fields}],
          |"current-snapshot-id":$newSnapId,
          |"snapshots":$snaps}""".stripMargin
-    // atomic publication (concurrent offset polls read these files);
-    // replace=false turns a concurrent writer landing the same version
-    // into a loud single-writer violation
-    try graft.sources.AtomicFiles.write(
-      Paths.get(tableDir, "metadata", s"v$newVersion.metadata.json"),
-      metaJson, replace = false)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"iceberg-sink-lite: metadata v$newVersion already exists in " +
-            s"$tableDir — another writer is active (single-writer scope)")
-    }
-    graft.sources.AtomicFiles.write(hintFile, newVersion.toString)
+    // atomic publication (concurrent offset polls read these files); a
+    // concurrent writer landing the same version fails loudly
+    IcebergLite.publish(new org.apache.hadoop.fs.Path(tableDir)
+      .getFileSystem(spark.sessionState.newHadoopConf()), tableDir,
+      newVersion, metaJson)
   }
 
   override def name(): String = s"IcebergStreamSinkLite[$tableDir]"

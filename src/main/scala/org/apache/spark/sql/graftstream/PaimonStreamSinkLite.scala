@@ -183,20 +183,11 @@ class PaimonStreamSink(sqlContext: SQLContext, tableDir: String)
          |"deltaManifestList":"ml-delta-$newId.avro",
          |"commitKind":"APPEND","commitUser":"$appId",
          |"commitIdentifier":$batchId,"timeMillis":0}""".stripMargin
-    // atomic publication (concurrent offset polls read these files);
-    // replace=false turns a concurrent writer landing the same id into
-    // a loud single-writer violation
-    try graft.sources.AtomicFiles.write(
-      Paths.get(tableDir, "snapshot", s"snapshot-$newId"), snapJson,
-      replace = false)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"paimon-sink-lite: snapshot $newId already exists in " +
-            s"$tableDir — another writer is active (single-writer scope)")
-    }
-    graft.sources.AtomicFiles.write(
-      Paths.get(tableDir, "snapshot", "LATEST"), newId.toString)
+    // atomic publication (concurrent offset polls read these files); a
+    // concurrent writer landing the same id fails loudly
+    PaimonLite.publish(new org.apache.hadoop.fs.Path(tableDir)
+      .getFileSystem(spark.sessionState.newHadoopConf()), tableDir, newId,
+      snapJson)
     cachedIdent = Some(batchId)
   }
 

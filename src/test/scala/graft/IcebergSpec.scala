@@ -2088,4 +2088,43 @@ class IcebergSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("metadata.json"))
   }
+
+  test("a hint left one version behind (a crash between publishing " +
+    "v<N+1> and moving the hint) is probed past: readers see the " +
+    "newest snapshot and the next commit lands on top") {
+    import spark.implicits._
+    val root = fixture("stalehint")
+    val before = IcebergLite.read(spark, root)
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(IcebergLite.compact(spark, root) == 3L) // publishes v4
+    val hint = Paths.get(root, "metadata", "version-hint.text")
+    Files.writeString(hint, "3")
+    val snap = IcebergLite.snapshot(spark, root)
+    assert(snap.snapshotId == 3L && snap.files.size == 1, snap)
+    assert(IcebergLite.read(spark, root)
+      .as[(Long, Long)].collect().sorted.toSeq == before)
+    assert(IcebergLite.compact(spark, root) == 4L)
+    assert(Files.readString(hint).trim == "5")
+  }
+
+  test("compact and delete open the current metadata JSON once and " +
+    "each manifest once") {
+    import spark.implicits._
+    val root = fixture("opens")
+    addEqDelete(root, Seq.empty[Long].toDF("id"), fieldId = 1,
+      dataSeq = 1L, delSeq = 2L) // v4: snapshot 3 with sequences
+    /** The metadata files `body` opens: the JSON once, and exactly the
+      * current manifest list and its manifests, each once. */
+    def opensOnce(version: Int, manifests: Seq[String])(body: => Unit) = {
+      val opened = CountingLocalFs.opens(spark)(body)
+        .filter(p => p.endsWith(".metadata.json") || p.endsWith(".avro"))
+      assert(opened.sorted == (s"v$version.metadata.json" +: manifests)
+        .map(f => s"$root/metadata/$f").sorted, opened)
+    }
+    opensOnce(4, Seq("snap-3.avro", "m1.avro", "m-eq.avro"))(
+      assert(IcebergLite.delete(spark, root, col("v") > 21) == 4L))
+    opensOnce(5, Seq("snap-4.avro", "m1.avro", "m-eq.avro",
+      "m-posdel-4.avro"))(assert(IcebergLite.compact(spark, root) == 5L))
+    assert(IcebergLite.read(spark, root).count() == 8L)
+  }
 }

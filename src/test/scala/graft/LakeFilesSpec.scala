@@ -98,6 +98,21 @@ class LakeFilesSpec extends AnyFunSuite {
     }
   }
 
+  test("Hadoop staging into a file: table leaves no .crc sidecar") {
+    withDir { dir =>
+      val root = new HPath(dir.toURI)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      assert(fs.isInstanceOf[org.apache.hadoop.fs.ChecksumFileSystem])
+      LakeFiles.Hadoop(fs, root.toString).avro(frame(4), "metadata/m.avro")
+      LakeFiles.stage(fs, frame(3), "parquet", new HPath(root, "_tmp"),
+        new HPath(root, "data/d.parquet"))
+      assert(names(dir) === Seq("data", "metadata"))
+      assert(names(new File(dir, "metadata")) === Seq("m.avro"))
+      assert(names(new File(dir, "data")) === Seq("d.parquet"))
+      checkStaged(LakeFiles.Avro, new File(dir, "metadata/m.avro"), frame(4))
+    }
+  }
+
   test("move to a missing parent throws naming both paths") {
     withDir { dir =>
       val src = new File(dir, "a.txt")

@@ -224,18 +224,58 @@ class MetaAvroSpec extends AnyFunSuite {
     assert(opened._1 >= pq.size + orc.size && opened._2 >= 1, opened)
     rm(new java.io.File(dir))
   }
+
+  test("IcebergLite and PaimonLite open their metadata JSON and hint " +
+    "through the session's Hadoop conf, as MetaAvro does") {
+    Seq("q391_iceberg_read", "q397_paimon_read")
+      .foreach(n => SparkEntry.queries(n)(spark, sf))
+    // the two builders' memoized table roots
+    val tag = Integer.toHexString(sf.hashCode)
+    val ice = s"/tmp/graft_iceberg/li_$tag"
+    val paimon = s"/tmp/graft_paimon/li_$tag"
+    val iceOpens = CountingLocalFs.opens(spark)(
+      graft.sources.IcebergLite.snapshot(spark, ice): Unit)
+    assert(iceOpens.contains(s"$ice/metadata/version-hint.text") &&
+      iceOpens.exists(_.endsWith(".metadata.json")) &&
+      iceOpens.exists(_.endsWith(".avro")), iceOpens)
+    val paimonOpens = CountingLocalFs.opens(spark)(
+      graft.sources.PaimonLite.snapshot(spark, paimon): Unit)
+    assert(Seq("snapshot/LATEST", "snapshot/snapshot-2", "schema/schema-0")
+      .forall(f => paimonOpens.contains(s"$paimon/$f")) &&
+      paimonOpens.exists(_.endsWith(".avro")), paimonOpens)
+  }
 }
 
-/** The local FileSystem, counting its instances: set as `fs.file.impl`
-  * (with the cache off) it shows which reads see a session setting. */
+/** The local FileSystem, counting its instances and recording the paths
+  * it opens: set as `fs.file.impl` (with the cache off) it shows which
+  * reads see a session setting, and how often each file is read. */
 class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
   override def initialize(name: java.net.URI,
                           conf: org.apache.hadoop.conf.Configuration): Unit = {
     super.initialize(name, conf)
     CountingLocalFs.inits.incrementAndGet(): Unit
   }
+
+  override def open(f: org.apache.hadoop.fs.Path,
+                    bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    CountingLocalFs.opened.add(f.toUri.getPath)
+    super.open(f, bufferSize)
+  }
 }
 
 object CountingLocalFs {
   val inits = new java.util.concurrent.atomic.AtomicInteger
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+  /** The paths `body` opens, in order, while the session's `file:`
+    * filesystem is this one. */
+  def opens(spark: org.apache.spark.sql.SparkSession)
+           (body: => Unit): Seq[String] = {
+    val settings = Seq("fs.file.impl" -> classOf[CountingLocalFs].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    opened.clear()
+    try body finally settings.foreach { case (k, _) => spark.conf.unset(k) }
+    opened.asScala.toList
+  }
 }

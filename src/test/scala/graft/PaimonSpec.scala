@@ -1700,4 +1700,34 @@ class PaimonSpec extends AnyFunSuite {
     assert(got.schema.fieldNames.toSeq == Seq("id", "v"))
     assert(got.count() == 0)
   }
+
+  test("a LATEST hint left one snapshot behind (a crash between " +
+    "publishing snapshot-<N+1> and moving the hint) is probed past: " +
+    "readers see the newest snapshot and the next commit lands on top") {
+    import spark.implicits._
+    val root = fixture("stalehint")
+    val before = PaimonLite.read(spark, root)
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(PaimonLite.compact(spark, root) == 3L)
+    val hint = Paths.get(root, "snapshot", "LATEST")
+    Files.writeString(hint, "2")
+    val snap = PaimonLite.snapshot(spark, root)
+    assert(snap.snapshotId == 3L && snap.files.size == 1, snap)
+    assert(PaimonLite.latestSnapshotId(spark, root) == 3L)
+    assert(PaimonLite.read(spark, root)
+      .as[(Long, Long)].collect().sorted.toSeq == before)
+    assert(PaimonLite.compact(spark, root) == 4L)
+    assert(Files.readString(hint).trim == "4")
+  }
+
+  test("upsert opens the snapshot JSON and its schema once") {
+    import spark.implicits._
+    val root = pkFixture("opens")
+    val opened = CountingLocalFs.opens(spark)(assert(
+      PaimonLite.upsert(spark, root, Seq((3L, 7L)).toDF("id", "v")) == 3L))
+    for (f <- Seq("snapshot/snapshot-2", "schema/schema-0"))
+      assert(opened.count(_ == s"$root/$f") == 1, opened)
+    assert(PaimonLite.read(spark, root).filter(col("id") === 3L)
+      .select("v").as[Long].collect().toSeq == Seq(7L))
+  }
 }
