@@ -2,57 +2,68 @@ package graft.sources
 
 import java.io.FileNotFoundException
 
+import scala.collection.immutable.SortedMap
 import scala.collection.mutable
 
 import graft.sources.LakeFiles.{jstr, uriEncode}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-/** Read-only Delta-log table reader implemented from the PUBLIC Delta
+/** Delta-log table reader and writer implemented from the PUBLIC Delta
   * transaction-log protocol (delta.io PROTOCOL.md): a table directory
   * holds `_delta_log/<20-digit version>.json` commit files, each a
   * sequence of newline-delimited JSON actions. Replaying `metaData`
   * (last one wins — carries the Spark-JSON `schemaString` and
-  * `partitionColumns`), `add` (a live parquet file + its
+  * `partitionColumns`), `protocol`, `add` (a live parquet file + its
   * `partitionValues`) and `remove` (tombstones an earlier add) in
   * version order yields the snapshot file set.
   *
   * This is the lakehouse-interop leg of the reference's table-format
-  * providers (reference: thirdparty/auron-iceberg/.../
-  * IcebergConvertProvider.scala — the reference plugs Iceberg/Hudi/
-  * Paimon scans into its engine). Spark-first split of labor:
-  *  - SNAPSHOT RESOLUTION (log replay) is bounded plan-time metadata
-  *    work, like q249's IVF cell-id resolution — the log is thousands
-  *    of small JSON lines, never fact-sized;
+  * providers. Spark-first split of labor:
+  *  - LOG WORK is bounded plan-time metadata work — the log is
+  *    thousands of small JSON lines, never fact-sized;
   *  - DATA READING stays Spark's native vectorized parquet source
   *    (one `spark.read.schema(...).parquet(files…)` per partition
   *    tuple), so predicate pushdown, column pruning and whole-stage
-  *    codegen are untouched — a hand-rolled DSv2 FileTable would have
-  *    to re-earn all three.
+  *    codegen are untouched.
   *
-  * Checkpoints (PROTOCOL.md "Checkpoints"): when `_last_checkpoint`
-  * names version N, the snapshot state is loaded from the checkpoint
-  * parquet (single-file `N.checkpoint.parquet` or the multi-part
-  * `N.checkpoint.<i>.<parts>.parquet` series) and only JSON commits
-  * AFTER N are replayed — this is what makes log replay bounded on a
-  * long-lived table whose early JSON commits have been vacuumed. A
-  * `versionAsOf` BEFORE the checkpoint falls back to replay-from-zero
-  * and loudly fails if those early commits are gone.
+  * ONE LOG WALK. Every read surface and writer builds on one private
+  * [[Log]] handle per call. It opens the table's filesystem through the
+  * session's Hadoop conf and lists `_delta_log` once, holding the
+  * commits by version, `_last_checkpoint` and the V2 checkpoint
+  * manifests. On first use it parses each commit it is asked for once,
+  * with one strict action parser (a malformed line, or an action
+  * missing a field the protocol requires, fails naming its file), and
+  * reads the checkpoint once, with one checkpoint reader.
   *
-  * V2 CHECKPOINTS (PROTOCOL.md "V2 Spec Checkpoints" — what modern
-  * writers increasingly default to) are READ: when the classic names
-  * are absent, the UUID-named `N.checkpoint.<u>.{json,parquet}`
-  * MANIFEST supplies the non-file actions plus `sidecar` actions
-  * naming parquet files under `_delta_log/_sidecars/` that carry the
-  * add/remove state; the manifest's required
-  * `checkpointMetadata.version` is verified against N and a missing
-  * sidecar refuses loudly (reading without it would silently drop
-  * live files). Checkpoint-carried `txn` history (exactly-once dedup)
-  * is read from the manifest on this path too.
+  * CHECKPOINTS (PROTOCOL.md "Checkpoints"): when `_last_checkpoint`
+  * names version N, the state is loaded from the classic single-file
+  * `N.checkpoint.parquet` or multi-part `N.checkpoint.<i>.<parts>.parquet`
+  * series, or — when those names are absent — from a V2 checkpoint
+  * (PROTOCOL.md "V2 Spec Checkpoints"): the UUID-named
+  * `N.checkpoint.<u>.{json,parquet}` MANIFEST carries the non-file
+  * actions plus `sidecar` actions naming parquet files under
+  * `_delta_log/_sidecars/` that carry the file actions. One pass yields
+  * the metaData, protocol, add, remove (expired tombstones, which only
+  * vacuum reads) and txn (exactly-once dedup history) actions. Loud
+  * refusals: a multi-part checkpoint with missing parts, a manifest
+  * whose required `checkpointMetadata.version` is missing or not N, a
+  * sidecar that is missing (reading without it would silently drop
+  * live files) or uses a foreign scheme. Only JSON commits AFTER N are
+  * replayed; a `versionAsOf` BEFORE the checkpoint falls back to
+  * replay-from-zero and loudly fails if those early commits are gone.
+  *
+  * ONE PUBLISH. [[publish]] writes `<v>.json` create-new: it is the one
+  * commit point of [[compact]], [[delete]], [[update]], [[upsertKeyed]]
+  * and the stream sink, and a taken version refuses (single-writer
+  * scope). New data files stage through one partitioned write and move
+  * in without `.crc` sidecars; one renderer each spells the add, remove
+  * and cdc lines.
   *
   * Lite scope, loud failures (never silent wrong answers):
   *  - a GAP in the version sequence (from the replay base) throws;
@@ -137,9 +148,7 @@ object DeltaLogLite {
       catch { case _: Exception => None }
     }
 
-  /** Parse an action's `deletionVector` JSON (absent/null → None) —
-    * shared by the snapshot replay and the change-feed synthesis
-    * (remove actions carry the removed file's descriptor too). */
+  /** Parse an action's `deletionVector` JSON (absent/null → None). */
   private def parseDvJson(d: JValue): Option[DvDescriptor] = d match {
     case JNothing | JNull => None
     case dv => Some(DvDescriptor(
@@ -163,16 +172,33 @@ object DeltaLogLite {
                             minWriterVersion: Int = 2,
                             writerFeatures: Set[String] = Set.empty)
 
+  /** One log action as the protocol defines it, whichever file carried
+    * it: a commit line, a V2 manifest line or a checkpoint parquet row.
+    * Checkpoint rows are state, not changes: their adds and removes
+    * carry `dataChange = false`. */
+  private sealed trait Action
+  private final case class MetaData(schemaString: String,
+                                    partitionColumns: Seq[String],
+                                    configuration: Map[String, String])
+    extends Action
   private final case class Protocol(minReaderVersion: Int,
                                     readerFeatures: Set[String],
-                                    minWriterVersion: Int = 2,
-                                    writerFeatures: Set[String] =
-                                      Set.empty)
+                                    minWriterVersion: Int,
+                                    writerFeatures: Set[String])
+    extends Action
+  private final case class Add(file: AddFile, dataChange: Boolean)
+    extends Action
+  private final case class Remove(file: AddFile, dataChange: Boolean)
+    extends Action
+  private final case class Cdc(file: AddFile) extends Action
+  private final case class Txn(appId: String, version: Long) extends Action
+  private final case class CommitInfo(timestamp: Option[Long]) extends Action
+  private final case class Sidecar(path: String) extends Action
+  private final case class CheckpointMetadata(version: Long) extends Action
 
   /** Reader features this lite reader genuinely satisfies; anything
     * else is a loud refusal, never a silent wrong answer.
-    * `v2Checkpoint` is READ — see [[loadCheckpoint]]'s manifest +
-    * sidecar path. */
+    * `v2Checkpoint` is READ — see [[Log]]'s checkpoint reader. */
   private val supportedReaderFeatures = Set("timestampNtz",
     "vacuumProtocolCheck", "columnMapping", "deletionVectors",
     "v2Checkpoint")
@@ -249,395 +275,352 @@ object DeltaLogLite {
 
   private implicit val fmts: Formats = DefaultFormats
 
-  /** `_last_checkpoint` content: checkpoint version + part count. */
-  private def lastCheckpoint(fs: org.apache.hadoop.fs.FileSystem,
-                             logDir: Path,
-                             tableDir: String): Option[(Long, Option[Int])] = {
-    val p = new Path(logDir, "_last_checkpoint")
-    if (!fs.exists(p)) None
-    else {
-      val text = LakeFiles.readText(fs, p)
-      val json = try JsonMethods.parse(text)
+  /** The actions of one newline-delimited JSON file — a commit or a V2
+    * checkpoint manifest — read with THE strict action parser: a line
+    * that is not a JSON object, or an action missing a field the
+    * protocol requires, fails naming the file. */
+  private def readActions(fs: FileSystem, file: Path): Seq[Action] =
+    LakeFiles.readText(fs, file).linesIterator.filter(_.trim.nonEmpty)
+      .flatMap { line =>
+        try lineActions(JsonMethods.parse(line))
         catch { case e: Exception => throw new IllegalStateException(
-          s"$tableDir: malformed _last_checkpoint: ${e.getMessage}")
+          s"$file: malformed action: ${line.take(80)} (${e.getMessage})")
         }
-      val v = (json \ "version").extractOpt[Long].getOrElse(
-        throw new IllegalStateException(
-          s"$tableDir: _last_checkpoint without a version"))
-      Some(v -> (json \ "parts").extractOpt[Int])
+      }.toVector
+
+  private def lineActions(json: JValue): Seq[Action] = {
+    def need[T: Manifest](a: JValue, kind: String, field: String): T =
+      (a \ field).extractOpt[T].getOrElse(throw new IllegalStateException(
+        s"$kind without $field"))
+    def strs(v: JValue): Seq[String] = v.extractOpt[Seq[String]].getOrElse(Nil)
+    def file(a: JValue, kind: String): AddFile =
+      AddFile(need[String](a, kind, "path"),
+        (a \ "partitionValues").extractOpt[Map[String, String]]
+          .getOrElse(Map.empty),
+        parseDvJson(a \ "deletionVector"), (a \ "stats").extractOpt[String])
+    def dataChange(a: JValue): Boolean =
+      (a \ "dataChange").extractOpt[Boolean].getOrElse(true)
+    json match {
+      case JObject(fields) => fields.collect {
+        case ("metaData", m) =>
+          MetaData(need[String](m, "metaData", "schemaString"),
+            strs(m \ "partitionColumns"),
+            (m \ "configuration").extractOpt[Map[String, String]]
+              .getOrElse(Map.empty))
+        case ("protocol", p) =>
+          Protocol(need[Int](p, "protocol", "minReaderVersion"),
+            strs(p \ "readerFeatures").toSet,
+            (p \ "minWriterVersion").extractOpt[Int].getOrElse(2),
+            strs(p \ "writerFeatures").toSet)
+        case ("add", a)    => Add(file(a, "add"), dataChange(a))
+        case ("remove", r) => Remove(file(r, "remove"), dataChange(r))
+        case ("cdc", c)    => Cdc(file(c, "cdc"))
+        case ("txn", t) =>
+          Txn(need[String](t, "txn", "appId"), need[Long](t, "txn", "version"))
+        case ("commitInfo", c) =>
+          CommitInfo((c \ "timestamp").extractOpt[Long])
+        case ("sidecar", s) => Sidecar(need[String](s, "sidecar", "path"))
+        case ("checkpointMetadata", c) =>
+          CheckpointMetadata(need[Long](c, "checkpointMetadata", "version"))
+      }
+      case _ => throw new IllegalStateException("not a JSON object")
     }
   }
 
-  /** Absorb metaData / protocol / add actions from one
-    * checkpoint-shaped parquet DataFrame (a classic checkpoint, a v2
-    * manifest, or v2 sidecars — all share the column-per-action-type
-    * layout). `remove` rows are expired tombstones kept for vacuum
-    * only — not live state. Driver-side collect is bounded by the
+  /** The actions of checkpoint-shaped parquet — a classic checkpoint, a
+    * V2 manifest or V2 sidecars, which all share the
+    * column-per-action-type layout — in ONE collect. Fields a writer
+    * left out read as null. Driver-side collect is bounded by the
     * table's FILE count (log grain), same as the JSON replay. */
-  private def absorbCheckpointFrame(df: DataFrame,
-                                    live: mutable.LinkedHashMap[String,
-                                      AddFile])
-  : (Option[StructType], Seq[String], Map[String, String],
-     Option[Protocol]) = {
-    def nested(top: String, field: String): Boolean =
-      df.schema.find(_.name == top).map(_.dataType).exists {
-        case s: StructType => s.fieldNames.contains(field)
+  private def frameActions(df: DataFrame): Seq[Action] = {
+    def field(top: String, name: String, t: String) = {
+      val present = df.schema.find(_.name == top).map(_.dataType).exists {
+        case s: StructType => s.fieldNames.contains(name)
         case _             => false
       }
-    val cols = df.columns.toSet
-    var schema: Option[StructType] = None
-    var partCols: Seq[String] = Nil
-    var conf: Map[String, String] = Map.empty
-    var protocol: Option[Protocol] = None
-    if (cols.contains("metaData")) {
-      val confCol =
-        if (nested("metaData", "configuration")) col("metaData.configuration")
-        else lit(null).cast("map<string,string>")
-      val metas = df.select(col("metaData.schemaString"),
-          col("metaData.partitionColumns"), confCol)
-        .where(col("metaData.schemaString").isNotNull).collect()
-      metas.lastOption.foreach { r =>
-        schema = Some(DataType.fromJson(r.getString(0))
-          .asInstanceOf[StructType])
-        partCols = Option(r.getSeq[String](1)).getOrElse(Nil)
-        conf = Option(r.getMap[String, String](2))
-          .map(_.toMap).getOrElse(Map.empty)
-      }
+      if (present) col(s"$top.$name").cast(t) else lit(null).cast(t)
     }
-    if (cols.contains("protocol") && nested("protocol", "minReaderVersion")) {
-      val featCol =
-        if (nested("protocol", "readerFeatures"))
-          col("protocol.readerFeatures")
-        else lit(null).cast("array<string>")
-      val mwvCol =
-        if (nested("protocol", "minWriterVersion"))
-          col("protocol.minWriterVersion")
-        else lit(null).cast("int")
-      val wFeatCol =
-        if (nested("protocol", "writerFeatures"))
-          col("protocol.writerFeatures")
-        else lit(null).cast("array<string>")
-      val ps = df.select(col("protocol.minReaderVersion"), featCol,
-          mwvCol, wFeatCol)
-        .where(col("protocol.minReaderVersion").isNotNull).collect()
-      ps.lastOption.foreach { r =>
-        protocol = Some(Protocol(r.getInt(0),
-          Option(r.getSeq[String](1)).getOrElse(Nil).toSet,
-          if (r.isNullAt(2)) 2 else r.getInt(2),
-          Option(r.getSeq[String](3)).getOrElse(Nil).toSet))
-      }
+    val strs = "array<string>"
+    val pv = "map<string,string>"
+    val dvT = "struct<storageType:string,pathOrInlineDv:string," +
+      "offset:bigint,sizeInBytes:int,cardinality:bigint>"
+    val rows = df.select(
+      field("metaData", "schemaString", "string"),           // 0
+      field("metaData", "partitionColumns", strs),           // 1
+      field("metaData", "configuration", pv),                // 2
+      field("protocol", "minReaderVersion", "int"),          // 3
+      field("protocol", "readerFeatures", strs),             // 4
+      field("protocol", "minWriterVersion", "int"),          // 5
+      field("protocol", "writerFeatures", strs),             // 6
+      field("add", "path", "string"),                        // 7
+      field("add", "partitionValues", pv),                   // 8
+      field("add", "deletionVector", dvT),                   // 9
+      field("add", "stats", "string"),                       // 10
+      field("remove", "path", "string"),                     // 11
+      field("remove", "partitionValues", pv),                // 12
+      field("remove", "deletionVector", dvT),                // 13
+      field("txn", "appId", "string"),                       // 14
+      field("txn", "version", "bigint"),                     // 15
+      field("sidecar", "path", "string"),                    // 16
+      field("checkpointMetadata", "version", "bigint")       // 17
+    ).collect()
+    rows.toSeq.flatMap { r =>
+      def seq(i: Int) = Option(r.getSeq[String](i)).getOrElse(Nil)
+      def map(i: Int) =
+        Option(r.getMap[String, String](i)).map(_.toMap).getOrElse(Map.empty)
+      // null offset = single-DV file, data at offset 1 (after the
+      // version byte) — same rule as the JSON parser
+      def dv(i: Int) = Option(r.getStruct(i)).map(d => DvDescriptor(
+        d.getString(0), d.getString(1), if (d.isNullAt(2)) 1L else d.getLong(2),
+        d.getInt(3), d.getLong(4)))
+      def some(i: Int) = !r.isNullAt(i)
+      Seq(
+        Option.when(some(0))(MetaData(r.getString(0), seq(1), map(2))),
+        Option.when(some(3))(Protocol(r.getInt(3), seq(4).toSet,
+          if (some(5)) r.getInt(5) else 2, seq(6).toSet)),
+        Option.when(some(7))(Add(AddFile(r.getString(7), map(8), dv(9),
+          Option(r.getString(10))), dataChange = false)),
+        Option.when(some(11))(Remove(AddFile(r.getString(11), map(12),
+          dv(13)), dataChange = false)),
+        Option.when(some(14))(Txn(r.getString(14), r.getLong(15))),
+        Option.when(some(16))(Sidecar(r.getString(16))),
+        Option.when(some(17))(CheckpointMetadata(r.getLong(17)))).flatten
     }
-    if (cols.contains("add")) {
-      val dvT = "struct<storageType:string,pathOrInlineDv:string," +
-        "offset:bigint,sizeInBytes:int,cardinality:bigint>"
-      val dvCol =
-        if (nested("add", "deletionVector"))
-          col("add.deletionVector").cast(dvT)
-        else lit(null).cast(dvT)
-      val statsCol =
-        if (nested("add", "stats")) col("add.stats").cast("string")
-        else lit(null).cast("string")
-      df.select(col("add.path"), col("add.partitionValues"), dvCol,
-          statsCol)
-        .where(col("add.path").isNotNull).collect()
-        .foreach { r =>
-          val dv = Option(r.getStruct(2)).map { d =>
-            // null offset = single-DV file, data at offset 1 (after
-            // the version byte) — same rule as the JSON replay
-            DvDescriptor(d.getString(0), d.getString(1),
-              Option(d.get(2)).map(_.asInstanceOf[Long]).getOrElse(1L),
-              d.getInt(3), d.getLong(4))
-          }
-          val pv = Option(r.getMap[String, String](1))
-            .map(_.toMap).getOrElse(Map.empty[String, String])
-          live(r.getString(0)) = AddFile(r.getString(0), pv, dv,
-            Option(r.getString(3)))
-        }
-    }
-    (schema, partCols, conf, protocol)
   }
 
-  /** The version-N checkpoint's V2 manifest file, if the classic
-    * parquet names are absent (PROTOCOL.md "V2 Spec Checkpoints": a
-    * UUID-named `N.checkpoint.<u>.{json,parquet}` manifest whose
-    * `sidecar` actions name parquet files under `_delta_log/_sidecars/`
-    * carrying the file actions). Several manifests for one version are
-    * equivalent per the spec; the lexicographically last is picked for
-    * determinism. */
-  private def v2Manifest(fs: org.apache.hadoop.fs.FileSystem,
-                         tableDir: String, version: Long): Option[Path] = {
-    val logDir = new Path(tableDir, "_delta_log")
-    val re = (f"$version%020d\\.checkpoint\\.[A-Za-z0-9-]+" +
-      "\\.(parquet|json)").r
-    fs.listStatus(logDir).toSeq.map(_.getPath)
-      .filter(p => re.pattern.matcher(p.getName).matches())
-      .sortBy(_.getName).lastOption
-  }
+  /** One table's log, walked once: the filesystem (through the session's
+    * Hadoop conf), ONE listing of `_delta_log`, and — on first use —
+    * each commit's actions and the checkpoint's. Every read surface and
+    * writer builds on it. */
+  private final class Log(spark: SparkSession, val tableDir: String) {
+    val conf: Configuration = spark.sessionState.newHadoopConf()
+    val fs: FileSystem = new Path(tableDir).getFileSystem(conf)
+    private val logDir = new Path(tableDir, "_delta_log")
+    /** None when the table has no `_delta_log` at all. */
+    private val listing: Option[Seq[Path]] =
+      try Some(fs.listStatus(logDir).toSeq.map(_.getPath))
+      catch { case _: FileNotFoundException => None }
+    private val names: Set[String] =
+      listing.toSeq.flatten.map(_.getName).toSet
 
-  /** Load net snapshot state (metaData + live adds) from the version-N
-    * checkpoint: the classic single-file / multi-part parquet names,
-    * or — when those are absent — the V2 UUID-named manifest + its
-    * sidecars, with the manifest's `checkpointMetadata.version`
-    * verified and every named sidecar required to exist (a missing
-    * sidecar would silently drop live files). */
-  private def loadCheckpoint(spark: SparkSession, tableDir: String,
-                             version: Long, parts: Option[Int],
-                             live: mutable.LinkedHashMap[String, AddFile])
-  : (Option[StructType], Seq[String], Map[String, String],
-     Option[Protocol]) = {
-    val fs = new Path(tableDir, "_delta_log")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val names = parts match {
-      case Some(n) => (1 to n).map(i =>
-        f"$version%020d.checkpoint.$i%010d.$n%010d.parquet")
-      case None => Seq(f"$version%020d.checkpoint.parquet")
-    }
-    val paths = names.map(n => s"$tableDir/_delta_log/$n")
-    if (paths.forall(p => fs.exists(new Path(p)))) {
-      val df = try spark.read.parquet(paths: _*)
-        catch { case e: Exception => throw new IllegalStateException(
-          s"$tableDir: checkpoint $version unreadable " +
-            s"(${names.mkString(", ")}): ${e.getMessage}")
-        }
-      return absorbCheckpointFrame(df, live)
-    }
-    // classic names absent: a multi-part checkpoint with SOME parts
-    // missing is corrupt, not v2 — refuse by name
-    if (parts.exists(n => paths.exists(p => fs.exists(new Path(p)))))
-      throw new IllegalStateException(
-        s"$tableDir: multi-part checkpoint $version is missing parts " +
-          s"(expected ${names.mkString(", ")})")
-    val manifest = v2Manifest(fs, tableDir, version).getOrElse(
-      throw new IllegalStateException(
-        s"$tableDir: checkpoint $version unreadable — neither the " +
-          s"classic names (${names.mkString(", ")}) nor a v2 " +
-          "UUID-named manifest exist"))
-    loadV2Checkpoint(spark, tableDir, version, manifest, live)
-  }
+    val commits: SortedMap[Long, Path] = SortedMap.from(
+      listing.toSeq.flatten.collect {
+        case p if p.getName.matches("\\d{20}\\.json") =>
+          p.getName.stripSuffix(".json").toLong -> p
+      })
 
-  /** Read a V2 checkpoint: manifest (parquet or json) → non-file
-    * actions + sidecar names; sidecar parquets → file actions. */
-  private def loadV2Checkpoint(spark: SparkSession, tableDir: String,
-                               version: Long, manifest: Path,
-                               live: mutable.LinkedHashMap[String, AddFile])
-  : (Option[StructType], Seq[String], Map[String, String],
-     Option[Protocol]) = {
-    val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var state: (Option[StructType], Seq[String], Map[String, String],
-      Option[Protocol]) = (None, Nil, Map.empty, None)
-    var sidecars = Vector.empty[String]
-    var ckptVersion: Option[Long] = None
-    if (manifest.getName.endsWith(".json")) {
-      val text = LakeFiles.readText(fs, manifest)
-      var schema: Option[StructType] = None
-      var partCols: Seq[String] = Nil
-      var conf: Map[String, String] = Map.empty
-      var protocol: Option[Protocol] = None
-      for (line <- text.linesIterator if line.trim.nonEmpty) {
-        val action = try JsonMethods.parse(line)
+    def requireLog(): Unit = if (listing.isEmpty)
+      throw new IllegalStateException(s"$tableDir has no _delta_log")
+
+    /** `_last_checkpoint` content: checkpoint version + part count. */
+    lazy val lastCheckpoint: Option[(Long, Option[Int])] =
+      if (!names("_last_checkpoint")) None
+      else {
+        val text = LakeFiles.readText(fs, new Path(logDir, "_last_checkpoint"))
+        val json = try JsonMethods.parse(text)
           catch { case e: Exception => throw new IllegalStateException(
-            s"$manifest: malformed action JSON (${e.getMessage})")
+            s"$tableDir: malformed _last_checkpoint: ${e.getMessage}")
           }
-        (action \ "checkpointMetadata" \ "version").extractOpt[Long]
-          .foreach(v => ckptVersion = Some(v))
-        (action \ "sidecar" \ "path").extractOpt[String]
-          .foreach(p => sidecars :+= p)
-        (action \ "metaData") match {
-          case JNothing =>
-          case md =>
-            schema = (md \ "schemaString").extractOpt[String]
-              .map(s => DataType.fromJson(s).asInstanceOf[StructType])
-            partCols = (md \ "partitionColumns")
-              .extractOpt[Seq[String]].getOrElse(Nil)
-            conf = (md \ "configuration")
-              .extractOpt[Map[String, String]].getOrElse(Map.empty)
-        }
-        (action \ "protocol") match {
-          case JNothing =>
-          case pr => protocol = Some(Protocol(
-            (pr \ "minReaderVersion").extractOpt[Int].getOrElse(1),
-            (pr \ "readerFeatures").extractOpt[Seq[String]]
-              .getOrElse(Nil).toSet,
-            (pr \ "minWriterVersion").extractOpt[Int].getOrElse(2),
-            (pr \ "writerFeatures").extractOpt[Seq[String]]
-              .getOrElse(Nil).toSet))
-        }
-        (action \ "add") match {
-          case JNothing =>
-          case add =>
-            val path = (add \ "path").extract[String]
-            val dv = parseDvJson(add \ "deletionVector")
-            live(path) = AddFile(path, (add \ "partitionValues")
-              .extractOpt[Map[String, String]].getOrElse(Map.empty), dv,
-              (add \ "stats").extractOpt[String])
-        }
-      }
-      state = (schema, partCols, conf, protocol)
-    } else {
-      val df = spark.read.parquet(manifest.toString)
-      if (df.columns.contains("checkpointMetadata")) {
-        ckptVersion = df.select(col("checkpointMetadata.version"))
-          .where(col("checkpointMetadata.version").isNotNull)
-          .collect().headOption.map(_.getLong(0))
-      }
-      if (df.columns.contains("sidecar")) {
-        sidecars = df.select(col("sidecar.path"))
-          .where(col("sidecar.path").isNotNull)
-          .collect().map(_.getString(0)).toVector
-      }
-      state = absorbCheckpointFrame(df, live)
-    }
-    // the manifest must declare itself (checkpointMetadata is REQUIRED
-    // in v2) and agree with the version its name claims
-    if (!ckptVersion.contains(version)) throw new IllegalStateException(
-      s"$manifest: v2 checkpoint manifest " +
-        ckptVersion.map(v => s"declares version $v")
-          .getOrElse("lacks the required checkpointMetadata action") +
-        s" — expected version $version")
-    if (sidecars.nonEmpty) {
-      // sidecar `path` is URI-encoded and MAY be absolute per the
-      // spec; bare names resolve under _delta_log/_sidecars. Foreign
-      // schemes refuse like everywhere else.
-      val sidecarPaths = sidecars.map { raw =>
-        val uri = try new java.net.URI(raw)
-          catch { case e: java.net.URISyntaxException =>
-            throw new IllegalStateException(
-              s"$tableDir: undecodable sidecar path $raw " +
-                s"(${e.getMessage})")
-          }
-        Option(uri.getScheme).filter(_ != "file").foreach { s =>
+        val v = (json \ "version").extractOpt[Long].getOrElse(
           throw new IllegalStateException(
-            s"$tableDir: sidecar $raw has unsupported scheme '$s://' — " +
-              "only file:// and relative names are in scope")
-        }
-        val decoded = uri.getPath
-        val abs =
-          if (decoded.startsWith("/")) decoded
-          else s"$tableDir/_delta_log/_sidecars/$decoded"
-        if (!fs.exists(new Path(abs))) throw new IllegalStateException(
-          s"$tableDir: v2 checkpoint $version names sidecar $raw but " +
-            s"$abs does not exist — reading without " +
-            "it would silently drop live files")
-        abs
+            s"$tableDir: _last_checkpoint without a version"))
+        Some(v -> (json \ "parts").extractOpt[Int])
       }
-      // sidecars carry only file actions; metaData/protocol stay the
-      // manifest's
-      absorbCheckpointFrame(
-        spark.read.parquet(sidecarPaths: _*), live): Unit
+
+    /** No commit and no checkpoint yet (or no `_delta_log` at all). */
+    def isEmpty: Boolean = commits.isEmpty && lastCheckpoint.isEmpty
+
+    private val parsed = mutable.Map.empty[Long, Seq[Action]]
+
+    /** Commit `v`'s actions, parsed once; `v` must be in [[commits]]. */
+    def actions(v: Long): Seq[Action] =
+      parsed.getOrElseUpdate(v, readActions(fs, commits(v)))
+
+    /** Every action of the checkpoint `_last_checkpoint` names (none
+      * without one), read once. */
+    lazy val checkpoint: Seq[Action] =
+      lastCheckpoint.toSeq.flatMap { case (cv, parts) =>
+        readCheckpoint(cv, parts)
+      }
+
+    /** The classic single-file / multi-part parquet names, or — when
+      * those are absent — the V2 manifest and its sidecars. */
+    private def readCheckpoint(cv: Long, parts: Option[Int]): Seq[Action] = {
+      val classic = parts match {
+        case Some(n) => (1 to n).map(i =>
+          f"$cv%020d.checkpoint.$i%010d.$n%010d.parquet")
+        case None => Seq(f"$cv%020d.checkpoint.parquet")
+      }
+      val present = classic.filter(names)
+      if (present.size == classic.size) {
+        val df = try spark.read.parquet(
+            classic.map(n => new Path(logDir, n).toString): _*)
+          catch { case e: Exception => throw new IllegalStateException(
+            s"$tableDir: checkpoint $cv unreadable " +
+              s"(${classic.mkString(", ")}): ${e.getMessage}")
+          }
+        frameActions(df)
+      } else if (present.nonEmpty)
+        // a multi-part checkpoint with SOME parts missing is corrupt,
+        // not v2 — refuse by name
+        throw new IllegalStateException(
+          s"$tableDir: multi-part checkpoint $cv is missing parts " +
+            s"(expected ${classic.mkString(", ")})")
+      else {
+        // several manifests for one version are equivalent per the
+        // spec; the lexicographically last is picked for determinism
+        val re = (f"$cv%020d\\.checkpoint\\.[A-Za-z0-9-]+" +
+          "\\.(parquet|json)").r
+        val manifest = names.toSeq.filter(re.matches).sorted.lastOption
+          .getOrElse(throw new IllegalStateException(
+            s"$tableDir: checkpoint $cv unreadable — neither the " +
+              s"classic names (${classic.mkString(", ")}) nor a v2 " +
+              "UUID-named manifest exist"))
+        v2Checkpoint(cv, new Path(logDir, manifest))
+      }
     }
-    state
+
+    /** A V2 checkpoint: the manifest's actions plus its sidecars' file
+      * actions (metaData/protocol/txn stay the manifest's). */
+    private def v2Checkpoint(cv: Long, manifest: Path): Seq[Action] = {
+      val actions =
+        if (manifest.getName.endsWith(".json")) readActions(fs, manifest)
+        else frameActions(spark.read.parquet(manifest.toString))
+      // the manifest must declare itself (checkpointMetadata is
+      // REQUIRED in v2) and agree with the version its name claims
+      val declared = actions.collect { case CheckpointMetadata(v) => v }
+        .lastOption
+      if (!declared.contains(cv)) throw new IllegalStateException(
+        s"$manifest: v2 checkpoint manifest " +
+          declared.map(v => s"declares version $v")
+            .getOrElse("lacks the required checkpointMetadata action") +
+          s" — expected version $cv")
+      val sidecars = actions.collect { case Sidecar(raw) =>
+        sidecarPath(cv, raw) }
+      if (sidecars.isEmpty) actions
+      else actions ++ frameActions(spark.read.parquet(sidecars: _*))
+        .filter { case _: Add | _: Remove => true; case _ => false }
+    }
+
+    /** A sidecar `path` is URI-encoded and MAY be absolute per the spec;
+      * bare names resolve under `_delta_log/_sidecars`. Foreign schemes
+      * and missing files refuse. */
+    private def sidecarPath(cv: Long, raw: String): String = {
+      val uri = try new java.net.URI(raw)
+        catch { case e: java.net.URISyntaxException =>
+          throw new IllegalStateException(
+            s"$tableDir: undecodable sidecar path $raw (${e.getMessage})")
+        }
+      Option(uri.getScheme).filter(_ != "file").foreach { s =>
+        throw new IllegalStateException(
+          s"$tableDir: sidecar $raw has unsupported scheme '$s://' — " +
+            "only file:// and relative names are in scope")
+      }
+      val decoded = uri.getPath
+      val abs =
+        if (decoded.startsWith("/")) decoded
+        else s"$tableDir/_delta_log/_sidecars/$decoded"
+      if (!fs.exists(new Path(abs))) throw new IllegalStateException(
+        s"$tableDir: v2 checkpoint $cv names sidecar $raw but $abs does " +
+          "not exist — reading without it would silently drop live files")
+      abs
+    }
+
+    /** Replay the log up to (and including) `versionAsOf`, or fully. */
+    def snapshot(versionAsOf: Option[Long]): Snapshot = {
+      requireLog()
+      var meta: Option[MetaData] = None
+      var protocol: Option[Protocol] = None
+      val live = mutable.LinkedHashMap.empty[String, AddFile]
+      // a checkpoint's removes are expired tombstones kept for vacuum,
+      // not live state
+      def replay(a: Action, fromCheckpoint: Boolean): Unit = a match {
+        case m: MetaData => meta = Some(m)
+        case p: Protocol => protocol = Some(p)
+        case Add(f, _)   => live(f.path) = f
+        case Remove(f, _) if !fromCheckpoint => live.remove(f.path): Unit
+        case _ =>
+      }
+      // replay base: the checkpoint when it serves the asked version,
+      // else version -1 (full JSON replay, e.g. versionAsOf < checkpoint)
+      val base: Long = lastCheckpoint match {
+        case Some((cv, _)) if versionAsOf.forall(_ >= cv) =>
+          checkpoint.foreach(replay(_, fromCheckpoint = true))
+          cv
+        case _ => -1L
+      }
+      val after = commits.keys.filter(_ > base).toSeq
+      val wanted = versionAsOf match {
+        case Some(v) =>
+          if (v != base && !after.contains(v))
+            throw new IllegalArgumentException(
+              s"$tableDir: no commit for versionAsOf=$v" +
+                (if (lastCheckpoint.isDefined && base < 0)
+                  " (predates the checkpoint and its JSON commit is gone)"
+                else ""))
+          after.takeWhile(_ <= v)
+        case None => after
+      }
+      if (base < 0 && wanted.isEmpty)
+        throw new IllegalStateException(s"$tableDir: empty _delta_log")
+      wanted.zipWithIndex.foreach { case (v, i) =>
+        if (v != base + 1 + i) throw new IllegalStateException(
+          s"$tableDir: version gap — expected commit ${base + 1 + i}, found $v")
+      }
+      wanted.foreach(v => actions(v).foreach(replay(_, fromCheckpoint = false)))
+      val m = meta.getOrElse(throw new IllegalStateException(
+        s"$tableDir: log replay finished without a metaData action"))
+      val schema = DataType.fromJson(m.schemaString).asInstanceOf[StructType]
+      protocol.foreach(gateProtocol(tableDir, _))
+      val (phys, ids) = columnMapping(tableDir, schema, m.configuration)
+      Snapshot(wanted.lastOption.getOrElse(base), schema, m.partitionColumns,
+        live.values.toSeq, phys, m.configuration, ids,
+        protocol.map(_.minReaderVersion).getOrElse(1),
+        protocol.map(_.readerFeatures).getOrElse(Set.empty),
+        protocol.map(_.minWriterVersion).getOrElse(2),
+        protocol.map(_.writerFeatures).getOrElse(Set.empty))
+    }
+
+    /** See [[DeltaLogLite.versionAtTimestamp]]. */
+    def versionAt(timestampMs: Long): Long = {
+      requireLog()
+      if (commits.isEmpty) throw new IllegalStateException(
+        s"$tableDir: empty _delta_log (timestamp travel needs JSON commits)")
+      val stamped = commits.keys.toSeq.map { v =>
+        v -> actions(v).collectFirst { case CommitInfo(Some(ts)) => ts }
+          .getOrElse(throw new IllegalStateException(
+            s"$tableDir commit $v has no commitInfo.timestamp — timestamp " +
+              "travel needs stamped commits (inCommitTimestamps)"))
+      }
+      val eligible = stamped.filter(_._2 <= timestampMs)
+      if (eligible.isEmpty) throw new IllegalArgumentException(
+        s"$tableDir: no commit at or before timestamp $timestampMs " +
+          s"(earliest is ${stamped.head._2})")
+      // ties on the stamp resolve to the LATEST version (timestampAsOf
+      // semantics: the last table state at or before the instant)
+      eligible.maxBy(e => (e._2, e._1))._1
+    }
+
+    /** Highest version in the log: a checkpoint with its JSON gone
+      * still names its version. */
+    def latestVersion: Long = {
+      requireLog()
+      (commits.keys ++ lastCheckpoint.map(_._1)).maxOption.getOrElse(
+        throw new IllegalStateException(s"$tableDir: empty _delta_log"))
+    }
+
+    /** Latest `txn` version per appId across every JSON commit AND the
+      * checkpoint (empty without a log). */
+    def txnVersions: Map[String, Long] =
+      (commits.keys.toSeq.flatMap(actions) ++ checkpoint)
+        .collect { case Txn(appId, v) => appId -> v }
+        .groupMapReduce(_._1)(_._2)(math.max)
   }
 
   /** Replay the log up to (and including) `versionAsOf`, or fully. */
   def snapshot(spark: SparkSession, tableDir: String,
-               versionAsOf: Option[Long] = None): Snapshot = {
-    val logDir = new Path(tableDir, "_delta_log")
-    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commits =
-      try fs.listStatus(logDir).toSeq.map(_.getPath)
-        .filter(_.getName.matches("\\d{20}\\.json"))
-        .map(p => p.getName.stripSuffix(".json").toLong -> p)
-        .sortBy(_._1)
-      catch { case _: FileNotFoundException =>
-        throw new IllegalStateException(s"$tableDir has no _delta_log")
-      }
-    val ckpt = lastCheckpoint(fs, logDir, tableDir)
-
-    var schema: Option[StructType] = None
-    var partCols: Seq[String] = Nil
-    var conf: Map[String, String] = Map.empty
-    var protocol: Option[Protocol] = None
-    val live = mutable.LinkedHashMap.empty[String, AddFile]
-
-    // replay base: the checkpoint when it serves the asked version,
-    // else version -1 (full JSON replay, e.g. versionAsOf < checkpoint)
-    val base: Long = ckpt match {
-      case Some((cv, parts)) if versionAsOf.forall(_ >= cv) =>
-        val (s0, p0, c0, pr0) = loadCheckpoint(spark, tableDir, cv, parts, live)
-        schema = s0; partCols = p0; conf = c0; protocol = pr0
-        cv
-      case _ => -1L
-    }
-
-    val after = commits.filter(_._1 > base)
-    val wanted = versionAsOf match {
-      case Some(v) =>
-        if (v != base && !after.exists(_._1 == v))
-          throw new IllegalArgumentException(
-            s"$tableDir: no commit for versionAsOf=$v" +
-              (if (ckpt.isDefined && base < 0)
-                " (predates the checkpoint and its JSON commit is gone)"
-              else ""))
-        after.takeWhile(_._1 <= v)
-      case None => after
-    }
-    if (base < 0 && wanted.isEmpty)
-      throw new IllegalStateException(s"$tableDir: empty _delta_log")
-    wanted.map(_._1).zipWithIndex.foreach { case (v, i) =>
-      if (v != base + 1 + i) throw new IllegalStateException(
-        s"$tableDir: version gap — expected commit ${base + 1 + i}, found $v")
-    }
-
-    for ((v, p) <- wanted) {
-      val text = LakeFiles.readText(fs, p)
-      for (line <- text.linesIterator if line.trim.nonEmpty) {
-        val action = try JsonMethods.parse(line)
-          catch { case e: Exception => throw new IllegalStateException(
-            s"$tableDir commit $v: malformed action JSON: " +
-              s"${line.take(80)} (${e.getMessage})")
-          }
-        (action \ "metaData") match {
-          case JNothing =>
-          case md =>
-            val ss = (md \ "schemaString").extractOpt[String].getOrElse(
-              throw new IllegalStateException(
-                s"$tableDir commit $v: metaData without schemaString"))
-            schema = Some(DataType.fromJson(ss).asInstanceOf[StructType])
-            partCols = (md \ "partitionColumns")
-              .extractOpt[Seq[String]].getOrElse(Nil)
-            conf = (md \ "configuration")
-              .extractOpt[Map[String, String]].getOrElse(Map.empty)
-        }
-        (action \ "protocol") match {
-          case JNothing =>
-          case pr =>
-            val mrv = (pr \ "minReaderVersion").extractOpt[Int].getOrElse(
-              throw new IllegalStateException(
-                s"$tableDir commit $v: protocol without minReaderVersion"))
-            val feats = (pr \ "readerFeatures")
-              .extractOpt[Seq[String]].getOrElse(Nil).toSet
-            protocol = Some(Protocol(mrv, feats,
-              (pr \ "minWriterVersion").extractOpt[Int].getOrElse(2),
-              (pr \ "writerFeatures").extractOpt[Seq[String]]
-                .getOrElse(Nil).toSet))
-        }
-        (action \ "add") match {
-          case JNothing =>
-          case add =>
-            val path = (add \ "path").extract[String]
-            val dv = parseDvJson(add \ "deletionVector")
-            val pv = (add \ "partitionValues")
-              .extractOpt[Map[String, String]].getOrElse(Map.empty)
-            live(path) = AddFile(path, pv, dv,
-              (add \ "stats").extractOpt[String])
-        }
-        (action \ "remove") match {
-          case JNothing =>
-          case rm => live.remove((rm \ "path").extract[String])
-        }
-      }
-    }
-    val sch = schema.getOrElse(throw new IllegalStateException(
-      s"$tableDir: log replay finished without a metaData action"))
-    protocol.foreach(gateProtocol(tableDir, _))
-    val (phys, ids) = columnMapping(tableDir, sch, conf)
-    Snapshot(wanted.lastOption.map(_._1).getOrElse(base), sch, partCols,
-      live.values.toSeq, phys, conf, ids,
-      protocol.map(_.minReaderVersion).getOrElse(1),
-      protocol.map(_.readerFeatures).getOrElse(Set.empty),
-      protocol.map(_.minWriterVersion).getOrElse(2),
-      protocol.map(_.writerFeatures).getOrElse(Set.empty))
-  }
+               versionAsOf: Option[Long] = None): Snapshot =
+    new Log(spark, tableDir).snapshot(versionAsOf)
 
   /** Resolve `timestampAsOf` to a version: the LATEST commit whose
     * `commitInfo.timestamp` is ≤ the asked instant. Deterministic
@@ -648,139 +631,45 @@ object DeltaLogLite {
     * before the first commit, refuses loudly. Bounded: one JSON read
     * per available commit. */
   def versionAtTimestamp(spark: SparkSession, tableDir: String,
-                         timestampMs: Long): Long = {
-    val logDir = new Path(tableDir, "_delta_log")
-    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commits =
-      try fs.listStatus(logDir).toSeq.map(_.getPath)
-        .filter(_.getName.matches("\\d{20}\\.json"))
-        .map(p => p.getName.stripSuffix(".json").toLong -> p)
-        .sortBy(_._1)
-      catch { case _: FileNotFoundException =>
-        throw new IllegalStateException(s"$tableDir has no _delta_log")
-      }
-    if (commits.isEmpty) throw new IllegalStateException(
-      s"$tableDir: empty _delta_log (timestamp travel needs JSON commits)")
-    val stamped = commits.map { case (v, p) =>
-      val text = LakeFiles.readText(fs, p)
-      val ts = text.linesIterator.filter(_.trim.nonEmpty).flatMap { line =>
-        val action = try JsonMethods.parse(line)
-          catch { case _: Exception => JNothing }
-        (action \ "commitInfo" \ "timestamp").extractOpt[Long]
-      }.nextOption().getOrElse(throw new IllegalStateException(
-        s"$tableDir commit $v has no commitInfo.timestamp — timestamp " +
-          "travel needs stamped commits (inCommitTimestamps)"))
-      v -> ts
-    }
-    val eligible = stamped.filter(_._2 <= timestampMs)
-    if (eligible.isEmpty) throw new IllegalArgumentException(
-      s"$tableDir: no commit at or before timestamp $timestampMs " +
-        s"(earliest is ${stamped.head._2})")
-    // ties on the stamp resolve to the LATEST version (timestampAsOf
-    // semantics: the last table state at or before the instant)
-    eligible.maxBy(e => (e._2, e._1))._1
-  }
+                         timestampMs: Long): Long =
+    new Log(spark, tableDir).versionAt(timestampMs)
 
   /** Highest commit version currently in the log (checkpoint-aware:
     * a checkpoint with its JSON gone still names its version). Used by
     * the streaming source's offset probe — one directory listing, no
     * replay. */
-  def latestVersion(spark: SparkSession, tableDir: String): Long = {
-    val logDir = new Path(tableDir, "_delta_log")
-    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val jsons =
-      try fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-        .collect { case n if n.matches("\\d{20}\\.json") =>
-          n.stripSuffix(".json").toLong }
-      catch { case _: FileNotFoundException =>
-        throw new IllegalStateException(s"$tableDir has no _delta_log")
-      }
-    val ckptV = lastCheckpoint(fs, logDir, tableDir).map(_._1)
-    (jsons ++ ckptV).maxOption.getOrElse(
-      throw new IllegalStateException(s"$tableDir: empty _delta_log"))
-  }
+  def latestVersion(spark: SparkSession, tableDir: String): Long =
+    new Log(spark, tableDir).latestVersion
 
-  /** Highest `txn` version recorded for `appId` across the available
-    * JSON commits — the exactly-once dedup surface for the streaming
-    * SINK (PROTOCOL.md "Transaction Identifiers"): a re-delivered
-    * micro-batch whose id is ≤ this version is a duplicate and must
-    * not commit again. Lite contract: requires the txn-bearing JSON
-    * commits to still be present (no checkpoint compaction of the
-    * writer's own recent history). */
+  /** Highest `txn` version recorded for `appId` — the exactly-once dedup
+    * surface for the streaming SINK (PROTOCOL.md "Transaction
+    * Identifiers"): a re-delivered micro-batch whose id is ≤ this
+    * version is a duplicate and must not commit again. */
   def latestTxnVersion(spark: SparkSession, tableDir: String,
                        appId: String): Option[Long] =
     allTxnVersions(spark, tableDir).get(appId)
 
   /** Latest `txn` version per appId across the available JSON commits
-    * AND the checkpoint's txn column — a checkpointed table's
-    * pre-checkpoint txn history lives ONLY in the checkpoint (the
-    * JSONs may be vacuumed); without it a restarted stream would
-    * re-commit old batches. Also what a checkpoint WRITER must carry
-    * forward. */
+    * AND the checkpoint — a checkpointed table's pre-checkpoint txn
+    * history lives ONLY in the checkpoint (the JSONs may be vacuumed);
+    * without it a restarted stream would re-commit old batches. Also
+    * what a checkpoint WRITER must carry forward. */
   def allTxnVersions(spark: SparkSession,
-                     tableDir: String): Map[String, Long] = {
-    val logDir = new Path(tableDir, "_delta_log")
-    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(logDir)) return Map.empty
-    val commits = fs.listStatus(logDir).toSeq.map(_.getPath)
-      .filter(_.getName.matches("\\d{20}\\.json"))
-    val fromJson: Seq[(String, Long)] = commits.flatMap { p =>
-      val text = LakeFiles.readText(fs, p)
-      text.linesIterator.filter(_.trim.nonEmpty).flatMap { line =>
-        val action = try JsonMethods.parse(line)
-          catch { case _: Exception => JNothing }
-        (action \ "txn") match {
-          case JNothing => None
-          case txn => for {
-            a <- (txn \ "appId").extractOpt[String]
-            v <- (txn \ "version").extractOpt[Long]
-          } yield (a, v)
-        }
-      }.toSeq
-    }
-    val fromCkpt: Seq[(String, Long)] =
-      lastCheckpoint(fs, logDir, tableDir).toSeq
-        .flatMap { case (cv, parts) =>
-          val names = parts match {
-            case Some(n) => (1 to n).map(i =>
-              f"$cv%020d.checkpoint.$i%010d.$n%010d.parquet")
-            case None => Seq(f"$cv%020d.checkpoint.parquet")
-          }
-          val paths = names.map(n => s"$tableDir/_delta_log/$n")
-          def txnsOfFrame(df: DataFrame): Seq[(String, Long)] =
-            if (!df.columns.contains("txn")) Nil
-            else df.select(col("txn.appId"), col("txn.version"))
-              .where(col("txn.appId").isNotNull).collect()
-              .map(r => (r.getString(0), r.getLong(1))).toSeq
-          if (paths.forall(p => fs.exists(new Path(p))))
-            txnsOfFrame(spark.read.parquet(paths: _*))
-          else {
-            // same refusal as loadCheckpoint: silently yielding NO
-            // checkpoint txn history on a corrupt log could regress
-            // streaming exactly-once dedup state
-            val m = v2Manifest(fs, tableDir, cv).getOrElse(
-              throw new IllegalStateException(
-                s"$tableDir: checkpoint $cv unreadable — neither the " +
-                  s"classic names (${names.mkString(", ")}) nor a v2 " +
-                  "UUID-named manifest exist"))
-            // v2: txn actions live in the MANIFEST (sidecars carry
-            // only file actions per the spec)
-            if (m.getName.endsWith(".json")) {
-              val text = LakeFiles.readText(fs, m)
-              text.linesIterator.filter(_.trim.nonEmpty).flatMap { line =>
-                val a = try JsonMethods.parse(line)
-                  catch { case _: Exception => JNothing }
-                for {
-                  id <- (a \ "txn" \ "appId").extractOpt[String]
-                  v <- (a \ "txn" \ "version").extractOpt[Long]
-                } yield (id, v)
-              }.toSeq
-            } else txnsOfFrame(spark.read.parquet(m.toString))
-          }
-        }
-    (fromJson ++ fromCkpt).groupBy(_._1)
-      .map { case (a, vs) => a -> vs.map(_._2).max }
+                     tableDir: String): Map[String, Long] =
+    new Log(spark, tableDir).txnVersions
+
+  /** What the stream sink reads before a commit, from ONE walk of the
+    * log: the current snapshot (None before the first commit; a log
+    * that exists but cannot be replayed throws) and the latest txn
+    * version per appId, each computed when first asked. */
+  final class Head private[DeltaLogLite] (log: Log) {
+    lazy val snapshot: Option[Snapshot] =
+      if (log.isEmpty) None else Some(log.snapshot(None))
+    lazy val txnVersions: Map[String, Long] = log.txnVersions
   }
+
+  def head(spark: SparkSession, tableDir: String): Head =
+    new Head(new Log(spark, tableDir))
 
   /** CHANGE DATA FEED read over commits [fromVersion, toVersion] —
     * the incremental-ETL surface (PROTOCOL.md "Add CDC File"). Per
@@ -813,9 +702,8 @@ object DeltaLogLite {
     require(fromVersion <= toVersion,
       s"$tableDir: change-feed range is reversed " +
         s"(fromVersion=$fromVersion > toVersion=$toVersion)")
-    val logDir = new Path(tableDir, "_delta_log")
-    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = snapshot(spark, tableDir, Some(toVersion))
+    val log = new Log(spark, tableDir)
+    val snap = log.snapshot(Some(toVersion))
     // CDF must be ON for the range to have been recorded (the
     // snapshot replay above already tracked the configuration)
     if (!snap.configuration.get("delta.enableChangeDataFeed")
@@ -826,49 +714,20 @@ object DeltaLogLite {
     val ctField = org.apache.spark.sql.types.StructField("_change_type",
       org.apache.spark.sql.types.StringType, nullable = true)
     val perVersion = (fromVersion to toVersion).map { v =>
-      val p = new Path(logDir, f"$v%020d.json")
-      if (!fs.exists(p)) throw new IllegalStateException(
+      if (!log.commits.contains(v)) throw new IllegalStateException(
         s"$tableDir: change range needs commit $v but its JSON is gone")
-      val text = LakeFiles.readText(fs, p)
-      var cdcFiles = Vector.empty[AddFile]
-      var adds = Vector.empty[AddFile]
-      var removes = Vector.empty[AddFile]
-      for (line <- text.linesIterator if line.trim.nonEmpty) {
-        val action = try JsonMethods.parse(line)
-          catch { case e: Exception => throw new IllegalStateException(
-            s"$tableDir commit $v: malformed action JSON (${e.getMessage})")
-          }
-        (action \ "cdc") match {
-          case JNothing =>
-          case c => cdcFiles :+= AddFile((c \ "path").extract[String],
-            (c \ "partitionValues").extractOpt[Map[String, String]]
-              .getOrElse(Map.empty))
-        }
-        (action \ "add") match {
-          case JNothing =>
-          case a if (a \ "dataChange").extractOpt[Boolean].getOrElse(true) =>
-            adds :+= AddFile((a \ "path").extract[String],
-              (a \ "partitionValues").extractOpt[Map[String, String]]
-                .getOrElse(Map.empty),
-              parseDvJson(a \ "deletionVector"))
-          case _ =>
-        }
-        (action \ "remove") match {
-          case JNothing =>
-          case r if (r \ "dataChange").extractOpt[Boolean].getOrElse(true) =>
-            val path = (r \ "path").extract[String]
-            val pv = (r \ "partitionValues")
-              .extractOpt[Map[String, String]].getOrElse(Map.empty)
-            if (snap.partitionColumns.nonEmpty && pv.isEmpty)
-              throw new IllegalStateException(
-                s"$tableDir commit $v: remove $path lacks " +
-                  "partitionValues on a partitioned table — cannot " +
-                  "synthesize its delete rows")
-            // the remove action carries the REMOVED file's deletion
-            // vector (the rows already dead before this commit)
-            removes :+= AddFile(path, pv, parseDvJson(r \ "deletionVector"))
-          case _ =>
-        }
+      val actions = log.actions(v)
+      val cdcFiles = actions.collect { case Cdc(f) => f }
+      val adds = actions.collect { case Add(f, true) => f }
+      // the remove action carries the REMOVED file's deletion vector
+      // (the rows already dead before this commit)
+      val removes = actions.collect { case Remove(f, true) =>
+        if (snap.partitionColumns.nonEmpty && f.partitionValues.isEmpty)
+          throw new IllegalStateException(
+            s"$tableDir commit $v: remove ${f.path} lacks " +
+              "partitionValues on a partitioned table — cannot " +
+              "synthesize its delete rows")
+        f
       }
       val changed: DataFrame =
         if (cdcFiles.nonEmpty) {
@@ -989,66 +848,31 @@ object DeltaLogLite {
   def addsBetween(spark: SparkSession, tableDir: String,
                   fromExclusive: Long, toInclusive: Long,
                   expectedSchemaJson: String): Seq[AddFile] = {
-    val logDir = new Path(tableDir, "_delta_log")
-    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val log = new Log(spark, tableDir)
     val adds = mutable.LinkedHashMap.empty[String, AddFile]
     for (v <- (fromExclusive + 1) to toInclusive) {
-      val p = new Path(logDir, f"$v%020d.json")
-      if (!fs.exists(p)) throw new IllegalStateException(
+      if (!log.commits.contains(v)) throw new IllegalStateException(
         s"$tableDir: streaming range needs commit $v but its JSON is " +
           "gone (log cleanup passed the stream's offset)")
-      val text = LakeFiles.readText(fs, p)
-      for (line <- text.linesIterator if line.trim.nonEmpty) {
-        val action = try JsonMethods.parse(line)
-          catch { case e: Exception => throw new IllegalStateException(
-            s"$tableDir commit $v: malformed action JSON: " +
-              s"${line.take(80)} (${e.getMessage})")
-          }
-        (action \ "remove") match {
-          case JNothing =>
-          // dataChange=false removes are a COMPACTION's file swap —
-          // no rows changed, streams skip them by protocol contract
-          case rm if !(rm \ "dataChange").extractOpt[Boolean]
-            .getOrElse(true) =>
-          case rm => throw new IllegalStateException(
-            s"$tableDir commit $v: remove ${(rm \ "path").extractOpt[String]
-              .getOrElse("?")} — streaming reads are append-only scope " +
-              "(a remove mid-stream would emit rows that no longer exist)")
-        }
-        (action \ "metaData") match {
-          case JNothing =>
-          case md =>
-            val ss = (md \ "schemaString").extractOpt[String].getOrElse("")
-            if (ss != expectedSchemaJson) throw new IllegalStateException(
-              s"$tableDir commit $v: schema changed mid-stream — " +
-                "evolution is outside DeltaLogLite streaming scope")
-        }
-        (action \ "protocol") match {
-          case JNothing =>
-          case pr =>
-            val mrv = (pr \ "minReaderVersion").extractOpt[Int].getOrElse(0)
-            val feats = (pr \ "readerFeatures")
-              .extractOpt[Seq[String]].getOrElse(Nil).toSet
-            gateProtocol(tableDir, Protocol(mrv, feats))
-        }
-        (action \ "add") match {
-          case JNothing =>
-          // dataChange=false adds re-list rows the stream already
-          // served (the compaction's packed files) — emitting them
-          // would DUPLICATE; streams skip them by protocol contract
-          case add if !(add \ "dataChange").extractOpt[Boolean]
-            .getOrElse(true) =>
-          case add =>
-            val path = (add \ "path").extract[String]
-            (add \ "deletionVector") match {
-              case JNothing | JNull =>
-              case _ => throw new IllegalStateException(
-                s"$tableDir commit $v: add $path carries a deletionVector")
-            }
-            val pv = (add \ "partitionValues")
-              .extractOpt[Map[String, String]].getOrElse(Map.empty)
-            adds(path) = AddFile(path, pv)
-        }
+      log.actions(v).foreach {
+        // dataChange=false actions are a COMPACTION's file swap: the
+        // removes changed no rows, and the re-listed adds hold rows the
+        // stream already served — streams skip both by protocol contract
+        case Remove(_, false) | Add(_, false) =>
+        case Remove(f, _) => throw new IllegalStateException(
+          s"$tableDir commit $v: remove ${f.path} — streaming reads are " +
+            "append-only scope (a remove mid-stream would emit rows that " +
+            "no longer exist)")
+        case m: MetaData if m.schemaString != expectedSchemaJson =>
+          throw new IllegalStateException(
+            s"$tableDir commit $v: schema changed mid-stream — " +
+              "evolution is outside DeltaLogLite streaming scope")
+        case p: Protocol => gateProtocol(tableDir, p)
+        case Add(f, _) =>
+          if (f.deletionVector.nonEmpty) throw new IllegalStateException(
+            s"$tableDir commit $v: add ${f.path} carries a deletionVector")
+          adds(f.path) = AddFile(f.path, f.partitionValues)
+        case _ =>
       }
     }
     adds.values.toSeq
@@ -1370,8 +1194,7 @@ object DeltaLogLite {
     * decode before touching the filesystem. `file:`-scheme and plain
     * absolute paths are served; any OTHER scheme (s3://, hdfs://, …)
     * refuses loudly — never a wrong path. */
-  private[graft] def resolveAddPath(tableDir: String,
-                                    raw: String): String = {
+  def resolveAddPath(tableDir: String, raw: String): String = {
     val uri = try new java.net.URI(raw)
       catch { case e: java.net.URISyntaxException =>
         throw new IllegalStateException(
@@ -1397,12 +1220,66 @@ object DeltaLogLite {
            timestampAsOf: Option[Long] = None): DataFrame = {
     require(versionAsOf.isEmpty || timestampAsOf.isEmpty,
       "versionAsOf and timestampAsOf are mutually exclusive")
-    val v = versionAsOf.orElse(
-      timestampAsOf.map(versionAtTimestamp(spark, tableDir, _)))
-    val snap = snapshot(spark, tableDir, v)
+    val log = new Log(spark, tableDir)
+    val snap =
+      log.snapshot(versionAsOf.orElse(timestampAsOf.map(log.versionAt)))
     readFiles(spark, tableDir, snap.schema, snap.partitionColumns,
       snap.files, snap.physicalNames, snap.fieldIds)
   }
+
+  /** Publish commit `version`: create-new `_delta_log/<version>.json`
+    * holding `lines`. The one commit point of the writers and the stream
+    * sink — a reader sees the whole commit or none of it, and a taken
+    * version means another writer committed first, which single-writer
+    * scope refuses. */
+  def publish(fs: FileSystem, tableDir: String, version: Long,
+              lines: Seq[String]): Unit =
+    try AtomicFiles.write(fs,
+      new Path(tableDir, f"_delta_log/$version%020d.json"),
+      lines.mkString("", "\n", "\n"), replace = false)
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        throw new IllegalStateException(
+          s"$tableDir: commit $version already exists — another writer " +
+            "is active (single-writer scope)")
+    }
+
+  private def pvJson(pv: Map[String, String]): String =
+    pv.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+      .mkString("{", ",", "}")
+
+  private def dvJson(d: DvDescriptor): String =
+    s"""{"storageType":${jstr(d.storageType)},"pathOrInlineDv":${
+      jstr(d.pathOrInlineDv)},"offset":${d.offset},"sizeInBytes":${
+      d.sizeInBytes},"cardinality":${d.cardinality}}"""
+
+  /** One `add` action line; `path` is the URI-encoded add.path and
+    * `size` the file's real byte length (external readers plan on it). */
+  def addLine(path: String, partitionValues: Map[String, String],
+              size: Long, dataChange: Boolean, stats: Option[String] = None,
+              deletionVector: Option[DvDescriptor] = None): String =
+    s"""{"add":{"path":${jstr(path)},"partitionValues":${
+      pvJson(partitionValues)},"size":$size,"modificationTime":0,"dataChange":$dataChange""" +
+      stats.map(s => s""","stats":${jstr(s)}""").getOrElse("") +
+      deletionVector.map(d => s""","deletionVector":${dvJson(d)}""")
+        .getOrElse("") + "}}"
+
+  /** One `remove` action line for a snapshot file, re-stating its
+    * partition values and deletion vector. */
+  private def removeLine(f: AddFile, dataChange: Boolean): String =
+    s"""{"remove":{"path":${jstr(f.path)},"deletionTimestamp":0,"dataChange":$dataChange,"partitionValues":${
+      pvJson(f.partitionValues)}""" +
+      f.deletionVector.map(d => s""","deletionVector":${dvJson(d)}""")
+        .getOrElse("") + "}}"
+
+  private def cdcLine(path: String, partitionValues: Map[String, String],
+                      size: Long): String =
+    s"""{"cdc":{"path":${jstr(path)},"partitionValues":${
+      pvJson(partitionValues)},"size":$size,"dataChange":false}}"""
+
+  private def numRecords(rows: Long): Option[String] =
+    Some(s"""{"numRecords":$rows}""")
 
   /** OPTIMIZE/compaction: rewrite the table's live rows into
     * `numFiles` fresh parquet files and commit the swap with
@@ -1443,7 +1320,8 @@ object DeltaLogLite {
   def compact(spark: SparkSession, tableDir: String,
               numFiles: Int = 1): Long = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    val snap = snapshot(spark, tableDir)
+    val log = new Log(spark, tableDir)
+    val snap = log.snapshot(None)
     if (snap.files.isEmpty) throw new IllegalStateException(
       s"$tableDir: nothing to compact (no live files)")
     val partCols = snap.partitionColumns
@@ -1467,11 +1345,11 @@ object DeltaLogLite {
             "scope")
       }
     }
+    def physOf(c: String): String = snap.physicalNames.getOrElse(c, c)
     snap.files.foreach { f =>
       partCols.foreach { c =>
         // partitionValues are keyed by PHYSICAL name under mapping
-        val key = snap.physicalNames.getOrElse(c, c)
-        if (f.partitionValues.getOrElse(key, null) == null)
+        if (f.partitionValues.getOrElse(physOf(c), null) == null)
           throw new IllegalStateException(
             s"$tableDir: file ${f.path} has a NULL value for partition " +
               s"column $c — null-partition compaction is outside lite " +
@@ -1479,10 +1357,7 @@ object DeltaLogLite {
       }
     }
     val version = snap.version + 1
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // one distributed scan of the live rows (DVs applied), packed
-    val tmp = new Path(tableDir, "_tmp_compact")
     val live = readFiles(spark, tableDir, snap.schema, partCols,
       snap.files, snap.physicalNames, snap.fieldIds)
     // the bin salt must be DETERMINISTIC under task retries: a
@@ -1498,102 +1373,19 @@ object DeltaLogLite {
             lit(numFiles.toLong)))
         .repartition((partCols :+ "_graft_bin").map(col): _*)
         .drop("_graft_bin")
-    // COLUMN-MAPPED tables rewrite UNDER their mapping: mode=name
-    // files carry physical column names; mode=id files additionally
-    // stamp parquet.field.id into their footers (Spark's field-id
-    // writer), and the staging partition dirs — hence the re-stamped
-    // partitionValues keys — use physical names, exactly as the
-    // protocol keys them
-    def physOf(c: String): String = snap.physicalNames.getOrElse(c, c)
-    val outDf = stampMapped(snap, packed)
-    // mode=id staging needs the field-id parquet writer — flip the
-    // session flag only AROUND this write and restore it, so one
-    // maintenance call never changes how unrelated later writes in
-    // the session stamp their footers
-    val fieldIdKey = "spark.sql.parquet.fieldId.write.enabled"
-    val prevFieldId =
-      if (snap.fieldIds.isEmpty) None
-      else Some(spark.conf.getOption(fieldIdKey))
-    prevFieldId.foreach(_ => spark.conf.set(fieldIdKey, "true"))
-    try outDf.write.mode("overwrite")
-      .partitionBy(partCols.map(physOf): _*).parquet(tmp.toString)
-    finally prevFieldId.foreach {
-      case Some(v) => spark.conf.set(fieldIdKey, v)
-      case None    => spark.conf.unset(fieldIdKey)
-    }
-    // (escaped partition dir chain, unescaped values, file) per output
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    def walkTmp(dir: org.apache.hadoop.fs.Path, relDir: Seq[String],
-                pv: Seq[(String, String)])
-      : Seq[(Seq[String], Seq[(String, String)],
-             org.apache.hadoop.fs.FileStatus)] =
-      fs.listStatus(dir).toSeq.sortBy(_.getPath.getName).flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) {
-          val i = n.indexOf('=')
-          if (i < 0) throw new IllegalStateException(
-            s"$tableDir: unexpected non-partition directory $n in the " +
-              "compaction staging output")
-          val rawVal = n.substring(i + 1)
-          if (rawVal == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
-            throw new IllegalStateException(
-              s"$tableDir: compaction produced a null-partition " +
-                s"directory $n — outside lite scope")
-          walkTmp(st.getPath, relDir :+ n,
-            pv :+ (ExternalCatalogUtils.unescapePathName(n.substring(0, i))
-              -> ExternalCatalogUtils.unescapePathName(rawVal)))
-        } else if (n.endsWith(".parquet")) Seq((relDir, pv, st))
-        else Nil
-      }
-    val outputs = walkTmp(tmp, Nil, Nil)
-    // add.path is an RFC 2396 URI — percent-encode the literal FS rel
-    // path (the dirs keep their Hive-escaped names on disk) so
-    // resolveAddPath's decode lands back on the real file
-    val moved = outputs.zipWithIndex.map { case ((relDir, pv, st), i) =>
-      val dirRel = if (relDir.isEmpty) Seq("data") else relDir
-      val rel = (dirRel :+ s"compact-${version}_$i.parquet").mkString("/")
-      val dest = new Path(tableDir, rel)
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(st.getPath, dest))
-        throw new IllegalStateException(
-          s"$tableDir: could not move ${st.getPath.getName} into the " +
-            "table")
-      // footer row count (O(outputs) bounded driver work) → the
-      // add's stats.numRecords, so post-compact deletes/updates take
-      // the stats fast path instead of re-reading footers
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          dest, spark.sparkContext.hadoopConfiguration))
-      val rc = try footer.getRecordCount finally footer.close()
-      (rel, pv, st.getLen, rc)
-    }
-    fs.delete(tmp, true)
-    def dvJson(d: DvDescriptor): String =
-      s"""{"storageType":${jstr(d.storageType)},"pathOrInlineDv":${
-        jstr(d.pathOrInlineDv)},"offset":${d.offset},"sizeInBytes":${
-        d.sizeInBytes},"cardinality":${d.cardinality}}"""
-    def pvJson(pv: Seq[(String, String)]): String =
-      pv.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-        .mkString("{", ",", "}")
-    val removes = snap.files.sortBy(_.path).map(f =>
-      s"""{"remove":{"path":${jstr(f.path)},"deletionTimestamp":0,"dataChange":false,"partitionValues":${
-        pvJson(f.partitionValues.toSeq.sortBy(_._1))}""" +
-        f.deletionVector.map(d => s""","deletionVector":${dvJson(d)}""")
-          .getOrElse("") + "}}")
+    // COLUMN-MAPPED tables rewrite UNDER their mapping (physical names,
+    // field ids, physically-keyed partition dirs)
+    val moved = stagePartitionedWrite(spark, log, stampMapped(snap, packed),
+      partCols.map(physOf), if (partCols.isEmpty) Seq("data") else Nil,
+      s"compact-${version}_", snap.fieldIds.nonEmpty)
+    val removes =
+      snap.files.sortBy(_.path).map(removeLine(_, dataChange = false))
     val adds = moved.map { case (rel, pv, size, rc) =>
-      s"""{"add":{"path":${jstr(uriEncode(rel))},"partitionValues":${
-        pvJson(pv)},"size":$size,"modificationTime":0,"dataChange":false,"stats":${
-        jstr(s"""{"numRecords":$rc}""")}}}"""
+      addLine(uriEncode(rel), pv, size, dataChange = false, numRecords(rc))
     }
-    AtomicFiles.write(fs,
-      new Path(tableDir, f"_delta_log/$version%020d.json"),
-      (removes ++ adds).mkString("", "\n", "\n"), replace = false)
+    publish(log.fs, tableDir, version, removes ++ adds)
     version
   }
-
-  /** JSON string literal with control-char escaping — shared by the
-    * write paths' hand-rendered action lines. */
 
   /** Serialize dead row ordinals into the deletion-vector PAYLOAD
     * layout [[decodeDvPayload]] reads — [4-byte LE magic][8-byte LE
@@ -1625,7 +1417,7 @@ object DeltaLogLite {
     * framing — [1-byte version][4-byte BE size][payload][4-byte BE
     * CRC32] — through the path's OWN Hadoop filesystem
     * (executor-side; symmetric with [[decodeDvFile]]). `conf` must be
-    * the SESSION's hadoopConfiguration (broadcast into the closure) —
+    * the session's Hadoop conf (broadcast into the closure) —
     * a bare `new Configuration()` would drop `spark.hadoop.*`-borne
     * object-store credentials exactly on these writes. */
   private[graft] def writeDvFile(path: String, payload: Array[Byte],
@@ -1679,36 +1471,22 @@ object DeltaLogLite {
     * re-added file is byte-identical. */
   def delete(spark: SparkSession, tableDir: String,
              condition: org.apache.spark.sql.Column): Long = {
-    val snap = snapshot(spark, tableDir)
+    val log = new Log(spark, tableDir)
+    val snap = log.snapshot(None)
     if (snap.files.isEmpty) throw new IllegalStateException(
       s"$tableDir: nothing to delete from (no live files)")
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val withMeta = readFiles(spark, tableDir, snap.schema,
       snap.partitionColumns, snap.files, snap.physicalNames,
       snap.fieldIds, keepMeta = true)
     val matched = withMeta.filter(condition)
       .select(col("_dl_path").as("_path"), col("_dl_pos").as("_pos"))
-    val (byKey, results) = growDeadVectors(spark, tableDir, snap, matched)
+    val (byKey, results) = growDeadVectors(spark, log, snap, matched)
     if (results.isEmpty) return snap.version
     val version = snap.version + 1
-    val lines = protocolUpgradeLine(snap).toSeq ++
-      dvCommitLines(tableDir, fs, byKey, results)
-    AtomicFiles.write(fs,
-      new Path(tableDir, f"_delta_log/$version%020d.json"),
-      lines.mkString("", "\n", "\n"), replace = false)
+    publish(log.fs, tableDir, version, protocolUpgradeLine(snap).toSeq ++
+      dvCommitLines(log, byKey, results))
     version
   }
-
-  private def pvJson(pv: Map[String, String]): String =
-    pv.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
-
-  private def dvDescJson(d: DvDescriptor): String =
-    s"""{"storageType":${jstr(d.storageType)},"pathOrInlineDv":${
-      jstr(d.pathOrInlineDv)},"offset":${d.offset},"sizeInBytes":${
-      d.sizeInBytes},"cardinality":${d.cardinality}}"""
 
   /** The writer features a LEGACY minWriterVersion implies
     * (PROTOCOL.md's table-features upgrade rule: moving to
@@ -1759,10 +1537,11 @@ object DeltaLogLite {
     * descriptors. Returns the snapshot's join-form file map plus, per
     * affected file, (join path, b85 DV uuid | null when ALL rows
     * died, sizeInBytes, cardinality) — empty when nothing matched. */
-  private def growDeadVectors(spark: SparkSession, tableDir: String,
+  private def growDeadVectors(spark: SparkSession, log: Log,
                               snap: Snapshot, matched: DataFrame)
   : (Map[String, AddFile], Seq[(String, String, Int, Long)]) = {
     import spark.implicits._
+    val tableDir = log.tableDir
     // bounded driver work: the affected FILE list, never matched rows
     val affected = matched.select("_path").distinct()
       .as[String].collect().sorted
@@ -1779,13 +1558,8 @@ object DeltaLogLite {
     // (zero driver I/O), the parquet footer otherwise — either way
     // bounded to the O(affected) files
     val rowCounts: Map[String, Long] = affected.map { p =>
-      p -> statsNumRecords(byKey(p)).getOrElse {
-        val real = resolveAddPath(tableDir, byKey(p).path)
-        val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new Path(real), spark.sparkContext.hadoopConfiguration))
-        try footer.getRecordCount finally footer.close()
-      }
+      p -> statsNumRecords(byKey(p)).getOrElse(footerRows(log.conf,
+        new Path(resolveAddPath(tableDir, byKey(p).path))))
     }.toMap
     // the new vector is the UNION: old dead rows (the scan already
     // excluded them from `matched`, so the sets are disjoint) plus
@@ -1798,12 +1572,10 @@ object DeltaLogLite {
       else matched.union(dvDeleteSet(spark, tableDir, withOldDv)
         .select(col("_dv_path").as("_path"), col("_dv_pos").as("_pos")))
     val rcB = spark.sparkContext.broadcast(rowCounts)
-    // the SESSION's hadoop conf rides into the executor closure —
+    // the session's Hadoop conf rides into the executor closure —
     // spark.hadoop.*-borne credentials must reach the DV writes
     val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val tableDirB = tableDir
+      new org.apache.spark.util.SerializableConfiguration(log.conf))
     val results: Seq[(String, String, Int, Long)] = fullDead
       .as[(String, Long)].groupByKey(_._1)
       .mapGroups { (path, it) =>
@@ -1814,7 +1586,7 @@ object DeltaLogLite {
           val ub = java.nio.ByteBuffer.allocate(16)
           ub.putLong(uuid.getMostSignificantBits)
           ub.putLong(uuid.getLeastSignificantBits)
-          writeDvFile(s"$tableDirB/deletion_vector_$uuid.bin", payload,
+          writeDvFile(s"$tableDir/deletion_vector_$uuid.bin", payload,
             confB.value.value)
           (path, base85Encode(ub.array()), payload.length, card)
         }
@@ -1824,35 +1596,24 @@ object DeltaLogLite {
 
   /** The remove(+re-add-with-grown-DV) action lines for
     * [[growDeadVectors]]' results — fully-dead files remove outright,
-    * the rest re-add byte-identical under their new vector. */
-  private def dvCommitLines(tableDir: String,
-                            fs: org.apache.hadoop.fs.FileSystem,
-                            byKey: Map[String, AddFile],
+    * the rest re-add byte-identical under their new vector. DV growth
+    * never changes the file's PHYSICAL row count, so the original
+    * add's stats carry forward verbatim — dropping them would push
+    * every later delete/update on this file back to driver-side
+    * footer reads (and cost external readers their min/max pruning). */
+  private def dvCommitLines(log: Log, byKey: Map[String, AddFile],
                             results: Seq[(String, String, Int, Long)])
   : Seq[String] =
     results.flatMap { case (path, b85, size, card) =>
       val f = byKey(path)
-      val remove =
-        s"""{"remove":{"path":${jstr(f.path)},"deletionTimestamp":0,"dataChange":true,"partitionValues":${
-          pvJson(f.partitionValues)}""" +
-          f.deletionVector.map(d => s""","deletionVector":${dvDescJson(d)}""")
-            .getOrElse("") + "}}"
+      val remove = removeLine(f, dataChange = true)
       if (b85 == null) Seq(remove)
       else {
-        val real = resolveAddPath(tableDir, f.path)
-        val len = fs.getFileStatus(new Path(real)).getLen
-        // DV growth never changes the file's PHYSICAL row count, so
-        // the original add's stats carry forward verbatim — dropping
-        // them would push every later delete/update on this file
-        // back to driver-side footer reads (and cost external
-        // readers their min/max pruning)
-        val statsPart = f.stats
-          .map(s => s""","stats":${jstr(s)}""").getOrElse("")
-        val add =
-          s"""{"add":{"path":${jstr(f.path)},"partitionValues":${
-            pvJson(f.partitionValues)},"size":$len,"modificationTime":0,"dataChange":true$statsPart,"deletionVector":{"storageType":"u","pathOrInlineDv":${
-            jstr(b85)},"offset":1,"sizeInBytes":$size,"cardinality":$card}}}"""
-        Seq(remove, add)
+        val len = log.fs.getFileStatus(
+          new Path(resolveAddPath(log.tableDir, f.path))).getLen
+        Seq(remove, addLine(f.path, f.partitionValues, len,
+          dataChange = true, f.stats,
+          Some(DvDescriptor("u", b85, 1, size, card))))
       }
     }
 
@@ -1886,22 +1647,24 @@ object DeltaLogLite {
   }
 
   /** Stage-write `df` into the table split by its partition columns
-    * (consumed by the staging write, exactly like [[compact]]'s
-    * rewrite) and move each file to
-    * `<base>/<partition dirs>/<namePrefix>-<i>.parquet`. Returns
-    * (relative path, unescaped (col, value) pairs, byte size) per
-    * file. Null partition values refuse, as everywhere.
-    * `fieldIdWrite` flips the parquet field-id writer flag around
-    * the staging write (and restores it) — required when `df`
-    * carries [[stampMapped]] mode=id metadata. */
-  private def stagePartitionedWrite(spark: SparkSession, tableDir: String,
-                                    fs: org.apache.hadoop.fs.FileSystem,
+    * (consumed by the staging write) and move each file, without a
+    * `.crc` sidecar, to `<base>/<partition dirs>/<stem><i>.parquet`.
+    * Returns (relative path, unescaped partition values, byte size,
+    * footer row count) per file — the row count becomes the add's
+    * stats.numRecords, so later deletes/updates keep the stats fast
+    * path. Null partition values refuse, as everywhere.
+    * `fieldIdWrite` flips the parquet field-id writer flag around the
+    * staging write only (and restores it, so one call never changes
+    * how unrelated later writes in the session stamp their footers) —
+    * required when `df` carries [[stampMapped]] mode=id metadata. */
+  private def stagePartitionedWrite(spark: SparkSession, log: Log,
                                     df: DataFrame, partCols: Seq[String],
-                                    base: Seq[String], namePrefix: String,
-                                    fieldIdWrite: Boolean = false)
-  : Seq[(String, Seq[(String, String)], Long, Long)] = {
+                                    base: Seq[String], stem: String,
+                                    fieldIdWrite: Boolean)
+  : Seq[(String, Map[String, String], Long, Long)] = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val tmp = new Path(tableDir, s"_tmp_$namePrefix")
+    val (tableDir, fs) = (log.tableDir, log.fs)
+    val tmp = new Path(tableDir, s"_tmp_$stem")
     val fieldIdKey = "spark.sql.parquet.fieldId.write.enabled"
     val prev = if (fieldIdWrite) Some(spark.conf.getOption(fieldIdKey))
       else None
@@ -1936,27 +1699,25 @@ object DeltaLogLite {
         } else if (n.endsWith(".parquet")) Seq((pv, Nil, st))
         else Nil
       }
+    // the dirs keep their Hive-escaped names on disk; callers
+    // percent-encode the rel path into add.path
     val moved = walkTmp(tmp, Nil).zipWithIndex.map {
       case ((pv, dirs, st), i) =>
-        val rel = ((base ++ dirs) :+ s"$namePrefix-$i.parquet")
-          .mkString("/")
+        val rel = ((base ++ dirs) :+ s"$stem$i.parquet").mkString("/")
         val dest = new Path(tableDir, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(st.getPath, dest))
-          throw new IllegalStateException(
-            s"$tableDir: could not move ${st.getPath.getName} into the " +
-              "table")
-        // footer row count (O(staged files) bounded driver work) —
-        // the add actions stamp it as stats.numRecords so later
-        // deletes/updates keep the stats fast path
-        val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            dest, spark.sparkContext.hadoopConfiguration))
-        val rc = try footer.getRecordCount finally footer.close()
-        (rel, pv, fs.getFileStatus(dest).getLen, rc)
+        LakeFiles.move(fs, st.getPath, dest)
+        (rel, pv.toMap, st.getLen, footerRows(log.conf, dest))
     }
     fs.delete(tmp, true)
     moved
+  }
+
+  /** A parquet file's row count, from its footer (O(files) bounded
+    * driver work). */
+  private def footerRows(conf: Configuration, p: Path): Long = {
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+    try footer.getRecordCount finally footer.close()
   }
 
   /** ROW-LEVEL UPDATE (the DML trio's third leg next to [[delete]]
@@ -1988,7 +1749,8 @@ object DeltaLogLite {
   def update(spark: SparkSession, tableDir: String,
              condition: org.apache.spark.sql.Column,
              set: Map[String, org.apache.spark.sql.Column]): Long = {
-    val snap = snapshot(spark, tableDir)
+    val log = new Log(spark, tableDir)
+    val snap = log.snapshot(None)
     if (snap.files.isEmpty) throw new IllegalStateException(
       s"$tableDir: nothing to update (no live files)")
     require(set.nonEmpty, "update needs at least one SET column")
@@ -1997,64 +1759,57 @@ object DeltaLogLite {
         throw new IllegalStateException(
           s"$tableDir: SET column $c is not in the schema")
     }
-    // SETs on partition columns serve: the staged write partitions
-    // by the POST-SET row values, so a partition-moving update lands
-    // its rewrites under their new partition dirs while the old
-    // positions die under DVs wherever they were — the same
-    // machinery upsertKeyed's partition moves already ride
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val withMeta = readFiles(spark, tableDir, snap.schema,
       snap.partitionColumns, snap.files, snap.physicalNames,
       snap.fieldIds, keepMeta = true)
     val matchedRows = withMeta.filter(condition)
     val matched = matchedRows
       .select(col("_dl_path").as("_path"), col("_dl_pos").as("_pos"))
-    val (byKey, dvResults) = growDeadVectors(spark, tableDir, snap, matched)
+    val (byKey, dvResults) = growDeadVectors(spark, log, snap, matched)
     if (dvResults.isEmpty) return snap.version
     val version = snap.version + 1
     val pre = matchedRows.drop("_dl_path", "_dl_pos")
     val updated = set.foldLeft(pre) { case (df, (c, e)) =>
       df.withColumn(c, e.cast(snap.schema(c).dataType))
     }.select(snap.schema.fieldNames.map(col).toSeq: _*)
-    val partCols = snap.partitionColumns
-    // mapped tables stage under PHYSICAL names (+ field ids) — the
-    // same re-stamp the compaction rewrite performs
-    def physOf(c: String): String = snap.physicalNames.getOrElse(c, c)
-    val fieldIdWrite = snap.fieldIds.nonEmpty
-    val dataBase = if (partCols.isEmpty) Seq("data") else Nil
-    val newAdds = stagePartitionedWrite(spark, tableDir, fs,
-      stampMapped(snap, updated), partCols.map(physOf), dataBase,
-      s"update-$version", fieldIdWrite)
     // exact written CDF, only when the table records a change feed
-    val cdcLines: Seq[String] =
+    val (cdcLines, addLines) = rewriteLines(spark, log, snap, version,
+      "update", updated,
+      pre.withColumn("_change_type", lit("update_preimage"))
+        .unionByName(updated.withColumn("_change_type",
+          lit("update_postimage"))))
+    publish(log.fs, tableDir, version, protocolUpgradeLine(snap).toSeq ++
+      cdcLines ++ dvCommitLines(log, byKey, dvResults) ++ addLines)
+    version
+  }
+
+  /** Stage a rewrite's new rows as fresh per-partition data files
+    * `<kind>-<version>-<i>.parquet` and — on a table that records a
+    * change feed — `cdc`'s rows as `_change_data/cdc-<version>-<i>.parquet`,
+    * both under the snapshot's column mapping (physical names, field
+    * ids, physically-keyed partition dirs; `_change_type` stays literal,
+    * as the protocol stores it). Returns (cdc lines, add lines). */
+  private def rewriteLines(spark: SparkSession, log: Log, snap: Snapshot,
+                           version: Long, kind: String, rows: DataFrame,
+                           cdc: => DataFrame): (Seq[String], Seq[String]) = {
+    val partCols =
+      snap.partitionColumns.map(c => snap.physicalNames.getOrElse(c, c))
+    def stage(df: DataFrame, base: Seq[String], stem: String) =
+      stagePartitionedWrite(spark, log, df, partCols, base, stem,
+        snap.fieldIds.nonEmpty)
+    val adds = stage(stampMapped(snap, rows),
+      if (partCols.isEmpty) Seq("data") else Nil, s"$kind-$version-").map {
+      case (rel, pv, size, rc) =>
+        addLine(uriEncode(rel), pv, size, dataChange = true, numRecords(rc))
+    }
+    val cdcs =
       if (!snap.configuration.get("delta.enableChangeDataFeed")
         .contains("true")) Nil
-      else {
-        val cdcDf = pre.withColumn("_change_type",
-          lit("update_preimage"))
-          .unionByName(updated.withColumn("_change_type",
-            lit("update_postimage")))
-        stagePartitionedWrite(spark, tableDir, fs,
-          stampMapped(snap, cdcDf, keep = Set("_change_type")),
-          partCols.map(physOf), Seq("_change_data"), s"cdc-$version",
-          fieldIdWrite).map {
-          case (rel, pv, size, _) =>
-            s"""{"cdc":{"path":${jstr(uriEncode(rel))},"partitionValues":${
-              pvJson(pv.toMap)},"size":$size,"dataChange":false}}"""
-        }
+      else stage(stampMapped(snap, cdc, keep = Set("_change_type")),
+        Seq("_change_data"), s"cdc-$version-").map {
+        case (rel, pv, size, _) => cdcLine(uriEncode(rel), pv, size)
       }
-    val addLines = newAdds.map { case (rel, pv, size, rc) =>
-      s"""{"add":{"path":${jstr(uriEncode(rel))},"partitionValues":${
-        pvJson(pv.toMap)},"size":$size,"modificationTime":0,"dataChange":true,"stats":${
-        jstr(s"""{"numRecords":$rc}""")}}}"""
-    }
-    val lines = protocolUpgradeLine(snap).toSeq ++ cdcLines ++
-      dvCommitLines(tableDir, fs, byKey, dvResults) ++ addLines
-    AtomicFiles.write(fs,
-      new Path(tableDir, f"_delta_log/$version%020d.json"),
-      lines.mkString("", "\n", "\n"), replace = false)
-    version
+    (cdcs, adds)
   }
 
   /** KEYED UPSERT — the delete+append pair a MERGE compiles to, in
@@ -2079,7 +1834,8 @@ object DeltaLogLite {
     * schema columns. */
   def upsertKeyed(spark: SparkSession, tableDir: String,
                   rows: DataFrame, keyCols: Seq[String]): Long = {
-    val snap = snapshot(spark, tableDir)
+    val log = new Log(spark, tableDir)
+    val snap = log.snapshot(None)
     require(keyCols.nonEmpty, "upsertKeyed needs at least one key column")
     keyCols.foreach { c =>
       if (!snap.schema.fieldNames.contains(c))
@@ -2091,8 +1847,6 @@ object DeltaLogLite {
     if (missingCols.nonEmpty) throw new IllegalStateException(
       s"$tableDir: upsert input lacks schema columns " +
         missingCols.mkString(", "))
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val typed = rows.select(snap.schema.fields.toSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
     // duplicate check runs on the CAST keys — raw keys that collapse
@@ -2112,24 +1866,12 @@ object DeltaLogLite {
     val matchedRows = withMeta.join(keysDf, keyCond, "left_semi")
     val matched = matchedRows
       .select(col("_dl_path").as("_path"), col("_dl_pos").as("_pos"))
-    val (byKey, dvResults) = growDeadVectors(spark, tableDir, snap,
-      matched)
+    val (byKey, dvResults) = growDeadVectors(spark, log, snap, matched)
     val version = snap.version + 1
-    val partCols = snap.partitionColumns
-    // mapped tables stage under PHYSICAL names (+ field ids), like
-    // update()'s rewrite
-    def physOf(c: String): String = snap.physicalNames.getOrElse(c, c)
-    val fieldIdWrite = snap.fieldIds.nonEmpty
-    val dataBase = if (partCols.isEmpty) Seq("data") else Nil
-    val newAdds = stagePartitionedWrite(spark, tableDir, fs,
-      stampMapped(snap, typed), partCols.map(physOf), dataBase,
-      s"upsert-$version", fieldIdWrite)
-    val cdcLines: Seq[String] =
-      if (!snap.configuration.get("delta.enableChangeDataFeed")
-        .contains("true")) Nil
-      else {
-        // MERGE-shaped change record: pre/post images for keys that
-        // existed, inserts for the rest
+    // MERGE-shaped change record: pre/post images for keys that
+    // existed, inserts for the rest
+    val (cdcLines, addLines) = rewriteLines(spark, log, snap, version,
+      "upsert", typed, {
         val exKeys = matchedRows.select(keyCols.map(c =>
           col(c).as(s"_uk_$c")): _*).distinct()
         val pre = matchedRows.drop("_dl_path", "_dl_pos")
@@ -2138,30 +1880,13 @@ object DeltaLogLite {
           .withColumn("_change_type", lit("update_postimage"))
         val ins = typed.join(exKeys, keyCond, "left_anti")
           .withColumn("_change_type", lit("insert"))
-        val cdcDf = pre.unionByName(post).unionByName(ins)
-        stagePartitionedWrite(spark, tableDir, fs,
-          stampMapped(snap, cdcDf, keep = Set("_change_type")),
-          partCols.map(physOf), Seq("_change_data"), s"cdc-$version",
-          fieldIdWrite).map {
-          case (rel, pv, size, _) =>
-            s"""{"cdc":{"path":${jstr(uriEncode(rel))},"partitionValues":${
-              pvJson(pv.toMap)},"size":$size,"dataChange":false}}"""
-        }
-      }
-    val addLines = newAdds.map { case (rel, pv, size, rc) =>
-      s"""{"add":{"path":${jstr(uriEncode(rel))},"partitionValues":${
-        pvJson(pv.toMap)},"size":$size,"modificationTime":0,"dataChange":true,"stats":${
-        jstr(s"""{"numRecords":$rc}""")}}}"""
-    }
+        pre.unionByName(post).unionByName(ins)
+      })
     // a pure-insert upsert grows no vectors — don't upgrade the
     // protocol for a feature the commit doesn't use
-    val lines =
-      (if (dvResults.nonEmpty) protocolUpgradeLine(snap).toSeq
-       else Nil) ++ cdcLines ++
-        dvCommitLines(tableDir, fs, byKey, dvResults) ++ addLines
-    AtomicFiles.write(fs,
-      new Path(tableDir, f"_delta_log/$version%020d.json"),
-      lines.mkString("", "\n", "\n"), replace = false)
+    publish(log.fs, tableDir, version,
+      (if (dvResults.nonEmpty) protocolUpgradeLine(snap).toSeq else Nil) ++
+        cdcLines ++ dvCommitLines(log, byKey, dvResults) ++ addLines)
     version
   }
 
@@ -2178,157 +1903,31 @@ object DeltaLogLite {
     * pre-checkpoint state as add rows PLUS expired `remove`
     * tombstones (the protocol keeps them in checkpoints for exactly
     * this reclaim bookkeeping), so the ever-referenced set is the
-    * checkpoint's add+remove paths plus whatever surviving JSON
-    * commits reference. Both checkpoint layouts serve: the classic
-    * single/multi-part parquet names AND the v2 UUID-named manifest,
-    * whose file actions (tombstones included) ride its sidecars — a
-    * named sidecar that is MISSING refuses (vacuuming without its
-    * tombstones would strand files silently). Single-writer scope;
-    * bounded log-grain work + O(deleted) FS ops. */
+    * checkpoint's add+remove paths — classic or V2, whose file actions
+    * ride its sidecars — plus whatever surviving JSON commits
+    * reference. The one log walk serves both that set and the current
+    * snapshot, so each commit and the checkpoint are read once.
+    * Single-writer scope; bounded log-grain work + O(deleted) FS ops. */
   def vacuum(spark: SparkSession, tableDir: String): Seq[String] = {
-    val logDir = new Path(tableDir, "_delta_log")
-    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(logDir)) throw new IllegalStateException(
-      s"$tableDir has no _delta_log directory")
-    // every file any add/remove action ever referenced (data + DV):
-    // seed from the checkpoint's add + remove-tombstone rows when one
-    // exists — classic parquet names OR the v2 UUID manifest + its
-    // sidecars (the file actions ride the sidecars there) — then
-    // layer every surviving JSON commit on top
-    val referenced = scala.collection.mutable.LinkedHashSet.empty[String]
-    lastCheckpoint(fs, logDir, tableDir).foreach { case (v, parts) =>
-      def absorbRefs(df: DataFrame): Unit = {
-        val dvT = "struct<storageType:string,pathOrInlineDv:string," +
-          "offset:bigint,sizeInBytes:int,cardinality:bigint>"
-        for (side <- Seq("add", "remove") if df.columns.contains(side)) {
-          val hasDv = df.schema.find(_.name == side).map(_.dataType)
-            .exists {
-              case s: StructType => s.fieldNames.contains("deletionVector")
-              case _             => false
-            }
-          val dvCol = if (hasDv) col(s"$side.deletionVector").cast(dvT)
-                      else lit(null).cast(dvT)
-          df.select(col(s"$side.path"), dvCol)
-            .where(col(s"$side.path").isNotNull).collect()
-            .foreach { r =>
-              referenced += resolveAddPath(tableDir, r.getString(0))
-              Option(r.getStruct(1)).foreach { d =>
-                val dv = DvDescriptor(d.getString(0), d.getString(1),
-                  Option(d.get(2)).map(_.asInstanceOf[Long])
-                    .getOrElse(1L),
-                  d.getInt(3), d.getLong(4))
-                if (dv.storageType != "i")
-                  referenced += dvFilePath(tableDir, dv)
-              }
-            }
-        }
-      }
-      val names = parts match {
-        case Some(n) => (1 to n).map(i =>
-          f"$v%020d.checkpoint.$i%010d.$n%010d.parquet")
-        case None => Seq(f"$v%020d.checkpoint.parquet")
-      }
-      val paths = names.map(n => s"$tableDir/_delta_log/$n")
-      if (paths.forall(p => fs.exists(new Path(p))))
-        absorbRefs(spark.read.parquet(paths: _*))
-      else {
-        if (parts.exists(_ => paths.exists(p => fs.exists(new Path(p)))))
-          throw new IllegalStateException(
-            s"$tableDir: multi-part checkpoint $v is missing parts " +
-              s"(expected ${names.mkString(", ")})")
-        val manifest = v2Manifest(fs, tableDir, v).getOrElse(
-          throw new IllegalStateException(
-            s"$tableDir: checkpoint $v unreadable — neither the " +
-              s"classic names (${names.mkString(", ")}) nor a v2 " +
-              "UUID-named manifest exist"))
-        var sidecars = Vector.empty[String]
-        if (manifest.getName.endsWith(".json")) {
-          val text = LakeFiles.readText(fs, manifest)
-          for (line <- text.linesIterator if line.trim.nonEmpty) {
-            val action = try JsonMethods.parse(line)
-              catch { case e: Exception =>
-                throw new IllegalStateException(
-                  s"$manifest: malformed action JSON (${e.getMessage})")
-              }
-            (action \ "sidecar" \ "path").extractOpt[String]
-              .foreach(p => sidecars :+= p)
-            for (side <- Seq("add", "remove")) (action \ side) match {
-              case JNothing =>
-              case a =>
-                (a \ "path").extractOpt[String].foreach(raw =>
-                  referenced += resolveAddPath(tableDir, raw))
-                parseDvJson(a \ "deletionVector")
-                  .filter(_.storageType != "i")
-                  .foreach(dv => referenced += dvFilePath(tableDir, dv))
-            }
-          }
-        } else {
-          val df = spark.read.parquet(manifest.toString)
-          absorbRefs(df)
-          if (df.columns.contains("sidecar"))
-            sidecars = df.select(col("sidecar.path"))
-              .where(col("sidecar.path").isNotNull)
-              .collect().map(_.getString(0)).toVector
-        }
-        // sidecar resolution mirrors the snapshot path; a MISSING
-        // sidecar refuses — vacuuming without its tombstones would
-        // under-build the referenced set and strand files silently
-        val sidecarPaths = sidecars.map { raw =>
-          val uri = try new java.net.URI(raw)
-            catch { case e: java.net.URISyntaxException =>
-              throw new IllegalStateException(
-                s"$tableDir: undecodable sidecar path $raw " +
-                  s"(${e.getMessage})")
-            }
-          Option(uri.getScheme).filter(_ != "file").foreach { s =>
-            throw new IllegalStateException(
-              s"$tableDir: sidecar $raw has unsupported scheme " +
-                s"'$s://' — only file:// and relative names are in " +
-                "scope")
-          }
-          val decoded = uri.getPath
-          val abs =
-            if (decoded.startsWith("/")) decoded
-            else s"$tableDir/_delta_log/_sidecars/$decoded"
-          if (!fs.exists(new Path(abs))) throw new IllegalStateException(
-            s"$tableDir: v2 checkpoint $v names sidecar $raw but " +
-              s"$abs does not exist — vacuuming without it would " +
-              "strand its files")
-          abs
-        }
-        if (sidecarPaths.nonEmpty)
-          absorbRefs(spark.read.parquet(sidecarPaths: _*))
-      }
+    val log = new Log(spark, tableDir)
+    log.requireLog()
+    // a file's own path plus its deletion vector's (inline ('i')
+    // vectors reference no file)
+    def refs(f: AddFile): Seq[String] =
+      resolveAddPath(tableDir, f.path) +: f.deletionVector
+        .filter(_.storageType != "i").map(dvFilePath(tableDir, _)).toSeq
+    val referenced = (log.checkpoint ++
+      log.commits.keys.toSeq.flatMap(log.actions)).flatMap {
+      case Add(f, _)    => refs(f)
+      case Remove(f, _) => refs(f)
+      case _            => Nil
     }
-    val commits = fs.listStatus(logDir).toSeq.map(_.getPath)
-      .filter(_.getName.matches("\\d{20}\\.json"))
-      .sortBy(_.getName)
-    for (p <- commits) {
-      val text = LakeFiles.readText(fs, p)
-      for (line <- text.linesIterator if line.trim.nonEmpty) {
-        val action = JsonMethods.parse(line)
-        for (side <- Seq("add", "remove")) (action \ side) match {
-          case JNothing =>
-          case a =>
-            (a \ "path").extractOpt[String].foreach(raw =>
-              referenced += resolveAddPath(tableDir, raw))
-            // inline ('i') vectors reference no file
-            parseDvJson(a \ "deletionVector")
-              .filter(_.storageType != "i")
-              .foreach(dv => referenced += dvFilePath(tableDir, dv))
-        }
-      }
-    }
-    val snap = snapshot(spark, tableDir)
-    val live: Set[String] =
-      (snap.files.map(f => resolveAddPath(tableDir, f.path)) ++
-        snap.files.flatMap(_.deletionVector)
-          .filter(_.storageType != "i")
-          .map(dvFilePath(tableDir, _))).toSet
+    val live = log.snapshot(None).files.flatMap(refs).toSet
     // through the table's OWN Hadoop filesystem (java.io/NIO would
     // reclaim nothing on hdfs:// or object stores), never outside the
     // table root (clone sources)
-    LakeFiles.deleteInside(fs, tableDir, referenced -- live)(p =>
+    LakeFiles.deleteInside(log.fs, tableDir,
+      referenced.distinct.filterNot(live))(p =>
       s"$tableDir: vacuum could not delete $p")
   }
 }

@@ -922,10 +922,7 @@ object HudiCowLite {
           val rel = (if (part.isEmpty) "" else s"$part/") +
             s"${fid}_0-0_$instant.parquet"
           val dest = new Path(tableDir, rel)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(files.head, dest))
-            throw new IllegalStateException(
-              s"$tableDir: could not move group $fid into the table")
+          LakeFiles.move(fs, files.head, dest)
           val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
             org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
               dest, spark.sparkContext.hadoopConfiguration))
@@ -1053,11 +1050,7 @@ object HudiCowLite {
       val rel = (if (part.isEmpty) "" else s"$part/") +
         s"${fid}_0-0_$instant.parquet"
       val dest = new Path(tableDir, rel)
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(st.getPath, dest))
-        throw new IllegalStateException(
-          s"$tableDir: could not move ${st.getPath.getName} into the " +
-            "table")
+      LakeFiles.move(fs, st.getPath, dest)
       val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           dest, spark.sparkContext.hadoopConfiguration))

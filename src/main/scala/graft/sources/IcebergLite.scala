@@ -1759,11 +1759,7 @@ object IcebergLite {
       val rel = (("data" +: dirs) :+
         s"$tag-${snapId}_$i.parquet").mkString("/")
       val dest = new Path(tableDir, rel)
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(st.getPath, dest))
-        throw new IllegalStateException(
-          s"$tableDir: could not move ${st.getPath.getName} into " +
-            "the table")
+      LakeFiles.move(fs, st.getPath, dest)
       val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           dest, fs.getConf))
@@ -1854,9 +1850,7 @@ object IcebergLite {
     val out = parts.zipWithIndex.map { case (p, i) =>
       val rel = s"$relPrefix-${newSnapId}_$i.parquet"
       val dest = new Path(tableDir, rel)
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(p, dest)) throw new IllegalStateException(
-        s"$tableDir: could not place $rel")
+      LakeFiles.move(fs, p, dest)
       val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           dest, fs.getConf))

@@ -37,9 +37,19 @@ object LakeFiles {
     if (!src.renameTo(dst))
       throw new IllegalStateException(s"could not move $src to $dst")
 
-  def move(fs: FileSystem, src: Path, dst: Path): Unit =
-    if (!fs.rename(src, dst))
+  /** Checked rename into a table, creating `dst`'s parent. Under a
+    * `ChecksumFileSystem` (the local default) it renames through the raw
+    * filesystem, so `src`'s `.crc` sidecar stays behind in its staging
+    * directory instead of landing next to the table file. */
+  def move(fs: FileSystem, src: Path, dst: Path): Unit = {
+    val raw = fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
+    raw.mkdirs(dst.getParent)
+    if (!raw.rename(src, dst))
       throw new IllegalStateException(s"could not move $src to $dst")
+  }
 
   /** Write `df` as ONE `fmt` file through the temp directory `tmp`,
     * move it to `dst` (creating its parent) and delete `tmp`. */
@@ -55,12 +65,7 @@ object LakeFiles {
             dst: Path): Unit = {
     write(df, fmt, tmp.toString)
     val part = onePart(tmp, fs.listStatus(tmp).map(_.getPath.getName))
-    val raw = fs match {
-      case c: ChecksumFileSystem => c.getRawFileSystem
-      case other => other
-    }
-    raw.mkdirs(dst.getParent)
-    move(raw, new Path(tmp, part), dst)
+    move(fs, new Path(tmp, part), dst)
     fs.delete(tmp, true): Unit
   }
 

@@ -1413,11 +1413,7 @@ object PaimonLite {
         }.mkString
         val name = s"compact-${newId}_$i.parquet"
         val dest = new Path(tableDir, s"${partDirs}bucket-0/$name")
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(st.getPath, dest))
-          throw new IllegalStateException(
-            s"$tableDir: could not move ${st.getPath.getName} into " +
-              s"${partDirs}bucket-0")
+        LakeFiles.move(fs, st.getPath, dest)
         val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
             dest, fs.getConf))
@@ -1643,11 +1639,7 @@ object PaimonLite {
         }.mkString
         val name = s"$prefix-${newId}_$i.parquet"
         val dest = new Path(tableDir, s"${partDirs}bucket-$bucket/$name")
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(st.getPath, dest))
-          throw new IllegalStateException(
-            s"$tableDir: could not move ${st.getPath.getName} into " +
-              s"${partDirs}bucket-$bucket")
+        LakeFiles.move(fs, st.getPath, dest)
         val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
             dest, fs.getConf))

@@ -13,9 +13,12 @@ import graft.sources.LakeFiles.{jstr, rm}
 /** Structured-Streaming SINK writing a Delta-layout table — the write
   * half of the lakehouse streaming loop next to [[DeltaStreamLite]].
   * Each micro-batch becomes ONE Delta commit: the batch's parquet
-  * part files move into the table and a JSON commit records their
-  * `add` actions plus a `txn` action `{appId = streaming query id,
-  * version = batchId}` (PROTOCOL.md "Transaction Identifiers").
+  * part files move into the table and a JSON commit, published through
+  * [[DeltaLogLite.publish]], records their `add` actions (with each
+  * file's real byte size) plus a `txn` action `{appId = streaming query
+  * id, version = batchId}` (PROTOCOL.md "Transaction Identifiers").
+  * Each batch walks the log once ([[DeltaLogLite.head]]): the same walk
+  * answers the dedup lookup and the snapshot the commit builds on.
   *
   * EXACTLY-ONCE: after a restart the engine re-delivers the last
   * uncommitted-to-the-sink batch; addBatch consults the log's latest
@@ -55,6 +58,8 @@ class DeltaStreamSink(sqlContext: SQLContext, tableDir: String,
     extends Sink {
 
   private val spark = sqlContext.sparkSession
+  private lazy val fs = new org.apache.hadoop.fs.Path(tableDir)
+    .getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Our appId's max committed batch id — looked up from the log once,
     * then tracked in-instance (single-writer scope): without the cache
@@ -65,28 +70,17 @@ class DeltaStreamSink(sqlContext: SQLContext, tableDir: String,
     // the engine sets the query id as a local property on the driver
     val appId = Option(spark.sparkContext
       .getLocalProperty("sql.streaming.queryId")).getOrElse("graft-stream")
-    if (cachedTxn.isEmpty)
-      cachedTxn = DeltaLogLite.latestTxnVersion(spark, tableDir, appId)
+    // ONE walk of the log per batch serves the dedup lookup and the
+    // snapshot this commit builds on (None before the first commit; a
+    // malformed log fails loudly, never overwritten as if empty)
+    val log = DeltaLogLite.head(spark, tableDir)
+    if (cachedTxn.isEmpty) cachedTxn = log.txnVersions.get(appId)
     if (cachedTxn.exists(batchId <= _))
       return // re-delivered batch after restart: already committed
 
-    val logDir = Paths.get(tableDir, "_delta_log")
-    Files.createDirectories(logDir)
+    Files.createDirectories(Paths.get(tableDir, "_delta_log"))
     Files.createDirectories(Paths.get(tableDir, "data"))
-
-    // first commit ⇔ the log has no commits at all; a MALFORMED log
-    // must fail loudly, never be overwritten as if empty — so only the
-    // two specific empty-log failures mean "fresh table"; anything
-    // else (e.g. a corrupt _last_checkpoint) propagates
-    val hasCommits =
-      try { DeltaLogLite.latestVersion(spark, tableDir); true }
-      catch {
-        case e: IllegalStateException
-            if e.getMessage.contains("has no _delta_log") ||
-              e.getMessage.contains("empty _delta_log") => false
-      }
-    val existing =
-      if (hasCommits) Some(DeltaLogLite.snapshot(spark, tableDir)) else None
+    val existing = log.snapshot
     existing.foreach { snap =>
       val want = snap.schema.map(f => (f.name, f.dataType))
       val got = data.schema.map(f => (f.name, f.dataType))
@@ -110,63 +104,56 @@ class DeltaStreamSink(sqlContext: SQLContext, tableDir: String,
     val parts = new java.io.File(tmp).listFiles().toSeq
       .filter(f => f.getName.endsWith(".parquet") &&
         !f.getName.startsWith("."))
-    val rels = parts.zipWithIndex.map { case (f, i) =>
+    // each add records the file's real byte length: external readers
+    // plan on `size`
+    val adds = parts.zipWithIndex.map { case (f, i) =>
       val rel = s"data/b${batchId}_$i.parquet"
+      val size = f.length()
       LakeFiles.move(f, new java.io.File(s"$tableDir/$rel"))
-      rel
+      DeltaLogLite.addLine(rel, Map.empty, size, dataChange = true)
     }
     rm(new java.io.File(tmp))
 
     val version = existing.map(_.version + 1).getOrElse(0L)
-    val head = if (existing.isEmpty)
-      s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}
-         |{"metaData":{"id":"graft-sink","format":{"provider":"parquet","options":{}},"schemaString":${jstr(data.schema.json)},"partitionColumns":[],"configuration":{},"createdTime":0}}
-         |""".stripMargin
-    else ""
+    val head = if (existing.nonEmpty) Nil else Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+      s"""{"metaData":{"id":"graft-sink","format":{"provider":"parquet","options":{}},"schemaString":${jstr(data.schema.json)},"partitionColumns":[],"configuration":{},"createdTime":0}}""")
     val txn =
-      s"""{"txn":{"appId":${jstr(appId)},"version":$batchId,"lastUpdated":0}}
-         |""".stripMargin
-    val adds = rels.map(rel =>
-      s"""{"add":{"path":${jstr(rel)},"partitionValues":{},"size":1,"modificationTime":0,"dataChange":true}}""")
-      .mkString("", "\n", "\n")
-    // atomic publication (a concurrent offset poll must never read a
-    // half-written commit); replace=false turns a concurrent writer
-    // landing the same version into a loud single-writer violation
-    try graft.sources.AtomicFiles.write(
-      logDir.resolve(f"$version%020d.json"), head + txn + adds,
-      replace = false)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"delta-sink-lite: commit $version already exists in $tableDir " +
-            "— another writer is active (lite scope is single-writer)")
-    }
+      s"""{"txn":{"appId":${jstr(appId)},"version":$batchId,"lastUpdated":0}}"""
+    // the library's one commit point: atomic (a concurrent offset poll
+    // never reads a half-written commit) and create-new (a concurrent
+    // writer landing the same version is a loud single-writer violation)
+    DeltaLogLite.publish(fs, tableDir, version, head ++ (txn +: adds))
     cachedTxn = Some(batchId)
     if (checkpointInterval > 0 && version > 0 &&
       version % checkpointInterval == 0) writeCheckpoint(version)
   }
 
   /** LOG COMPACTION (PROTOCOL.md "Checkpoints"): materialize the
-    * version-`v` snapshot — metaData, protocol, every live add, and
-    * EVERY appId's latest txn (dropping txns would silently break
-    * exactly-once after a vacuum) — as `v.checkpoint.parquet` in the
-    * struct-column layout DeltaLogLite.loadCheckpoint reads, then
-    * point `_last_checkpoint` at it. Pre-checkpoint JSON commits can
-    * then be vacuumed without breaking batch reads, streaming restart
-    * dedup, or latestVersion resolution. */
+    * version-`v` snapshot — metaData, protocol, every live add with its
+    * real byte size, and EVERY appId's latest txn (dropping txns would
+    * silently break exactly-once after a vacuum) — as
+    * `v.checkpoint.parquet` in the struct-column layout DeltaLogLite's
+    * checkpoint reader reads, then point `_last_checkpoint` at it.
+    * Pre-checkpoint JSON commits can then be vacuumed without breaking
+    * batch reads, streaming restart dedup, or latestVersion
+    * resolution. */
   private def writeCheckpoint(v: Long): Unit = {
     import org.apache.spark.sql.functions.{array, col, lit, map, struct, typedLit}
     import spark.implicits._
-    val snap = DeltaLogLite.snapshot(spark, tableDir)
+    val log = DeltaLogLite.head(spark, tableDir)
+    val snap = log.snapshot.get
     require(snap.version == v,
       s"delta-sink-lite: checkpoint of $v but snapshot is ${snap.version}")
     // carry the full add-entry field set PROTOCOL.md requires of
     // checkpoints (size/modificationTime/dataChange) so an external
     // Delta reader can consume the compacted log too
-    val addDf = snap.files.map(f => (f.path, f.partitionValues))
-      .toDF("path", "partitionValues")
-      .select(struct(col("path"), col("partitionValues"),
-        lit(1L).as("size"), lit(0L).as("modificationTime"),
+    val addDf = snap.files.map(f => (f.path, f.partitionValues,
+        fs.getFileStatus(new org.apache.hadoop.fs.Path(
+          DeltaLogLite.resolveAddPath(tableDir, f.path))).getLen))
+      .toDF("path", "partitionValues", "size")
+      .select(struct(col("path"), col("partitionValues"), col("size"),
+        lit(0L).as("modificationTime"),
         lit(true).as("dataChange")).as("add"))
     val metaDf = spark.range(1).select(struct(
       lit(snap.schema.json).as("schemaString"),
@@ -176,7 +163,7 @@ class DeltaStreamSink(sqlContext: SQLContext, tableDir: String,
     val protoDf = spark.range(1).select(struct(
       lit(1).as("minReaderVersion"), lit(2).as("minWriterVersion"),
       array().cast("array<string>").as("readerFeatures")).as("protocol"))
-    val txns = DeltaLogLite.allTxnVersions(spark, tableDir).toSeq
+    val txns = log.txnVersions.toSeq
     val txnDf = txns.toDF("appId", "version")
       .select(struct(col("appId"), col("version")).as("txn"))
     val all = Seq(addDf, metaDf, protoDf, txnDf)

@@ -1014,6 +1014,30 @@ class DeltaLogSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("commitInfo.timestamp"))
   }
 
+  test("a malformed action line in an older commit fails txn lookup, " +
+    "timestamp travel and vacuum, naming that commit") {
+    val (root, schema) = fixture("strict")
+    commit(root, 0, """{"commitInfo":{"timestamp":1000}}""",
+      meta(schema), add("f0.parquet", "a"))
+    // the stamp comes first: a reader that stops at it never sees the
+    // bad line, and one that skips bad lines loses the txn after it
+    commit(root, 1, """{"commitInfo":{"timestamp":2000}}""", "{not json",
+      """{"txn":{"appId":"streamA","version":3}}""")
+    commit(root, 2, """{"commitInfo":{"timestamp":3000}}""",
+      add("f%20one.parquet", "b"))
+    val bad = f"${1L}%020d.json"
+    for ((what, call) <- Seq[(String, () => Any)](
+        "latestTxnVersion" ->
+          (() => DeltaLogLite.latestTxnVersion(spark, root, "streamA")),
+        "versionAtTimestamp" ->
+          (() => DeltaLogLite.versionAtTimestamp(spark, root, 2500L)),
+        "vacuum" -> (() => DeltaLogLite.vacuum(spark, root)))) {
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(bad) &&
+        e.getMessage.contains("malformed action"), s"$what: ${e.getMessage}")
+    }
+  }
+
   test("randomized model check: every version of a random " +
     "add/remove/DV commit sequence equals an in-memory file-set " +
     "model, across seeds") {

@@ -158,6 +158,32 @@ class DeltaSinkSpec extends AnyFunSuite {
     assert(DeltaLogLite.latestVersion(spark, dest) == 3L)
   }
 
+  test("every add the sink writes, in commits and in the checkpoint, " +
+    "records the file's real byte size") {
+    val dest = fresh("sizes")
+    val sink = new org.apache.spark.sql.graftstream.DeltaStreamSink(
+      spark.sqlContext, dest, checkpointInterval = 2)
+    for (b <- 0L to 2L)
+      sink.addBatch(b, spark.range(b * 10, b * 10 + 7).select(col("id")))
+    val logDir = new java.io.File(s"$dest/_delta_log")
+    val addRe = """"add":\{"path":"([^"]+)".*?"size":(\d+)""".r
+    val commitAdds = logDir.listFiles().toSeq
+      .filter(_.getName.endsWith(".json"))
+      .flatMap(f => addRe.findAllMatchIn(Files.readString(f.toPath)))
+      .map(m => m.group(1) -> m.group(2).toLong)
+    import spark.implicits._
+    val ckptAdds = spark.read.parquet(
+        s"$logDir/" + f"${2L}%020d.checkpoint.parquet")
+      .where(col("add.path").isNotNull)
+      .select(col("add.path"), col("add.size")).as[(String, Long)]
+      .collect().toSeq
+    assert(commitAdds.nonEmpty && ckptAdds.size == commitAdds.size,
+      s"commits $commitAdds, checkpoint $ckptAdds")
+    for ((path, size) <- commitAdds ++ ckptAdds)
+      assert(size == new java.io.File(s"$dest/$path").length() && size > 1,
+        s"$path records size $size")
+  }
+
   test("non-Append mode, partitioned writes and schema drift refuse " +
     "loudly") {
     val dest = fresh("refusals")

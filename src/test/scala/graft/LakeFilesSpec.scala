@@ -8,16 +8,21 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.graft.MetaAvro
+import org.apache.spark.sql.graftstream.{DeltaStreamSink, IcebergStreamSink,
+  PaimonStreamSink}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.LakeFiles
+import graft.sources.{DeltaLogLite, IcebergLite, LakeFiles, PaimonLite}
 
 /** LakeFiles, the file mechanics shared by the lakehouse writers, the
   * stream sinks and the query fixture authors: single-file staging in
-  * its local and Hadoop variants, the checked move, recursive delete
-  * and JSON string escaping. Also guards `src/main` against side
-  * effects inside `assert`, which the compiler may elide. */
+  * its local and Hadoop variants, the checked move (no `.crc` sidecar
+  * reaches a table, compactions included), recursive delete and JSON
+  * string escaping. Also guards `src/main` against side effects inside
+  * `assert`, which the compiler may elide, and the Delta, Iceberg and
+  * Paimon code against the context's Hadoop conf. */
 class LakeFilesSpec extends AnyFunSuite {
   import TestSession._
 
@@ -98,8 +103,28 @@ class LakeFilesSpec extends AnyFunSuite {
     }
   }
 
-  test("Hadoop staging into a file: table leaves no .crc sidecar") {
-    withDir { dir =>
+  /** Every `.crc` file under `dir`, relative to it. */
+  private def crcs(dir: File): Seq[String] = {
+    val walk = Files.walk(dir.toPath)
+    try walk.iterator().asScala.map(p => dir.toPath.relativize(p).toString)
+      .filter(_.endsWith(".crc")).toList.sorted
+    finally walk.close()
+  }
+
+  /** A two-commit table authored by a format's stream sink, then
+    * rewritten by that format's compaction. */
+  private def compacted(sink: String => Sink,
+                        compact: String => Any)(dir: File): Unit = {
+    val root = new File(dir, "t").getPath
+    val s = sink(root)
+    s.addBatch(0L, frame(5))
+    s.addBatch(1L, frame(3))
+    compact(root)
+  }
+
+  // everything written through a checksum filesystem into a table
+  private val crcFree: Seq[(String, File => Unit)] = Seq(
+    "Hadoop staging" -> { dir =>
       val root = new HPath(dir.toURI)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       assert(fs.isInstanceOf[org.apache.hadoop.fs.ChecksumFileSystem])
@@ -110,7 +135,33 @@ class LakeFilesSpec extends AnyFunSuite {
       assert(names(new File(dir, "metadata")) === Seq("m.avro"))
       assert(names(new File(dir, "data")) === Seq("d.parquet"))
       checkStaged(LakeFiles.Avro, new File(dir, "metadata/m.avro"), frame(4))
+    },
+    "Delta compact" -> compacted(new DeltaStreamSink(spark.sqlContext, _),
+      DeltaLogLite.compact(spark, _)),
+    "Iceberg compact" -> compacted(new IcebergStreamSink(spark.sqlContext, _),
+      IcebergLite.compact(spark, _)),
+    "Paimon compact" -> compacted(new PaimonStreamSink(spark.sqlContext, _),
+      PaimonLite.compact(spark, _)))
+
+  for ((what, write) <- crcFree)
+    test(s"$what into a file: table leaves no .crc sidecar") {
+      withDir { dir =>
+        write(dir)
+        assert(crcs(dir).isEmpty, crcs(dir))
+      }
     }
+
+  test("the Delta, Iceberg and Paimon readers and their stream sinks " +
+    "take the session's Hadoop conf, never the context's") {
+    val files = Seq("DeltaLogLite", "IcebergLite", "PaimonLite")
+      .map(n => s"src/main/scala/graft/sources/$n.scala") ++
+      Seq("Delta", "Iceberg", "Paimon").map(n =>
+        s"src/main/scala/org/apache/spark/sql/graftstream/${n}StreamSinkLite.scala")
+    files.foreach(f => assert(Files.isRegularFile(Paths.get(f)),
+      s"run from the project root: $f"))
+    val bad = files.filter(f => Files.readString(Paths.get(f))
+      .contains("sparkContext.hadoopConfiguration"))
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 
   test("move to a missing parent throws naming both paths") {

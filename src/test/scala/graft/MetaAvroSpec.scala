@@ -244,6 +244,42 @@ class MetaAvroSpec extends AnyFunSuite {
       .forall(f => paimonOpens.contains(s"$paimon/$f")) &&
       paimonOpens.exists(_.endsWith(".avro")), paimonOpens)
   }
+
+  test("DeltaLogLite snapshot, delete and vacuum open each commit JSON " +
+    "and _last_checkpoint once, through the session's Hadoop conf") {
+    val root = "/tmp/graft_metaavro/delta"
+    rm(new java.io.File(root))
+    // commits 0..3 with a checkpoint at 2, then the pre-checkpoint JSONs
+    // vacuumed: every commit left in the log is one a snapshot replays
+    val sink = new org.apache.spark.sql.graftstream.DeltaStreamSink(
+      spark.sqlContext, root, checkpointInterval = 2)
+    for (b <- 0L to 3L)
+      sink.addBatch(b, spark.range(b * 10, b * 10 + 5).select(col("id")))
+    val logDir = new java.io.File(s"$root/_delta_log")
+    for (v <- 0L to 2L)
+      assert(new java.io.File(logDir, f"$v%020d.json").delete())
+    /** How often `body` opens each commit JSON and `_last_checkpoint`,
+      * against the once each that the log holds. */
+    def logOpens(body: => Unit): (Map[String, Int], Map[String, Int]) = {
+      val want = logDir.list().toSeq
+        .filter(n => n.matches("\\d{20}\\.json") || n == "_last_checkpoint")
+        .map(n => s"$root/_delta_log/$n" -> 1).toMap
+      val got = CountingLocalFs.opens(spark)(body)
+        .filter(p => want.contains(p) || p.endsWith(".json"))
+        .groupBy(identity).map { case (p, ps) => p -> ps.size }
+      (got, want)
+    }
+    val (snapGot, snapWant) = logOpens(
+      graft.sources.DeltaLogLite.snapshot(spark, root): Unit)
+    assert(snapWant.size == 2 && snapGot == snapWant, snapGot)
+    val (delGot, delWant) = logOpens(
+      graft.sources.DeltaLogLite.delete(spark, root, col("id") === 31): Unit)
+    assert(delGot == delWant, delGot)
+    val (vacGot, vacWant) = logOpens(
+      graft.sources.DeltaLogLite.vacuum(spark, root): Unit)
+    assert(vacWant.size == 3 && vacGot == vacWant, vacGot)
+    rm(new java.io.File(root))
+  }
 }
 
 /** The local FileSystem, counting its instances and recording the paths
